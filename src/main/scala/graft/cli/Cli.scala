@@ -50,8 +50,9 @@ object LogParserCli {
     val spans =
       if (inputFile.endsWith(".json")) SpanSource.readJsonArray(spark, inputFile)
       else SpanSource.readJsonl(spark, inputFile)
-    println(s"Number of spans loaded ${spans.count()}")
-    val summary = SpanParser.parseSpans(spans)
+    val rows = SpanParser.collectSpans(spans)
+    println(s"Number of spans loaded ${rows.length}")
+    val summary = SpanParser.summarize(rows)
 
     a.get("output_directory").foreach { d =>
       DirectoryTreeSink.write(summary, Paths.get(d))
@@ -63,7 +64,7 @@ object LogParserCli {
       require(p.endsWith(".mmd"), "mermaid dag output must end in .mmd")
       Render.writeText(Paths.get(p),
         Mermaid.dagInputFile(summary, generateLinks = true))
-      Render.writeText(Paths.get(p.replace(".mmd", "-nolinks.mmd")),
+      Render.writeText(Paths.get(p.stripSuffix(".mmd") + "-nolinks.mmd"),
         Mermaid.dagInputFile(summary, generateLinks = false))
     }
     println(" - Done")
@@ -96,11 +97,12 @@ object StaticDataCli {
       val zips = all.select("source_zip").distinct()
         .collect().map(_.getString(0)).sorted
 
+      // one collect per zip: the driver holds one run's spans at a time
       val entries = zips.flatMap { z =>
-        val spans = all.filter(org.apache.spark.sql.functions
-          .col("source_zip") === z).drop("source_zip")
-        println(s"--- Processing new zip with ${spans.count()} spans ...")
-        StaticDataSink.process(SpanParser.parseSpans(spans), wwwRoot)
+        val rows = SpanParser.collectSpans(
+          all.filter(org.apache.spark.sql.functions.col("source_zip") === z))
+        println(s"--- Processing new zip with ${rows.length} spans ...")
+        StaticDataSink.process(SpanParser.summarize(rows), wwwRoot)
       }
       StaticDataSink.writeStaticData(entries.toSeq, wwwRoot)
       println("Done")

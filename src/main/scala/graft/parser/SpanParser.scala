@@ -2,27 +2,51 @@ package graft.parser
 
 import java.util.UUID
 
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import scala.collection.immutable.ArraySeq
+import scala.collection.mutable
 
-import graft.model.{AttrCodec, SerializedData}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
+import org.apache.spark.sql.functions._
+
+import graft.model.{AttrCodec, SerializedData, SpanEventRow}
 import graft.operators.Closure
 import graft.spans.SpansOps._
+
+/** One span as the driver-side parse reads it: the narrow projection
+  * [[SpanParser.collectSpans]] fetches. `links` and `resource` are left
+  * out; nothing in the summary reads them. */
+case class ParseSpan(
+    name: String,
+    traceId: String,
+    spanId: String,
+    parentId: String,
+    startTime: String,
+    endTime: String,
+    statusCode: String,
+    attributes: Map[String, String],
+    events: Seq[SpanEventRow])
+
+object ParseSpan {
+  val encoder: Encoder[ParseSpan] = Encoders.product[ParseSpan]
+}
 
 /** Span→summary parser (SURVEY §2 Group B, §3.2): the Spark re-expression of
   * the reference's `parse_spans`
   * (`composable_logs/opentelemetry_task_span_parser.py:413-445`).
   *
-  * Structural difference from the reference (SURVEY §4.1): the reference
-  * re-walks the whole span list once per task (O(tasks × spans)); here every
-  * span is tagged with ALL of its owning `execute-task` ancestors in one
-  * bounded iterative closure ([[Closure.descendantsWithRoots]], O(spans ×
-  * depth) with depth ≤ ~6), after which each extraction is a single
-  * grouped/filtered pass. The summary object itself is driver-sized by
-  * contract (it is the reference's whole output); the scale path for large
-  * logs is the intermediate DataFrames exposed by [[taggedSpans]] /
-  * [[namedValuesDF]] / [[artifactsDF]].
+  * [[parseSpans]] is one scan plus driver assembly. One Spark job collects
+  * a narrow projection of the log ([[collectSpans]]); one in-memory pass
+  * ([[summarize]]) builds each trace's parent map, walks every span's
+  * `execute-task` ancestors and assembles the [[WorkflowSummary]] — the
+  * reference's single pass over one run's span list. The summary is
+  * driver-sized by contract (it is the reference's whole output), so
+  * building it with distributed joins only adds a job per step.
+  *
+  * The distributed path is for large logs: [[taggedSpans]] /
+  * [[namedValuesDF]] / [[artifactsDF]] / [[taskRunsDF]] stay in Spark and
+  * never collect the log. Both paths attribute spans to tasks through the
+  * same walk, [[TaskAncestry]], with ownership keyed by (trace id, span
+  * id).
   */
 object SpanParser {
 
@@ -47,8 +71,36 @@ object SpanParser {
       .map(r => (r.getString(0), r.getString(1)))
       .toSet
 
-  /** (task_span_id, span_id) ownership pairs: every span labeled with each
-    * `execute-task` ancestor (inclusive).
+  /** One trace's span forest for the inclusive `execute-task` ancestor
+    * walk: the one walk behind [[OwnershipGen]], [[TaskRunsGen]] and
+    * [[summarize]]. A null span id owns and is owned by nothing; when a
+    * span id repeats, its last non-null parent wins; a visited set ends
+    * the walk on parent_id cycles (the reference assumes acyclic input;
+    * malformed input terminates here instead of spinning). */
+  private[graft] final class TaskAncestry(expectedSpans: Int) {
+    private val parentOf = new java.util.HashMap[String, String](expectedSpans * 2)
+    private val tasks = new java.util.HashSet[String]()
+
+    def add(sid: String, parentId: String, isTask: Boolean): Unit =
+      if (sid != null) {
+        if (parentId != null) parentOf.put(sid, parentId)
+        if (isTask) tasks.add(sid)
+      }
+
+    /** Calls `f` on every `execute-task` span owning `sid` (itself
+      * included), nearest first. */
+    def foreachOwner(sid: String)(f: String => Unit): Unit = {
+      val visited = new java.util.HashSet[String]()
+      var cur = sid
+      while (cur != null && visited.add(cur)) {
+        if (tasks.contains(cur)) f(cur)
+        cur = parentOf.get(cur)
+      }
+    }
+  }
+
+  /** (task_span_id, id, trace_id) ownership triples: every span labeled
+    * with each `execute-task` ancestor (inclusive) in its own trace.
     *
     * Spans are partitionable by trace (one workflow run per trace — the
     * same bound the reference assumes by holding a run's spans in one
@@ -71,20 +123,22 @@ object SpanParser {
       // Generate over Tungsten rows — the typed groupByKey formulation paid
       // a tuple-encoder round-trip per span plus an extra shuffle (the
       // lambda key is opaque to the planner)
-      .select(Bridge.column(OwnershipGen(Bridge.expression(col("ss")))))
-      .select(col("task_span_id"), col("id"))
+      .select(col("trace").as("trace_id"),
+        Bridge.column(OwnershipGen(Bridge.expression(col("ss")))))
+      .select(col("task_span_id"), col("id"), col("trace_id"))
   }
 
   /** Generator emitting (task_span_id, id) ownership pairs for one trace's
-    * spans: every span labeled with each `execute-task` ancestor
-    * (inclusive). Input: `array<struct<sid string, parent_id string,
-    * is_task boolean>>`. */
+    * spans: every span occurrence labeled with each `execute-task`
+    * ancestor (inclusive). Input: `array<struct<sid string, parent_id
+    * string, is_task boolean>>`. */
   case class OwnershipGen(child: org.apache.spark.sql.catalyst.expressions.Expression)
       extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
       with org.apache.spark.sql.catalyst.expressions.Generator
       with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.types._
+    import org.apache.spark.unsafe.types.UTF8String
 
     override def elementSchema: StructType = StructType(Seq(
       StructField("task_span_id", StringType, nullable = false),
@@ -94,35 +148,24 @@ object SpanParser {
       val arr = child.eval(input)
         .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
       val n = arr.numElements()
-      val parentOf = new java.util.HashMap[String, String](n * 2)
-      val isTask = new java.util.HashSet[String]()
+      val walk = new TaskAncestry(n)
       val ids = new Array[String](n)
       var i = 0
       while (i < n) {
         val e = arr.getStruct(i, 3)
-        // a null span id (SpanSource tolerates malformed contexts) owns and
-        // is owned by nothing — skip, don't NPE
         if (!e.isNullAt(0)) {
-          val sid = e.getUTF8String(0).toString
-          ids(i) = sid
-          if (!e.isNullAt(1)) parentOf.put(sid, e.getUTF8String(1).toString)
-          if (!e.isNullAt(2) && e.getBoolean(2)) isTask.add(sid)
+          ids(i) = e.getUTF8String(0).toString
+          walk.add(ids(i),
+            if (e.isNullAt(1)) null else e.getUTF8String(1).toString,
+            !e.isNullAt(2) && e.getBoolean(2))
         }
         i += 1
       }
-      val out = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
-      ids.filter(_ != null).foreach { sid =>
-        val visited = new java.util.HashSet[String]()
-        var cur: String = sid
-        // visited-set terminates parent_id cycles in malformed input
-        // (the reference assumes acyclicity; we guard instead of spinning)
-        while (cur != null && visited.add(cur)) {
-          if (isTask.contains(cur)) {
-            out += InternalRow(
-              org.apache.spark.unsafe.types.UTF8String.fromString(cur),
-              org.apache.spark.unsafe.types.UTF8String.fromString(sid))
-          }
-          cur = parentOf.get(cur)
+      val out = mutable.ArrayBuffer.empty[InternalRow]
+      ids.foreach { sid =>
+        if (sid != null) {
+          val id = UTF8String.fromString(sid)
+          walk.foreachOwner(sid)(t => out += InternalRow(UTF8String.fromString(t), id))
         }
       }
       out
@@ -136,7 +179,8 @@ object SpanParser {
   /** Iterative-join variant of [[taggedSpans]] (no per-trace memory
     * bound). NOT selected automatically — call it in place of
     * [[taggedSpans]] when a single trace is too large for one executor's
-    * memory. */
+    * memory. Emits (task_span_id, id) only: it walks span ids across
+    * traces, so it needs ids that are unique in the whole log. */
   def taggedSpansIterative(spans: DataFrame): DataFrame = {
     val roots = spans.filterNested(Seq("name"), "execute-task")
       .select(col("context.span_id"))
@@ -145,11 +189,12 @@ object SpanParser {
   }
 
   /** Payload spans (`named-value` / `artefact`, status OK) joined to their
-    * owning task. */
+    * owning task in the same trace. */
   def payloadDF(spans: DataFrame, pairs: DataFrame, spanName: String): DataFrame =
     spans.filterNested(Seq("name"), spanName)
       .filterNested(Seq("status", "status_code"), "OK")
-      .join(pairs, col("context.span_id") === col("id"))
+      .join(pairs, col("context.span_id") === col("id") &&
+        col("context.trace_id") <=> col("trace_id"))
       .select(col("task_span_id"), col("context.span_id").as("span_id"),
         col("start_time"), col("attributes"))
 
@@ -159,247 +204,210 @@ object SpanParser {
   def artifactsDF(spans: DataFrame): DataFrame =
     payloadDF(spans, taggedSpans(spans), "artefact")
 
-  /** The full parse (B3/B4): spans → [[WorkflowSummary]]. */
-  def parseSpans(spans0: DataFrame): WorkflowSummary = {
-    val spans = spans0.persist(StorageLevel.MEMORY_AND_DISK)
-    try parseSpansImpl(spans)
-    finally spans.unpersist(blocking = false)
+  /** The full parse (B3/B4): spans → [[WorkflowSummary]] in one Spark job. */
+  def parseSpans(spans: DataFrame): WorkflowSummary =
+    summarize(collectSpans(spans))
+
+  /** The parse's one Spark job: every span's [[ParseSpan]] projection. */
+  def collectSpans(spans: DataFrame): Seq[ParseSpan] =
+    ArraySeq.unsafeWrapArray(spans.select(
+        col("name"),
+        col("context.trace_id").as("traceId"),
+        col("context.span_id").as("spanId"),
+        col("parent_id").as("parentId"),
+        col("start_time").as("startTime"),
+        col("end_time").as("endTime"),
+        col("status.status_code").as("statusCode"),
+        col("attributes"),
+        col("events"))
+      .as(ParseSpan.encoder)
+      .collect())
+
+  /** (trace id, task span id): the key of everything a task owns. */
+  private type TaskKey = (String, String)
+
+  /** Driver assembly of one log's spans into its [[WorkflowSummary]]. The
+    * checks run in a fixed order: workflow attributes, task attributes,
+    * exceptions, named values, artifacts, task ids, dependencies. */
+  def summarize(spans: Seq[ParseSpan]): WorkflowSummary = {
+    // B4 timing: min/max over ALL spans; the reference compares ISO
+    // strings lexicographically, which is order-correct for the fixed
+    // format
+    val timing = Timing(
+      spans.iterator.map(_.startTime).filter(_ != null).minOption.orNull,
+      spans.iterator.map(_.endTime).filter(_ != null).maxOption.orNull)
+
+    // B3 workflow attribute union across all spans (same conflict contract
+    // as SpansOps.attributesUnion)
+    val workflowAttributes =
+      resolveAttrs(spans.iterator.flatMap(attrEntries(_, "workflow.")))
+    val topSpanId: String =
+      workflowAttributes.get("workflow.workflow_run_id") match {
+        case Some(s: String) => s
+        case _ => "NO-TOP-SPAN--TEMP" + UUID.randomUUID().toString
+      }
+
+    val owned = ownedSpans(spans)
+
+    // Task-subtree attribute union with per-(task, key) conflict detection.
+    val taskAttrs: Map[TaskKey, Map[String, Any]] = owned.iterator
+      .map { case (task, ss) =>
+        task -> resolveAttrs(ss.iterator.flatMap(attrEntries(_, "task.")))
+      }.toMap
+
+    // Exceptions per task (deterministic order by emitting span's time).
+    val taskExceptions: Map[TaskKey, Seq[Map[String, Any]]] = owned.iterator
+      .map { case (task, ss) =>
+        task -> byStart(ss).flatMap(s =>
+          Option(s.events).getOrElse(Nil).collect {
+            case e if e.name == "exception" => Map[String, Any](
+              "name" -> e.name,
+              "timestamp" -> e.timestamp,
+              "attributes" -> AttrCodec.parseMap(e.attributes))
+          })
+      }.toMap
+
+    // B6 named values: exact attr key set + duplicate-name rejection.
+    val taskValues: Map[TaskKey, Map[String, LoggedValueContent]] = owned.iterator
+      .map { case (task, ss) =>
+        val seen = mutable.LinkedHashMap.empty[String, LoggedValueContent]
+        payload(ss, "named-value").foreach { s =>
+          val attrs = attrsOf(s)
+          require(attrs.keySet == Set("name", "type", "encoding", "content_encoded"),
+            s"named-value span has unexpected attribute keys: ${attrs.keySet}")
+          val parsed = AttrCodec.parseMap(attrs)
+          val name = parsed("name").asInstanceOf[String]
+          if (seen.contains(name)) throw new IllegalArgumentException(
+            s"Named value $name has been logged multiple times.")
+          val tpe = parsed("type").asInstanceOf[String]
+          val content = SerializedData(tpe,
+            parsed("encoding").asInstanceOf[String],
+            parsed("content_encoded").asInstanceOf[String]).decode()
+          seen(name) = LoggedValueContent(tpe, content)
+        }
+        task -> seen.toMap
+      }.toMap
+
+    // B5 artifacts (+ notebook.html derivation flatMap).
+    val taskArtifacts: Map[TaskKey, Seq[ArtifactContent]] = owned.iterator
+      .map { case (task, ss) =>
+        task -> payload(ss, "artefact").flatMap { s =>
+          val parsed = AttrCodec.parseMap(attrsOf(s))
+          val name = parsed("name").asInstanceOf[String]
+          val tpe = parsed("type").asInstanceOf[String]
+          val content = SerializedData(tpe,
+            parsed("encoding").asInstanceOf[String],
+            parsed("content_encoded").asInstanceOf[String]).decode()
+          val artifact = ArtifactContent(name, tpe, content)
+          if (name == "notebook.ipynb") {
+            require(tpe == "utf-8", "notebook.ipynb should be utf-8")
+            Seq(artifact, ArtifactContent("notebook.html", "utf-8",
+              Notebooks.convertIpynbToHtml(content.asInstanceOf[String])))
+          } else Seq(artifact)
+        }
+      }.toMap
+
+    // B3 assembly: one TaskRunSummary per execute-task span, by start time
+    // (null/malformed timestamps first), span id breaking ties.
+    val taskRuns = spans.filter(_.name == "execute-task")
+      .sortBy(s => (safeEpochUs(s.startTime), Option(s.spanId).getOrElse("")))
+      .map { s =>
+        val key = (s.traceId, s.spanId)
+        val attrs = workflowAttributes ++ taskAttrs.getOrElse(key, Map.empty)
+        val taskId = attrs.get("task.id") match {
+          case Some(id: String) => id
+          case other => throw new IllegalArgumentException(
+            s"task.id missing or not a string for task span ${s.spanId}: $other")
+        }
+        TaskRunSummary(
+          spanId = s.spanId,
+          parentSpanId = topSpanId,
+          taskId = taskId,
+          exceptions = taskExceptions.getOrElse(key, Seq.empty),
+          attributes = attrs,
+          timing = Timing(s.startTime, s.endTime),
+          loggedValues = taskValues.getOrElse(key, Map.empty),
+          loggedArtifacts = taskArtifacts.getOrElse(key, Seq.empty))
+      }
+
+    // B1 attribute-form dependency pairs, distinct before decoding
+    val taskDependencies = spans.iterator.filter(_.name == "task-dependency")
+      .map { s =>
+        val a = attrsOf(s)
+        (a.getOrElse("from_task_span_id", null), a.getOrElse("to_task_span_id", null))
+      }
+      .toSet
+      .map { (ft: (String, String)) =>
+        (AttrCodec.parse(ft._1).asInstanceOf[String],
+          AttrCodec.parse(ft._2).asInstanceOf[String])
+      }
+
+    WorkflowSummary(
+      spanId = topSpanId,
+      timing = timing,
+      attributes = workflowAttributes,
+      taskRuns = taskRuns,
+      taskDependencies = taskDependencies)
   }
 
-  private def parseSpansImpl(spans: DataFrame): WorkflowSummary = {
-    val pairs = taggedSpans(spans).persist(StorageLevel.MEMORY_AND_DISK)
-    pairs.count()
-
-    // ONE ownership join, reused by all four extraction passes below (task
-    // attrs, exceptions, named values, artifacts) — re-deriving it per pass
-    // re-ran the join 4× even with both inputs cached
-    val owned = spans.join(pairs, col("context.span_id") === col("id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    try {
-      // ONE extraction job: the four passes (task attributes, exceptions,
-      // named values, artifacts) are projected to a common shape, unioned,
-      // and collected together — separately they cost a job submission and
-      // a cluster-side orderBy shuffle each; the deterministic ordering the
-      // assembly needs is applied driver-side on the (driver-sized) rows.
-      // Columns: kind, task, o1, o2, m, n, t — see each branch.
-      val nullMap = lit(null).cast("map<string,string>")
-      val attrBranch = owned
-        .select(col("task_span_id"), explode(map_entries(col("attributes"))).as("kv"))
-        .select(lit("attr").as("kind"), col("task_span_id").as("task"),
-          col("kv.key").as("o1"), col("kv.value").as("o2"),
-          nullMap.as("m"), lit(null).cast("string").as("n"),
-          lit(null).cast("string").as("t"))
-        .filter(col("o1").startsWith("task."))
-      val excBranch = owned
-        .select(col("task_span_id"), col("start_time"),
-          col("context.span_id").as("sid"), explode(col("events")).as("e"))
-        .filter(col("e.name") === "exception")
-        .select(lit("exc").as("kind"), col("task_span_id").as("task"),
-          col("start_time").as("o1"), col("sid").as("o2"),
-          col("e.attributes").as("m"), col("e.name").as("n"),
-          col("e.timestamp").as("t"))
-      def payloadBranch(kind: String, spanName: String) =
-        payloadFromOwned(owned, spanName)
-          .select(lit(kind).as("kind"), col("task_span_id").as("task"),
-            col("start_time").as("o1"), col("span_id").as("o2"),
-            col("attributes").as("m"), lit(null).cast("string").as("n"),
-            lit(null).cast("string").as("t"))
-      val nullStr = lit(null).cast("string")
-      // workflow.* attribute entries across ALL spans (B3 attributesUnion);
-      // distinct BEFORE the collect so driver traffic scales with distinct
-      // (key, value) pairs, not span count
-      val wattrBranch = spans
-        .select(explode_outer(map_entries(col("attributes"))).as("kv"))
-        .select(col("kv.key").as("k"), col("kv.value").as("v"))
-        .filter(col("k").isNotNull && col("k").startsWith("workflow."))
-        .distinct()
-        .select(lit("wattr").as("kind"), nullStr.as("task"),
-          col("k").as("o1"), col("v").as("o2"),
-          nullMap.as("m"), nullStr.as("n"), nullStr.as("t"))
-      // B1 legacy task-dependency pairs (distinct: same reasoning)
-      val depBranch = spans.filterNested(Seq("name"), "task-dependency")
-        .select(
-          col("attributes").getItem("from_task_span_id").as("f"),
-          col("attributes").getItem("to_task_span_id").as("t0"))
-        .distinct()
-        .select(lit("dep").as("kind"), nullStr.as("task"),
-          col("f").as("o1"), col("t0").as("o2"),
-          nullMap.as("m"), nullStr.as("n"), nullStr.as("t"))
-      // execute-task spans themselves (B3 assembly skeleton)
-      val tspanBranch = spans.filterNested(Seq("name"), "execute-task")
-        .select(lit("tspan").as("kind"), col("context.span_id").as("task"),
-          col("start_time").as("o1"), col("end_time").as("o2"),
-          nullMap.as("m"), nullStr.as("n"), nullStr.as("t"))
-      // B4 timing: min/max over ALL spans; the reference compares ISO
-      // strings lexicographically, which is order-correct for the fixed
-      // format. Folded into the union as a one-row aggregate branch so the
-      // whole parse is a SINGLE collect job (it used to submit its own).
-      val timingBranch = spans
-        .agg(min(col("start_time")).as("o1"), max(col("end_time")).as("o2"))
-        .select(lit("timing").as("kind"), nullStr.as("task"),
-          col("o1"), col("o2"), nullMap.as("m"), nullStr.as("n"),
-          nullStr.as("t"))
-      val extracted = attrBranch
-        .unionByName(excBranch)
-        .unionByName(payloadBranch("nv", "named-value"))
-        .unionByName(payloadBranch("art", "artefact"))
-        .unionByName(wattrBranch)
-        .unionByName(depBranch)
-        .unionByName(tspanBranch)
-        .unionByName(timingBranch)
-        .collect()
-        .groupBy(_.getString(0))
-
-      val timing = extracted.getOrElse("timing", Array.empty[Row]).headOption
-        .map(r => Timing(r.getString(2), r.getString(3)))
-        .getOrElse(Timing(null, null))
-
-      // B3 workflow attribute union (same conflict contract as
-      // SpansOps.attributesUnion, applied driver-side to the wattr rows)
-      val workflowAttributes: Map[String, Any] = extracted
-        .getOrElse("wattr", Array.empty[Row])
-        .groupBy(_.getString(2))
-        .map { case (k, rows) => k -> resolveAttr(k, rows.map(_.getString(3))) }
-      val topSpanId: String =
-        workflowAttributes.get("workflow.workflow_run_id") match {
-          case Some(s: String) => s
-          case _ => "NO-TOP-SPAN--TEMP" + UUID.randomUUID().toString
-        }
-
-      // Task-subtree attribute union with per-(task, key) conflict detection.
-      val taskAttrs: Map[String, Map[String, Any]] = extracted
-        .getOrElse("attr", Array.empty[Row])
-        .groupBy(r => (r.getString(1), r.getString(2)))
-        .toSeq
-        .map { case ((task, k), rows) =>
-          (task, k, resolveAttr(k, rows.map(_.getString(3))))
-        }
-        .groupBy(_._1)
-        .map { case (task, entries) =>
-          task -> entries.map(e => e._2 -> e._3).toMap
-        }
-
-      // Exceptions per task (deterministic order by emitting span's time).
-      val taskExceptions: Map[String, Seq[Map[String, Any]]] = extracted
-        .getOrElse("exc", Array.empty[Row])
-        // null-tolerant key: SpanSource tolerates missing start_time/span_id
-        // (same guard as the tspan branch's safeEpochUs sort below) — a raw
-        // String Ordering NPEs on null and would crash the whole parse
-        .sortBy(r => (Option(r.getString(2)).getOrElse(""),
-          Option(r.getString(3)).getOrElse("")))
-        .groupBy(_.getString(1))
-        .map { case (task, rows) =>
-          task -> rows.toSeq.map { r =>
-            Map[String, Any](
-              "name" -> r.getString(5),
-              "timestamp" -> r.getString(6),
-              "attributes" -> AttrCodec.parseMap(
-                r.getMap[String, String](4).toMap))
+  /** Every span labeled with each `execute-task` ancestor (inclusive) in
+    * its own trace, grouped by owning task in first-seen order. A span id
+    * repeated n times within a trace puts each of its rows n times under
+    * every owner: the multiplicity of the distributed path's
+    * spans⋈[[taggedSpans]] join ([[payloadDF]], [[TaskRunsGen]]), so both
+    * paths count a repeated payload or exception span alike. */
+  private def ownedSpans(spans: Seq[ParseSpan]): Seq[(TaskKey, Seq[ParseSpan])] = {
+    val byTrace = mutable.LinkedHashMap.empty[Option[String], mutable.ArrayBuffer[ParseSpan]]
+    spans.foreach(s => byTrace.getOrElseUpdate(Option(s.traceId), mutable.ArrayBuffer.empty) += s)
+    val owned = mutable.LinkedHashMap.empty[TaskKey, mutable.ArrayBuffer[ParseSpan]]
+    byTrace.foreach { case (trace, rows) =>
+      val walk = new TaskAncestry(rows.size)
+      val repeats = mutable.HashMap.empty[String, Int]
+      rows.foreach { s =>
+        walk.add(s.spanId, s.parentId, s.name == "execute-task")
+        if (s.spanId != null) repeats(s.spanId) = repeats.getOrElse(s.spanId, 0) + 1
+      }
+      rows.foreach { s =>
+        if (s.spanId != null) {
+          val n = repeats(s.spanId)
+          walk.foreachOwner(s.spanId) { t =>
+            val buf = owned.getOrElseUpdate((trace.orNull, t), mutable.ArrayBuffer.empty)
+            (0 until n).foreach(_ => buf += s)
           }
         }
-
-      // B6 named values: exact attr key set + duplicate-name rejection.
-      val taskValues: Map[String, Map[String, LoggedValueContent]] = extracted
-        .getOrElse("nv", Array.empty[Row])
-        // null-tolerant key: SpanSource tolerates missing start_time/span_id
-        // (same guard as the tspan branch's safeEpochUs sort below) — a raw
-        // String Ordering NPEs on null and would crash the whole parse
-        .sortBy(r => (Option(r.getString(2)).getOrElse(""),
-          Option(r.getString(3)).getOrElse("")))
-        .groupBy(_.getString(1))
-        .map { case (task, rows) =>
-          val seen = scala.collection.mutable.LinkedHashMap.empty[String, LoggedValueContent]
-          rows.foreach { r =>
-            val attrs = r.getMap[String, String](4).toMap
-            require(attrs.keySet == Set("name", "type", "encoding", "content_encoded"),
-              s"named-value span has unexpected attribute keys: ${attrs.keySet}")
-            val parsed = AttrCodec.parseMap(attrs)
-            val name = parsed("name").asInstanceOf[String]
-            if (seen.contains(name)) throw new IllegalArgumentException(
-              s"Named value $name has been logged multiple times.")
-            val tpe = parsed("type").asInstanceOf[String]
-            val content = SerializedData(tpe,
-              parsed("encoding").asInstanceOf[String],
-              parsed("content_encoded").asInstanceOf[String]).decode()
-            seen(name) = LoggedValueContent(tpe, content)
-          }
-          task -> seen.toMap
-        }
-
-      // B5 artifacts (+ notebook.html derivation flatMap).
-      val taskArtifacts: Map[String, Seq[ArtifactContent]] = extracted
-        .getOrElse("art", Array.empty[Row])
-        // null-tolerant key: SpanSource tolerates missing start_time/span_id
-        // (same guard as the tspan branch's safeEpochUs sort below) — a raw
-        // String Ordering NPEs on null and would crash the whole parse
-        .sortBy(r => (Option(r.getString(2)).getOrElse(""),
-          Option(r.getString(3)).getOrElse("")))
-        .groupBy(_.getString(1))
-        .map { case (task, rows) =>
-          task -> rows.toSeq.flatMap { r =>
-            val parsed = AttrCodec.parseMap(r.getMap[String, String](4).toMap)
-            val name = parsed("name").asInstanceOf[String]
-            val tpe = parsed("type").asInstanceOf[String]
-            val content = SerializedData(tpe,
-              parsed("encoding").asInstanceOf[String],
-              parsed("content_encoded").asInstanceOf[String]).decode()
-            val artifact = ArtifactContent(name, tpe, content)
-            if (name == "notebook.ipynb") {
-              require(tpe == "utf-8", "notebook.ipynb should be utf-8")
-              Seq(artifact, ArtifactContent("notebook.html", "utf-8",
-                Notebooks.convertIpynbToHtml(content.asInstanceOf[String])))
-            } else Seq(artifact)
-          }
-        }
-
-      // B3 assembly: one TaskRunSummary per execute-task span, by start time
-      // (driver-side sort on parsed timestamps — same order as the previous
-      // cluster-side orderBy(to_timestamp, span_id)).
-      val taskRuns = extracted.getOrElse("tspan", Array.empty[Row]).toSeq
-        .sortBy(r => (safeEpochUs(r.getString(2)),
-          Option(r.getString(1)).getOrElse("")))
-        .map { r =>
-          val sid = r.getString(1)
-          val attrs = workflowAttributes ++ taskAttrs.getOrElse(sid, Map.empty)
-          val taskId = attrs.get("task.id") match {
-            case Some(s: String) => s
-            case other => throw new IllegalArgumentException(
-              s"task.id missing or not a string for task span $sid: $other")
-          }
-          TaskRunSummary(
-            spanId = sid,
-            parentSpanId = topSpanId,
-            taskId = taskId,
-            exceptions = taskExceptions.getOrElse(sid, Seq.empty),
-            attributes = attrs,
-            timing = Timing(r.getString(2), r.getString(3)),
-            loggedValues = taskValues.getOrElse(sid, Map.empty),
-            loggedArtifacts = taskArtifacts.getOrElse(sid, Seq.empty))
-        }
-
-      // B1 dependencies from the dep branch (attribute-form pairs)
-      val taskDependencies = extracted.getOrElse("dep", Array.empty[Row])
-        .map(r => (AttrCodec.parse(r.getString(2)).asInstanceOf[String],
-          AttrCodec.parse(r.getString(3)).asInstanceOf[String]))
-        .toSet
-
-      WorkflowSummary(
-        spanId = topSpanId,
-        timing = timing,
-        attributes = workflowAttributes,
-        taskRuns = taskRuns,
-        taskDependencies = taskDependencies)
-    } finally {
-      owned.unpersist(blocking = false)
-      pairs.unpersist(blocking = false)
+      }
     }
+    owned.iterator.map { case (task, ss) => task -> ss.toSeq }.toSeq
+  }
+
+  private def attrsOf(s: ParseSpan): Map[String, String] =
+    Option(s.attributes).getOrElse(Map.empty)
+
+  private def attrEntries(s: ParseSpan, prefix: String): Iterator[(String, String)] =
+    attrsOf(s).iterator.filter(_._1.startsWith(prefix))
+
+  /** OK-status `spanName` spans, by start time then span id (both
+    * null-tolerant: SpanSource tolerates missing start_time/span_id, and a
+    * raw String Ordering NPEs on null). */
+  private def payload(ss: Seq[ParseSpan], spanName: String): Seq[ParseSpan] =
+    byStart(ss.filter(s => s.name == spanName && s.statusCode == "OK"))
+
+  private def byStart(ss: Seq[ParseSpan]): Seq[ParseSpan] =
+    ss.sortBy(s => (Option(s.startTime).getOrElse(""), Option(s.spanId).getOrElse("")))
+
+  /** Attribute union of (key, raw value) entries: one value per key, or
+    * the [[resolveAttr]] conflict error. */
+  private def resolveAttrs(entries: Iterator[(String, String)]): Map[String, Any] = {
+    val raws = mutable.LinkedHashMap.empty[String, mutable.LinkedHashSet[String]]
+    entries.foreach { case (k, v) =>
+      raws.getOrElseUpdate(k, mutable.LinkedHashSet.empty) += v
+    }
+    raws.iterator.map { case (k, vs) => k -> resolveAttr(k, vs.toSeq) }.toMap
   }
 
   /** Single attribute value for `k` from its distinct raw renderings —
-    * throws the attributesUnion conflict contract on divergence. Shared by
-    * the driver-side workflow- and task-attribute merges. */
-  private def resolveAttr(k: String, raws: Seq[String]): Any = {
+    * throws the attributesUnion conflict contract on divergence. */
+  private[graft] def resolveAttr(k: String, raws: Seq[String]): Any = {
     val distinct = raws.distinct
     if (distinct.size > 1) {
       val vs = distinct.map(AttrCodec.parse)
@@ -411,35 +419,20 @@ object SpanParser {
 
   /** Sort key tolerant of null/malformed timestamps (sorted first, like the
     * cluster-side `orderBy(to_timestamp(...))` null ordering it replaced). */
-  private def safeEpochUs(s: String): Long =
+  private[graft] def safeEpochUs(s: String): Long =
     if (s == null) Long.MinValue
     else try graft.model.TimeFns.iso8601ToEpochUs(s)
     catch { case _: RuntimeException | _: java.time.DateTimeException => Long.MinValue }
 
-  /** [[payloadDF]]'s filter applied to an already-materialized
-    * spans⋈ownership join. */
-  private def payloadFromOwned(owned: DataFrame, spanName: String): DataFrame =
-    owned
-      .filterNested(Seq("name"), spanName)
-      .filterNested(Seq("status", "status_code"), "OK")
-      .select(col("task_span_id"), col("context.span_id").as("span_id"),
-        col("start_time"), col("attributes"))
-
   /** B9-style flat task-run DataFrame (for sinks/relational queries over
     * many runs) — everything driver-sized stripped of artifact payloads.
     *
-    * Single-pass shape (round-15, guide §7.2): the previous formulation
-    * derived the spans collection THREE times — once under [[taggedSpans]],
-    * once for the exception branch's spans⋈pairs join, once for the
-    * `execute-task` filter — and paid two shuffle joins plus an aggregate
-    * to glue them back together (for the b3 battery row that meant three
-    * lag-window derivations of the orders base; both pin flavors measured
-    * SLOWER in round 14, so the fix is structural, like the gate folds).
-    * Now ONE narrow per-span projection is grouped by trace once and
-    * [[TaskRunsGen]] does the ownership walk AND the exception
-    * attribution in the same in-memory pass that [[taggedSpans]] already
-    * does for the pairs view. Parity with the old three-branch shape is
-    * pinned by ParserSpec ("fused == unfused on nested tasks/cycles"). */
+    * Single-pass shape (round-15, guide §7.2): ONE narrow per-span
+    * projection is grouped by trace once and [[TaskRunsGen]] does the
+    * ownership walk AND the exception attribution in one in-memory pass.
+    * Parity with the three-branch join formulation is pinned by ParserSpec
+    * ("fused == unfused on nested tasks/cycles") against the test-tree
+    * oracle `ParseOracles.taskRunsDFUnfused`. */
   def taskRunsDF(spans: DataFrame): DataFrame = {
     import org.apache.spark.sql.graftbridge.Bridge
     val isTask = coalesce(col("name") === "execute-task", lit(false))
@@ -468,36 +461,14 @@ object SpanParser {
         graft.model.TimeFns.durationSCol(col("start_time"), col("end_time")))
   }
 
-  /** Reference three-branch formulation of [[taskRunsDF]], kept ONLY as
-    * the parity oracle for the fused generator path (ParserSpec) — not on
-    * any query path. */
-  private[graft] def taskRunsDFUnfused(spans: DataFrame): DataFrame = {
-    val pairs = taggedSpans(spans)
-    val exc = spans
-      .join(pairs, col("context.span_id") === col("id"))
-      .select(col("task_span_id"), explode(col("events")).as("e"))
-      .filter(col("e.name") === "exception")
-      .groupBy(col("task_span_id")).agg(count(lit(1)).as("n_exceptions"))
-    spans.filterNested(Seq("name"), "execute-task")
-      .select(col("context.span_id").as("task_span_id"),
-        col("start_time"), col("end_time"),
-        get_json_object(col("attributes").getItem("task.id"), "$").as("task_id"))
-      .join(exc, Seq("task_span_id"), "left")
-      .withColumn("n_exceptions", coalesce(col("n_exceptions"), lit(0L)))
-      .withColumn("is_success", col("n_exceptions") === 0)
-      .withColumn("duration_s",
-        graft.model.TimeFns.durationSCol(col("start_time"), col("end_time")))
-  }
-
   /** Generator emitting one task-run row per `execute-task` span of one
-    * trace, with exception events attributed through the SAME inclusive
-    * ancestor walk as [[OwnershipGen]] — including its edge semantics:
-    * null span ids own and are owned by nothing (a null-sid task still
-    * emits its row, with 0 exceptions), cycles terminate via the visited
-    * set, and a duplicated sid multiplies pair occurrences exactly like
-    * the old pairs⋈events join did (per-occurrence walk × per-sid event
-    * total). Input: `array<struct<sid, parent_id, is_task, n_exc,
-    * start_time, end_time, task_id>>`. */
+    * trace, with exception events attributed through the [[TaskAncestry]]
+    * walk: null span ids own and are owned by nothing (a null-sid task
+    * still emits its row, with 0 exceptions), cycles terminate, and a
+    * duplicated sid multiplies pair occurrences exactly like the old
+    * pairs⋈events join did (per-occurrence walk × per-sid event total).
+    * Input: `array<struct<sid, parent_id, is_task, n_exc, start_time,
+    * end_time, task_id>>`. */
   case class TaskRunsGen(child: org.apache.spark.sql.catalyst.expressions.Expression)
       extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
       with org.apache.spark.sql.catalyst.expressions.Generator
@@ -517,16 +488,16 @@ object SpanParser {
       val arr = child.eval(input)
         .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
       val n = arr.numElements()
-      val parentOf = new java.util.HashMap[String, String](n * 2)
-      val isTask = new java.util.HashSet[String]()
+      val walk = new TaskAncestry(n)
       val totalExc = new java.util.HashMap[String, Long]()
       var i = 0
       while (i < n) {
         val e = arr.getStruct(i, 7)
         if (!e.isNullAt(0)) {
           val sid = e.getUTF8String(0).toString
-          if (!e.isNullAt(1)) parentOf.put(sid, e.getUTF8String(1).toString)
-          if (!e.isNullAt(2) && e.getBoolean(2)) isTask.add(sid)
+          walk.add(sid,
+            if (e.isNullAt(1)) null else e.getUTF8String(1).toString,
+            !e.isNullAt(2) && e.getBoolean(2))
           val ne = e.getLong(3)
           if (ne > 0)
             totalExc.merge(sid, ne, (a: Long, b: Long) => a + b)
@@ -543,19 +514,12 @@ object SpanParser {
         if (!e.isNullAt(0)) {
           val sid = e.getUTF8String(0).toString
           val tot = totalExc.getOrDefault(sid, 0L)
-          if (tot > 0) {
-            val visited = new java.util.HashSet[String]()
-            var cur: String = sid
-            while (cur != null && visited.add(cur)) {
-              if (isTask.contains(cur))
-                taskExc.merge(cur, tot, (a: Long, b: Long) => a + b)
-              cur = parentOf.get(cur)
-            }
-          }
+          if (tot > 0)
+            walk.foreachOwner(sid)(t => taskExc.merge(t, tot, (a: Long, b: Long) => a + b))
         }
         i += 1
       }
-      val out = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+      val out = mutable.ArrayBuffer.empty[InternalRow]
       i = 0
       while (i < n) {
         val e = arr.getStruct(i, 7)
@@ -579,6 +543,7 @@ object SpanParser {
       copy(child = newChild)
   }
 }
+
 
 /** E8/B5 — minimal ipynb-JSON → HTML renderer (no nbconvert on the JVM;
   * the reference shells out to `jupyter nbconvert --to html`,

@@ -508,19 +508,14 @@ object SpanAlgebra {
     * reference's whole output is a driver object by contract) bounded at
     * bench sf.
     *
-    * `coalesce` + `localCheckpoint` before the parse: the parse submits
-    * several jobs over the same derived collection, and each would
-    * otherwise re-analyze the full derivation lineage (4-branch union ×
-    * id-rewrite — seconds of planner time at this tree size) and fan out
-    * hundreds of near-empty tasks; the checkpoint materializes the
-    * driver-gate-sized collection once and every parse job plans over a
-    * plain cached-RDD scan. */
+    * `coalesce` before the parse: the parse is one collect, and without it
+    * that job would fan out hundreds of near-empty tasks. */
   def workflowTiming(s: SparkSession, d: String): DataFrame = {
     val spark = s
     import spark.implicits._
     val summary = SpanParser.parseSpans(
       with0x(spansFromOrders(s, d, Some(col("o_custkey") % 20 === 0)))
-        .coalesce(8).localCheckpoint())
+        .coalesce(8))
     val synthetic = summary.spanId.startsWith("NO-TOP-SPAN--TEMP")
     summary.taskRuns.map(tr => (
         tr.taskId,
@@ -559,8 +554,9 @@ object SpanAlgebra {
       .agg(min(struct(col("o_orderkey"), col("o_custkey"))).as("m"))
       .select(col("m.o_orderkey"), col("m.o_custkey")).head()
     val (okey, cust) = (first.get(0), first.get(1))
-    // one customer's trace, one checkpointed partition: both parses below
-    // plan over a plain cached-RDD scan (see workflowTiming's note)
+    // one customer's trace, one checkpointed partition: the two parses
+    // and the duplicate's filter below scan it instead of re-running the
+    // derivation (4-branch union × id-rewrite) each
     val spans = with0x(spansFromOrders(s, d,
       Some(col("o_custkey") === cust))).coalesce(1).localCheckpoint()
     val clean = SpanParser.parseSpans(spans)
@@ -647,7 +643,7 @@ object SpanAlgebra {
         when(isArt && k % 6 === 1, ipynbAttrs).otherwise(col("attributes")))
       .withColumn("status",
         when(isArt && k % 12 === 4, errStatus).otherwise(col("status")))
-      .coalesce(8).localCheckpoint() // see workflowTiming's note
+      .coalesce(8) // see workflowTiming's note
     val summary = SpanParser.parseSpans(spans)
     summary.taskRuns.flatMap(tr => tr.loggedArtifacts.map(a =>
       (tr.taskId, a.name, a.tpe, a.content.asInstanceOf[String].length.toLong)))

@@ -1,7 +1,7 @@
 package graft.sinks
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path}
 
 import graft.model.Json
 import graft.parser.{ArtifactContent, SpanParser, TaskRunSummary, WorkflowSummary}
@@ -137,14 +137,15 @@ object DirectoryTreeSink {
   }
 
   /** Resolve a user-controlled relative name under `base`, rejecting
-    * absolute names and any traversal that escapes the base. (Path.resolve
+    * absolute names, names that resolve to the base itself (`""`, `.`)
+    * and any traversal that escapes the base. (Path.resolve
     * DISCARDS the base for an absolute argument, and ".." segments resolve
     * outward — both must be checked on the normalized result.) */
   def resolveSafe(base: Path, name: String): Path = {
     require(!java.nio.file.Paths.get(name).isAbsolute,
       s"Absolute artifact name rejected: $name")
     val resolved = base.resolve(name).normalize()
-    require(resolved.startsWith(base.normalize()),
+    require(resolved.startsWith(base.normalize()) && resolved != base.normalize(),
       s"Artifact name escapes its directory: $name")
     resolved
   }
@@ -191,8 +192,14 @@ object DirectoryTreeSink {
   * diagrams, metadata JSON) written post-hoc under the www root. */
 object StaticDataSink {
 
+  /** `artifacts/<kind>/<spanId>` under the www root. Span ids come from
+    * untrusted run zips, so the id is resolved with the same guard as an
+    * artifact name: no absolute ids, no `..` escaping the directory. */
+  private def spanDir(wwwRoot: Path, kind: String, spanId: String): Path =
+    DirectoryTreeSink.resolveSafe(wwwRoot.resolve("artifacts").resolve(kind), spanId)
+
   def process(summary: WorkflowSummary, wwwRoot: Path): Seq[Map[String, Any]] = {
-    val workflowDir = Paths.get("artifacts", "workflow", summary.spanId)
+    val workflowDir = spanDir(wwwRoot, "workflow", summary.spanId)
 
     val reportingArtifacts = Seq(
       ArtifactContent("dag.mmd", "utf-8",
@@ -204,7 +211,7 @@ object StaticDataSink {
         Render.prettyJson(DirectoryTreeSink.toOrdered(summary.asDict))))
 
     reportingArtifacts.foreach(a =>
-      a.write(DirectoryTreeSink.resolveSafe(wwwRoot.resolve(workflowDir), a.name)))
+      a.write(DirectoryTreeSink.resolveSafe(workflowDir, a.name)))
 
     val workflowEntry = Map[String, Any](
       "parent_span_id" -> null,
@@ -216,12 +223,11 @@ object StaticDataSink {
       "artifacts" -> reportingArtifacts.map(_.metadataAsDict))
 
     val taskEntries = summary.taskRuns.map { t =>
-      val taskDir = Paths.get("artifacts", "task", t.spanId)
+      val taskDir = spanDir(wwwRoot, "task", t.spanId)
       val metaArtifact = ArtifactContent("run-time-metadata.json", "utf-8",
         Render.prettyJson(DirectoryTreeSink.toOrdered(t.asDict)))
       val all = t.loggedArtifacts :+ metaArtifact
-      all.foreach(a =>
-        a.write(DirectoryTreeSink.resolveSafe(wwwRoot.resolve(taskDir), a.name)))
+      all.foreach(a => a.write(DirectoryTreeSink.resolveSafe(taskDir, a.name)))
       Map[String, Any](
         "parent_span_id" -> summary.spanId,
         "span_id" -> t.spanId,

@@ -73,4 +73,59 @@ class CliSpec extends AnyFunSuite {
     val files = walk(root)
     assert(files.nonEmpty, "static data files written")
   }
+
+  private def zipOf(dir: java.nio.file.Path, name: String, spansJson: String): Unit = {
+    val zos = new java.util.zip.ZipOutputStream(Files.newOutputStream(dir.resolve(name)))
+    try {
+      zos.putNextEntry(new java.util.zip.ZipEntry("opentelemetry-spans.json"))
+      zos.write(spansJson.getBytes("UTF-8"))
+      zos.closeEntry()
+    } finally zos.close()
+  }
+
+  test("G5 StaticDataCli: hostile span ids cannot write outside the www root") {
+    import graft.model.AttrCodec
+    val spans = runSpans()
+    def runId(id: String) = id -> spans.map { s =>
+      if (s.name == "execute-task") s.copy(attributes =
+        s.attributes + ("workflow.workflow_run_id" -> AttrCodec.render(id)))
+      else s
+    }
+    val firstTask = spans.find(_.name == "execute-task").get.context.span_id
+    val taskId = "0x/../../../../escaped-task" -> spans.map { s =>
+      if (s.context.span_id == firstTask)
+        s.copy(context = s.context.copy(span_id = "0x/../../../../escaped-task"))
+      else s
+    }
+    for ((bad, hostile) <- Seq(runId("../../../escaped"), runId("/tmp/absolute-run"),
+        runId("."), taskId)) {
+      val dir = Files.createTempDirectory("graft-cli-hostile")
+      val zips = Files.createDirectories(dir.resolve("zips"))
+      zipOf(zips, "run.zip",
+        hostile.map(graft.exec.SpanJson.render).mkString("[", ",\n", "]"))
+      val e = intercept[IllegalArgumentException](graft.cli.StaticDataCli.run(Array(
+        "--zip_cache_dir", zips.toString,
+        "--output_www_root_directory", dir.resolve("a/b/www").toString), spark))
+      assert(e.getMessage.contains(bad), e.getMessage)
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+      val escaped = walk(dir.toFile).map(_.toPath)
+        .filterNot(p => p.startsWith(zips) || p.startsWith(dir.resolve("a/b/www")))
+      assert(escaped.isEmpty, escaped)
+    }
+  }
+
+  test("G5 LogParserCli: the no-links DAG replaces only the .mmd suffix") {
+    val dir = Files.createTempDirectory("graft-cli-mmd")
+    val spanFile = s"$dir/spans.jsonl"
+    val sink = new graft.exec.SpanSink
+    runSpans().foreach(sink.add)
+    sink.writeJsonl(spanFile)
+    val outDir = dir.resolve("out.mmd")
+    graft.cli.LogParserCli.run(Array(
+      "--input_span_file", spanFile,
+      "--output_filepath_mermaid_dag", s"$outDir/dag.mmd"), spark)
+    assert(Files.exists(outDir.resolve("dag.mmd")))
+    assert(Files.exists(outDir.resolve("dag-nolinks.mmd")))
+  }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.functions.{col, get_json_object}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.SpanModel
@@ -9,58 +10,8 @@ import SpanFixtures._
 /** Parser-layer tests (SURVEY §2 Group B) over a hand-built workflow span
   * tree shaped like the reference's recorded runs (§3.2). */
 class ParserSpec extends AnyFunSuite {
+  import ParserSpec._
   lazy val spark = TestSpark.spark
-
-  /** A 2-task workflow: top → (task1 → guard1 → call1 → value+artefact,
-    * task2 → guard2 → call2(error)), plus dependency spans task1→task2. */
-  def workflowSpans = Seq(
-    span("dag-top-span", "0xtop", None,
-      start = "2021-01-01T00:00:00.000000Z", end = "2021-01-01T00:00:20.000000Z",
-      attrs = Map("workflow.env" -> "xyz")),
-    span("execute-task", "0xt1", Some("0xtop"),
-      start = "2021-01-01T00:00:01.000000Z", end = "2021-01-01T00:00:10.000000Z",
-      attrs = Map("workflow.env" -> "xyz", "task.id" -> "ingest",
-        "task.type" -> "python", "task.num_cpus" -> 1, "task.timeout_s" -> -1),
-      status = "OK"),
-    span("timeout-guard", "0xg1", Some("0xt1"),
-      start = "2021-01-01T00:00:01.100000Z", end = "2021-01-01T00:00:09.900000Z",
-      status = "OK"),
-    span("call-python-function", "0xc1", Some("0xg1"),
-      start = "2021-01-01T00:00:01.200000Z", end = "2021-01-01T00:00:09.800000Z",
-      status = "OK"),
-    span("named-value", "0xv1", Some("0xc1"),
-      start = "2021-01-01T00:00:02.000000Z", end = "2021-01-01T00:00:02.100000Z",
-      attrs = Map("name" -> "accuracy", "type" -> "float",
-        "encoding" -> "json", "content_encoded" -> "0.98"),
-      status = "OK"),
-    span("artefact", "0xa1", Some("0xc1"),
-      start = "2021-01-01T00:00:03.000000Z", end = "2021-01-01T00:00:03.100000Z",
-      attrs = Map("name" -> "README.md", "type" -> "utf-8",
-        "encoding" -> "utf-8", "content_encoded" -> "foobar123"),
-      status = "OK"),
-    span("execute-task", "0xt2", Some("0xtop"),
-      start = "2021-01-01T00:00:11.000000Z", end = "2021-01-01T00:00:19.000000Z",
-      attrs = Map("workflow.env" -> "xyz", "task.id" -> "train",
-        "task.type" -> "python", "task.num_cpus" -> 2, "task.timeout_s" -> 10.5),
-      status = "ERROR", statusDesc = Some("Failure")),
-    span("task-dependency", "0xd1", Some("0xt2"),
-      start = "2021-01-01T00:00:11.100000Z", end = "2021-01-01T00:00:11.200000Z",
-      attrs = Map("from_task_span_id" -> "0xt1", "to_task_span_id" -> "0xt2")),
-    span("timeout-guard", "0xg2", Some("0xt2"),
-      start = "2021-01-01T00:00:11.300000Z", end = "2021-01-01T00:00:18.900000Z",
-      status = "ERROR", statusDesc = Some("Failure")),
-    span("call-python-function", "0xc2", Some("0xg2"),
-      start = "2021-01-01T00:00:11.400000Z", end = "2021-01-01T00:00:18.800000Z",
-      status = "ERROR", statusDesc = Some("Failure"),
-      events = Seq(exceptionEvent("train failed!"))))
-
-  def withLinks = workflowSpans.map {
-    case s if s.context.span_id == "0xt2" =>
-      s.copy(links = Seq(graft.model.SpanLinkRow(
-        graft.model.SpanContextRow("0xabc123", "0xt1", "[]"),
-        Map("type" -> "\"task-dependency\""))))
-    case s => s
-  }
 
   test("B1/B2 dependency extraction agree (attr + link forms)") {
     val df = SpanModel.toDF(spark, withLinks)
@@ -231,6 +182,27 @@ class ParserSpec extends AnyFunSuite {
     assert(!grouped.exists(_._2 == "0xc1")) // cycle terminates, owns nothing
   }
 
+  test("ownership is keyed by (trace, span id): two runs sharing a " +
+    "named-value span id each keep their own value") {
+    def run(trace: String, task: String, v: Long) = Seq(
+      span("execute-task", s"0xt$task", None, traceId = trace,
+        attrs = Map("task.id" -> task, "task.type" -> "python"), status = "OK"),
+      span("named-value", "0x01", Some(s"0xt$task"), traceId = trace,
+        attrs = Map("name" -> "x", "type" -> "int", "encoding" -> "json",
+          "content_encoded" -> v.toString), status = "OK"))
+    val df = SpanModel.toDF(spark, run("0xA", "a", 1L) ++ run("0xB", "b", 2L))
+    val s = SpanParser.parseSpans(df)
+    assert(s.taskRuns.map(t => t.taskId -> t.loggedValues) == Seq(
+      "a" -> Map("x" -> graft.parser.LoggedValueContent("int", 1L)),
+      "b" -> Map("x" -> graft.parser.LoggedValueContent("int", 2L))))
+    // the distributed path attributes by trace too
+    val nv = SpanParser.namedValuesDF(df)
+      .select(col("task_span_id"), get_json_object(
+        col("attributes").getItem("content_encoded"), "$"))
+      .collect().map(r => (r.getString(0), r.getString(1))).toSet
+    assert(nv == Set(("0xta", "1"), ("0xtb", "2")))
+  }
+
   test("B9 taskRunsDF flat view") {
     val df = SpanParser.taskRunsDF(SpanModel.toDF(spark, workflowSpans))
     val rows = df.orderBy("start_time").collect()
@@ -268,11 +240,65 @@ class ParserSpec extends AnyFunSuite {
         r.getAs[String]("task_id"), r.getAs[Long]("n_exceptions"),
         r.getAs[Boolean]("is_success"), r.getAs[Double]("duration_s"))).toSet
     val fused = rows(SpanParser.taskRunsDF(df))
-    val ref = rows(SpanParser.taskRunsDFUnfused(df))
+    val ref = rows(ParseOracles.taskRunsDFUnfused(df))
     assert(fused == ref)
     val byId = fused.map(t => t._1 -> t._5).toMap
     assert(byId("0xt1") == 3L) // own + both leaf events through t2's chain
     assert(byId("0xt2") == 2L)
     assert(byId("0xt3") == 0L)
+  }
+}
+
+/** The hand-built workflow fixtures, shared with [[ParseParitySpec]]. */
+object ParserSpec {
+  /** A 2-task workflow: top → (task1 → guard1 → call1 → value+artefact,
+    * task2 → guard2 → call2(error)), plus dependency spans task1→task2. */
+  def workflowSpans = Seq(
+    span("dag-top-span", "0xtop", None,
+      start = "2021-01-01T00:00:00.000000Z", end = "2021-01-01T00:00:20.000000Z",
+      attrs = Map("workflow.env" -> "xyz")),
+    span("execute-task", "0xt1", Some("0xtop"),
+      start = "2021-01-01T00:00:01.000000Z", end = "2021-01-01T00:00:10.000000Z",
+      attrs = Map("workflow.env" -> "xyz", "task.id" -> "ingest",
+        "task.type" -> "python", "task.num_cpus" -> 1, "task.timeout_s" -> -1),
+      status = "OK"),
+    span("timeout-guard", "0xg1", Some("0xt1"),
+      start = "2021-01-01T00:00:01.100000Z", end = "2021-01-01T00:00:09.900000Z",
+      status = "OK"),
+    span("call-python-function", "0xc1", Some("0xg1"),
+      start = "2021-01-01T00:00:01.200000Z", end = "2021-01-01T00:00:09.800000Z",
+      status = "OK"),
+    span("named-value", "0xv1", Some("0xc1"),
+      start = "2021-01-01T00:00:02.000000Z", end = "2021-01-01T00:00:02.100000Z",
+      attrs = Map("name" -> "accuracy", "type" -> "float",
+        "encoding" -> "json", "content_encoded" -> "0.98"),
+      status = "OK"),
+    span("artefact", "0xa1", Some("0xc1"),
+      start = "2021-01-01T00:00:03.000000Z", end = "2021-01-01T00:00:03.100000Z",
+      attrs = Map("name" -> "README.md", "type" -> "utf-8",
+        "encoding" -> "utf-8", "content_encoded" -> "foobar123"),
+      status = "OK"),
+    span("execute-task", "0xt2", Some("0xtop"),
+      start = "2021-01-01T00:00:11.000000Z", end = "2021-01-01T00:00:19.000000Z",
+      attrs = Map("workflow.env" -> "xyz", "task.id" -> "train",
+        "task.type" -> "python", "task.num_cpus" -> 2, "task.timeout_s" -> 10.5),
+      status = "ERROR", statusDesc = Some("Failure")),
+    span("task-dependency", "0xd1", Some("0xt2"),
+      start = "2021-01-01T00:00:11.100000Z", end = "2021-01-01T00:00:11.200000Z",
+      attrs = Map("from_task_span_id" -> "0xt1", "to_task_span_id" -> "0xt2")),
+    span("timeout-guard", "0xg2", Some("0xt2"),
+      start = "2021-01-01T00:00:11.300000Z", end = "2021-01-01T00:00:18.900000Z",
+      status = "ERROR", statusDesc = Some("Failure")),
+    span("call-python-function", "0xc2", Some("0xg2"),
+      start = "2021-01-01T00:00:11.400000Z", end = "2021-01-01T00:00:18.800000Z",
+      status = "ERROR", statusDesc = Some("Failure"),
+      events = Seq(exceptionEvent("train failed!"))))
+
+  def withLinks = workflowSpans.map {
+    case s if s.context.span_id == "0xt2" =>
+      s.copy(links = Seq(graft.model.SpanLinkRow(
+        graft.model.SpanContextRow("0xabc123", "0xt1", "[]"),
+        Map("type" -> "\"task-dependency\""))))
+    case s => s
   }
 }
