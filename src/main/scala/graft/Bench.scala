@@ -1,5 +1,7 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.immutable.ListMap
+import org.apache.spark.sql.DataFrame
+import graft.model.Json
 object Bench {
   /** Timing action: write to the no-op sink, which computes EVERY output
     * column. `count()` (used through round 8's opening runs) lets Catalyst
@@ -11,18 +13,8 @@ object Bench {
   private def exec(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = Harness.withSession { spark =>
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // Session warm-up: run the whole suite once, untimed, at the smallest
     // scale factor AVAILABLE NEXT TO the benched one (falling back to the
     // benched dir itself — never a trivial job that warms nothing). This
@@ -30,6 +22,8 @@ object Bench {
     // Janino generated-code cache with each query's stages, so the timed
     // runs measure execution, not first-call compiler latency — the same
     // prepared-statement hygiene a long-running service gets for free.
+    // The warm-up ignores SPARK_GRAFT_QUERIES, so a filtered run sees the
+    // same compiled-code state as a full run.
     spark.range(1000).selectExpr("sum(id)").collect()
     val warmDir = {
       val parent = new java.io.File(sfDir).getParentFile
@@ -39,72 +33,58 @@ object Bench {
         .flatMap(f => f.getName.stripPrefix("sf").toDoubleOption.map(_ -> f))
       if (siblings.nonEmpty) siblings.minBy(_._1)._2.getAbsolutePath else sfDir
     }
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try exec(fn(spark, warmDir)) catch { case _: Throwable =>
-        if (spark.sparkContext.isStopped) {
-          System.err.println(s"[bench] SparkContext died warming $name — aborting")
-          sys.exit(2)
-        }
-      }
+    Harness.queries(None).foreach { case (name, fn) =>
+      Harness.guard(spark, "bench", name)(exec(fn(spark, warmDir)))
     }
     // Median of 3 full passes per query: single-run numbers at this scale
     // swing >10x on machine noise (page cache, background load), which
     // burns the round-over-round comparison signal. Full passes (not 3
     // back-to-back repeats of one query) so each timing sees steady-state
     // cache pressure, and the per-query median de-noises independently.
-    // Seq (not Map) so both execution order AND emitted JSON key order stay
-    // alphabetical — stable run-to-run diffs.
-    // Optional comma-separated substring filter (profiling aid): bench only
-    // the matching queries. Warmup above still runs the full suite so the
-    // filtered run sees the same compiled-code state as a full run.
-    val filter = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    val names = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => filter.forall(_.exists(n.contains)) }
+    // A throwing query records its failure time (a round-over-round diff
+    // flags the collapse).
+    val names = Harness.queries()
     val passes = (1 to 3).map { _ =>
       names.map { case (name, fn) =>
         val t0 = System.nanoTime()
-        // a throwing query records its failure time (the driver's
-        // round-over-round diff flags the collapse), but it must NOT
-        // silently poison every query after it: an executor OOM stops the
-        // whole local SparkContext, and the session-12 audit recorded
-        // ~20 ms "timings" for queries that never ran. Fail loudly.
-        try { exec(fn(spark, sfDir)) } catch { case e: Throwable =>
-          System.err.println(s"[bench] $name threw: $e")
-          if (spark.sparkContext.isStopped) {
-            System.err.println(
-              s"[bench] SparkContext died running $name — aborting, " +
-                "all subsequent timings would be garbage")
-            sys.exit(2)
-          }
-        }
+        Harness.guard(spark, "bench", name)(exec(fn(spark, sfDir)))
         name -> (System.nanoTime() - t0) / 1e9
       }.toMap
     }
     val results = names.map { case (name, _) =>
       name -> passes.map(_(name)).sorted.apply(1) // median of 3
     }
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
-    // Box state goes into the record because it has MOVED benchmarks: the
-    // round-12 closing bench ran with ~10 GB of scale-audit shards resident
-    // in page cache, drifting the common-query median 1.16× with no code
-    // change. A reader comparing two BENCH_r{N}.json files can now see
-    // whether the cache state was comparable before blaming the code.
-    val box = {
-      val mi = scala.util.Try(
-        scala.io.Source.fromFile("/proc/meminfo").getLines()
-          .flatMap { l => l.split("\\s+") match {
-            case Array(k, v, _*) => Some(k.stripSuffix(":") -> v)
-            case _ => None
-          }}.toMap).getOrElse(Map.empty[String, String])
-      def kb(k: String) = mi.getOrElse(k, "0")
-      s""""box":{"mem_available_kb":${kb("MemAvailable")},""" +
-        s""""cached_kb":${kb("Cached")},"dirty_kb":${kb("Dirty")}}"""
-    }
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","runs":3,"agg":"median","warmup":"$warmDir",$box}""")
-    graft.llm.Similarity.releaseBroadcasts()
-    spark.stop()
+    val meminfo = scala.util.Try(
+      scala.io.Source.fromFile("/proc/meminfo").getLines()
+        .flatMap { l => l.split("\\s+") match {
+          case Array(k, v, _*) => Some(k.stripSuffix(":") -> v)
+          case _ => None
+        }}.toMap).getOrElse(Map.empty[String, String])
+    println(resultLine(results, sfDir, warmDir, meminfo))
+  }
+
+  /** The one-line JSON result record. Key order is fixed and `queries`
+    * keeps the alphabetical run order, for stable run-to-run diffs. Box
+    * state goes into the record because it has MOVED benchmarks: the
+    * round-12 closing bench ran with ~10 GB of scale-audit shards resident
+    * in page cache, drifting the common-query median 1.16× with no code
+    * change. A reader comparing two BENCH_r{N}.json files can see whether
+    * the cache state was comparable before blaming the code. */
+  private[graft] def resultLine(results: Seq[(String, Double)], sfDir: String,
+      warmDir: String, meminfo: Map[String, String]): String = {
+    def kb(k: String): Long = meminfo.get(k).flatMap(_.toLongOption).getOrElse(0L)
+    Json.render(ListMap(
+      "metric" -> "total",
+      "value" -> results.map(_._2).sum,
+      "unit" -> "sec",
+      "queries" -> ListMap(results: _*),
+      "sf" -> sfDir,
+      "runs" -> 3,
+      "agg" -> "median",
+      "warmup" -> warmDir,
+      "box" -> ListMap(
+        "mem_available_kb" -> kb("MemAvailable"),
+        "cached_kb" -> kb("Cached"),
+        "dirty_kb" -> kb("Dirty"))))
   }
 }

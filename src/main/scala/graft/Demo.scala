@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.exec.{Engine, TaskContext}
 import graft.model.Json
 import graft.parser.SpanParser
@@ -12,16 +10,7 @@ import graft.spans.SpanSource
   * read them back through the span source, parse to a workflow summary,
   * print the summary dicts as JSON. */
 object Demo {
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
+  def main(args: Array[String]): Unit = Harness.withSession { spark =>
     val engine = new Engine(spark, totalCpus = 4)
     val in1 = engine.task("input_1", Map("task.variant" -> "a"))(_ => 10)
     val in2 = engine.task("input_2")(_ => 143)
@@ -46,6 +35,5 @@ object Demo {
     val summary = SpanParser.parseSpans(back)
     println("workflow: " + Json.render(summary.asDict))
     summary.taskRuns.foreach(t => println("task: " + Json.render(t.asDict)))
-    spark.stop()
   }
 }

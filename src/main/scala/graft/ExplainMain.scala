@@ -1,12 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit utility: prints the executed physical plan of each named
-  * `SparkEntry` query (all of them when no args), for checking pushdown,
-  * partial aggregation, broadcast choices, and codegen coverage. The
-  * session config mirrors `Verify`'s (same excluded rules, timezone) so
-  * the printed plan IS the plan the driver gate executes.
+  * `SparkEntry` query (every query `SPARK_GRAFT_QUERIES` selects when no
+  * args), for checking pushdown, partial aggregation, broadcast choices,
+  * and codegen coverage. The session is the [[Harness]] session Verify
+  * and Bench run, so the printed plan IS the plan they execute.
   *
   * Caveat: "printing the plan" still CONSTRUCTS each DataFrame, and a few
   * queries (the connected-components / span-walk ones) run eager
@@ -19,45 +17,30 @@ import org.apache.spark.sql.SparkSession
   * `explain("formatted")` output is ALSO written to `<dir>/<name>.txt`
   * (the optimization-round plan-evidence format: numbered operators,
   * PushedFilters/ReadSchema, join strategy + build side, exchange
-  * partitioning). `SPARK_GRAFT_CPUS` sizes the session like Bench so the
-  * audited plan is the benched plan.
+  * partitioning).
   */
 object ExplainMain {
-  def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    try {
-      val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-      val outDir = sys.env.get("SPARK_GRAFT_EXPLAIN_DIR")
-      outDir.foreach(p => new java.io.File(p).mkdirs())
-      val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
-      for (n <- names) {
-        println(s"===== $n")
-        SparkEntry.queries.get(n) match {
-          case None => println(s"(unknown query: $n)")
-          case Some(fn) =>
-            try {
-              val qe = fn(spark, d).queryExecution
-              println(qe.executedPlan.toString
-                .linesIterator.map(_.take(160)).mkString("\n"))
-              outDir.foreach { p =>
-                val w = new java.io.PrintWriter(s"$p/$n.txt", "UTF-8")
-                try w.write(qe.explainString(
-                  org.apache.spark.sql.execution.FormattedMode))
-                finally w.close()
-              }
-            } catch { case scala.util.control.NonFatal(e) =>
-              println(s"(failed to plan: ${e.getMessage})")
-            }
+  def main(args: Array[String]): Unit = Harness.withSession { spark =>
+    val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+    val outDir = sys.env.get("SPARK_GRAFT_EXPLAIN_DIR")
+    outDir.foreach(p => new java.io.File(p).mkdirs())
+    val names = if (args.nonEmpty) args.toSeq else Harness.queries().map(_._1)
+    for (n <- names) {
+      println(s"===== $n")
+      SparkEntry.queries.get(n) match {
+        case None => println(s"(unknown query: $n)")
+        case Some(fn) => Harness.guard(spark, "explain", n) {
+          val qe = fn(spark, d).queryExecution
+          println(qe.executedPlan.toString
+            .linesIterator.map(_.take(160)).mkString("\n"))
+          outDir.foreach { p =>
+            val w = new java.io.PrintWriter(s"$p/$n.txt", "UTF-8")
+            try w.write(qe.explainString(
+              org.apache.spark.sql.execution.FormattedMode))
+            finally w.close()
+          }
         }
       }
-    } finally spark.stop()
+    }
   }
 }

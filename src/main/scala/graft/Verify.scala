@@ -1,54 +1,32 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.collection.immutable.ListMap
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+import graft.model.Json
+/** Correctness dump: each selected SparkEntry query's result → parquet,
+  * plus oracle_sql.json, for the DuckDB compare (`scripts/check.py`). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // local-iteration filter, same semantics as Bench's: comma-separated
-    // substrings; unset = full suite (what the driver runs)
-    val nameFilter = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    def selected(name: String): Boolean =
-      nameFilter.forall(_.exists(name.contains))
-    SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
-      // the start marker brackets each query's log output so engine
-      // warnings (e.g. empty-key WindowExec) attribute to their owner
-      System.err.println(s"[verify] running $name")
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    Harness.withSession { spark =>
+      Harness.queries().foreach { case (name, fn) =>
+        // the start marker brackets each query's log output so engine
+        // warnings (e.g. empty-key WindowExec) attribute to their owner
+        System.err.println(s"[verify] running $name")
+        Harness.guard(spark, "verify", name) {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+        }
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    graft.llm.Similarity.releaseBroadcasts()
-    spark.stop()
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      oracleJson(SparkEntry.oracleSql))
   }
+
+  /** The oracle map as one JSON object, keys sorted. Every control
+    * character in the SQL is escaped: a raw tab or CR would make a JSON
+    * reader (Python's json.load) fail and silently zero the correctness
+    * check. */
+  private[graft] def oracleJson(oracles: Map[String, String]): String =
+    Json.render(ListMap(oracles.toSeq.sortBy(_._1): _*))
 }

@@ -11,21 +11,9 @@ import graft.spans.SpanSource
 /** G5 — CLI entry points mirroring the reference's console scripts
   * (`pynb_log_parser`, `generate_static_data`;
   * `workspace/composable_logs/setup.py:95-100`). Run via
-  * `sbt "runMain graft.cli.LogParserCli ..."` or spark-submit. */
+  * `sbt "runMain graft.cli.LogParserCli ..."` or spark-submit; the
+  * session comes from [[graft.Harness]]. */
 object CliSpark {
-  def session(): SparkSession = {
-    val s = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-cli")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   def parseArgs(args: Array[String]): Map[String, String] =
     args.sliding(2, 2).collect {
       case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
@@ -35,10 +23,7 @@ object CliSpark {
 /** `pynb_log_parser` equivalent (`otel_output_parser/cli_pynb_log_parser.py`):
   * expand a span log into a directory tree + Mermaid inputs. */
 object LogParserCli {
-  def main(args: Array[String]): Unit = {
-    val spark = CliSpark.session()
-    try run(args, spark) finally spark.stop()
-  }
+  def main(args: Array[String]): Unit = graft.Harness.withSession(run(args, _))
 
   /** The CLI body, session-agnostic (testable without stopping a shared
     * session). */
@@ -77,10 +62,7 @@ object LogParserCli {
   * artifact download (F1) is the network-fetch step feeding the same zip
   * scan; offline, the zip cache directory IS the source. */
 object StaticDataCli {
-  def main(args: Array[String]): Unit = {
-    val spark = CliSpark.session()
-    try run(args, spark) finally spark.stop()
-  }
+  def main(args: Array[String]): Unit = graft.Harness.withSession(run(args, _))
 
   /** The CLI body, session-agnostic (testable without stopping a shared
     * session). */

@@ -65,7 +65,7 @@ import graft.sinks.Bucketing
   * who never compacts). The two corpus-linear legs — the snapshot DIFF
   * (when computed from full snapshots rather than a crawler delta feed)
   * and [[compactState]] itself — are outside the per-increment serve path
-  * and measured separately (`tools/MeasureV7Serve`).
+  * and measured separately (BASELINE.md "Session-15: v7 incremental-curation serve cost").
   */
 object IncrementalCuration {
 

@@ -48,13 +48,6 @@ object TextAnalysis {
   def stopwordHits(text: Column, stopwords: Seq[String]): Column =
     graft.functions.TextExprs.stopwordCount(text, stopwords)
 
-  /** The regex formulation `stopwordHits` replaced — kept (test-only) as
-    * the parity reference and as documentation of the oracle SQL's shape. */
-  private[graft] def regexStopwordHits(text: Column, stopwords: Seq[String]): Column = {
-    val pattern = stopwords.map(w => s"\\b$w\\b").mkString("|")
-    size(regexp_extract_all(lower(text), lit(pattern), lit(0)))
-  }
-
   /** Tiny deterministic stopword tables for the heuristic language ID. */
   val stopwordTable: Map[String, Seq[String]] = Map(
     "en" -> Seq("the", "and", "of", "to", "is", "in", "that", "with"),
@@ -71,23 +64,6 @@ object TextAnalysis {
     * (conditionals disable common-subexpression elimination). */
   def langId(text: Column): Column =
     graft.functions.TextExprs.langId(text, stopwordTable.toSeq.sortBy(_._1))
-
-  /** The column-CASE formulation `langId` replaced — kept (test-only) as
-    * the parity reference for [[graft.functions.LangIdExpr]]. */
-  private[graft] def langIdRegex(text: Column): Column = {
-    val langs = stopwordTable.toSeq.sortBy(_._1)
-    val hits = langs.map { case (code, ws) => code -> regexStopwordHits(text, ws) }
-    val anyHit = hits.map(_._2).reduce(_ + _) > 0
-    // chained first-match: lang i wins when its hits are >= every later
-    // lang's hits — equivalent to argmax with alphabetical tie-break
-    val winner = hits.zipWithIndex.foldRight(lit("und")) {
-      case (((code, h), i), elseCol) =>
-        val laterCols = hits.drop(i + 1).map(_._2)
-        val isMax = laterCols.foldLeft(lit(true))((acc, other) => acc && h >= other)
-        when(isMax, lit(code)).otherwise(elseCol)
-    }
-    when(anyHit, winner).otherwise(lit("und"))
-  }
 
   /** Composite quality score in [0,1]: penalizes very short docs, high
     * punctuation density, and missing stopwords. Integer-ratio based —

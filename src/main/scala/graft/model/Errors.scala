@@ -1,7 +1,5 @@
 package graft.model
 
-import scala.util.{Failure, Success, Try}
-
 /** Ordered, string-deduplicated multi-error container (SURVEY §1.1),
   * mirroring the reference's `ExceptionGroup`
   * (`composable_logs/wrappers.py:71-123`): duplicates (by message string)
@@ -61,14 +59,6 @@ object Errors {
     if (list.sizeIs != 1) throw new IllegalStateException(
       s"one: Expected input with only one element, but input has length ${list.size}.")
     list.head
-  }
-
-  /** Try equality by (value, error-message) as in the reference
-    * (`helpers.py:236-244`). */
-  def tryEquals[A](a: Try[A], b: Try[A]): Boolean = (a, b) match {
-    case (Success(x), Success(y)) => x == y
-    case (Failure(x), Failure(y)) => messageOf(x) == messageOf(y)
-    case _ => false
   }
 }
 

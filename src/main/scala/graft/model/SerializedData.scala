@@ -3,9 +3,6 @@ package graft.model
 import java.nio.charset.StandardCharsets
 import java.util.Base64
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
-
 /** Typed scalar codec (SURVEY §2 C1/C2), mirroring the reference's
   * `SerializedData` (`composable_logs/tasks/task_opentelemetry_logging.py:105-158`):
   * a value is stored as `(type, encoding, encoded_content)` with
@@ -53,23 +50,4 @@ object SerializedData {
           s"Unable to parse ${other.toString.take(1000)}", e)
       }
   }
-
-  // ---- column-level codec (for SQL/DataFrame pipelines over payload spans) ----
-
-  /** Binary view of the payload: base64-decodes bytes-typed content,
-    * UTF-8-encodes utf-8 content. */
-  def decodedBinaryCol(tpe: Column, encoding: Column, content: Column): Column =
-    when(tpe === "bytes" && encoding === "base64", unbase64(content))
-      .otherwise(encode(content, "UTF-8"))
-
-  /** Typed extraction columns (null when the tag does not match). */
-  def longValueCol(tpe: Column, content: Column): Column =
-    when(tpe === "int", content.cast("long")).otherwise(lit(null).cast("long"))
-  def doubleValueCol(tpe: Column, content: Column): Column =
-    when(tpe === "float" || tpe === "int", content.cast("double"))
-      .otherwise(lit(null).cast("double"))
-  def boolValueCol(tpe: Column, content: Column): Column =
-    when(tpe === "bool", content === "true").otherwise(lit(null).cast("boolean"))
-  def stringValueCol(tpe: Column, content: Column): Column =
-    when(tpe === "utf-8", content).otherwise(lit(null).cast("string"))
 }

@@ -178,17 +178,8 @@ object Closure {
     * jobs-vs-bytes call AQE makes when it swaps a shuffle join for a
     * broadcast. ~100k edges is a few MB of ids; larger graphs take the
     * distributed fixpoint below. Mutable ONLY so tests can force the
-    * distributed path on small fixtures; the env override exists so a
-    * bench run can measure the 100×-scale path on bench-scale data
-    * (`GRAFT_LOCAL_WALK_MAX_EDGES=0 SPARK_GRAFT_QUERIES=a7_,b3_ Bench`). */
-  private[graft] var LocalWalkMaxEdges =
-    sys.env.get("GRAFT_LOCAL_WALK_MAX_EDGES").map(s =>
-      // a bare toLong would surface a malformed value as an opaque
-      // ExceptionInInitializerError at first Closure use — name the
-      // variable in the failure instead
-      s.toLongOption.getOrElse(throw new IllegalArgumentException(
-        s"GRAFT_LOCAL_WALK_MAX_EDGES must be a long, got: '$s'")))
-      .getOrElse(100000L)
+    * distributed path on small fixtures. */
+  private[graft] var LocalWalkMaxEdges = 100000L
 
   /** Driver-local BFS over a collected edge list; returns (root, id) pairs
     * (descendants only — callers add the inclusive roots). */

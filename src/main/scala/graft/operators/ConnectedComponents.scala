@@ -23,14 +23,8 @@ object ConnectedComponents {
     * dwarfs the actual work — the same jobs-vs-bytes call behind
     * `Closure.LocalWalkMaxEdges` and `KCore.LocalPeelMaxEdges`. ~100k
     * edges is a few MB of id pairs; larger graphs take the distributed
-    * fixpoint. Mutable ONLY so tests can force the distributed path;
-    * env-overridable so a bench can measure the at-scale path on
-    * fixture data (`GRAFT_LOCAL_CC_MAX_EDGES=0`). */
-  private[graft] var LocalUnionFindMaxEdges: Long =
-    sys.env.get("GRAFT_LOCAL_CC_MAX_EDGES").map(s =>
-      s.toLongOption.getOrElse(throw new IllegalArgumentException(
-        s"GRAFT_LOCAL_CC_MAX_EDGES must be a long, got: '$s'")))
-      .getOrElse(100000L)
+    * fixpoint. Mutable ONLY so tests can force the distributed path. */
+  private[graft] var LocalUnionFindMaxEdges: Long = 100000L
 
   /** Driver-local min-id components over a collected edge array:
     * union-find with path compression, then one pass assigning every

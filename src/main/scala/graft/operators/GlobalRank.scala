@@ -1,7 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.ElementAt
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Scalable total-order ranking (dense 1..n over an arbitrary sort key).
   *
@@ -24,11 +26,37 @@ import org.apache.spark.sql.functions._
   * must see the same physical partitioning, and two separate executions
   * of a range exchange may re-sample different partition bounds.
   *
+  * The offsets ride in the plan as a dense array literal indexed by
+  * partition id (O(1) per row). The counter field is 33 bits wide, so a
+  * partition of 2^33 rows or more would silently bleed into the next
+  * partition's ids: the counts are taken per physical partition
+  * (`spark_partition_id()`, not the id's high bits) and such a partition
+  * fails the query, as does a row whose partition id has no offset.
+  *
   * The caller's `sortCols` must form a TOTAL order (append a unique
   * tiebreak column) — otherwise equal-key rows get nondeterministic
   * ranks across runs and engines.
   */
 object GlobalRank {
+
+  /** Rows one partition may hold: the width of the per-partition counter
+    * in `monotonically_increasing_id()`. */
+  val MaxPartitionRows: Long = 1L << 33
+
+  /** Dense rank offsets from per-partition row counts `(partition id,
+    * rows)`: element `p` is the number of rows in partitions below `p`;
+    * partitions with no count entry hold no rows. Fails on a count of
+    * [[MaxPartitionRows]] or more. */
+  def offsets(counts: Seq[(Int, Long)]): Array[Long] = {
+    counts.foreach { case (pid, n) =>
+      if (n >= MaxPartitionRows) throw new IllegalStateException(
+        s"GlobalRank: partition $pid holds $n rows, over the " +
+          s"$MaxPartitionRows-row counter field of monotonically_increasing_id")
+    }
+    val rows = new Array[Long](if (counts.isEmpty) 0 else counts.map(_._1).max + 1)
+    counts.foreach { case (pid, n) => rows(pid) = n }
+    rows.scanLeft(0L)(_ + _).init
+  }
 
   /** `df` plus a `rankCol` long column holding the 1-based global rank in
     * `sortCols` order. */
@@ -38,22 +66,18 @@ object GlobalRank {
       .sortWithinPartitions(sortCols: _*)
       .withColumn(mid, monotonically_increasing_id())
       .localCheckpoint()
-    val cnts = pinned
-      .groupBy(shiftright(col(mid), 33).as("pid"))
+    val offs = offsets(pinned
+      .groupBy(spark_partition_id().as("pid"))
       .agg(count(lit(1)).as("cnt"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    if (cnts.isEmpty)
+      .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq)
+    if (offs.isEmpty)
       return df.limit(0).withColumn(rankCol, lit(1L))
-    var acc = 0L
-    val offs: Map[Long, Long] = cnts.map { case (pid, c) =>
-      val o = acc; acc += c; pid -> o
-    }.toMap
     val pid = shiftright(col(mid), 33)
-    // coalesce keeps the rank column non-nullable (element_at alone would
-    // mark it nullable; the map covers every pid by construction)
+    // failOnError: an id outside the array throws instead of yielding null,
+    // which also keeps the rank column non-nullable
+    val off = Bridge.column(ElementAt(Bridge.expression(typedlit(offs)),
+      Bridge.expression((pid + 1).cast("int")), None, failOnError = true))
     pinned.select(df.columns.map(col) :+
-      coalesce(
-        element_at(typedlit(offs), pid) + (col(mid) - shiftleft(pid, 33)) + 1,
-        lit(0L)).as(rankCol): _*)
+      (off + (col(mid) - shiftleft(pid, 33)) + 1).as(rankCol): _*)
   }
 }

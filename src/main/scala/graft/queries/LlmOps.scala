@@ -1113,8 +1113,8 @@ object LlmOps {
   /** I3f scale path — IVF-accelerated serving gate: rank-1 recall of
     * [[Similarity.ivfServe]] (cell-probed corpus scan) against exact
     * [[queryBatchTopK]] on the same 64-query/rest-of-corpus split.
-    * Measured recall (this machine, driver fixtures, 2026-08-15
-    * MeasureServeRecall calibration run): IVF sf0.001 0.734, sf0.01
+    * Measured recall (battery fixtures, 2026-08-15 calibration run;
+    * BASELINE.md "Session-10 addition: query-batch retrieval serving"): IVF sf0.001 0.734, sf0.01
     * 0.547, sf0.1 0.641; IVF-PQ (probe loss compounded with PQ
     * quantization loss) 0.734 / 0.547 / 0.625 — PQ costs ≤1 rank-1 hit
     * of 64, consistent with the 2026-08-13 PqCalib run's 0.9+ standalone
@@ -2155,8 +2155,8 @@ object LlmOps {
       |$temperatureSelectSql""".stripMargin
 
   /** Measured persisted-LR accuracy on the v7 INCREMENT (loaded model
-    * scoring the diff's added+changed docs; `tools/MeasureV7Serve`,
-    * 2026-08-16): 0.950 / 0.949 / 0.947 at sf 0.001/0.01/0.1 (increment
+    * scoring the diff's added+changed docs, 2026-08-16;
+    * BASELINE.md "Session-15: v7 incremental-curation serve cost"): 0.950 / 0.949 / 0.947 at sf 0.001/0.01/0.1 (increment
     * sizes 40/59/509). The conservative floor also covers fuzz corpora
     * (unknown sf tag): increments are small samples, so it sits well
     * under the measured ~5% per-doc error rate's worst plausible draw. */
@@ -2187,10 +2187,10 @@ object LlmOps {
     * update probes docToks by broadcast id set, the gate scores only the
     * increment. The corpus-sized steps (state build, snapshot diff) are
     * the amortized/one-off legs, measured separately
-    * (`tools/MeasureV7Serve`). */
+    * (BASELINE.md "Session-15: v7 incremental-curation serve cost"). */
   /** The deterministic v7 snapshot-B derivation over snapshot A (the raw
-    * fixture corpus) — shared with `tools/MeasureV7Serve` so measured gate
-    * accuracy reflects exactly the battery's increment. */
+    * fixture corpus); the gate accuracy recorded in
+    * BASELINE.md "Session-15: v7 incremental-curation serve cost" was measured on exactly this increment. */
   private[graft] def v7SnapshotB(a: DataFrame): DataFrame = {
     def bucket = Sampling.hashBucket(col("text"))
     val freshText = concat(lit("fresh doc "), md5(col("text")), lit(" "),
@@ -2216,10 +2216,10 @@ object LlmOps {
     // increment) — memoized per sfDir so repeated executions (Bench's
     // warmup + 3 timed passes) measure the per-increment SERVE path, the
     // production-meaningful number; the build/serve split is recorded
-    // separately (tools/MeasureV7Serve). The diff products stay pinned
-    // (localCheckpoint): increment and retired set are batch-sized, and
-    // every downstream stage (probe, verify, batch-exact window, stats
-    // delta, gate) consumes them — unpinned, the full-outer diff and the
+    // separately (BASELINE.md "Session-15: v7 incremental-curation serve
+    // cost"). The diff products stay pinned (localCheckpoint): increment
+    // and retired set are batch-sized, and every downstream stage (probe,
+    // verify, batch-exact window, stats delta, gate) consumes them — unpinned, the full-outer diff and the
     // four-branch snapshot derivation re-expand under each consumer
     // (measured 46 planned shuffles vs 13 pinned).
     val (state, inc, retired) = StateOnce.once("i6_v7_state", d) {

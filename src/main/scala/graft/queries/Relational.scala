@@ -155,20 +155,6 @@ object Relational {
       | COUNT(*) AS n_rows
       |FROM lineitem GROUP BY l_returnflag""".stripMargin
 
-  /** Approximate count-distinct (HLL++, D8's approx variant): single-pass,
-    * fixed-size sketch state — the cardinality estimator that replaces
-    * exact distinct at 100 TB. Not a battery row of its own: the raw
-    * estimates are engine-specific by design (no cross-engine oracle
-    * exists), and `d08_approx_error_gate` already runs this exact sketch
-    * and oracle-checks its error bound — a bare rows-only entry added no
-    * signal on top of the gate. */
-  def approxDistinct(s: SparkSession, d: String): DataFrame =
-    Tables.lineitem(s, d)
-      .groupBy(col("l_returnflag"))
-      .agg(
-        approx_count_distinct(col("l_partkey"), 0.02).as("approx_parts"),
-        approx_count_distinct(col("l_orderkey"), 0.02).as("approx_orders"))
-
   /** Error-bound gate for the HLL++ estimator: per group, the approximate
     * count must land within 3× the configured rsd (0.02 → 6%) of the exact
     * count. The oracle recomputes the exact counts in DuckDB and expects

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.GlobalRank
 import graft.parser.SpanParser
 import graft.spans.SpansOps._
 
@@ -274,61 +275,22 @@ object SpanAlgebra {
 
   /** A2 — global sort by parsed start time (span_id tie-break). The driver
     * compare sorts rows before hashing, so the ORDER itself is materialized
-    * as data: `zipWithIndex` over the sorted partitions assigns ranks
-    * without collapsing to one partition (a global `row_number` window
-    * would), and the oracle recomputes the rank with a window over the
-    * same (timestamp, span_id) key. */
+    * as data: [[GlobalRank]] assigns ranks without collapsing to one
+    * partition (a global `row_number` window would), and the oracle
+    * recomputes the rank with a window over the same (timestamp, span_id)
+    * key. */
   def sortRanks(s: SparkSession, d: String): DataFrame = {
-    val spark = s
-    import spark.implicits._
-    // Two caches, both strictly work-saving at any scale:
-    //  - persist the NARROW per-order base: the span union references it 4×,
-    //    so one scan + one lag-window shuffle instead of four of each;
-    //  - localCheckpoint the sorted 1-column projection: zipWithIndex needs
-    //    the sorted RDD twice (partition-size job + the zip itself) and the
-    //    consumer's action reads it a third time — the global sort is the
-    //    irreducible cost and now runs once. Checkpoint preserves partition
-    //    order, so the ranks are unchanged.
-    // localCheckpoint is EAGER, so the base cache is already consumed (and
+    // persist the NARROW per-order base: the span union references it 4×,
+    // so one scan + one lag-window shuffle instead of four of each. The
+    // rank's pin is EAGER, so the base cache is already consumed (and
     // released) by the time this returns.
     val base = ordersBase(s, d, None).persist()
-    try {
-      // Rank = global position in the range-partitioned sort, computed
-      // WITHOUT leaving Dataset land (round-15; the old `.rdd.zipWithIndex`
-      // deserialized every row to external objects and re-entered through
-      // an RDD→DF conversion): monotonically_increasing_id() on the pinned
-      // sorted frame encodes (partition id << 33) + a consecutive
-      // per-partition counter — its documented implementation — so
-      // rank = (rows in earlier partitions) + in-partition position + 1.
-      // The per-partition counts are a numPartitions-row aggregate, their
-      // running sum a single-partition window over that tiny frame, and
-      // the re-attach a broadcast join: same two extra jobs zipWithIndex
-      // ran (partition-size pass + zip), minus the row round-trip.
-      // (A partition over 2^33 rows would overflow the counter field; the
-      // range sort bounds partitions far below that at any target scale.)
-      val sorted = spansFrom(base).sortByStartTime()
-        .select(col("context.span_id").as("span_id"))
-        .withColumn("mid", monotonically_increasing_id())
-        .localCheckpoint()
-      // per-partition counts collected to the driver: ≤ numPartitions
-      // rows, the same budget-bounded collect the Closure/KCore local
-      // paths use — exactly the job zipWithIndex ran internally, minus
-      // its per-row external-Row conversion on the main pass
-      val cnts = sorted
-        .groupBy(shiftright(col("mid"), 33).as("pid"))
-        .agg(count(lit(1)).as("cnt"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-      var acc = 0L
-      val offs: Map[Long, Long] = cnts.map { case (pid, c) =>
-        val o = acc; acc += c; pid -> o
-      }.toMap
-      val pid = shiftright(col("mid"), 33)
-      if (offs.isEmpty) sorted.select(lit(0L).as("rank"), col("span_id")).limit(0)
-      else sorted.select(
-        (element_at(typedlit(offs), pid)
-          + (col("mid") - shiftleft(pid, 33)) + 1).as("rank"),
-        col("span_id"))
-    } finally base.unpersist(blocking = false)
+    try GlobalRank.withGlobalRank(
+        spansFrom(base).select(to_timestamp(col("start_time")).as("t"),
+          col("context.span_id").as("span_id")),
+        "rank", col("t"), col("span_id"))
+      .select("rank", "span_id")
+    finally base.unpersist(blocking = false)
   }
 
   private val sortRanksSql =

@@ -17,7 +17,7 @@ import scala.collection.concurrent.TrieMap
   * reuse it. The sfDir key keeps scale factors apart: Bench's warmup at
   * sf0.001 and its timed passes at sf0.1 each build once. The build/serve
   * split itself is measured and recorded separately
-  * (`tools/MeasureV7Serve`, BASELINE.md).
+  * (BASELINE.md "Session-15: v7 incremental-curation serve cost").
   */
 private[graft] object StateOnce {
   private val cache = TrieMap.empty[(String, String), Any]

@@ -114,7 +114,12 @@ object SpansOps {
     /** A5 — all `exception` events across the collection, exploded
       * (`exception_events`, `opentelemetry_helpers.py:453-457`). */
     def exceptionEvents(): DataFrame =
-      df.select(col("context.span_id").as("span_id"), explode(col("events")).as("e"))
+      // the guard is what explode implies; written out because the session
+      // config excludes InferFiltersFromGenerate (graft.Harness), and it
+      // lets the optimizer drop every input branch whose events are a
+      // constant empty array
+      df.filter(size(col("events")) > 0)
+        .select(col("context.span_id").as("span_id"), explode(col("events")).as("e"))
         .filter(col("e.name") === "exception")
         .select(col("span_id"), col("e.name").as("name"),
           col("e.timestamp").as("timestamp"), col("e.attributes").as("attributes"))

@@ -56,7 +56,7 @@ import graft.sinks.Bucketing
   *
   * Scale: per-batch cost is exactly the v7 serve path — increment-sized
   * probes against bucketed state (measured flat in corpus volume,
-  * `tools/MeasureV7Serve`) — plus the tombstone-bounded compaction
+  * BASELINE.md "Session-15: v7 incremental-curation serve cost") — plus the tombstone-bounded compaction
   * trigger inherited from [[IncrementalCuration.updateState]]. The
   * progress log grows two tiny rows per batch.
   *

@@ -492,11 +492,11 @@ class LlmSpec extends AnyFunSuite {
     val all = TextAnalysis.stopwordTable.values.flatten.toSeq // has duplicates
     val rows = tricky.select(
       TextAnalysis.stopwordHits(col("t"), en).as("fast_en"),
-      TextAnalysis.regexStopwordHits(col("t"), en).as("re_en"),
+      TextOracles.regexStopwordHits(col("t"), en).as("re_en"),
       TextAnalysis.stopwordHits(col("t"), all).as("fast_all"),
-      TextAnalysis.regexStopwordHits(col("t"), all).as("re_all"),
+      TextOracles.regexStopwordHits(col("t"), all).as("re_all"),
       TextAnalysis.langId(col("t")).as("fast_lang"),
-      TextAnalysis.langIdRegex(col("t")).as("re_lang")).collect()
+      TextOracles.langIdRegex(col("t")).as("re_lang")).collect()
     rows.foreach { r =>
       assert(r.isNullAt(0) == r.isNullAt(1) &&
         (r.isNullAt(0) || r.getInt(0) == r.getInt(1)), s"en hits diverge: $r")
@@ -511,9 +511,9 @@ class LlmSpec extends AnyFunSuite {
     // and over the real fixture docs
     val docRows = docs.select(
       TextAnalysis.stopwordHits(col("text"), all).as("f"),
-      TextAnalysis.regexStopwordHits(col("text"), all).as("r"),
+      TextOracles.regexStopwordHits(col("text"), all).as("r"),
       TextAnalysis.langId(col("text")).as("fl"),
-      TextAnalysis.langIdRegex(col("text")).as("rl")).collect()
+      TextOracles.langIdRegex(col("text")).as("rl")).collect()
     docRows.foreach { r =>
       assert(r.getInt(0) == r.getInt(1) && r.getString(2) == r.getString(3))
     }

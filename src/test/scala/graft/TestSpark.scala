@@ -4,23 +4,15 @@ import org.apache.spark.sql.SparkSession
 
 import graft.model.{AttrCodec, SpanContextRow, SpanEventRow, SpanLinkRow, SpanRow, SpanStatusRow}
 
-/** One shared local session for the whole suite. */
+/** One shared local session for the whole suite: the session every main
+  * runs ([[Harness.builder]]), so specs run the mains' optimizer
+  * configuration. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // catalog tables (BucketingSpec) land in a throwaway warehouse, not
-      // the repo working directory
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Harness.session(Harness.builder()
+    // catalog tables (BucketingSpec) land in a throwaway warehouse, not
+    // the repo working directory
+    .config("spark.sql.warehouse.dir",
+      java.nio.file.Files.createTempDirectory("graft-warehouse").toString))
 }
 
 /** Hand-built span fixtures (ports of the reference's UDT/span fixtures,
