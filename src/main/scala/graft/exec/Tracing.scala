@@ -155,10 +155,13 @@ final class Tracer(val sink: SpanSink) {
 
   /** Strictly monotonic clock (µs granularity) so span ordering by
     * start_time is total — the single-threaded reference gets this
-    * implicitly from wall-clock; concurrent tasks here do not. */
+    * implicitly from wall-clock; concurrent tasks here do not. The µs
+    * come from ONE clock (`Instant.now()`): stamps built from two
+    * unaligned clocks can record an interval up to 1 ms shorter than it
+    * lasted, and a timed-out span shorter than its timeout. */
   def now(): Instant = {
-    val nowUs = System.currentTimeMillis() * 1000L +
-      (System.nanoTime() / 1000L) % 1000L
+    val wall = Instant.now()
+    val nowUs = wall.getEpochSecond * 1000000L + wall.getNano / 1000L
     val us = lastUs.updateAndGet(prev => Math.max(prev + 1, nowUs))
     Instant.ofEpochSecond(us / 1000000L, (us % 1000000L) * 1000L)
   }

@@ -1,6 +1,7 @@
 package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators (SURVEY §2 Group I, I1/I2): exact, n-gram
@@ -8,6 +9,36 @@ import org.apache.spark.sql.functions._
   * no driver-side collection on the data path; candidate generation is
   * always blocked (by hash, shingle, band, or prefix) so the quadratic
   * all-pairs comparison never materializes at 100 TB.
+  *
+  * Every word/char-shingle near-dup tier is one `candidates → verify →
+  * components → verdict` pipeline composed from five shared stages:
+  *
+  *  1. postings ([[postings]], [[sharedShingles]]): explode a doc's
+  *     shingles, hash them to xxhash64 longs with a per-doc size window;
+  *     group per shingle, cap, pair and count shared shingles.
+  *     [[jaccardPairs]] and [[incrementalDedup]] run the whole stage;
+  *     [[buildPostingIndex]] stores the postings and
+  *     [[incrementalDedupFromIndex]] joins the batch's postings to them.
+  *  2. signatures ([[signatures]]): the exchange sandwich around the
+  *     MinHash kernel — [[minHashCandidates]], [[md5BandKeys]] (hence
+  *     [[buildBandIndex]] and [[incrementalDedupFromBandIndex]]) and
+  *     [[signatureVerifiedPairs]].
+  *  3. band candidates ([[bandKeys]], [[bandPairs]]): one band-key column
+  *     (md5 slice string or xx64 murmur) and one group-and-pair-then-
+  *     distinct — [[minHashCandidates]] and [[signatureVerifiedPairs]];
+  *     [[md5BandKeys]] and both `streaming.StreamDedup` streams use the
+  *     band keys, so batch and stream agree bucket for bucket.
+  *  4. hashed-shingle verify ([[shingleHashSets]], [[setJaccard]]):
+  *     per-doc word-n-gram hash arrays and their intersect Jaccard —
+  *     [[verifyPairsJaccard]] (hence [[sortedNeighborPairs]] and
+  *     [[lshVerifiedPairs]]), [[buildBandIndex]] and
+  *     [[incrementalDedupFromBandIndex]]. [[jaccardRatio]] is the one
+  *     Jaccard column of every tier.
+  *  5. verdict ([[verdicts]]): best match per batch doc joined back onto
+  *     the batch — the three incremental tiers.
+  *
+  * Components ([[fuzzyDedupComponents]]) turn any tier's pairs into one
+  * keep set.
   */
 object Dedup {
 
@@ -22,34 +53,17 @@ object Dedup {
   /** End-to-end fuzzy dedup: near-dup PAIRS → connected components →
     * min-id representative per component. Pair generation alone is not a
     * dedup decision — transitive chains a~b~c must collapse into ONE keep
-    * set, which is the components step. Returns every input id with its
-    * component (= the kept representative's id) and an
+    * set, which is the components step
+    * ([[graft.operators.ConnectedComponents.minLabel]]). Returns every
+    * input id with its component (= the kept representative's id) and an
     * `is_representative` flag; filtering on the flag IS the deduped
-    * corpus.
-    *
-    * `algorithm`: `"min-label"` (default,
-    * [[graft.operators.ConnectedComponents.minLabel]] — O(diameter)
-    * rounds, cheapest on the near-clique clusters near-dup graphs form) or
-    * `"star-contraction"`
-    * ([[graft.operators.ConnectedComponents.starContraction]] — O(log n)
-    * rounds on any shape, the choice when chains/filaments are possible).
-    * Both produce identical labels (property-tested). */
+    * corpus. */
   def fuzzyDedupComponents(
-      df: DataFrame, idCol: String, pairs: DataFrame,
-      algorithm: String = "min-label"): DataFrame = {
-    val nodes = df.select(col(idCol).as("id"))
-    val labeled = algorithm match {
-      case "min-label" =>
-        graft.operators.ConnectedComponents.minLabel(nodes, pairs)
-      case "star-contraction" =>
-        graft.operators.ConnectedComponents.starContraction(nodes, pairs)
-      case other => throw new IllegalArgumentException(
-        s"unknown components algorithm '$other' " +
-          "(expected min-label or star-contraction)")
-    }
-    labeled.select(col("id").as(idCol), col("component"),
-      (col("id") === col("component")).as("is_representative"))
-  }
+      df: DataFrame, idCol: String, pairs: DataFrame): DataFrame =
+    graft.operators.ConnectedComponents
+      .minLabel(df.select(col(idCol).as("id")), pairs)
+      .select(col("id").as(idCol), col("component"),
+        (col("id") === col("component")).as("is_representative"))
 
   /** I1b — dedup against a REFERENCE set (blacklist / already-ingested
     * corpus) with a Bloom prefilter: build a Bloom filter over the
@@ -81,8 +95,7 @@ object Dedup {
 
   /** Drop exact duplicates, keeping the minimum-id row per content hash. */
   def exactDedup(df: DataFrame, idCol: String, contentCol: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(md5(col(contentCol))).orderBy(col(idCol).asc)
+    val w = Window.partitionBy(md5(col(contentCol))).orderBy(col(idCol).asc)
     df.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
   }
@@ -96,11 +109,11 @@ object Dedup {
         i => text.substr(i, lit(n)))))
       .otherwise(array().cast("array<string>"))
 
-  /** Stable reference to the char-shingle default so [[minHashCandidates]]
-    * can recognize "caller kept the default" by identity and take the
-    * fused shingle+md5 kernel (an eta-expanded `charShingles` passed
-    * explicitly is a fresh function value and keeps the composed path). */
-  private[graft] val defaultShingler: (Column, Int) => Column = charShingles
+  /** THE word tokenizer for every word-gram operator (shingles,
+    * decontamination flag AND span variants, and their DuckDB oracles via
+    * `regexp_split_to_array(text, ' +')`) — one definition so the flag
+    * query and the spans query can never disagree about token boundaries. */
+  private[llm] def words(text: Column): Column = split(text, " +")
 
   /** Distinct word n-gram shingles: far more selective than char shingles
     * on natural text (frequency ~ vocab^-n), which keeps the Jaccard
@@ -110,12 +123,6 @@ object Dedup {
     * `element_at(split(text), i+j)` formulation inlines a fresh `split`
     * into every element access (n splits per shingle, interpreted), which
     * profiled 100× slower. */
-  /** THE word tokenizer for every word-gram operator (shingles,
-    * decontamination flag AND span variants, and their DuckDB oracles via
-    * `regexp_split_to_array(text, ' +')`) — one definition so the flag
-    * query and the spans query can never disagree about token boundaries. */
-  private[llm] def words(text: Column): Column = split(text, " +")
-
   def wordShingles(text: Column, n: Int): Column = {
     val words = Dedup.words(text)
     // fold: grams_1 = words; grams_k = zip_with(grams_{k-1}, drop(words,k-1), concat)
@@ -125,6 +132,194 @@ object Dedup {
     when(size(words) >= n, array_distinct(slice(grams, lit(1), size(words) - (n - 1))))
       .otherwise(array().cast("array<string>"))
   }
+
+  // ---- stage 1: postings ----
+
+  /** One row per (doc, distinct shingle hash `sh`) with the doc's UNCAPPED
+    * shingle-set size `n_sh`. `keys` name a doc (the first one is its id);
+    * `shingler` runs once per doc behind a repartition on that id —
+    * without the exchange barrier CollapseProject inlines the shingling
+    * into every consumer branch. (UNPINNED width, unlike the sketch
+    * kernels: shingling is cheap and the downstream pipeline benefits from
+    * AQE's runtime re-planning — pinning measured 3× slower at sf0.1.)
+    *
+    * Shingles become 64-bit hashes before any blocking: halves the shuffle
+    * width and makes the join key a long compare (collision probability
+    * ~2^-64 per pair — far below float noise). The size rides along as a
+    * count window over `keys` (reusing the barrier's partitioning) instead
+    * of a separate branch, which would re-scan and re-shingle the corpus
+    * per side, since ReuseExchange can't dedupe across AQE's broadcast
+    * conversions. */
+  private def postings(
+      df: DataFrame, keys: Seq[Column], text: Column, n: Int,
+      shingler: (Column, Int) => Column): DataFrame = {
+    val shingled = df.select(keys :+ shingler(text, n).as("shingles"): _*)
+    val ks = shingled.columns.init.toSeq.map(col)
+    shingled.repartition(ks.head)
+      .select(ks :+ explode(col("shingles")).as("sh_str"): _*)
+      .select(ks :+ xxhash64(col("sh_str")).as("sh"): _*)
+      .withColumn("n_sh", count(lit(1)).over(Window.partitionBy(ks: _*)))
+  }
+
+  /** Group-and-pair over [[postings]] instead of a self-join: collect the
+    * postings of each shingle and emit the pairs `keep` admits (over the
+    * struct columns `a` and `b`) with a double explode. ONE evaluation of
+    * the shingle pipeline (the self-join's two branches each recomputed it
+    * — ReuseExchange can't dedupe across AQE broadcast conversion), the
+    * frequency cap becomes a free size() filter on the collected list, and
+    * per-shingle pair fan-out stays bounded by that same cap. Returns
+    * (`left`, `right`, n_shared, na, nb).
+    *
+    * MEMORY CONTRACT: the per-shingle array is cap-bounded; with
+    * `cap = None` the array (and the pair fan-out, in ANY formulation —
+    * the O(n²) pairs dominate the O(n) array) is unbounded, so
+    * large-corpus callers must set the cap (the verified queries use
+    * 1000). Sizes come from before the cap (the oracle's denominator is
+    * the full shingle-set size). */
+  private def sharedShingles(
+      posts: DataFrame, cap: Option[Int], keep: Column,
+      left: String, right: String): DataFrame = {
+    val grouped = posts.groupBy(col("sh"))
+      .agg(collect_list(struct(
+        posts.columns.filter(_ != "sh").toSeq.map(col): _*)).as("ds"))
+    cap.map(c => grouped.filter(size(col("ds")) <= c)).getOrElse(grouped)
+      .select(explode(col("ds")).as("a"), col("ds"))
+      .select(col("a"), explode(col("ds")).as("b"))
+      .filter(keep)
+      .groupBy(col("a.doc").as(left), col("b.doc").as(right))
+      .agg(count(lit(1)).as("n_shared"),
+        min(col("a.n_sh")).as("na"), // constant per doc; min = that value
+        min(col("b.n_sh")).as("nb"))
+  }
+
+  // ---- stages 2 and 3: signatures and band candidates ----
+
+  /** The MinHash signature of column `text`. The md5 family is always
+    * char shingles through the fused shingle+md5 kernel (round-15: no
+    * shingle-array materialization; bit-parity with
+    * `md5MinHashSig(charShingles(text, n), k)` pinned by HashExprsSpec) —
+    * the form the DuckDB oracle recomputes. The xx64 family hashes
+    * `shingler`'s shingles. */
+  private[graft] def signatureOf(
+      text: Column, shingleN: Int, k: Int, md5: Boolean,
+      shingler: (Column, Int) => Column = charShingles): Column =
+    if (md5) graft.functions.HashExprs.md5MinHashSigText(text, shingleN, k)
+    else minHashSignature(shingler(text, shingleN), k)
+
+  /** (doc, sig) behind the exchange sandwich around the signature kernel:
+    *  - the FIRST exchange spreads docs across cores (a small parquet file
+    *    scans as one partition; the kernel is ~0.7 ms/doc and would run
+    *    single-threaded below it);
+    *  - the SECOND exchange materializes signatures once by doc for every
+    *    consumer branch.
+    * The length prefilter replaces `size(sig) > 0`, which would be
+    * predicate-pushed below both exchanges and re-inline the kernel into
+    * the scan. (Round-robin then hash: two IDENTICAL repartitions would be
+    * merged by CollapseRepartition, collapsing the sandwich.) */
+  private def signatures(
+      df: DataFrame, idCol: String, textCol: String, shingleN: Int, k: Int,
+      md5: Boolean = true,
+      shingler: (Column, Int) => Column = charShingles): DataFrame =
+    df.select(col(idCol).as("doc"), col(textCol).as("text"))
+      .filter(length(col("text")) >= shingleN)
+      .repartition(df.sparkSession.sparkContext.defaultParallelism)
+      .select(col("doc"),
+        signatureOf(col("text"), shingleN, k, md5, shingler).as("sig"))
+      .repartition(Par.of(df), col("doc"))
+
+  /** The band keys of a `sig` column as a (band_idx, key) generator: k/nBands
+    * components per band. md5 family: the key is the signature slice
+    * ITSELF as a string — murmur3 band hashes would be engine-internal and
+    * forfeit the oracle; xx64: murmur3 of the slice, salted by the band
+    * index. band_idx rides in every group key, so cross-band collisions
+    * don't exist in either form. */
+  private[graft] def bandKeys(k: Int, nBands: Int, md5: Boolean): Column = {
+    val r = k / nBands
+    posexplode(transform(sequence(lit(0), lit(nBands - 1)), j => {
+      val band = slice(col("sig"), j * r + 1, lit(r))
+      if (md5) concat_ws(",", transform(band, x => x.cast("string")))
+      else hash(concat_ws(",", band), j)
+    }))
+  }
+
+  /** Candidate pairs (doc_a < doc_b) of docs sharing a band of their
+    * signatures. Group-and-pair instead of a self-join: the join's two
+    * branches each re-ran the signature kernel (ReuseExchange can't dedupe
+    * them under AQE); collecting each band bucket and double-exploding
+    * pairs evaluates it once. Bucket fan-out is the same as the join's —
+    * both colocate a bucket's candidates on one task, and a degenerate
+    * bucket (near-identical corpus) is quadratic in EITHER formulation;
+    * the bucket array itself is only O(bucket), 8 bytes/doc. */
+  private def bandPairs(
+      sigs: DataFrame, k: Int, nBands: Int, md5: Boolean): DataFrame =
+    sigs.select(col("doc"),
+      bandKeys(k, nBands, md5).as(Seq("band_idx", "band_hash")))
+      .groupBy(col("band_idx"), col("band_hash"))
+      .agg(collect_list(col("doc")).as("ds"))
+      .select(explode(col("ds")).as("doc_a"), col("ds"))
+      .select(col("doc_a"), explode(col("ds")).as("doc_b"))
+      .filter(col("doc_a") < col("doc_b"))
+      // CONTRACT: this terminal distinct() is load-bearing for the
+      // single-pass containment-gate folds (minhashContainmentGate counts
+      // left-join hits 1:1) — removing it would silently inflate
+      // n_high_pairs and undercount n_missed downstream (r14 ADVICE)
+      .distinct()
+
+  // ---- stage 4: hashed-shingle verify ----
+
+  /** |A∩B| / |A∪B| from `n_shared` and `total` = |A| + |B|: THE Jaccard
+    * column of every tier. */
+  private def jaccardRatio(total: Column): Column =
+    col("n_shared").cast("double") / (total - col("n_shared")).cast("double")
+
+  /** One row per doc (`doc`) with its word-n-gram shingles as an xxhash64
+    * array (`sh`); docs without shingles (null/short text) are dropped. */
+  private def shingleHashSets(
+      df: DataFrame, idCol: String, textCol: String, n: Int,
+      doc: String, sh: String): DataFrame =
+    df.select(col(idCol).as(doc),
+      transform(wordShingles(col(textCol), n), g => xxhash64(g)).as(sh))
+      .filter(size(col(sh)) > 0)
+
+  /** Exact Jaccard of two hashed-shingle arrays per pair: `keys`,
+    * n_shared (array intersect — a long compare), n_total and the ratio
+    * as `name`. */
+  private def setJaccard(
+      pairs: DataFrame, keys: Seq[Column], a: Column, b: Column,
+      name: String): DataFrame =
+    pairs.select(keys :+ size(array_intersect(a, b)).as("n_shared") :+
+      (size(a) + size(b)).as("n_total"): _*)
+      .withColumn(name, jaccardRatio(col("n_total")))
+
+  // ---- stage 5: verdict ----
+
+  /** One VERDICT row per `batch` document from scored pairs
+    * `(doc_q, doc_b, jac)`: `n_matches` base docs at ≥ `threshold`, the
+    * best match (max Jaccard, ties → smallest base id via a single
+    * lexicographic struct-max — no second pass), and `is_dup`. Documents
+    * without pairs verdict clean. */
+  private def verdicts(
+      batch: DataFrame, idCol: String, pairs: DataFrame,
+      threshold: Double): DataFrame = {
+    // struct compare is lexicographic, so max(jac, -doc_b) is
+    // (max Jaccard, then smallest base id on ties)
+    val best = pairs.filter(col("jac") >= threshold)
+      .groupBy(col("doc_q"))
+      .agg(count(lit(1)).as("n_matches"),
+        max(struct(col("jac").as("j"), (-col("doc_b")).as("negb")))
+          .as("best"))
+      .select(col("doc_q"), col("n_matches"),
+        (-col("best.negb")).as("best_match"),
+        col("best.j").as("best_jaccard"))
+    batch.select(col(idCol).as("doc_id"))
+      .join(best, col("doc_id") === col("doc_q"), "left")
+      .select(col("doc_id"),
+        coalesce(col("n_matches"), lit(0L)).as("n_matches"),
+        col("best_match"), col("best_jaccard"),
+        col("doc_q").isNotNull.as("is_dup"))
+  }
+
+  // ---- tiers ----
 
   /** I2a — n-gram Jaccard near-dup pairs: explode shingles, block on the
     * shingle (only pairs sharing ≥1 shingle are compared), count shared
@@ -138,62 +333,13 @@ object Dedup {
       n: Int = 5,
       threshold: Double = 0.5,
       maxShingleFreq: Option[Int] = None,
-      shingler: (Column, Int) => Column = charShingles): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // exchange barrier: without it CollapseProject inlines the shingling
-    // into every consumer branch. (UNPINNED width, unlike the sketch
-    // kernels: shingling is cheap and the downstream join pipeline benefits
-    // from AQE's runtime re-planning — pinning measured 3× slower at sf0.1.)
-    val shingled = df.select(
-      col(idCol).as("doc"),
-      shingler(col(textCol), n).as("shingles"))
-      .repartition(col("doc"))
-    // shingles become 64-bit hashes before the blocking join: halves the
-    // shuffle width and makes the join key compare a long compare
-    // (collision probability ~2^-64 per pair — far below float noise)
-    val exploded = shingled.select(col("doc"),
-      explode(col("shingles")).as("sh_str"))
-      .select(col("doc"), xxhash64(col("sh_str")).as("sh"))
-    // per-doc shingle-set size rides along as a count-window over `doc`
-    // (reuses the barrier's partitioning) instead of a separate `sizes`
-    // branch — a branch would re-scan and re-shingle the corpus per side,
-    // since ReuseExchange can't dedupe across AQE's broadcast conversions.
-    // Sizes are computed BEFORE the frequency cap (the oracle's denominator
-    // is the full shingle-set size).
-    val withSizes = exploded.withColumn("n_sh_a",
-      count(lit(1)).over(Window.partitionBy(col("doc"))))
-    // group-and-pair instead of a self-join: collect the docs of each
-    // shingle and emit unordered pairs with a double explode. ONE evaluation
-    // of the shingle pipeline (the self-join's two branches each recomputed
-    // it — ReuseExchange can't dedupe across AQE broadcast conversion), the
-    // frequency cap becomes a free size() filter on the collected list, and
-    // per-shingle pair fan-out stays bounded by that same cap.
-    // MEMORY CONTRACT: the per-shingle array is cap-bounded; with
-    // maxShingleFreq=None the array (and the pair fan-out, in ANY
-    // formulation — the O(n²) pairs dominate the O(n) array) is unbounded,
-    // so large-corpus callers must set the cap (the verified query uses
-    // 1000).
-    val grouped = withSizes
-      .groupBy(col("sh"))
-      .agg(collect_list(struct(col("doc"), col("n_sh_a"))).as("ds"))
-    val capped = maxShingleFreq
-      .map(cap => grouped.filter(size(col("ds")) <= cap))
-      .getOrElse(grouped)
-    capped
-      .select(explode(col("ds")).as("a"), col("ds"))
-      .select(col("a"), explode(col("ds")).as("b"))
-      .filter(col("a.doc") < col("b.doc"))
-      .groupBy(col("a.doc").as("doc"), col("b.doc").as("doc_b"))
-      .agg(count(lit(1)).as("n_shared"),
-        min(col("a.n_sh_a")).as("n_sh"), // constant per doc; min = that value
-        min(col("b.n_sh_a")).as("n_sh_b"))
-      .withColumn("jaccard",
-        col("n_shared").cast("double") /
-          (col("n_sh") + col("n_sh_b") - col("n_shared")).cast("double"))
+      shingler: (Column, Int) => Column = charShingles): DataFrame =
+    sharedShingles(
+      postings(df, Seq(col(idCol).as("doc")), col(textCol), n, shingler),
+      maxShingleFreq, col("a.doc") < col("b.doc"), "doc_a", "doc_b")
+      .withColumn("jaccard", jaccardRatio(col("na") + col("nb")))
       .filter(col("jaccard") >= threshold)
-      .select(col("doc").as("doc_a"), col("doc_b"), col("n_shared"),
-        col("jaccard"))
-  }
+      .select(col("doc_a"), col("doc_b"), col("n_shared"), col("jaccard"))
 
   /** I2i — INCREMENTAL dedup: near-dup verdicts for a new `batch` of
     * documents against an existing `base` corpus, without pairing the
@@ -209,11 +355,7 @@ object Dedup {
     * Semantics match [[jaccardPairs]] (word-n-gram Jaccard, sizes over
     * the UNCAPPED shingle sets, frequency cap over base+batch combined —
     * the stopword-block skew guard), restricted to batch×base pairs.
-    * Output is one VERDICT row per batch document: `n_matches` base docs
-    * at ≥ `threshold`, the best match (max Jaccard, ties → smallest base
-    * id via a single lexicographic struct-max — no second pass), and
-    * `is_dup`. Documents with no shingles (null/short text) verdict
-    * clean. */
+    * Output is one [[verdicts]] row per batch document. */
   def incrementalDedup(
       base: DataFrame,
       batch: DataFrame,
@@ -223,56 +365,19 @@ object Dedup {
       threshold: Double = 0.5,
       maxShingleFreq: Option[Int] = Some(1000),
       shingler: (Column, Int) => Column = wordShingles): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     def side(df: DataFrame, isBatch: Boolean) = df.select(
       col(idCol).as("doc"), col(textCol).as("t"), lit(isBatch).as("is_batch"))
     val tagged = side(base, isBatch = false)
       .unionByName(side(batch, isBatch = true))
-    // same pipeline shape as jaccardPairs (see the comments there for the
-    // exchange barrier, the hash narrowing, and the size-window reuse)
-    val shingled = tagged.select(col("doc"), col("is_batch"),
-      shingler(col("t"), n).as("shingles"))
-      .repartition(col("doc"))
-    val exploded = shingled.select(col("doc"), col("is_batch"),
-      explode(col("shingles")).as("sh_str"))
-      .select(col("doc"), col("is_batch"), xxhash64(col("sh_str")).as("sh"))
-    // size window over (doc, is_batch), not doc alone: an id appearing on
+    // postings keyed by (doc, is_batch), not doc alone: an id appearing on
     // BOTH sides must not merge its two shingle counts — base and batch id
     // spaces are allowed to overlap
-    val withSizes = exploded.withColumn("n_sh_a",
-      count(lit(1)).over(Window.partitionBy(col("doc"), col("is_batch"))))
-    val grouped = withSizes
-      .groupBy(col("sh"))
-      .agg(collect_list(struct(col("doc"), col("is_batch"), col("n_sh_a")))
-        .as("ds"))
-    val capped = maxShingleFreq
-      .map(cap => grouped.filter(size(col("ds")) <= cap))
-      .getOrElse(grouped)
-    val pairs = capped
-      .select(explode(col("ds")).as("a"), col("ds"))
-      .select(col("a"), explode(col("ds")).as("b"))
-      .filter(col("a.is_batch") && !col("b.is_batch"))
-      .groupBy(col("a.doc").as("doc_q"), col("b.doc").as("doc_b"))
-      .agg(count(lit(1)).as("n_shared"),
-        min(col("a.n_sh_a")).as("na"), min(col("b.n_sh_a")).as("nb"))
-      .withColumn("jac", col("n_shared").cast("double") /
-        (col("na") + col("nb") - col("n_shared")).cast("double"))
-      .filter(col("jac") >= threshold)
-    // arg-max in one aggregation: struct compare is lexicographic, so
-    // max(jac, -doc_b) is (max Jaccard, then smallest base id on ties)
-    val verdicts = pairs.groupBy(col("doc_q"))
-      .agg(count(lit(1)).as("n_matches"),
-        max(struct(col("jac").as("j"), (-col("doc_b")).as("negb")))
-          .as("best"))
-      .select(col("doc_q"), col("n_matches"),
-        (-col("best.negb")).as("best_match"),
-        col("best.j").as("best_jaccard"))
-    batch.select(col(idCol).as("doc_id"))
-      .join(verdicts, col("doc_id") === col("doc_q"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_matches"), lit(0L)).as("n_matches"),
-        col("best_match"), col("best_jaccard"),
-        col("doc_q").isNotNull.as("is_dup"))
+    val pairs = sharedShingles(
+      postings(tagged, Seq(col("doc"), col("is_batch")), col("t"), n, shingler),
+      maxShingleFreq, col("a.is_batch") && !col("b.is_batch"),
+      "doc_q", "doc_b")
+      .withColumn("jac", jaccardRatio(col("na") + col("nb")))
+    verdicts(batch, idCol, pairs, threshold)
   }
 
   /** I2i-INDEX — the PERSISTED form of the incremental-dedup base side:
@@ -289,17 +394,9 @@ object Dedup {
       idCol: String,
       textCol: String,
       n: Int = 3,
-      shingler: (Column, Int) => Column = wordShingles): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val exploded = base
-      .select(col(idCol).as("doc"), shingler(col(textCol), n).as("shingles"))
-      .repartition(col("doc"))
-      .select(col("doc"), explode(col("shingles")).as("sh_str"))
-      .select(col("doc"), xxhash64(col("sh_str")).as("sh"))
-    exploded
-      .withColumn("n_sh", count(lit(1)).over(Window.partitionBy(col("doc"))))
+      shingler: (Column, Int) => Column = wordShingles): DataFrame =
+    postings(base, Seq(col(idCol).as("doc")), col(textCol), n, shingler)
       .withColumn("sh_count", count(lit(1)).over(Window.partitionBy(col("sh"))))
-  }
 
   /** I2i-INDEX — near-dup verdicts for `batch` against a STORED
     * [[buildPostingIndex]] frame. Same verdict shape as
@@ -318,68 +415,32 @@ object Dedup {
       threshold: Double = 0.5,
       maxShingleFreq: Option[Int] = Some(1000),
       shingler: (Column, Int) => Column = wordShingles): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val idx = maxShingleFreq
       .map(cap => index.filter(col("sh_count") <= cap))
       .getOrElse(index)
       .select(col("sh"), col("doc").as("doc_b"), col("n_sh").as("nb"))
-    val bEx = batch
-      .select(col(idCol).as("doc_q"), shingler(col(textCol), n).as("shingles"))
-      .repartition(col("doc_q"))
-      .select(col("doc_q"), explode(col("shingles")).as("sh_str"))
-      .select(col("doc_q"), xxhash64(col("sh_str")).as("sh"))
-      .withColumn("na", count(lit(1)).over(Window.partitionBy(col("doc_q"))))
-    val pairs = bEx.join(idx, Seq("sh"))
+    val pairs = postings(batch, Seq(col(idCol).as("doc_q")), col(textCol), n, shingler)
+      .join(idx, Seq("sh"))
       .groupBy(col("doc_q"), col("doc_b"))
       .agg(count(lit(1)).as("n_shared"),
-        min(col("na")).as("na"), min(col("nb")).as("nb"))
-      .withColumn("jac", col("n_shared").cast("double") /
-        (col("na") + col("nb") - col("n_shared")).cast("double"))
-      .filter(col("jac") >= threshold)
-    val verdicts = pairs.groupBy(col("doc_q"))
-      .agg(count(lit(1)).as("n_matches"),
-        max(struct(col("jac").as("j"), (-col("doc_b")).as("negb")))
-          .as("best"))
-      .select(col("doc_q"), col("n_matches"),
-        (-col("best.negb")).as("best_match"),
-        col("best.j").as("best_jaccard"))
-    batch.select(col(idCol).as("doc_id"))
-      .join(verdicts, col("doc_id") === col("doc_q"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_matches"), lit(0L)).as("n_matches"),
-        col("best_match"), col("best_jaccard"),
-        col("doc_q").isNotNull.as("is_dup"))
+        min(col("n_sh")).as("na"), min(col("nb")).as("nb"))
+      .withColumn("jac", jaccardRatio(col("na") + col("nb")))
+    verdicts(batch, idCol, pairs, threshold)
   }
 
   /** The (doc, band_key) frame for the persisted BAND index and its batch
-    * probe: md5-MinHash signatures (char-`shingleN` shingles, k
+    * probe: md5-MinHash [[signatures]] (char-`shingleN` shingles, k
     * components) sliced into `nBands` bands; band_key =
     * "band_idx:slice-string", so one string column carries the whole
     * blocking key (a single-column key both buckets and equi-joins
-    * cleanly). Same exchange-sandwich as [[minHashCandidates]]: spread
-    * before the signature kernel, materialize after it. */
+    * cleanly). */
   private[graft] def md5BandKeys(
       df: DataFrame, idCol: String, textCol: String,
-      shingleN: Int, k: Int, nBands: Int): DataFrame = {
-    val r = k / nBands
-    val sigs = df.select(col(idCol).as("doc"), col(textCol).as("text"))
-      .filter(length(col("text")) >= shingleN)
-      .repartition(df.sparkSession.sparkContext.defaultParallelism)
-      // fused shingle+md5 kernel (round-15): signature straight from the
-      // text, no shingle-array materialization — bit-parity with
-      // md5MinHashSig(charShingles(text, n), k) pinned by HashExprsSpec
-      .select(col("doc"), graft.functions.HashExprs
-        .md5MinHashSigText(col("text"), shingleN, k).as("sig"))
-      .repartition(Par.of(df), col("doc"))
-    def bandKey(j: Column): Column =
-      concat_ws(",", transform(slice(col("sig"), j * r + 1, lit(r)),
-        x => x.cast("string")))
-    sigs.select(col("doc"),
-      posexplode(transform(sequence(lit(0), lit(nBands - 1)), bandKey(_)))
-        .as(Seq("band_idx", "band")))
+      shingleN: Int, k: Int, nBands: Int): DataFrame =
+    signatures(df, idCol, textCol, shingleN, k)
+      .select(col("doc"), bandKeys(k, nBands, md5 = true).as(Seq("band_idx", "band")))
       .select(col("doc"),
         concat_ws(":", col("band_idx"), col("band")).as("band_key"))
-  }
 
   /** I2i-BAND — the banded variant of the persisted index: instead of raw
     * shingle postings (whose per-shingle lists lengthen as a bounded
@@ -399,11 +460,7 @@ object Dedup {
       n: Int = 3): (DataFrame, DataFrame) = {
     val bands = md5BandKeys(base, idCol, textCol, shingleN, k, nBands)
       .select(col("band_key"), col("doc").as("doc_b"))
-    val feats = base
-      .select(col(idCol).as("doc_b"),
-        transform(wordShingles(col(textCol), n), g => xxhash64(g)).as("sh"))
-      .filter(size(col("sh")) > 0)
-    (bands, feats)
+    (bands, shingleHashSets(base, idCol, textCol, n, "doc_b", "sh"))
   }
 
   /** Near-dup verdicts for `batch` against a STORED [[buildBandIndex]]
@@ -428,37 +485,18 @@ object Dedup {
       nBands: Int = 16,
       n: Int = 3,
       threshold: Double = 0.5): DataFrame = {
-    val bBands = md5BandKeys(batch, idCol, textCol, shingleN, k, nBands)
+    val candIds = md5BandKeys(batch, idCol, textCol, shingleN, k, nBands)
       .select(col("doc").as("doc_q"), col("band_key"))
-    val candIds = bBands.join(bandIndex, Seq("band_key"))
+      .join(bandIndex, Seq("band_key"))
       .select(col("doc_q"), col("doc_b"))
       .distinct() // a pair colliding in several bands counts once
-    val bSh = batch
-      .select(col(idCol).as("doc_q"),
-        transform(wordShingles(col(textCol), n), g => xxhash64(g)).as("sh_q"))
-      .filter(size(col("sh_q")) > 0)
-    val pairs = candIds
-      .join(feats.select(col("doc_b"), col("sh").as("sh_b")), Seq("doc_b"))
-      .join(bSh, Seq("doc_q"))
-      .select(col("doc_q"), col("doc_b"),
-        size(array_intersect(col("sh_q"), col("sh_b"))).as("n_shared"),
-        (size(col("sh_q")) + size(col("sh_b"))).as("n_total"))
-      .withColumn("jac", col("n_shared").cast("double") /
-        (col("n_total") - col("n_shared")).cast("double"))
-      .filter(col("jac") >= threshold)
-    val verdicts = pairs.groupBy(col("doc_q"))
-      .agg(count(lit(1)).as("n_matches"),
-        max(struct(col("jac").as("j"), (-col("doc_b")).as("negb")))
-          .as("best"))
-      .select(col("doc_q"), col("n_matches"),
-        (-col("best.negb")).as("best_match"),
-        col("best.j").as("best_jaccard"))
-    batch.select(col(idCol).as("doc_id"))
-      .join(verdicts, col("doc_id") === col("doc_q"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_matches"), lit(0L)).as("n_matches"),
-        col("best_match"), col("best_jaccard"),
-        col("doc_q").isNotNull.as("is_dup"))
+    val pairs = setJaccard(
+      candIds
+        .join(feats.select(col("doc_b"), col("sh").as("sh_b")), Seq("doc_b"))
+        .join(shingleHashSets(batch, idCol, textCol, n, "doc_q", "sh_q"),
+          Seq("doc_q")),
+      Seq(col("doc_q"), col("doc_b")), col("sh_q"), col("sh_b"), "jac")
+    verdicts(batch, idCol, pairs, threshold)
   }
 
   /** I2h — sorted-neighborhood near-dup pairs (Hernández & Stolfo's
@@ -512,13 +550,12 @@ object Dedup {
   }
 
   /** Exact word-n-gram Jaccard verify over candidate id pairs
-    * `cand(ca, cb)` (ca < cb): shingles hash to 64-bit before the verify
-    * join (long-compare intersects, ~2^-64 per-pair collision noise — the
-    * jaccardPairs convention) and sit behind a repartition barrier so
-    * ReusedExchange materializes the shingling ONCE for both join sides;
-    * feature bytes cross the shuffle once per side regardless of candidate
-    * multiplicity. Shared verify stage of every blocked pair family
-    * ([[sortedNeighborPairs]], [[lshVerifiedPairs]]). */
+    * `cand(ca, cb)` (ca < cb): [[shingleHashSets]] sit behind a
+    * repartition barrier so ReusedExchange materializes the shingling
+    * ONCE for both join sides; feature bytes cross the shuffle once per
+    * side regardless of candidate multiplicity. Shared verify stage of
+    * every blocked pair family ([[sortedNeighborPairs]],
+    * [[lshVerifiedPairs]]). */
   private[graft] def verifyPairsJaccard(
       base: DataFrame, idCol: String, textCol: String, cand: DataFrame,
       n: Int, threshold: Double): DataFrame = {
@@ -528,19 +565,14 @@ object Dedup {
     // broadcast to sort-merge, and the eager materialization serializes a
     // DAG whose duplicated branches otherwise run concurrently on idle
     // cores. The exchange barrier + ReuseExchange shape stays.
-    val sh = base
-      .select(col(idCol).as("doc"),
-        transform(wordShingles(col(textCol), n), g => xxhash64(g)).as("sh"))
-      .filter(size(col("sh")) > 0)
+    val sh = shingleHashSets(base, idCol, textCol, n, "doc", "sh")
       .repartition(col("doc"))
-    cand
-      .join(sh.select(col("doc").as("ca"), col("sh").as("sh_a")), Seq("ca"))
-      .join(sh.select(col("doc").as("cb"), col("sh").as("sh_b")), Seq("cb"))
-      .select(col("ca").as("doc_a"), col("cb").as("doc_b"),
-        size(array_intersect(col("sh_a"), col("sh_b"))).as("n_shared"),
-        (size(col("sh_a")) + size(col("sh_b"))).as("n_total"))
-      .withColumn("jaccard", col("n_shared").cast("double") /
-        (col("n_total") - col("n_shared")).cast("double"))
+    setJaccard(
+      cand
+        .join(sh.select(col("doc").as("ca"), col("sh").as("sh_a")), Seq("ca"))
+        .join(sh.select(col("doc").as("cb"), col("sh").as("sh_b")), Seq("cb")),
+      Seq(col("ca").as("doc_a"), col("cb").as("doc_b")),
+      col("sh_a"), col("sh_b"), "jaccard")
       .filter(col("jaccard") >= threshold)
       .select(col("doc_a"), col("doc_b"), col("n_shared"), col("jaccard"))
   }
@@ -583,17 +615,18 @@ object Dedup {
   def minHashSignature(shingles: Column, k: Int = 64): Column =
     graft.functions.HashExprs.minHashSig(shingles, k)
 
-  /** I2b — MinHash+LSH candidate pairs: signatures → `nBands` band hashes →
-    * explode → self-join per (band index, band hash). Two docs are
-    * candidates iff at least one band matches; with k=64, r=4 the usual
-    * S-curve applies. Band blocking keeps the join linear in corpus size.
+  /** I2b — MinHash+LSH candidate pairs: [[signatures]] → `nBands` band
+    * keys → [[bandPairs]]. Two docs are candidates iff at least one band
+    * matches; with k=64, r=4 the usual S-curve applies. Band blocking keeps
+    * the pairing linear in corpus size.
     *
-    * `hashFamily`: `"xx64"` (default — xxhash64 base hashes + murmur3
-    * band hashes, the cheap production family, engine-internal) or
-    * `"md5"` (md5-derived base hashes + the signature-slice STRING as the
-    * band key — ~10× costlier per shingle but bit-for-bit recomputable by
-    * any engine with md5, which upgrades the verified row from a
-    * containment gate to a full hash oracle). */
+    * `hashFamily`: `"xx64"` (default — xxhash64 base hashes over
+    * `shingler`'s shingles + murmur3 band hashes, the cheap production
+    * family, engine-internal) or `"md5"` (char shingles through the fused
+    * md5 kernel + the signature-slice STRING as the band key — ~10×
+    * costlier per shingle but bit-for-bit recomputable by any engine with
+    * md5, which upgrades the verified row from a containment gate to a
+    * full hash oracle; `shingler` does not apply). */
   def minHashCandidates(
       df: DataFrame,
       idCol: String,
@@ -601,74 +634,13 @@ object Dedup {
       shingleN: Int = 5,
       k: Int = 64,
       nBands: Int = 16,
-      shingler: (Column, Int) => Column = defaultShingler,
+      shingler: (Column, Int) => Column = charShingles,
       hashFamily: String = "xx64"): DataFrame = {
-    val r = k / nBands
     require(hashFamily == "xx64" || hashFamily == "md5",
       s"unknown hashFamily '$hashFamily' (expected xx64 or md5)")
-    // two exchange barriers: the first spreads the docs across cores (a
-    // small parquet file scans as ONE partition, which would run the
-    // signature kernel single-threaded); the second materializes the
-    // signatures so the two self-join branches (ReuseExchange) don't
-    // recompute them.
-    // Exchange sandwich around the signature kernel:
-    //  - the FIRST exchange spreads docs across cores (a small parquet file
-    //    scans as one partition; the kernel is ~0.7 ms/doc and would run
-    //    single-threaded below it);
-    //  - the SECOND exchange materializes signatures once for the two
-    //    self-join branches (ReuseExchange dedupes it).
-    // The length prefilter replaces `size(sig) > 0`, which would be
-    // predicate-pushed below both exchanges and re-inline the kernel into
-    // the scan.
-    // (round-robin then hash: two IDENTICAL repartitions would be merged
-    // by CollapseRepartition, collapsing the sandwich)
-    val sigExpr =
-      if (hashFamily == "md5" && (shingler eq defaultShingler))
-        // fused shingle+md5 kernel (round-15): bit-parity with the
-        // composed form pinned by HashExprsSpec; only the char-shingle
-        // default fuses — an explicit custom shingler keeps the
-        // composed path
-        graft.functions.HashExprs.md5MinHashSigText(
-          col("text"), shingleN, k)
-      else if (hashFamily == "md5")
-        graft.functions.HashExprs.md5MinHashSig(
-          shingler(col("text"), shingleN), k)
-      else minHashSignature(shingler(col("text"), shingleN), k)
-    val sigs = df.select(col(idCol).as("doc"), col(textCol).as("text"))
-      .filter(length(col(textCol)) >= shingleN)
-      .repartition(df.sparkSession.sparkContext.defaultParallelism)
-      .select(col("doc"), sigExpr.as("sig"))
-      .repartition(Par.of(df), col("doc"))
-    // md5 family: the band key is the signature slice ITSELF (as a string)
-    // — murmur3 band hashes would be engine-internal again and forfeit the
-    // oracle; band_idx rides in the group key, so cross-band collisions
-    // don't exist in either form
-    def bandKey(j: Column): Column =
-      if (hashFamily == "md5")
-        concat_ws(",", transform(slice(col("sig"), j * r + 1, lit(r)),
-          x => x.cast("string")))
-      else hash(concat_ws(",", slice(col("sig"), j * r + 1, lit(r))), j)
-    val bands = sigs.select(col("doc"),
-      posexplode(transform(sequence(lit(0), lit(nBands - 1)), bandKey(_)))
-        .as(Seq("band_idx", "band_hash")))
-    // group-and-pair instead of a self-join: the join's two branches each
-    // re-ran the signature kernel (ReuseExchange can't dedupe them under
-    // AQE); collecting each band bucket and double-exploding pairs
-    // evaluates it once. Bucket fan-out is the same as the join's — both
-    // colocate a bucket's candidates on one task, and a degenerate bucket
-    // (near-identical corpus) is quadratic in EITHER formulation; the
-    // bucket array itself is only O(bucket), 8 bytes/doc.
-    bands
-      .groupBy(col("band_idx"), col("band_hash"))
-      .agg(collect_list(col("doc")).as("ds"))
-      .select(explode(col("ds")).as("doc_a"), col("ds"))
-      .select(col("doc_a"), explode(col("ds")).as("doc_b"))
-      .filter(col("doc_a") < col("doc_b"))
-      // CONTRACT: this terminal distinct() is load-bearing for the
-      // single-pass containment-gate folds (minhashContainmentGate counts
-      // left-join hits 1:1) — removing it would silently inflate
-      // n_high_pairs and undercount n_missed downstream (r14 ADVICE)
-      .distinct()
+    val md5 = hashFamily == "md5"
+    bandPairs(signatures(df, idCol, textCol, shingleN, k, md5, shingler),
+      k, nBands, md5)
   }
 
   /** Estimated Jaccard from two MinHash signatures (fraction of equal
@@ -699,41 +671,18 @@ object Dedup {
       nBands: Int = 16,
       threshold: Double = 0.5): DataFrame = {
     require(k % nBands == 0, s"k=$k must divide into nBands=$nBands")
-    val r = k / nBands
-    // same exchange sandwich as minHashCandidates: spread the signature
-    // kernel across cores, then materialize signatures once by doc so the
-    // band branch and the two verify attachments reuse one exchange
-    val sigExpr = graft.functions.HashExprs.md5MinHashSig(
-      charShingles(col("text"), shingleN), k)
-    // localCheckpoint, not just an exchange barrier: the round-14 plan
+    // localCheckpoint, not just the exchange sandwich: the round-14 plan
     // audit showed the intended ReuseExchange never fired — the band
     // branch and BOTH verify attachments each re-ran the md5 signature
     // kernel (3 parquet scans + 3 kernel projections in the executed
     // plan). Pinning the signatures materializes the ~10×-per-shingle md5
     // family exactly once; the frame is one k-int array per doc, the same
     // bytes the old exchange already spilled.
-    val sigs = df.select(col(idCol).as("doc"), col(textCol).as("text"))
-      .filter(length(col("text")) >= shingleN)
-      .repartition(df.sparkSession.sparkContext.defaultParallelism)
-      .select(col("doc"), sigExpr.as("sig"))
-      .repartition(Par.of(df), col("doc"))
-      .localCheckpoint()
-    def bandKey(j: Column): Column =
-      concat_ws(",", transform(slice(col("sig"), j * r + 1, lit(r)),
-        x => x.cast("string")))
-    val cand = sigs.select(col("doc"),
-      posexplode(transform(sequence(lit(0), lit(nBands - 1)), bandKey(_)))
-        .as(Seq("band_idx", "band_hash")))
-      .groupBy(col("band_idx"), col("band_hash"))
-      .agg(collect_list(col("doc")).as("ds"))
-      .select(explode(col("ds")).as("doc_a"), col("ds"))
-      .select(col("doc_a"), explode(col("ds")).as("doc_b"))
-      .filter(col("doc_a") < col("doc_b"))
-      .distinct()
+    val sigs = signatures(df, idCol, textCol, shingleN, k).localCheckpoint()
     // id pairs cross the candidate shuffle; each side's signature attaches
     // once per id (the round-11 LSH-join discipline: payloads per side,
     // not per collision)
-    cand
+    bandPairs(sigs, k, nBands, md5 = true)
       .join(sigs.select(col("doc").as("doc_a"), col("sig").as("sa")), "doc_a")
       .join(sigs.select(col("doc").as("doc_b"), col("sig").as("sb")), "doc_b")
       .withColumn("est_jaccard", minHashSimilarity(col("sa"), col("sb")))
@@ -891,69 +840,21 @@ object Dedup {
       .groupBy(col("sim")).agg(collect_set(col("doc")).as("docs"))
   }
 
-  /** Blocking bands over the sketch clusters: one row per (sim, band_idx,
-    * band). Both schemes are containment-exact by pigeonhole; which one is
-    * CHEAPER is corpus-dependent (measured at sf0.1 / radius 10):
-    *
-    *  - single chunks (`combinations = false`, default): `maxHamming + 1`
-    *    chunks — a pair within the radius leaves ≥ 1 untouched. At radius
-    *    10 the ~6-bit chunks have only 64 distinct values, so a DISPERSED
-    *    corpus pays ~n²/64 false candidates per chunk index. But each true
-    *    pair is rediscovered ≤ 11×, which makes this the cheap scheme for
-    *    near-dup-HEAVY corpora (7× faster on the fixture), where candidates
-    *    are dominated by true pairs, not bucket collisions.
-    *  - chunk-pair combinations (`combinations = true`): `maxHamming + 2`
-    *    chunks leave ≥ 2 untouched, hence some untouched PAIR; the C(c, 2)
-    *    ≈ 66 bands carry ~2× the bits each, cutting false-candidate rates
-    *    ~64× (>4× net on a dispersed corpus, see LlmSpec) at the price of
-    *    rediscovering every true pair up to 66×.
-    *
-    * Rule of thumb at 100 TB: dedup passes over raw crawl data (clusters
-    * everywhere) keep the default; wide-radius search over already-deduped
-    * corpora flips `combinations` on. NOTE: `combinations = true` applies
-    * only for `maxHamming > 6` — at smaller radii single chunks are both
-    * finer (≥ 9 bits) and cheaper, so the flag is ignored (and the 16-bit
-    * band packing needs the ≥ 9 chunks a wide radius implies). */
-  private[graft] def simHashBands(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      maxHamming: Int,
-      combinations: Boolean = false): DataFrame =
-    withBands(simClusters(df, idCol, textCol), maxHamming, combinations)
-
-  private def withBands(
-      clusters: DataFrame, maxHamming: Int, combinations: Boolean): DataFrame = {
-    def chunkCol(shift: Int, mask: Long): Column =
-      call_function("shiftright", col("sim"), lit(shift)).bitwiseAND(lit(mask))
-    val bands: Seq[Column] =
-      if (!combinations || maxHamming <= 6) {
-        chunkSpec(maxHamming + 1).map { case (s, m) => chunkCol(s, m) }
-      } else {
-        val chunks = chunkSpec(maxHamming + 2).map { case (s, m) => chunkCol(s, m) }
-        // chunk widths are ≤ 8 bits here (c ≥ 9), so packing two chunk
-        // values 16 bits apart is collision-free
-        for {
-          i <- chunks.indices
-          j <- (i + 1) until chunks.size
-        } yield shiftleft(chunks(i), 16).bitwiseOR(chunks(j))
-      }
-    clusters.select(col("sim"), col("docs"),
-      posexplode(array(bands: _*)).as(Seq("band_idx", "band")))
-  }
-
   /** I2c — SimHash near-dup pairs: identical-sketch clusters emit their
     * pairs directly (Hamming 0), distinct sketches go through banded
-    * blocking (see [[simHashBands]]) + exact Hamming verification. Blocking
-    * is containment-exact by pigeonhole, so the output equals the all-pairs
-    * result at any radius; pair DEDUP happens on (sim, sim_b) before the
-    * cluster expansion, so multi-band collisions never re-expand. */
+    * blocking + exact Hamming verification. The bands are `maxHamming + 1`
+    * disjoint chunks of the fingerprint: a pair within the radius leaves
+    * ≥ 1 chunk untouched, so blocking is containment-exact by pigeonhole
+    * and the output equals the all-pairs result at any radius. Each true
+    * pair is rediscovered at most `maxHamming + 1` times, which keeps
+    * near-dup-heavy corpora (candidates dominated by true pairs) cheap;
+    * pair DEDUP happens on (sim, sim_b) before the cluster expansion, so
+    * multi-band collisions never re-expand. */
   def simHashPairs(
       df: DataFrame,
       idCol: String,
       textCol: String,
       maxHamming: Int = 3,
-      combinationBands: Boolean = false,
       hashFamily: String = "xx64"): DataFrame = {
     require(maxHamming >= 0 && maxHamming < 64,
       s"maxHamming must be in [0, 64): $maxHamming")
@@ -968,7 +869,11 @@ object Dedup {
       .select(col("a").as("doc_a"), col("b").as("doc_b"),
         lit(0).as("hamming"))
     // distinct sketches: band-join cluster reps, verify, THEN expand
-    val bands = withBands(clusters, maxHamming, combinationBands)
+    val chunks = chunkSpec(maxHamming + 1).map { case (shift, mask) =>
+      call_function("shiftright", col("sim"), lit(shift)).bitwiseAND(lit(mask))
+    }
+    val bands = clusters.select(col("sim"), col("docs"),
+      posexplode(array(chunks: _*)).as(Seq("band_idx", "band")))
     val other = bands.select(col("sim").as("sim_b"), col("docs").as("docs_b"),
       col("band_idx"), col("band"))
     val inter = bands.join(other, Seq("band_idx", "band"))
@@ -1003,7 +908,6 @@ object Dedup {
       idCol: String,
       textCol: String,
       k: Int = 50): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val t = col(textCol)
     // every k-char shingle POSITION with the shingle's 64-bit hash:
     // |rows| = total chars, the linear-in-corpus cost this method trades

@@ -239,11 +239,13 @@ object IncrementalCuration {
       .select(col("doc_id")).distinct()
   }
 
-  /** Temperature-mixture (α=0.5) keep thresholds from per-source totals —
-    * the same exact-integer N_min formulation as the batch
-    * `i6_temperature_mixture` row (pairwise vs MIN, one correctly-rounded
-    * sqrt; see LlmOps.temperatureMixtureOver). */
-  private def mixtureRates(srcStats: DataFrame): DataFrame = {
+  /** Temperature-mixture (α=0.5) keep thresholds `(source,
+    * keep_threshold)` from per-source token totals `(source, ns)`:
+    * floor(sqrt(N_min/N_s)·10000), pairwise against the MIN with one
+    * correctly-rounded sqrt (see LlmOps.temperatureMixtureOver) — the one
+    * definition of the batch `i6_temperature_mixture` row and the
+    * incremental curation stats. */
+  private[graft] def mixtureRates(srcStats: DataFrame): DataFrame = {
     val nmin = srcStats.agg(min(col("ns")).as("nmin"))
     srcStats.crossJoin(broadcast(nmin))
       .select(col("source"),

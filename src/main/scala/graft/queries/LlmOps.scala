@@ -48,9 +48,14 @@ object LlmOps {
     * join stays linear; the frequency cap (1000) remains as the skew guard
     * for pathological corpora. Mirrored in the oracle's HAVING clause. */
   def ngramJaccard(s: SparkSession, d: String): DataFrame =
-    Dedup.jaccardPairs(Tables.documents(s, d), "doc_id", "text",
-      n = 3, threshold = 0.5, maxShingleFreq = Some(1000),
-      shingler = Dedup.wordShingles)
+    wordJaccardPairs(Tables.documents(s, d), threshold = 0.5)
+
+  /** The battery's word-3-gram Jaccard pairs (frequency cap 1000) at
+    * `threshold`: the substrate of i2_ngram_jaccard, the fuzzy-dedup and
+    * canonical-keep rows, and both containment gates. */
+  private def wordJaccardPairs(docs: DataFrame, threshold: Double): DataFrame =
+    Dedup.jaccardPairs(docs, "doc_id", "text", n = 3, threshold = threshold,
+      maxShingleFreq = Some(1000), shingler = Dedup.wordShingles)
 
   /** Word-3-gram Jaccard pair SQL at `threshold` — shared by the
     * `i2_ngram_jaccard` oracle and the containment gate's oracle.
@@ -85,9 +90,7 @@ object LlmOps {
     * semantics end to end. */
   def fuzzyDedupE2e(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d).filter(anchorSlice)
-    val pairs = Dedup.jaccardPairs(docs, "doc_id", "text",
-      n = 3, threshold = 0.5, maxShingleFreq = Some(1000),
-      shingler = Dedup.wordShingles)
+    val pairs = wordJaccardPairs(docs, threshold = 0.5)
       .select("doc_a", "doc_b")
     Dedup.fuzzyDedupComponents(docs, "doc_id", pairs)
   }
@@ -318,9 +321,7 @@ object LlmOps {
     * composition ([[curationV5Over]] rides it). */
   private[graft] def canonicalKeepOver(docs: DataFrame): DataFrame =
     canonicalKeepWith(docs,
-      Dedup.jaccardPairs(docs, "doc_id", "text",
-        n = 3, threshold = 0.5, maxShingleFreq = Some(1000),
-        shingler = Dedup.wordShingles).select("doc_a", "doc_b"))
+      wordJaccardPairs(docs, threshold = 0.5).select("doc_a", "doc_b"))
 
   /** I2j-BLOCKED — canonical selection over the sorted-neighborhood pair
     * generator ([[graft.llm.Dedup.sortedNeighborPairs]], w·N candidates by
@@ -532,9 +533,7 @@ object LlmOps {
     // distinct(), so the join preserves high's row count and a null hit
     // marker IS the anti-join predicate. Same result, one substrate pass,
     // no pin.
-    val high = Dedup.jaccardPairs(docs, "doc_id", "text", n = 3,
-      threshold = 0.7, maxShingleFreq = Some(1000),
-      shingler = Dedup.wordShingles)
+    val high = wordJaccardPairs(docs, threshold = 0.7)
       .select("doc_a", "doc_b")
     val cands = Dedup.minHashCandidates(docs, "doc_id", "text", shingleN = 3,
       shingler = Dedup.wordShingles)
@@ -709,9 +708,7 @@ object LlmOps {
     // is defensively distinct'd (unique already under unique doc ids) so
     // the left join preserves high's row count; a null hit marker is the
     // anti-join predicate.
-    val high = Dedup.jaccardPairs(docs, "doc_id", "text", n = 3,
-      threshold = 0.7, maxShingleFreq = Some(1000),
-      shingler = Dedup.wordShingles)
+    val high = wordJaccardPairs(docs, threshold = 0.7)
       .select("doc_a", "doc_b")
     val pairs = Dedup.simHashPairs(docs, "doc_id", "text", maxHamming = 10)
       .select("doc_a", "doc_b").distinct()
@@ -1993,12 +1990,8 @@ object LlmOps {
       col("doc_id"), col("source"), col("text"),
       coalesce(TextAnalysis.tokenCount(col("text")).cast("long"), lit(0L))
         .as("tok"))
-    val bySrc = toks.groupBy(col("source")).agg(sum(col("tok")).as("ns"))
-    val nmin = bySrc.agg(min(col("ns")).as("nmin"))
-    val rates = bySrc.crossJoin(broadcast(nmin))
-      .select(col("source"),
-        floor(sqrt(col("nmin").cast("double") / col("ns").cast("double"))
-          * 10000).cast("int").as("keep_threshold"))
+    val rates = graft.llm.IncrementalCuration.mixtureRates(
+      toks.groupBy(col("source")).agg(sum(col("tok")).as("ns")))
     toks.join(broadcast(rates), Seq("source"))
       .filter(Sampling.hashBucket(col("text"), 10000) < col("keep_threshold"))
       .select(col("doc_id"), col("source"), col("keep_threshold"))

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.llm.Dedup
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -14,8 +15,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * at ingest.
   *
   * Plan shape: the signature + band hashes are computed IN the streaming
-  * plan (same expressions as the batch candidate generator, so the two
-  * agree bucket-for-bucket — StreamDedupSpec pins parity), then
+  * plan by the batch candidate generator's own stage functions
+  * (`Dedup.signatureOf`, `Dedup.bandKeys`), so the two agree
+  * bucket-for-bucket — StreamDedupSpec pins parity; then
   * `flatMapGroupsWithState` keyed by (band_idx, band_hash) holds at most
   * `bucketCap` doc ids per bucket. A new arrival emits a candidate pair
   * against every stored id in any shared bucket.
@@ -54,15 +56,11 @@ object StreamDedup {
     require(stateTtlMinutes >= 0, s"bad stateTtlMinutes: $stateTtlMinutes")
     val spark = docs.sparkSession
     import spark.implicits._
-    val r = k / nBands
-    val sig = graft.llm.Dedup.minHashSignature(
-      graft.llm.Dedup.charShingles(col("text"), shingleN), k)
     docs
-      .select(col("doc_id").cast("long").as("doc_id"), sig.as("sig"))
+      .select(col("doc_id").cast("long").as("doc_id"),
+        Dedup.signatureOf(col("text"), shingleN, k, md5 = false).as("sig"))
       .select(col("doc_id"),
-        posexplode(transform(sequence(lit(0), lit(nBands - 1)),
-          j => hash(concat_ws(",", slice(col("sig"), j * r + 1, lit(r))), j)))
-          .as(Seq("band_idx", "band_hash")))
+        Dedup.bandKeys(k, nBands, md5 = false).as(Seq("band_idx", "band_hash")))
       .as[BandRow]
       .groupByKey(b => (b.band_idx, b.band_hash))
       .flatMapGroupsWithState(
@@ -109,19 +107,12 @@ object StreamDedup {
     require(stateTtlMinutes >= 0, s"bad stateTtlMinutes: $stateTtlMinutes")
     val spark = docs.sparkSession
     import spark.implicits._
-    val r = k / nBands
-    // fused shingle+md5 kernel (round-15) — bit-parity with the composed
-    // md5MinHashSig(charShingles(...)) form pinned by HashExprsSpec
-    val sig = graft.functions.HashExprs.md5MinHashSigText(
-      col("text"), shingleN, k)
     docs
       .filter(length(col("text")) >= shingleN)
-      .select(col("doc_id").cast("long").as("doc_id"), sig.as("sig"))
+      .select(col("doc_id").cast("long").as("doc_id"),
+        Dedup.signatureOf(col("text"), shingleN, k, md5 = true).as("sig"))
       .select(col("doc_id"), col("sig"),
-        posexplode(transform(sequence(lit(0), lit(nBands - 1)),
-          j => concat_ws(",", transform(slice(col("sig"), j * r + 1, lit(r)),
-            x => x.cast("string")))))
-          .as(Seq("band_idx", "band_key")))
+        Dedup.bandKeys(k, nBands, md5 = true).as(Seq("band_idx", "band_key")))
       .select(col("doc_id"), col("band_idx"), col("band_key"), col("sig"))
       .as[SigBandRow]
       .groupByKey(b => (b.band_idx, b.band_key))

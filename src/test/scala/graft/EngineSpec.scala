@@ -142,6 +142,27 @@ class EngineSpec extends AnyFunSuite {
       .filterNested(Seq("name"), "call-python-function").count() == 0)
   }
 
+  test("tracer clock: a now()-measured interval never records shorter " +
+    "than it lasted") {
+    // span durations (E2's `> timeout` check among them) are differences
+    // of Tracer.now() stamps; each stamp must come from one clock, so an
+    // interval can lose at most the µs truncation, never a whole ms
+    val tracer = newEngine().tracer
+    val rnd = new scala.util.Random(11)
+    val worstUs = (1 to 400).map { _ =>
+      val t0 = tracer.now()
+      val n0 = System.nanoTime()
+      java.util.concurrent.locks.LockSupport.parkNanos(
+        50000L + rnd.nextInt(900000))
+      val n1 = System.nanoTime()
+      val t1 = tracer.now()
+      val stampedUs = java.time.Duration.between(t0, t1).toNanos / 1000L
+      (n1 - n0) / 1000L - stampedUs
+    }.max
+    assert(worstUs <= 10L,
+      s"an interval recorded $worstUs µs shorter than nanoTime measured")
+  }
+
   test("E5: CPU budget — 4 one-cpu tasks on 2 cpus never overlap 3-way " +
     "(ref test_task_queuing.py:41-87)") {
     val engine = newEngine(cpus = 2)

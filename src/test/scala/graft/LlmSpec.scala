@@ -118,11 +118,6 @@ class LlmSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("starContraction"))
     val labels = ConnectedComponents.starContraction(nodes, pairs).collect()
     assert(labels.length == 200 && labels.forall(_.getLong(1) == 0L))
-    // and through the dedup API: one representative for the whole chain
-    val dd = graft.llm.Dedup.fuzzyDedupComponents(
-      nodes.withColumnRenamed("id", "doc_id"), "doc_id", pairs,
-      algorithm = "star-contraction")
-    assert(dd.filter(col("is_representative")).count() == 1)
   }
 
   test("I7 PII scrub: counts and redaction, pass-order safety") {
@@ -1072,9 +1067,6 @@ class LlmSpec extends AnyFunSuite {
     val radius = 10
     val blocked = Dedup.simHashPairs(d, "doc_id", "text", maxHamming = radius)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val blockedComb = Dedup.simHashPairs(d, "doc_id", "text",
-      maxHamming = radius, combinationBands = true)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // brute-force oracle: all pairs within the Hamming radius
     val sh = d.select(col("doc_id"), TextAnalysis.simHash(col("text")).as("s"))
       .collect().map(r => r.getLong(0) -> r.getLong(1))
@@ -1083,32 +1075,6 @@ class LlmSpec extends AnyFunSuite {
       if ia < ib && java.lang.Long.bitCount(sa ^ sb) <= radius
     } yield (ia, ib)).toSet
     assert(blocked == brute, "banded blocking must be containment-exact")
-    assert(blockedComb == brute,
-      "combination-band blocking must be containment-exact too")
-    // the scale property: on a DISPERSED corpus (the regime where blocking
-    // matters — cluster-heavy corpora are output-bound, their candidates
-    // are mostly true pairs), combination bands must generate far fewer
-    // candidate pairs than single-chunk blocking, whose ~6-bit chunks cap
-    // out at 64 distinct buckets per chunk index (≈ n²/64 pairs each)
-    val rnd = new scala.util.Random(7)
-    def word() = (1 to 8).map(_ => ('a' + rnd.nextInt(26)).toChar).mkString
-    val dispersed = (1 to 1000)
-      .map(i => (i.toLong, (1 to 20).map(_ => word()).mkString(" ")))
-      .toDF("doc_id", "text")
-    def volume(buckets: Iterable[Int]): Long =
-      buckets.map(sz => sz.toLong * (sz - 1) / 2).sum
-    val newVolume = volume(
-      Dedup.simHashBands(dispersed, "doc_id", "text", radius, combinations = true)
-        .groupBy(col("band_idx"), col("band")).agg(count(lit(1)).as("sz"))
-        .select(col("sz")).collect().map(_.getLong(0).toInt))
-    val dispSims = dispersed
-      .select(TextAnalysis.simHash(col("text"))).collect().map(_.getLong(0))
-    val oldVolume = volume( // the replaced scheme: radius+1 single chunks
-      dispSims.toSeq.flatMap { s =>
-        (0 until radius + 1).map(j => (j, (s >>> (j * 6)) & 63))
-      }.groupBy(identity).map(_._2.size))
-    assert(newVolume * 4 <= oldVolume,
-      s"combination bands should cut candidate volume: new=$newVolume old=$oldVolume")
   }
 
   test("I2 simhash never emits self-pairs for a doc id duplicated with different text") {
