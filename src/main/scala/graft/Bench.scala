@@ -1,6 +1,6 @@
 package graft
 import scala.collection.immutable.ListMap
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.model.Json
 object Bench {
   /** Timing action: write to the no-op sink, which computes EVERY output
@@ -60,8 +60,17 @@ object Bench {
           case Array(k, v, _*) => Some(k.stripSuffix(":") -> v)
           case _ => None
         }}.toMap).getOrElse(Map.empty[String, String])
-    println(resultLine(results, sfDir, warmDir, meminfo))
+    println(resultLine(results, sfDir, warmDir, meminfo, resolvedConfig(spark)))
   }
+
+  /** The configuration the run resolved, read from the live session (not
+    * the environment): scheduler cores, master, shuffle partitions, AQE. */
+  private[graft] def resolvedConfig(spark: SparkSession): ListMap[String, Any] =
+    ListMap(
+      "cpus" -> spark.sparkContext.defaultParallelism,
+      "master" -> spark.sparkContext.master,
+      "shuffle_partitions" -> spark.conf.get("spark.sql.shuffle.partitions").toInt,
+      "aqe" -> spark.conf.get("spark.sql.adaptive.enabled").toBoolean)
 
   /** The one-line JSON result record. Key order is fixed and `queries`
     * keeps the alphabetical run order, for stable run-to-run diffs. Box
@@ -69,9 +78,11 @@ object Bench {
     * round-12 closing bench ran with ~10 GB of scale-audit shards resident
     * in page cache, drifting the common-query median 1.16× with no code
     * change. A reader comparing two BENCH_r{N}.json files can see whether
-    * the cache state was comparable before blaming the code. */
+    * the cache state was comparable before blaming the code. The resolved
+    * `config` ([[resolvedConfig]]) follows it for the same reason. */
   private[graft] def resultLine(results: Seq[(String, Double)], sfDir: String,
-      warmDir: String, meminfo: Map[String, String]): String = {
+      warmDir: String, meminfo: Map[String, String],
+      config: ListMap[String, Any]): String = {
     def kb(k: String): Long = meminfo.get(k).flatMap(_.toLongOption).getOrElse(0L)
     Json.render(ListMap(
       "metric" -> "total",
@@ -85,6 +96,6 @@ object Bench {
       "box" -> ListMap(
         "mem_available_kb" -> kb("MemAvailable"),
         "cached_kb" -> kb("Cached"),
-        "dirty_kb" -> kb("Dirty"))))
+        "dirty_kb" -> kb("Dirty"))) ++ config)
   }
 }

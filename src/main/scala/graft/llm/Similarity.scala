@@ -1,13 +1,37 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import graft.functions.{PqCodeTable, PqCodebooks, PqOps, TopKCorpus}
 
 /** Similarity search over embedding columns (SURVEY §2 Group I, I3):
   * brute-force cosine top-k as the exactness baseline, LSH-bucketed
   * (random-hyperplane) search as the scale path. Dot products via
   * `zip_with` + `aggregate` — pure codegen'd expressions, no UDFs.
+  *
+  * Every top-k tier composes private `features → route → score → top-k`
+  * stages: [[features]]; its own join, the IVF [[cellPairs]] or
+  * [[probePairs]] over a [[Cells]] quantizer, or LSH buckets; [[scored]]
+  * by [[exactCosine]] or [[adc]]; [[topKPerQuery]], [[windowTopK]] or a
+  * fused kernel's [[emit]]. Broadcast indexes live in an [[IndexCache]].
+  *
+  * | tier | features | route | score | top-k |
+  * |---|---|---|---|---|
+  * | [[hardNegatives]] | both sides | broadcast queries, label ≠ | exact | heap |
+  * | [[batchTopK]] | both sides | broadcast queries, cross | exact | heap |
+  * | [[bruteForceTopK]] | query quantize | broadcast corpus kernel | exact (fused) | emit |
+  * | same, non-integral ids | both sides | broadcast corpus, id ≠ | exact | window |
+  * | [[sq8TopK]] | SQ8 reconstruction | broadcast queries, id ≠ | exact | heap |
+  * | [[pqTopK]], [[pqTopKExact]] | — | broadcast code table kernel | ADC (fused) | emit |
+  * | [[ivfTopK]], [[ivfTopKExact]] | both sides | cell self-join | exact | heap |
+  * | [[ivfPqTopKExact]] | codes | cell self-join | ADC | heap |
+  * | [[ivfServe]] | both sides | broadcast probes | exact | heap |
+  * | [[ivfPqServe]] | codes | broadcast probes | ADC | heap |
+  * | [[lshTopK]] | both sides | bucket self-join | exact | window |
   */
 object Similarity {
 
@@ -40,13 +64,185 @@ object Similarity {
     dotQ(a, b).cast("double") /
       (sqrt(dotQ(a, a).cast("double")) * sqrt(dotQ(b, b).cast("double")))
 
-  /** Cosine from precomputed quantized vectors + norms, null on a zero
-    * vector: under ANSI mode (Spark 4 default) a bare `x / 0.0` raises
-    * DIVIDE_BY_ZERO and kills the whole query; a NaN would silently poison
-    * the top-k heap. Degenerate pairs are droppable, not fatal. */
-  private def safeCosine(qv: Column, cv: Column, qn: Column, cn: Column): Column =
-    when(qn * cn > 0d,
-      dotQ(qv, cv).cast("double") / (qn * cn)).otherwise(lit(null))
+  /** Lloyd iterations and sample rows of the sample-fit quantizers. */
+  private val LloydIters = 3
+  private val MaxTrainSample = 65536
+
+  /** Column names of one side of a scored pair. */
+  private final case class Side(id: String, v: String, n: String)
+  private val Queries = Side("query_id", "qv", "qn")
+  private val Corpus = Side("neighbor_id", "cv", "cn")
+
+  /** Features: `(id, vec, norm)` under `side`'s names, plus `extra`. `vec`
+    * is on the integer grid; its norm is computed ONCE per vector here, not
+    * for each pair it later scores in. */
+  private def features(df: DataFrame, side: Side, id: Column, vec: Column,
+      extra: Column*): DataFrame =
+    df.select(Seq(id.as(side.id), vec.as(side.v)) ++ extra: _*)
+      .withColumn(side.n, sqrt(dotQ(col(side.v), col(side.v)).cast("double")))
+
+  /** `(id: long, v: raw vector)` of the rows with a vector (a null in a
+    * training sample NPEs the driver): the trainers' and encoders' input. */
+  private[graft] def idVecs(df: DataFrame, idCol: String, vecCol: String): DataFrame =
+    df.filter(col(vecCol).isNotNull)
+      .select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
+
+  /** Exact-integer-valued double view of the 1e-6 grid (floor() yields
+    * BIGINT; the PQ kernels take float/double arrays, and the cast back is
+    * exact — |values| ≤ 2^21 ≪ 2^53). */
+  private def quantD(v: Column): Column =
+    transform(v, x => floor(x.cast("double") * 1000000d).cast("double"))
+
+  /** Raw-norm zero filter: PQ tiers test the RAW vector, since a zero one
+    * reconstructs to nonzero centroids and no later check could drop it. */
+  private def nonZero(v: Column): Column = {
+    val rawNorm2 = aggregate(
+      transform(v, x => x.cast("double") * x.cast("double")),
+      lit(0.0), (acc, x) => acc + x)
+    rawNorm2 > 0d
+  }
+
+  /** An IVF coarse quantizer as two expressions over the raw vector: the
+    * row's one cell, and its `nProbe` probe cells (best first). */
+  private final case class Cells(assign: Column, probes: Column)
+
+  /** Float quantizer: [[trainCosineCentroids]]' cells, picked by cosine. */
+  private def cosineCells(centroids: Array[Array[Double]], vecCol: String,
+      nProbe: Int): Cells = {
+    import graft.functions.ArrayOps.nearestCells
+    Cells(element_at(nearestCells(col(vecCol), centroids, 1), 1),
+      nearestCells(col(vecCol), centroids, nProbe))
+  }
+
+  /** Integer quantizer: [[KMeans.centroids]]' cells on the shifted grid. */
+  private def lloydCells(cents: Array[Array[Long]], vecCol: String,
+      nProbe: Int): Cells = {
+    import graft.functions.KMeansExprs
+    val q = KMeans.quantize(col(vecCol))
+    Cells(KMeansExprs.assign(q, cents)("cluster"),
+      KMeansExprs.nearestCells(q, cents, nProbe))
+  }
+
+  /** Route — IVF cell self-join: corpus rows (with `cell`) against query
+    * probes (one row per probed `cell`), a row never pairing with itself.
+    * Each corpus vector lives in exactly ONE cell, so a pair arises once.
+    *
+    * The corpus side is a barrier: features, cell and codes are computed
+    * once. It is keyed by ID, not cell (round-15): the probe side
+    * broadcasts, so the join never needed cell co-partitioning, and
+    * hashing nList=16 cell values into the partition space left ~40% of
+    * cores idle (plus per-cell skew) for the quadratic scoring stage
+    * downstream — the §2.5 low-cardinality-key trap. The id key spreads
+    * the scoring stage evenly at any scale; a bounded (cell, salt-4)
+    * middle ground measured 1.8× SLOWER at the 10× shard (cell-slice skew
+    * tails the interpreted ADC stage), and the id spread's cost — partial
+    * top-k heaps fan out to every partition a query's candidates touch —
+    * is an O(P·|Q|) term against the O(|Q|·n/nProbe) scoring win. */
+  private def cellPairs(df: DataFrame, corpus: DataFrame,
+      probes: DataFrame): DataFrame =
+    corpus.repartition(Par.of(df), col("neighbor_id"))
+      .join(probes, Seq("cell"))
+      .filter(col("query_id") =!= col("neighbor_id"))
+
+  /** Route — IVF serve: the corpus scan joins the broadcast probe side. */
+  private def probePairs(corpus: DataFrame, probes: DataFrame): DataFrame =
+    corpus.join(broadcast(probes), Seq("cell"))
+
+  /** IVF sides for the exact score, from the rows with a vector: corpus
+    * [[features]] with their one `cell`, query features per probed `cell`. */
+  private def exactSides(corpus: DataFrame, queries: DataFrame, idCol: String,
+      vecCol: String, cells: Cells): (DataFrame, DataFrame) = {
+    val id = col(idCol).cast("long")
+    (features(corpus.filter(col(vecCol).isNotNull), Corpus, id,
+      quantize(col(vecCol)), cells.assign.as("cell")),
+      features(queries.filter(col(vecCol).isNotNull), Queries, id,
+        quantize(col(vecCol)), explode(cells.probes).as("cell")))
+  }
+
+  /** IVF sides for the ADC score: raw-nonzero corpus rows as `cell` + codes
+    * of `vec` (raw vectors leave the plan), query `vec` per probed `cell`. */
+  private def pqSides(corpus: DataFrame, queries: DataFrame, idCol: String,
+      vecCol: String, cells: Cells, books: PqCodebooks,
+      vec: Column): (DataFrame, DataFrame) = {
+    val id = col(idCol).cast("long")
+    (corpus.filter(col(vecCol).isNotNull).filter(nonZero(col(vecCol)))
+      .select(id.as("neighbor_id"), cells.assign.as("cell"),
+        PqOps.pqEncode(vec, books).as("codes")),
+      queries.filter(col(vecCol).isNotNull)
+        .select(id.as("query_id"), vec.as("qv"), explode(cells.probes).as("cell")))
+  }
+
+  /** Exact score: cosine from the quantized vectors + norms of both sides,
+    * null on a zero vector. Under ANSI mode (Spark 4 default) a bare
+    * `x / 0.0` raises DIVIDE_BY_ZERO and kills the whole query; a NaN
+    * would silently poison the top-k heap. Degenerate pairs are
+    * droppable, not fatal. */
+  private def exactCosine: Column =
+    when(col("qn") * col("cn") > 0d,
+      dotQ(col("qv"), col("cv")).cast("double") / (col("qn") * col("cn")))
+      .otherwise(lit(null))
+
+  /** PQ-ADC score of the query vector `qv` against a corpus row's `codes`. */
+  private def adc(books: PqCodebooks): Column =
+    PqOps.pqAdc(col("qv"), col("codes"), books)
+
+  /** Score: every pair with a score, as `cos_sim`. Column pruning narrows
+    * the pairs for top-k; a reordering select would add a Project. */
+  private def scored(pairs: DataFrame, score: Column): DataFrame =
+    pairs.withColumn("cos_sim", score).filter(col("cos_sim").isNotNull)
+
+  /** Per-query top-k via the bounded-heap aggregate
+    * ([[graft.functions.TopKByScore]]): map-side partial top-k means only k
+    * rows per query cross the shuffle — the window/row_number formulation
+    * shuffles and sorts every candidate pair. Tie-break (score DESC,
+    * neighbor ASC) matches the oracle's ROW_NUMBER ordering (at the 16×
+    * shard the IVF window shuffled ~256M skinny pair rows). The heap is
+    * long-id only; any other id type goes through [[windowTopK]]. */
+  private def topKPerQuery(pairs: DataFrame, k: Int): DataFrame =
+    if (pairs.schema("neighbor_id").dataType == LongType)
+      emit(pairs.groupBy(col("query_id"))
+        .agg(graft.functions.TopKAgg.topKByScore(
+          struct(col("cos_sim").as("score"), col("neighbor_id").as("id")), k)
+          .as("top")), col("top"))
+    else windowTopK(pairs, k)
+
+  /** Per-query top-k via `row_number`, same tie-break as [[topKPerQuery]]. */
+  private def windowTopK(pairs: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
+    pairs.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rank"))
+  }
+
+  /** Emit: a per-`query_id` top-k array of `(score, id)` entries as one
+    * `(query_id, neighbor_id, cos_sim, rank)` row per entry, the long
+    * kernel ids cast back to `idType` when given. */
+  private[graft] def emit(rows: DataFrame, top: Column,
+      idType: Option[DataType] = None): DataFrame = {
+    def id(c: Column) = idType.fold(c)(c.cast)
+    rows.select(col("query_id"), posexplode(top).as(Seq("pos", "entry")))
+      .select(idType.fold(col("query_id"))(_ => id(col("query_id")).as("query_id")),
+        id(col("entry.id")).as("neighbor_id"),
+        col("entry.score").as("cos_sim"),
+        (col("pos") + 1).cast("int").as("rank"))
+  }
+
+  /** The typed empty result; `filter(false)` also works on a stream. */
+  private[graft] def emptyResult(df: DataFrame, id: Column): DataFrame =
+    df.filter(lit(false)).select(id.as("query_id"), id.as("neighbor_id"),
+      lit(0.0).as("cos_sim"), lit(1).cast("int").as("rank"))
+
+  private[graft] def requireCodes(nCodes: Int): Unit =
+    require(nCodes >= 2 && nCodes <= 256,
+      s"nCodes must be in [2, 256] (codes are byte-packed): $nCodes")
+
+  /** Whether `idCol` is integral: the fused kernels carry ids as long. */
+  private[graft] def integralId(df: DataFrame, idCol: String): Boolean =
+    df.schema(idCol).dataType match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    }
 
   /** I3h — hard-negative mining for contrastive/retrieval training (the
     * negative-selection step of DPR-style dual-encoder pipelines,
@@ -65,16 +261,12 @@ object Similarity {
   def hardNegatives(
       queries: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, labelCol: String, k: Int): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"),
-        quantize(col(vecCol)).as("qv"), col(labelCol).as("q_label"))
-      .withColumn("qn", sqrt(dotQ(col("qv"), col("qv")).cast("double")))
-    val c = corpus.select(col(idCol).as("neighbor_id"),
-        quantize(col(vecCol)).as("cv"), col(labelCol).as("c_label"))
-      .withColumn("cn", sqrt(dotQ(col("cv"), col("cv")).cast("double")))
-    val pairs = broadcast(q).join(c, col("q_label") =!= col("c_label"))
-      .withColumn("cos_sim", safeCosine(col("qv"), col("cv"), col("qn"), col("cn")))
-      .filter(col("cos_sim").isNotNull)
-    topKPerQuery(pairs, k)
+    val q = features(queries, Queries, col(idCol), quantize(col(vecCol)),
+      col(labelCol).as("q_label"))
+    val c = features(corpus, Corpus, col(idCol), quantize(col(vecCol)),
+      col(labelCol).as("c_label"))
+    topKPerQuery(scored(broadcast(q).join(c, col("q_label") =!= col("c_label")),
+      exactCosine), k)
       .withColumnRenamed("neighbor_id", "neg_id")
   }
 
@@ -94,56 +286,37 @@ object Similarity {
   def batchTopK(
       queries: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, k: Int = 5): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"),
-        quantize(col(vecCol)).as("qv"))
-      .withColumn("qn", sqrt(dotQ(col("qv"), col("qv")).cast("double")))
-    val c = corpus.select(col(idCol).as("neighbor_id"),
-        quantize(col(vecCol)).as("cv"))
-      .withColumn("cn", sqrt(dotQ(col("cv"), col("cv")).cast("double")))
-    val pairs = c.crossJoin(broadcast(q))
-      .withColumn("cos_sim", safeCosine(col("qv"), col("cv"), col("qn"), col("cn")))
-      .filter(col("cos_sim").isNotNull)
-    topKPerQuery(pairs, k)
+    val q = features(queries, Queries, col(idCol), quantize(col(vecCol)))
+    val c = features(corpus, Corpus, col(idCol), quantize(col(vecCol)))
+    topKPerQuery(scored(c.crossJoin(broadcast(q)), exactCosine), k)
   }
 
   /** I3a — brute-force cosine top-k neighbors for each query vector.
-    * The corpus side is broadcast when it fits (queries stream past it);
-    * for corpus >> memory use [[lshTopK]] instead. */
+    * The corpus side is broadcast (queries stream past it), under the
+    * [[MaxBroadcastRowsConf]] budget; for corpus >> memory use
+    * [[lshTopK]] instead. Integral ids run the fused broadcast kernel
+    * ([[bruteForceTopKBroadcast]]); any other id type takes the broadcast
+    * join + window path, which preserves the id type. */
   def bruteForceTopK(
       queries: DataFrame,
       corpus: DataFrame,
       idCol: String,
       vecCol: String,
-      k: Int = 5,
-      broadcastCorpus: Boolean = true): DataFrame = {
-    // the fused broadcast kernel works on long ids; non-integral id columns
-    // (or disabled broadcast) take the join+aggregate path, which preserves
-    // the id type
-    import org.apache.spark.sql.types._
-    def integral(df: DataFrame) = df.schema(idCol).dataType match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    }
-    if (broadcastCorpus && integral(queries) && integral(corpus))
+      k: Int = 5): DataFrame = {
+    if (integralId(queries, idCol) && integralId(corpus, idCol))
       return bruteForceTopKBroadcast(queries, corpus, idCol, vecCol, k)
-    if (broadcastCorpus) requireBroadcastable(corpus, idCol)
-    // norms computed ONCE per vector before the join (cosineQ inline would
-    // recompute both self-dots for every one of the |Q|×|C| pairs)
-    val q = queries.select(col(idCol).as("query_id"), quantize(col(vecCol)).as("qv"))
-      .withColumn("qn", sqrt(dotQ(col("qv"), col("qv")).cast("double")))
-    val c = corpus.select(col(idCol).as("neighbor_id"), quantize(col(vecCol)).as("cv"))
-      .withColumn("cn", sqrt(dotQ(col("cv"), col("cv")).cast("double")))
-    val pairs = q.join(if (broadcastCorpus) broadcast(c) else c,
-        col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos_sim", safeCosine(col("qv"), col("cv"), col("qn"), col("cn")))
-      .filter(col("cos_sim").isNotNull)
-    topKPerQuery(pairs, k)
+    requireBroadcastable(corpus, idCol)
+    val q = features(queries, Queries, col(idCol), quantize(col(vecCol)))
+    val c = features(corpus, Corpus, col(idCol), quantize(col(vecCol)))
+    topKPerQuery(scored(q.join(broadcast(c), col("query_id") =!= col("neighbor_id")),
+      exactCosine), k)
   }
 
-  /** One broadcast per DISTINCT corpus (keyed by the canonicalized logical
-    * plan + columns): repeated bench/verify/explain calls on the same
-    * corpus — the way every long-running driver actually calls this — reuse
-    * one corpus-sized allocation instead of leaking one per call.
+  /** A bounded cache of broadcast indexes, one per DISTINCT corpus (keyed
+    * by the canonicalized logical plan + columns + build parameters):
+    * repeated bench/verify/explain calls on the same corpus — the way
+    * every long-running driver actually calls this — reuse one
+    * corpus-sized allocation instead of leaking one per call.
     *
     * Contract and bounds:
     *  - assumes corpus files are IMMUTABLE while cached (plan equality is
@@ -153,8 +326,38 @@ object Similarity {
     *  - bounded at [[MaxCachedCorpora]] entries, oldest evicted first —
     *    eviction only DROPS the strong reference (no destroy), so in-flight
     *    plans keep working and Spark's ContextCleaner reclaims the
-    *    broadcast once their DataFrames are garbage. */
+    *    broadcast once their DataFrames are garbage;
+    *  - first-writer-wins: a concurrent builder's losing index is released
+    *    before anything can plan on it. */
+  private final class IndexCache[K, V <: AnyRef](release: V => Unit) {
+    private val entries = new java.util.LinkedHashMap[K, V](16, 0.75f, false) {
+      override def removeEldestEntry(e: java.util.Map.Entry[K, V]) =
+        this.size() > MaxCachedCorpora
+    }
+
+    def get(key: K): Option[V] = synchronized(Option(entries.get(key)))
+
+    /** The cached index for `key`, else `build`'s (None is not cached). */
+    def getOrBuild(key: K)(build: => Option[V]): Option[V] =
+      get(key).orElse(build.map { fresh =>
+        val winner = synchronized {
+          val prev = entries.get(key)
+          if (prev == null) { entries.put(key, fresh); fresh } else prev
+        }
+        if (winner ne fresh) release(fresh)
+        winner
+      })
+
+    def size: Int = synchronized(entries.size())
+
+    def clear(): Unit = synchronized {
+      val it = entries.values().iterator()
+      while (it.hasNext) { release(it.next()); it.remove() }
+    }
+  }
+
   private val MaxCachedCorpora = 8
+
   /** Cache key: (applicationId, canonicalized corpus plan, id col, vec col).
     * The applicationId component is load-bearing: broadcasts die with their
     * SparkContext, so a plan-identical corpus queried from a RESTARTED
@@ -162,35 +365,19 @@ object Similarity {
     * longer exist and fail at execution with an opaque fetch error). */
   private type CorpusKey =
     (String, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String, String)
-  private val corpusCache = new java.util.LinkedHashMap[
-    CorpusKey,
-    org.apache.spark.broadcast.Broadcast[graft.functions.TopKCorpus]](16, 0.75f, false) {
-    override def removeEldestEntry(e: java.util.Map.Entry[
-      CorpusKey,
-      org.apache.spark.broadcast.Broadcast[graft.functions.TopKCorpus]]) =
-      size() > MaxCachedCorpora
-  }
 
   private[graft] def corpusKey(corpus: DataFrame, idCol: String, vecCol: String): CorpusKey =
     (corpus.sparkSession.sparkContext.applicationId,
       corpus.queryExecution.analyzed.canonicalized, idCol, vecCol)
 
-  /** PQ code-table cache, same lifecycle contract as [[corpusCache]]:
-    * keyed by the corpus plan PLUS every parameter that shapes the
-    * codebooks/codes, so a repeated bench/verify call reuses one broadcast
-    * instead of leaking one per call. */
-  private type PqKey = (CorpusKey, Int, Int, Int, Int)
-  private val pqCache = new java.util.LinkedHashMap[
-    PqKey,
-    (graft.functions.PqCodebooks,
-      org.apache.spark.broadcast.Broadcast[graft.functions.PqCodeTable])](
-    16, 0.75f, false) {
-    override def removeEldestEntry(e: java.util.Map.Entry[
-      PqKey,
-      (graft.functions.PqCodebooks,
-        org.apache.spark.broadcast.Broadcast[graft.functions.PqCodeTable])]) =
-      size() > MaxCachedCorpora
-  }
+  private val corpusCache =
+    new IndexCache[CorpusKey, Broadcast[TopKCorpus]](_.destroy())
+
+  /** PQ code-table key: the corpus, nBlocks, nCodes, and the integer-Lloyd
+    * update count — None for the sample-trained books, a separate table. */
+  private type PqKey = (CorpusKey, Int, Int, Option[Int])
+  private val pqCache =
+    new IndexCache[PqKey, (PqCodebooks, Broadcast[PqCodeTable])](_._2.destroy())
 
   /** Destroy every cached broadcast — brute-force corpora AND PQ code
     * tables (driver lifecycle hook — called by Bench/Verify at teardown;
@@ -198,41 +385,21 @@ object Similarity {
     * built by earlier [[bruteForceTopK]]/[[pqTopK]] calls must not run
     * (or be constructed concurrently) after this. */
   def releaseBroadcasts(): Unit = {
-    corpusCache.synchronized {
-      val it = corpusCache.values().iterator()
-      while (it.hasNext) { it.next().destroy(); it.remove() }
-    }
-    pqCache.synchronized {
-      val it = pqCache.values().iterator()
-      while (it.hasNext) { it.next()._2.destroy(); it.remove() }
-    }
+    corpusCache.clear()
+    pqCache.clear()
   }
 
   /** Visible for tests: number of live cached corpus broadcasts. */
-  private[graft] def cachedBroadcastCount: Int =
-    corpusCache.synchronized(corpusCache.size())
+  private[graft] def cachedBroadcastCount: Int = corpusCache.size
 
   /** Visible for tests: number of live cached PQ code tables. */
-  private[graft] def pqCachedCount: Int =
-    pqCache.synchronized(pqCache.size())
+  private[graft] def pqCachedCount: Int = pqCache.size
 
   /** Visible for tests: the cached broadcast for a corpus, if any. */
   private[graft] def cachedBroadcastFor(
       corpus: DataFrame, idCol: String, vecCol: String) =
-    corpusCache.synchronized(Option(corpusCache.get(
-      corpusKey(corpus, idCol, vecCol))))
+    corpusCache.get(corpusKey(corpus, idCol, vecCol))
 
-  /** Broadcast-corpus brute force: the corpus (quantized vectors + norms) is
-    * collected once and shipped as a Spark broadcast — the same memory
-    * contract as the broadcast hash join it replaces — and each query row
-    * computes its whole top-k in one fused kernel
-    * ([[graft.functions.BroadcastTopKExpr]]). No join, no shuffle, no
-    * aggregate: queries stream past the corpus exactly like the
-    * BroadcastNestedLoopJoin plan, minus |Q|×|C| row materialization.
-    *
-    * Note the corpus collect (and the broadcast, on a cache miss) happens
-    * EAGERLY at DataFrame-construction time, like a prepared statement —
-    * plan-only inspection of the result also pays it. */
   /** Conf key bounding the brute-force broadcast corpus (rows). The
     * broadcast path ships the WHOLE corpus to the driver and every
     * executor; at 64-dim quantized vectors the default 2M-row budget is
@@ -257,28 +424,20 @@ object Similarity {
           "Similarity.ivfTopK for large corpora, or raise the budget.")
   }
 
-  private[graft] def bruteForceTopKBroadcast(
-      queries: DataFrame,
-      corpus: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int): DataFrame = {
-    val cacheKey = corpusKey(corpus, idCol, vecCol)
-    val cached = corpusCache.synchronized(corpusCache.get(cacheKey))
-    if (cached != null)
-      return bruteForceTopKWith(queries, cached, idCol, vecCol, k)
-    requireBroadcastable(corpus, idCol)
-    val rows = corpus.select(col(idCol).cast("long"), quantize(col(vecCol)))
-      .collect()
+  /** Vector packer: `(id: long, quantized vector)` rows → ids, vectors
+    * row-major in one flat array (row `r` at `slot(r)`), norms, dim. */
+  private def packVectors(rows: Array[Row], slot: Int => Int)
+      : (Array[Long], Array[Long], Array[Double], Int) = {
     val n = rows.length
     val dim = if (n == 0) 0 else rows(0).getSeq[Long](1).size
     val ids = new Array[Long](n)
     val flat = new Array[Long](n * dim)
     val norms = new Array[Double](n)
-    var j = 0
-    while (j < n) {
-      ids(j) = rows(j).getLong(0)
-      val v = rows(j).getSeq[Long](1)
+    var r = 0
+    while (r < n) {
+      val j = slot(r)
+      ids(j) = rows(r).getLong(0)
+      val v = rows(r).getSeq[Long](1)
       require(v.size == dim, s"ragged embedding dim: ${v.size} != $dim")
       var dot = 0L
       var i = 0
@@ -289,39 +448,41 @@ object Similarity {
         i += 1
       }
       norms(j) = math.sqrt(dot.toDouble)
-      j += 1
+      r += 1
     }
-    val bc = queries.sparkSession.sparkContext.broadcast(
-      new graft.functions.TopKCorpus(ids, flat, norms, dim))
-    // first-writer-wins: a concurrent builder of the same corpus keeps the
-    // existing entry, and the loser's broadcast is destroyed before
-    // anything can plan on it
-    val winner = corpusCache.synchronized {
-      val prev = corpusCache.get(cacheKey)
-      if (prev == null) { corpusCache.put(cacheKey, bc); bc } else prev
-    }
-    if (winner ne bc) bc.destroy()
-    bruteForceTopKWith(queries, winner, idCol, vecCol, k)
+    (ids, flat, norms, dim)
   }
 
-  private def bruteForceTopKWith(
+  /** Broadcast-corpus brute force: the corpus (quantized vectors + norms) is
+    * collected once and shipped as a Spark broadcast — the same memory
+    * contract as the broadcast hash join it replaces — and each query row
+    * computes its whole top-k in one fused kernel
+    * ([[graft.functions.BroadcastTopKExpr]]). No join, no shuffle, no
+    * aggregate: queries stream past the corpus exactly like the
+    * BroadcastNestedLoopJoin plan, minus |Q|×|C| row materialization.
+    * Null-vector corpus rows are left out of the index.
+    *
+    * Note the corpus collect (and the broadcast, on a cache miss) happens
+    * EAGERLY at DataFrame-construction time, like a prepared statement —
+    * plan-only inspection of the result also pays it. */
+  private[graft] def bruteForceTopKBroadcast(
       queries: DataFrame,
-      bc: org.apache.spark.broadcast.Broadcast[graft.functions.TopKCorpus],
+      corpus: DataFrame,
       idCol: String,
       vecCol: String,
       k: Int): DataFrame = {
-    val topExpr = graft.functions.ArrayOps.broadcastTopK(
-      col("query_id"), col("qv"), bc, k)
-    // ids are long inside the kernel; cast back so the output schema matches
-    // the join path whatever integral type came in
-    val idType = queries.schema(idCol).dataType
-    queries
-      .select(col(idCol).cast("long").as("query_id"), quantize(col(vecCol)).as("qv"))
-      .select(col("query_id"), posexplode(topExpr).as(Seq("pos", "entry")))
-      .select(col("query_id").cast(idType).as("query_id"),
-        col("entry.id").cast(idType).as("neighbor_id"),
-        col("entry.score").as("cos_sim"),
-        (col("pos") + 1).cast("int").as("rank"))
+    val bc = corpusCache.getOrBuild(corpusKey(corpus, idCol, vecCol)) {
+      requireBroadcastable(corpus, idCol)
+      val rows = corpus.filter(col(vecCol).isNotNull)
+        .select(col(idCol).cast("long"), quantize(col(vecCol))).collect()
+      val (ids, flat, norms, dim) = packVectors(rows, identity)
+      Some(queries.sparkSession.sparkContext.broadcast(
+        new TopKCorpus(ids, flat, norms, dim)))
+    }.get
+    emit(queries.select(col(idCol).cast("long").as("query_id"),
+        quantize(col(vecCol)).as("qv")),
+      graft.functions.ArrayOps.broadcastTopK(col("query_id"), col("qv"), bc, k),
+      Some(queries.schema(idCol).dataType))
   }
 
   /** Build-once cell-partitioned broadcast index for the STREAMING IVF
@@ -331,80 +492,49 @@ object Similarity {
     * by re-implementation), rows collected (budget-guarded) and packed
     * cell-sorted with offsets. None on an empty / all-null-vector corpus. */
   private[graft] def ivfBroadcastIndex(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      nList: Int, lloydIters: Int, maxTrainSample: Int)
-      : Option[org.apache.spark.broadcast.Broadcast[graft.functions.IvfCorpus]] = {
-    import graft.functions.ArrayOps.nearestCells
+      corpus: DataFrame, idCol: String, vecCol: String, nList: Int)
+      : Option[Broadcast[graft.functions.IvfCorpus]] = {
     val c0 = corpus.filter(col(vecCol).isNotNull)
     requireBroadcastable(c0, idCol)
     if (c0.limit(1).isEmpty) return None
     val centroids = trainCosineCentroids(
-      boundedSample(c0.select(col(idCol).cast("long").as("id"),
-        col(vecCol).as("v")), maxTrainSample), nList, lloydIters)
-    val rows = c0.select(col(idCol).cast("long"),
-        quantize(col(vecCol)),
-        element_at(nearestCells(col(vecCol), centroids, 1), 1))
+      boundedSample(idVecs(corpus, idCol, vecCol)), nList, LloydIters)
+    val rows = c0.select(col(idCol).cast("long"), quantize(col(vecCol)),
+        cosineCells(centroids, vecCol, 1).assign)
       .collect()
-    val n = rows.length
-    val dim = rows(0).getSeq[Long](1).size
-    val nCells = centroids.length
-    val counts = new Array[Int](nCells)
+    val counts = new Array[Int](centroids.length)
     rows.foreach(r => counts(r.getInt(2)) += 1)
-    val cellStart = new Array[Int](nCells + 1)
-    var c = 0
-    while (c < nCells) { cellStart(c + 1) = cellStart(c) + counts(c); c += 1 }
-    val ids = new Array[Long](n)
-    val flat = new Array[Long](n * dim)
-    val norms = new Array[Double](n)
+    val cellStart = counts.scanLeft(0)(_ + _)
     val fill = cellStart.clone()
-    rows.foreach { r =>
-      val cell = r.getInt(2)
-      val j = fill(cell)
-      fill(cell) += 1
-      ids(j) = r.getLong(0)
-      val v = r.getSeq[Long](1)
-      require(v.size == dim, s"ragged embedding dim: ${v.size} != $dim")
-      var dot = 0L
-      var i = 0
-      while (i < dim) {
-        val x = v(i)
-        flat(j * dim + i) = x
-        dot += x * x
-        i += 1
-      }
-      norms(j) = math.sqrt(dot.toDouble)
-    }
+    val slots = rows.map { r => val c = r.getInt(2); fill(c) += 1; fill(c) - 1 }
+    val (ids, flat, norms, dim) = packVectors(rows, slots(_))
     Some(corpus.sparkSession.sparkContext.broadcast(
       new graft.functions.IvfCorpus(cellStart, ids, flat, norms, dim, centroids)))
   }
 
-  /** Per-query top-k via the bounded-heap aggregate
-    * ([[graft.functions.TopKByScore]]): map-side partial top-k means only k
-    * rows per query cross the shuffle — the window/row_number formulation
-    * shuffles and sorts every candidate pair. Tie-break (score DESC,
-    * neighbor ASC) matches the oracle's ROW_NUMBER ordering. */
-  private def topKPerQuery(pairs: DataFrame, k: Int): DataFrame =
-    pairs.schema("neighbor_id").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        pairs
-          .groupBy(col("query_id"))
-          .agg(graft.functions.TopKAgg.topKByScore(
-            struct(col("cos_sim").as("score"), col("neighbor_id").as("id")), k)
-            .as("top"))
-          .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "entry")))
-          .select(col("query_id"),
-            col("entry.id").as("neighbor_id"),
-            col("entry.score").as("cos_sim"),
-            (col("pos") + 1).cast("int").as("rank"))
-      case _ =>
-        // the bounded-heap aggregate is long-id only; any other id type goes
-        // through the (slower, shuffle-every-pair) window formulation
-        val w = Window.partitionBy(col("query_id"))
-          .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-        pairs.withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= k)
-          .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rank"))
-    }
+  /** SQ8 per-component map `f(x, mn, mx)` against the corpus's
+    * per-dimension (mns, mxs) stats row: posexplode + groupBy(pos), whose
+    * map-side partial min/max reduces the shuffle to #partitions·dim rows,
+    * regrouped into two dim-length arrays and crossed onto the rows. */
+  private def sq8Map(df: DataFrame, vecCol: String)(
+      f: (Column, Column, Column) => Column): (DataFrame, Column) = {
+    val in = df.filter(col(vecCol).isNotNull)
+    val stats = in.select(posexplode(col(vecCol)).as(Seq("pos", "x")))
+      .select(col("pos"), col("x").cast("double").as("x"))
+      .groupBy(col("pos"))
+      .agg(min(col("x")).as("mn"), max(col("x")).as("mx"))
+      .agg(sort_array(collect_list(struct(col("pos"), col("mn")))).as("smn"),
+        sort_array(collect_list(struct(col("pos"), col("mx")))).as("smx"))
+      .select(transform(col("smn"), s => s.getField("mn")).as("mns"),
+        transform(col("smx"), s => s.getField("mx")).as("mxs"))
+    (in.crossJoin(broadcast(stats)),
+      transform(col(vecCol), (x, i) => f(x.cast("double"),
+        element_at(col("mns"), i + 1), element_at(col("mxs"), i + 1))))
+  }
+
+  /** The int8 code of component `x` in [mn, mx] (before the mx == mn case). */
+  private def sq8Code(x: Column, mn: Column, mx: Column): Column =
+    floor((x - mn) / (mx - mn) * 255 + lit(0.5))
 
   /** I3j — scalar (int8) quantization: per-dimension min/max over the
     * corpus, each component linearly mapped to an integer code in
@@ -421,31 +551,10 @@ object Similarity {
     * `element_at` into a broadcast-local array attribute — O(1), not a
     * re-evaluated subtree), so corpus rows never shuffle to get coded.
     * A constant dimension (mx == mn) codes to 0 everywhere. */
-  /** The 1-row (mns, mxs) per-dimension stats frame for SQ8: posexplode +
-    * groupBy(pos) whose map-side partial min/max reduces the shuffle to
-    * #partitions·dim rows, regrouped into two dim-length arrays. */
-  private def sq8Stats(in: DataFrame, vecCol: String): DataFrame =
-    in.select(posexplode(col(vecCol)).as(Seq("pos", "x")))
-      .select(col("pos"), col("x").cast("double").as("x"))
-      .groupBy(col("pos"))
-      .agg(min(col("x")).as("mn"), max(col("x")).as("mx"))
-      .agg(sort_array(collect_list(struct(col("pos"), col("mn")))).as("smn"),
-        sort_array(collect_list(struct(col("pos"), col("mx")))).as("smx"))
-      .select(transform(col("smn"), s => s.getField("mn")).as("mns"),
-        transform(col("smx"), s => s.getField("mx")).as("mxs"))
-
   def sq8Codes(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
-    val in = df.filter(col(vecCol).isNotNull)
-    in.crossJoin(broadcast(sq8Stats(in, vecCol)))
-      .select(col(idCol).as("vid"),
-        transform(col(vecCol), (x, i) => {
-          val mn = element_at(col("mns"), i + 1)
-          val mx = element_at(col("mxs"), i + 1)
-          when(mx > mn,
-            floor((x.cast("double") - mn) / (mx - mn) * 255 + lit(0.5))
-              .cast("long"))
-            .otherwise(lit(0L))
-        }).as("codes"))
+    val (in, codes) = sq8Map(df, vecCol)((x, mn, mx) =>
+      when(mx > mn, sq8Code(x, mn, mx).cast("long")).otherwise(lit(0L)))
+    in.select(col(idCol).as("vid"), codes.as("codes"))
   }
 
   /** I3j — exhaustive top-k under SQ8: rank by cosine of the
@@ -459,34 +568,20 @@ object Similarity {
     * cells, LSH buckets) compose orthogonally exactly as over PQ codes. */
   def sq8TopK(df: DataFrame, idCol: String, vecCol: String,
       nQueries: Int, k: Int): DataFrame = {
-    val in = df.filter(col(vecCol).isNotNull)
-    val recon = in.crossJoin(broadcast(sq8Stats(in, vecCol)))
-      .select(col(idCol).as("vid"),
-        transform(col(vecCol), (x, i) => {
-          val mn = element_at(col("mns"), i + 1)
-          val mx = element_at(col("mxs"), i + 1)
-          when(mx > mn,
-            floor((mn + floor((x.cast("double") - mn) / (mx - mn) * 255
-              + lit(0.5)) * (mx - mn) / 255) * 1000000d).cast("long"))
-            .otherwise(floor(mn * 1000000d).cast("long"))
-        }).as("r"))
-      .withColumn("nrm", sqrt(
-        graft.functions.ArrayOps.longArrayDot(col("r"), col("r"))
-          .cast("double")))
-      // pinned: the query slice and the scan side both read the
-      // reconstructed vectors, and unpinned each re-ran the per-dimension
-      // min/max stats aggregate AND the dequantize kernel (round-14 plan
-      // audit: the stats explode+aggregate subtree appeared twice)
-      .localCheckpoint()
-    val q = recon.filter(col("vid") < nQueries)
-      .select(col("vid").as("query_id"), col("r").as("qr"),
-        col("nrm").as("qn"))
-    val pairs = recon.crossJoin(broadcast(q))
-      .filter(col("vid") =!= col("query_id"))
-      .select(col("query_id"), col("vid").as("neighbor_id"),
-        safeCosine(col("qr"), col("r"), col("qn"), col("nrm")).as("cos_sim"))
-      .filter(col("cos_sim").isNotNull)
-    topKPerQuery(pairs, k)
+    val (in, recon) = sq8Map(df, vecCol)((x, mn, mx) =>
+      when(mx > mn,
+        floor((mn + sq8Code(x, mn, mx) * (mx - mn) / 255) * 1000000d).cast("long"))
+        .otherwise(floor(mn * 1000000d).cast("long")))
+    // pinned: the query slice and the scan side both read the
+    // reconstructed vectors, and unpinned each re-ran the per-dimension
+    // min/max stats aggregate AND the dequantize kernel (round-14 plan
+    // audit: the stats explode+aggregate subtree appeared twice)
+    val c = features(in, Corpus, col(idCol), recon).localCheckpoint()
+    val q = c.filter(col("neighbor_id") < nQueries)
+      .select(col("neighbor_id").as("query_id"), col("cv").as("qv"),
+        col("cn").as("qn"))
+    topKPerQuery(scored(c.crossJoin(broadcast(q))
+      .filter(col("neighbor_id") =!= col("query_id")), exactCosine), k)
   }
 
   /** I3e — Product-Quantization ANN (Jégou et al., TPAMI 2011): vectors are
@@ -505,56 +600,41 @@ object Similarity {
     * orthogonal: compose with [[ivfTopK]]'s cell partitioning (IVF-PQ) or
     * [[lshTopK]]'s buckets to avoid the exhaustive scan this standalone
     * form runs (kept exhaustive here so recall is bounded ONLY by
-    * quantization error — gated by `i3_pq_recall_gate`). */
+    * quantization error — gated by `i3_pq_recall_gate`).
+    *
+    * One fused ADC kernel per query row: LUT built once, every code row
+    * scored in O(nBlocks) lookups into a bounded heap — no join, no
+    * shuffle, no |Q|×|C| materialization (the join formulation dragged
+    * the 32 KB LUT through every pair; profiled 10× slower). */
   def pqTopK(
       df: DataFrame,
       idCol: String,
       vecCol: String,
       k: Int = 5,
       nBlocks: Int = 16,
-      nCodes: Int = 256,
-      lloydIters: Int = 3,
-      maxTrainSample: Int = 65536): DataFrame = {
-    import graft.functions.PqOps
-    require(nCodes >= 2 && nCodes <= 256,
-      s"nCodes must be in [2, 256] (codes are byte-packed): $nCodes")
-    // null vectors are droppable everywhere (sample, encode, queries) —
-    // without the filter a null in the training sample NPEs the driver
-    val feats = df.filter(col(vecCol).isNotNull)
-      .select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
-    val key = (corpusKey(df, idCol, vecCol),
-      nBlocks, nCodes, lloydIters, maxTrainSample)
-    val cached = pqCache.synchronized(pqCache.get(key))
-    val (books, table) = if (cached != null) cached else {
+      nCodes: Int = 256): DataFrame =
+    pqScan(df, idCol, vecCol, k, nBlocks, nCodes, None, identity)(
+      built(_, nBlocks, nCodes))
+
+  /** The broadcast code-table scan of the PQ tiers: the table cached for
+    * (corpus, nBlocks, nCodes, `updates`), else `build`'s from
+    * [[idVecs]]' frame; each query row scores `vec` of its raw vector. */
+  private def pqScan(df: DataFrame, idCol: String, vecCol: String, k: Int,
+      nBlocks: Int, nCodes: Int, updates: Option[Int], vec: Column => Column)(
+      build: DataFrame => Option[(PqCodebooks, Broadcast[PqCodeTable])]): DataFrame = {
+    requireCodes(nCodes)
+    val feats = idVecs(df, idCol, vecCol)
+    pqCache.getOrBuild((corpusKey(df, idCol, vecCol), nBlocks, nCodes, updates)) {
       // fail-fast BEFORE the sample scan and Lloyd training — an
       // over-budget corpus must not pay minutes of work first
       requireBroadcastable(df, idCol)
-      built(feats, nBlocks, nCodes, lloydIters, maxTrainSample) match {
-        case None =>
-          return feats.limit(0).select(col("id").as("query_id"),
-            col("id").as("neighbor_id"), lit(0.0).as("cos_sim"),
-            lit(1).cast("int").as("rank"))
-        case Some(fresh) =>
-          // first-writer-wins, like the brute-force corpus cache
-          val winner = pqCache.synchronized {
-            val prev = pqCache.get(key)
-            if (prev == null) { pqCache.put(key, fresh); fresh } else prev
-          }
-          if (winner ne fresh) fresh._2.destroy()
-          winner
-      }
+      build(feats)
+    } match {
+      case None => emptyResult(feats, col("id"))
+      case Some((books, table)) =>
+        emit(feats.select(col("id").as("query_id"), vec(col("v")).as("v")),
+          PqOps.pqTopK(col("query_id"), col("v"), table, books, k))
     }
-    // one fused ADC kernel per query row: LUT built once, every code row
-    // scored in O(nBlocks) lookups into a bounded heap — no join, no
-    // shuffle, no |Q|×|C| materialization (the join formulation dragged
-    // the 32 KB LUT through every pair; profiled 10× slower)
-    val topExpr = PqOps.pqTopK(col("query_id"), col("v"), table, books, k)
-    feats.select(col("id").as("query_id"), col("v"))
-      .select(col("query_id"), posexplode(topExpr).as(Seq("pos", "entry")))
-      .select(col("query_id"),
-        col("entry.id").as("neighbor_id"),
-        col("entry.score").as("cos_sim"),
-        (col("pos") + 1).cast("int").as("rank"))
   }
 
   /** [[pqTopK]] with INTEGER-Lloyd per-block codebooks — the derandomized,
@@ -578,70 +658,22 @@ object Similarity {
       k: Int = 5,
       nBlocks: Int = 16,
       nCodes: Int = 256,
-      updates: Int = 1): DataFrame = {
-    import graft.functions.{PqCodebooks, PqCodeTable, PqOps}
-    require(nCodes >= 2 && nCodes <= 256,
-      s"nCodes must be in [2, 256] (codes are byte-packed): $nCodes")
-    val df0 = df.filter(col(vecCol).isNotNull)
-    val feats = df0.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
-    // exact-integer-valued double view on the unshifted 1e-6 grid
-    // (floor() yields BIGINT; the kernels take float/double arrays, and
-    // the cast back is exact — |values| ≤ 2^21 ≪ 2^53)
-    val quantD = transform(col("v"),
-      x => floor(x.cast("double") * 1000000d).cast("double"))
-    val key = (corpusKey(df, idCol, vecCol), nBlocks, nCodes, updates, -1)
-    val cached = pqCache.synchronized(pqCache.get(key))
-    val (books, table) = if (cached != null) cached else {
-      requireBroadcastable(df, idCol)
-      if (feats.limit(1).isEmpty) {
-        return feats.limit(0).select(col("id").as("query_id"),
-          col("id").as("neighbor_id"), lit(0.0).as("cos_sim"),
-          lit(1).cast("int").as("rank"))
-      }
-      // shifted-grid integer codebooks → unshift (exact: the +1e6 shift is
-      // uniform, so floor-mean commutes with it) → exact-int doubles
-      val (shifted, bs, dim) =
-        KMeans.blockCodebooks(df0, idCol, vecCol, nCodes, updates, nBlocks)
-      val books = new PqCodebooks(
-        shifted.map(_.map(_.map(v => (v - KMeans.Scale).toDouble))), bs, dim)
-      val mEff = books.nBlocks
-      // distributed encode on the quantized grid; zero RAW-norm rows are
-      // excluded before the table is built (same contract as built())
-      val rawNorm2 = aggregate(
-        transform(col("v"), x => x.cast("double") * x.cast("double")),
-        lit(0.0), (acc, x) => acc + x)
-      val codeRows = feats
-        .repartition(Par.of(feats))
-        .filter(rawNorm2 > 0d)
-        .select(col("id"), PqOps.pqEncode(quantD, books).as("codes"))
-        .collect()
-      val n = codeRows.length
-      val ids = new Array[Long](n)
-      val flat = new Array[Byte](n * mEff)
-      var j = 0
-      while (j < n) {
-        ids(j) = codeRows(j).getLong(0)
-        val cs = codeRows(j).getSeq[Int](1)
-        var b = 0
-        while (b < mEff) { flat(j * mEff + b) = cs(b).toByte; b += 1 }
-        j += 1
-      }
-      val fresh = (books, feats.sparkSession.sparkContext.broadcast(
-        new PqCodeTable(ids, flat, mEff)))
-      val winner = pqCache.synchronized {
-        val prev = pqCache.get(key)
-        if (prev == null) { pqCache.put(key, fresh); fresh } else prev
-      }
-      if (winner ne fresh) fresh._2.destroy()
-      winner
+      updates: Int = 1): DataFrame =
+    pqScan(df, idCol, vecCol, k, nBlocks, nCodes, Some(updates), quantD) { feats =>
+      if (feats.limit(1).isEmpty) None
+      else Some(codeTable(feats, lloydCodebooks(df.filter(col(vecCol).isNotNull),
+        idCol, vecCol, nBlocks, nCodes, updates), quantD(col("v"))))
     }
-    val topExpr = PqOps.pqTopK(col("query_id"), col("v"), table, books, k)
-    feats.select(col("id").as("query_id"), quantD.as("v"))
-      .select(col("query_id"), posexplode(topExpr).as(Seq("pos", "entry")))
-      .select(col("query_id"),
-        col("entry.id").as("neighbor_id"),
-        col("entry.score").as("cos_sim"),
-        (col("pos") + 1).cast("int").as("rank"))
+
+  /** Integer-Lloyd per-block codebooks ([[KMeans.blockCodebooks]]) on the
+    * unshifted grid, as exact-integer doubles (the +1e6 shift is uniform,
+    * so floor-mean commutes with it). `df0` holds the rows with a vector. */
+  private def lloydCodebooks(df0: DataFrame, idCol: String, vecCol: String,
+      nBlocks: Int, nCodes: Int, updates: Int): PqCodebooks = {
+    val (shifted, bs, dim) =
+      KMeans.blockCodebooks(df0, idCol, vecCol, nCodes, updates, nBlocks)
+    new PqCodebooks(
+      shifted.map(_.map(_.map(v => (v - KMeans.Scale).toDouble))), bs, dim)
   }
 
   /** The IVF × PQ COMPOSITION with both quantizers integer-Lloyd — the
@@ -664,98 +696,48 @@ object Similarity {
       nBlocks: Int = 16,
       nCodes: Int = 256,
       updates: Int = 1): DataFrame = {
-    import graft.functions.PqOps
-    require(nCodes >= 2 && nCodes <= 256,
-      s"nCodes must be in [2, 256] (codes are byte-packed): $nCodes")
+    requireCodes(nCodes)
     val df0 = df.filter(col(vecCol).isNotNull)
-    val quantD = transform(col(vecCol),
-      x => floor(x.cast("double") * 1000000d).cast("double"))
-    if (df0.limit(1).isEmpty) {
-      return df0.limit(0).select(col(idCol).cast("long").as("query_id"),
-        col(idCol).cast("long").as("neighbor_id"),
-        lit(0.0).as("cos_sim"), lit(1).cast("int").as("rank"))
-    }
-    val cents = KMeans.centroids(df0, idCol, vecCol, nList, updates)
-    val (shifted, bs, dim) =
-      KMeans.blockCodebooks(df0, idCol, vecCol, nCodes, updates, nBlocks)
-    val books = new graft.functions.PqCodebooks(
-      shifted.map(_.map(_.map(v => (v - KMeans.Scale).toDouble))), bs, dim)
-    val rawNorm2 = aggregate(
-      transform(col(vecCol), x => x.cast("double") * x.cast("double")),
-      lit(0.0), (acc, x) => acc + x)
-    // corpus: coarse cell + PQ codes, raw vectors dropped before the join
-    val corpusCodes = df0.filter(rawNorm2 > 0d)
-      .select(col(idCol).cast("long").as("neighbor_id"),
-        graft.functions.KMeansExprs
-          .assign(KMeans.quantize(col(vecCol)), cents)("cluster").as("cell"),
-        PqOps.pqEncode(quantD, books).as("codes"))
-      // barrier: cell + codes computed once. Keyed by ID, not cell
-      // (round-15): the probe side broadcasts, so the join never needed
-      // cell co-partitioning, and hashing nList=16 cell values into the
-      // partition space left ~40% of cores idle (plus per-cell skew) for
-      // the quadratic ADC stage downstream — the §2.5 low-cardinality-key
-      // trap. The id key spreads the scoring stage perfectly evenly at
-      // any scale; a bounded (cell, salt-4) middle ground measured 1.8×
-      // SLOWER here at the 10× shard (cell-slice skew tails the
-      // interpreted ADC stage), and the id spread's cost — partial top-k
-      // heaps fan out to every partition a query's candidates touch — is
-      // an O(P·|Q|) term against the O(|Q|·n/nProbe) scoring win.
-      .repartition(Par.of(df), col("neighbor_id"))
-    val queryProbes = df0.select(col(idCol).cast("long").as("query_id"),
-      quantD.as("qv"),
-      explode(graft.functions.KMeansExprs
-        .nearestCells(KMeans.quantize(col(vecCol)), cents, nProbe)).as("cell"))
-    val pairs = corpusCodes.join(queryProbes, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos_sim", PqOps.pqAdc(col("qv"), col("codes"), books))
-      .filter(col("cos_sim").isNotNull)
-      .select(col("query_id"), col("neighbor_id"), col("cos_sim"))
-    topKPerQuery(pairs, k)
+    if (df0.limit(1).isEmpty) return emptyResult(df0, col(idCol).cast("long"))
+    val cells = lloydCells(
+      KMeans.centroids(df0, idCol, vecCol, nList, updates), vecCol, nProbe)
+    val books = lloydCodebooks(df0, idCol, vecCol, nBlocks, nCodes, updates)
+    val (c, q) = pqSides(df, df, idCol, vecCol, cells, books, quantD(col(vecCol)))
+    topKPerQuery(scored(cellPairs(df, c, q), adc(books)), k)
   }
 
   /** Train codebooks + build the broadcast code table; None on an empty
-    * (or empty-vector) corpus. */
-  private[graft] def built(
-      feats: DataFrame, nBlocks: Int, nCodes: Int,
-      lloydIters: Int, maxTrainSample: Int)
-      : Option[(graft.functions.PqCodebooks,
-        org.apache.spark.broadcast.Broadcast[graft.functions.PqCodeTable])] = {
-    import graft.functions.{PqCodebooks, PqCodeTable, PqOps}
-    val sample = boundedSample(feats, maxTrainSample)
-    val books = trainCodebooks(sample, nBlocks, nCodes, lloydIters) match {
-      case None => return None
-      case Some(b) => b
-    }
-    val mEff = books.nBlocks
-    // encode DISTRIBUTED (width-pinned barrier — compact inputs otherwise
-    // scan as one partition), then collect only the byte codes; the
-    // corpus's raw vectors never reach the driver. Zero-norm vectors are
-    // excluded HERE on the raw norm: they reconstruct to nonzero
-    // centroids, so no later check could exclude them (brute-force parity:
-    // the zero vector is never anyone's neighbor). Codes are 16× smaller
-    // than the raw corpus — raise the budget accordingly when composing.
-    val rawNorm2 = aggregate(
-      transform(col("v"), x => x.cast("double") * x.cast("double")),
-      lit(0.0), (acc, x) => acc + x)
+    * (or empty-vector) corpus. `feats` is [[idVecs]]' frame. */
+  private[graft] def built(feats: DataFrame, nBlocks: Int, nCodes: Int)
+      : Option[(PqCodebooks, Broadcast[PqCodeTable])] =
+    trainCodebooks(boundedSample(feats), nBlocks, nCodes, LloydIters)
+      .map(codeTable(feats, _, col("v")))
+
+  /** Code-table packer: encode `feats` (`(id, v)`) DISTRIBUTED from `vec`
+    * (width-pinned barrier — compact inputs otherwise scan as one
+    * partition), then collect only the byte codes into one
+    * nBlocks-strided broadcast table; the corpus's raw vectors never
+    * reach the driver. Zero-norm vectors are excluded HERE on the raw
+    * norm ([[nonZero]]). Codes are 16× smaller than the raw corpus —
+    * raise the broadcast budget accordingly when composing. */
+  private def codeTable(feats: DataFrame, books: PqCodebooks, vec: Column)
+      : (PqCodebooks, Broadcast[PqCodeTable]) = {
     val codeRows = feats
       .repartition(Par.of(feats))
-      .filter(rawNorm2 > 0d)
-      .select(col("id"), PqOps.pqEncode(col("v"), books).as("codes"))
+      .filter(nonZero(col("v")))
+      .select(col("id"), PqOps.pqEncode(vec, books).as("codes"))
       .collect()
-    val n = codeRows.length
-    val ids = new Array[Long](n)
-    val flat = new Array[Byte](n * mEff)
+    val mEff = books.nBlocks
+    val flat = new Array[Byte](codeRows.length * mEff)
     var j = 0
-    while (j < n) {
-      ids(j) = codeRows(j).getLong(0)
+    while (j < codeRows.length) {
       val cs = codeRows(j).getSeq[Int](1)
       var b = 0
       while (b < mEff) { flat(j * mEff + b) = cs(b).toByte; b += 1 }
       j += 1
     }
-    val bc = feats.sparkSession.sparkContext.broadcast(
-      new PqCodeTable(ids, flat, mEff))
-    Some((books, bc))
+    (books, feats.sparkSession.sparkContext.broadcast(
+      new PqCodeTable(codeRows.map(_.getLong(0)), flat, mEff)))
   }
 
   /** Train the per-block PQ codebooks on a bounded sample; None on an
@@ -763,7 +745,7 @@ object Similarity {
     * table build and [[ivfPqServe]]'s distributed encode. */
   private[graft] def trainCodebooks(
       sample: Array[Array[Double]], nBlocks: Int, nCodes: Int,
-      lloydIters: Int): Option[graft.functions.PqCodebooks] = {
+      iters: Int): Option[PqCodebooks] = {
     if (sample.isEmpty || sample(0).isEmpty) return None
     val dim = sample(0).length
     val bs = (dim + nBlocks - 1) / nBlocks
@@ -772,36 +754,47 @@ object Similarity {
       val from = b * bs
       val len = math.min(bs, dim - from)
       lloydEuclid(sample.map(x =>
-        java.util.Arrays.copyOfRange(x, from, from + len)), nCodes, lloydIters)
+        java.util.Arrays.copyOfRange(x, from, from + len)), nCodes, iters)
     }
-    Some(new graft.functions.PqCodebooks(blocks, bs, dim))
+    Some(new PqCodebooks(blocks, bs, dim))
   }
 
-  /** Per-block Euclidean Lloyd for the PQ codebooks: deterministic min-id
-    * init (first k sample subvectors), empty clusters keep their previous
-    * centroid — same conventions as [[ivfTopK]]'s coarse quantizer. */
+  /** Per-block Euclidean [[lloyd]] for the PQ codebooks, ties to the lower index. */
   private def lloydEuclid(
-      xs: Array[Array[Double]], k: Int, iters: Int): Array[Array[Double]] = {
-    if (xs.isEmpty) return Array.empty
+      xs: Array[Array[Double]], k: Int, iters: Int): Array[Array[Double]] =
+    lloyd(xs, k, iters) { cents => x =>
+      var best = 0
+      var bestD = Double.MaxValue
+      var c = 0
+      while (c < cents.length) {
+        var d = 0.0
+        var i = 0
+        while (i < x.length) { val t = x(i) - cents(c)(i); d += t * t; i += 1 }
+        if (d < bestD) { bestD = d; best = c }
+        c += 1
+      }
+      best
+    }
+
+  /** Driver-side Lloyd, shared by both sample-fit quantizers:
+    * deterministic min-id init (the first `k` sample vectors), each
+    * iteration assigns every vector by `nearest(centroids)` and moves each
+    * centroid to its members' mean; empty clusters keep their previous
+    * centroid. A sample smaller than `k` simply yields fewer centroids. */
+  private def lloyd(xs: Array[Array[Double]], k: Int, iters: Int)(
+      nearest: Array[Array[Double]] => Array[Double] => Int)
+      : Array[Array[Double]] = {
     var cents = xs.take(k).map(_.clone())
-    val len = xs(0).length
+    val len = if (xs.isEmpty) 0 else xs(0).length
     (0 until iters).foreach { _ =>
+      val pick = nearest(cents)
       val sums = Array.fill(cents.length)(new Array[Double](len))
       val counts = new Array[Long](cents.length)
       xs.foreach { x =>
-        var best = 0
-        var bestD = Double.MaxValue
-        var c = 0
-        while (c < cents.length) {
-          var d = 0.0
-          var i = 0
-          while (i < len) { val t = x(i) - cents(c)(i); d += t * t; i += 1 }
-          if (d < bestD) { bestD = d; best = c }
-          c += 1
-        }
+        val best = pick(x)
         counts(best) += 1
         var i = 0
-        while (i < len) { sums(best)(i) += x(i); i += 1 }
+        while (i < math.min(x.length, len)) { sums(best)(i) += x(i); i += 1 }
       }
       cents = cents.zipWithIndex.map { case (old, c) =>
         if (counts(c) == 0) old else sums(c).map(_ / counts(c))
@@ -811,61 +804,47 @@ object Similarity {
   }
 
   /** Deterministic bounded training sample for the sample-fit/full-assign
-    * quantizer trainers: first `maxTrainSample` rows by id — stable across
-    * partitioning, layouts, and scale-ups that append ids. `feats` must be
-    * `(id: long, v: array)`. */
-  private def boundedSample(
-      feats: DataFrame, maxTrainSample: Int): Array[Array[Double]] =
-    feats.orderBy(col("id")).limit(maxTrainSample).collect()
+    * quantizer trainers: first [[MaxTrainSample]] rows by id — stable
+    * across partitioning, layouts, and scale-ups that append ids. `feats`
+    * is [[idVecs]]' frame. */
+  private def boundedSample(feats: DataFrame): Array[Array[Double]] =
+    feats.orderBy(col("id")).limit(MaxTrainSample).collect()
       .map(_.getSeq[Any](1).map(_.asInstanceOf[Number].doubleValue()).toArray)
 
-  /** Driver-side cosine Lloyd for the IVF coarse quantizer: deterministic
-    * min-id init (first `nList` sample vectors), empty cells keep their
-    * previous centroid — shared by [[ivfTopK]] (self-join fixture) and
-    * [[ivfServe]] (query-batch serving) so both probe the SAME cell
-    * geometry for a given corpus. A sample smaller than `nList` simply
-    * yields fewer cells. */
+  /** Driver-side cosine Lloyd for the IVF coarse quantizer: nearest by
+    * cosine, ties to the lower index, a zero side scoring -inf — shared by
+    * [[ivfTopK]] (self-join fixture) and [[ivfServe]] (query-batch
+    * serving) so both probe the SAME cell geometry for a given corpus. */
   private[graft] def trainCosineCentroids(
       sample: Array[Array[Double]], nList: Int,
-      iters: Int): Array[Array[Double]] = {
-    var centroids: Array[Array[Double]] = sample.take(nList).map(_.clone())
-    val m = centroids.length
-    val cNorm = new Array[Double](m)
-    def cosSim(x: Array[Double], c: Array[Double], cn: Double): Double = {
-      var dot = 0.0; var xn = 0.0; var i = 0
-      val n = math.min(x.length, c.length)
-      while (i < n) { dot += x(i) * c(i); xn += x(i) * x(i); i += 1 }
-      if (xn > 0 && cn > 0) dot / (math.sqrt(xn) * cn) else Double.NegativeInfinity
-    }
-    (0 until iters).foreach { _ =>
-      var ci = 0
-      while (ci < m) {
-        cNorm(ci) = math.sqrt(centroids(ci).map(x => x * x).sum); ci += 1
-      }
-      val sums = Array.fill(m)(new Array[Double](
-        if (sample.isEmpty) 0 else sample(0).length))
-      val counts = new Array[Long](m)
-      sample.foreach { x =>
+      iters: Int): Array[Array[Double]] =
+    lloyd(sample, nList, iters) { cents =>
+      val cNorm = cents.map(c => math.sqrt(c.map(x => x * x).sum))
+      x => {
         var best = 0; var bestScore = Double.NegativeInfinity
         var c = 0
-        while (c < m) {
-          val s = cosSim(x, centroids(c), cNorm(c))
+        while (c < cents.length) {
+          var dot = 0.0; var xn = 0.0; var i = 0
+          val n = math.min(x.length, cents(c).length)
+          while (i < n) { dot += x(i) * cents(c)(i); xn += x(i) * x(i); i += 1 }
+          val s = if (xn > 0 && cNorm(c) > 0) dot / (math.sqrt(xn) * cNorm(c))
+            else Double.NegativeInfinity
           if (s > bestScore) { bestScore = s; best = c }
           c += 1
         }
-        counts(best) += 1
-        var i = 0
-        while (i < math.min(x.length, sums(best).length)) {
-          sums(best)(i) += x(i); i += 1
-        }
-      }
-      centroids = centroids.zipWithIndex.map { case (old, c) =>
-        if (counts(c) == 0) old // empty cells keep their previous centroid
-        else sums(c).map(_ / counts(c))
+        best
       }
     }
-    centroids
-  }
+
+  /** The float IVF quantizer of a corpus: Lloyd runs driver-side over a
+    * bounded deterministic sample (the standard sample-fit, full-assign
+    * training shape) — one collect total instead of one assignment job
+    * per iteration; at 64k × 64 dims the sample is ~32 MB. */
+  private def sampleFitCells(corpus: DataFrame, idCol: String, vecCol: String,
+      nList: Int, nProbe: Int): Cells =
+    cosineCells(trainCosineCentroids(
+      boundedSample(idVecs(corpus, idCol, vecCol)), nList, LloydIters),
+      vecCol, nProbe)
 
   /** I3f at scale — IVF-accelerated query-batch serving: the
     * [[batchTopK]] contract (small fixed batch, unbounded corpus) with the
@@ -887,28 +866,10 @@ object Similarity {
   def ivfServe(
       queries: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, k: Int = 5,
-      nList: Int = 16, nProbe: Int = 4,
-      lloydIters: Int = 3, maxTrainSample: Int = 65536): DataFrame = {
-    import graft.functions.ArrayOps.nearestCells
-    val c0 = corpus.filter(col(vecCol).isNotNull)
-    val centroids = trainCosineCentroids(
-      boundedSample(c0.select(col(idCol).cast("long").as("id"),
-        col(vecCol).as("v")), maxTrainSample), nList, lloydIters)
-    val corpusCells = c0.select(col(idCol).cast("long").as("neighbor_id"),
-        quantize(col(vecCol)).as("cv"),
-        element_at(nearestCells(col(vecCol), centroids, 1), 1).as("cell"))
-      .withColumn("cn", sqrt(dotQ(col("cv"), col("cv")).cast("double")))
-    val queryProbes = queries.filter(col(vecCol).isNotNull)
-      .select(col(idCol).cast("long").as("query_id"),
-        quantize(col(vecCol)).as("qv"),
-        explode(nearestCells(col(vecCol), centroids, nProbe)).as("cell"))
-      .withColumn("qn", sqrt(dotQ(col("qv"), col("qv")).cast("double")))
-    // each corpus vector lives in exactly one cell ⇒ no pair dedup needed
-    val pairs = corpusCells.join(broadcast(queryProbes), Seq("cell"))
-      .withColumn("cos_sim", safeCosine(col("qv"), col("cv"), col("qn"), col("cn")))
-      .filter(col("cos_sim").isNotNull)
-      .select(col("query_id"), col("neighbor_id"), col("cos_sim"))
-    topKPerQuery(pairs, k)
+      nList: Int = 16, nProbe: Int = 4): DataFrame = {
+    val (c, q) = exactSides(corpus, queries, idCol, vecCol,
+      sampleFitCells(corpus, idCol, vecCol, nList, nProbe))
+    topKPerQuery(scored(probePairs(c, q), exactCosine), k)
   }
 
   /** I3f, both axes — IVF-PQ batch serving (the billion-scale ANN
@@ -924,45 +885,22 @@ object Similarity {
     * directly on their codes; only bounded-heap winners cross the one
     * shuffle. Recall compounds both quantizers' losses — gated vs exact
     * [[batchTopK]] by `i3_ivfpq_serve_gate`. Zero-norm corpus rows are
-    * excluded at encode time on the RAW norm, as in [[pqTopK]]'s build
-    * (they reconstruct to nonzero centroids, so no later check could
-    * exclude them). */
+    * excluded at encode time on the RAW norm, as in [[pqTopK]]'s build. */
   def ivfPqServe(
       queries: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, k: Int = 5,
       nList: Int = 16, nProbe: Int = 4,
-      nBlocks: Int = 16, nCodes: Int = 256,
-      lloydIters: Int = 3, maxTrainSample: Int = 65536): DataFrame = {
-    import graft.functions.{ArrayOps, PqOps}
-    require(nCodes >= 2 && nCodes <= 256,
-      s"nCodes must be in [2, 256] (codes are byte-packed): $nCodes")
-    val c0 = corpus.filter(col(vecCol).isNotNull)
-    val sample = boundedSample(c0.select(col(idCol).cast("long").as("id"),
-      col(vecCol).as("v")), maxTrainSample)
-    val centroids = trainCosineCentroids(sample, nList, lloydIters)
-    val books = trainCodebooks(sample, nBlocks, nCodes, lloydIters) match {
-      case None => // empty corpus: empty result, serve shape preserved
-        return queries.limit(0).select(
-          col(idCol).cast("long").as("query_id"),
-          col(idCol).cast("long").as("neighbor_id"),
-          lit(0.0).as("cos_sim"), lit(1).cast("int").as("rank"))
-      case Some(b) => b
+      nBlocks: Int = 16, nCodes: Int = 256): DataFrame = {
+    requireCodes(nCodes)
+    val sample = boundedSample(idVecs(corpus, idCol, vecCol))
+    val cells = cosineCells(
+      trainCosineCentroids(sample, nList, LloydIters), vecCol, nProbe)
+    trainCodebooks(sample, nBlocks, nCodes, LloydIters) match {
+      case None => emptyResult(queries, col(idCol).cast("long")) // empty corpus
+      case Some(books) =>
+        val (c, q) = pqSides(corpus, queries, idCol, vecCol, cells, books, col(vecCol))
+        topKPerQuery(scored(probePairs(c, q), adc(books)), k)
     }
-    val rawNorm2 = aggregate(
-      transform(col(vecCol), x => x.cast("double") * x.cast("double")),
-      lit(0.0), (acc, x) => acc + x)
-    val corpusCodes = c0.filter(rawNorm2 > 0d)
-      .select(col(idCol).cast("long").as("neighbor_id"),
-        element_at(ArrayOps.nearestCells(col(vecCol), centroids, 1), 1).as("cell"),
-        PqOps.pqEncode(col(vecCol), books).as("codes"))
-    val queryProbes = queries.filter(col(vecCol).isNotNull)
-      .select(col(idCol).cast("long").as("query_id"), col(vecCol).as("qv"),
-        explode(ArrayOps.nearestCells(col(vecCol), centroids, nProbe)).as("cell"))
-    val pairs = corpusCodes.join(broadcast(queryProbes), Seq("cell"))
-      .withColumn("cos_sim", PqOps.pqAdc(col("qv"), col("codes"), books))
-      .filter(col("cos_sim").isNotNull)
-      .select(col("query_id"), col("neighbor_id"), col("cos_sim"))
-    topKPerQuery(pairs, k)
   }
 
   /** Sign-bucket id for LSH table `table`: `nPlanes` random-hyperplane sign
@@ -1001,38 +939,11 @@ object Similarity {
       nProbe: Int = 4,
       updates: Int = 1): DataFrame = {
     val df0 = df.filter(col(vecCol).isNotNull)
-    // empty/all-null corpus: zero seeds would make KMeansExprs.assign throw;
-    // return the empty typed frame like pqTopKExact / ivfPqTopKExact do
-    if (df0.limit(1).isEmpty) {
-      return df0.limit(0).select(col(idCol).cast("long").as("query_id"),
-        col(idCol).cast("long").as("neighbor_id"),
-        lit(0.0).as("cos_sim"), lit(1).cast("int").as("rank"))
-    }
-    val cents = KMeans.centroids(df0, idCol, vecCol, nList, updates)
-    val corpusCells = df0.select(col(idCol).cast("long").as("neighbor_id"),
-      quantize(col(vecCol)).as("cv"),
-      graft.functions.KMeansExprs
-        .assign(KMeans.quantize(col(vecCol)), cents)("cluster").as("cell"))
-      .withColumn("cn", sqrt(dotQ(col("cv"), col("cv")).cast("double")))
-      // barrier: features + cell computed once. Keyed by ID, not cell
-      // (round-15) — see ivfPqTopKExact: 16 cell values cap + skew the
-      // scoring stage's parallelism (§2.5); the probe join broadcasts
-      // either way.
-      .repartition(Par.of(df), col("neighbor_id"))
-    val queryProbes = df0.select(col(idCol).cast("long").as("query_id"),
-      quantize(col(vecCol)).as("qv"),
-      explode(graft.functions.KMeansExprs
-        .nearestCells(KMeans.quantize(col(vecCol)), cents, nProbe)).as("cell"))
-      .withColumn("qn", sqrt(dotQ(col("qv"), col("qv")).cast("double")))
-    val pairs = queryProbes.join(corpusCells, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos_sim", safeCosine(col("qv"), col("cv"), col("qn"), col("cn")))
-      .filter(col("cos_sim").isNotNull)
-      .select(col("query_id"), col("neighbor_id"), col("cos_sim"))
-    // bounded-heap aggregate, not a window: map-side partial top-k means
-    // k rows per query cross the shuffle instead of every candidate pair
-    // (at the 16× shard the window shuffled ~256M skinny pair rows)
-    topKPerQuery(pairs, k)
+    // empty/all-null corpus: zero seeds would make KMeansExprs.assign throw
+    if (df0.limit(1).isEmpty) return emptyResult(df0, col(idCol).cast("long"))
+    val (c, q) = exactSides(df, df, idCol, vecCol,
+      lloydCells(KMeans.centroids(df0, idCol, vecCol, nList, updates), vecCol, nProbe))
+    topKPerQuery(scored(cellPairs(df, c, q), exactCosine), k)
   }
 
   /** I3c — IVF (inverted-file) ANN: a coarse centroid table partitions the
@@ -1049,45 +960,10 @@ object Similarity {
       vecCol: String,
       k: Int = 5,
       nList: Int = 16,
-      nProbe: Int = 4,
-      lloydIters: Int = 3,
-      maxTrainSample: Int = 65536): DataFrame = {
-    import graft.functions.ArrayOps.nearestCells
-    // null vectors are droppable, not fatal: without the filter a null in
-    // the training sample NPEs the driver-side collect (same contract as
-    // pqTopK)
-    val df0 = df.filter(col(vecCol).isNotNull)
-    val feats = df0.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
-    // Sample-fit, full-assign (the standard IVF training shape): Lloyd runs
-    // driver-side over a bounded deterministic sample — one collect total
-    // instead of one assignment job per iteration; at 64k × 64 dims the
-    // sample is ~32 MB. Assignment of the FULL corpus stays distributed.
-    val centroids = trainCosineCentroids(
-      boundedSample(feats, maxTrainSample), nList, lloydIters)
-    val corpusCells = df0.select(col(idCol).cast("long").as("neighbor_id"),
-      quantize(col(vecCol)).as("cv"),
-      element_at(nearestCells(col(vecCol), centroids, 1), 1).as("cell"))
-      .withColumn("cn", sqrt(dotQ(col("cv"), col("cv")).cast("double")))
-      // barrier: features + cell computed once. Keyed by ID, not cell
-      // (round-15) — see ivfPqTopKExact: 16 cell values cap + skew the
-      // scoring stage (§2.5); the probe join broadcasts either way.
-      .repartition(Par.of(df), col("neighbor_id"))
-    val queryProbes = df0.select(col(idCol).cast("long").as("query_id"),
-      quantize(col(vecCol)).as("qv"),
-      explode(nearestCells(col(vecCol), centroids, nProbe)).as("cell"))
-      .withColumn("qn", sqrt(dotQ(col("qv"), col("qv")).cast("double")))
-    val pairs = queryProbes.join(corpusCells, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos_sim", safeCosine(col("qv"), col("cv"), col("qn"), col("cn")))
-      .filter(col("cos_sim").isNotNull)
-      .select(col("query_id"), col("neighbor_id"), col("cos_sim"))
-    // no distinct needed: each corpus vector lives in exactly ONE cell, so a
-    // (query, neighbor) pair can only arise from that single cell
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-    pairs.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rank"))
+      nProbe: Int = 4): DataFrame = {
+    val (c, q) = exactSides(df, df, idCol, vecCol,
+      sampleFitCells(df, idCol, vecCol, nList, nProbe))
+    topKPerQuery(scored(cellPairs(df, c, q), exactCosine), k)
   }
 
   /** I3b — LSH-bucketed ANN: `nTables` independent hyperplane tables; a
@@ -1122,11 +998,9 @@ object Similarity {
       hashFamily: String = "murmur"): DataFrame = {
     require(nPlanes >= 0 && nPlanes <= 64, s"nPlanes must be in [0, 64]: $nPlanes")
     val planes = if (nPlanes > 0) nPlanes else lshAutoPlanes(df.count())
-    val b = df.select(
-      (Seq(col(idCol).as("query_id"), quantize(col(vecCol)).as("qv")) ++
-        (0 until nTables).map(t =>
-          lshBucket(col(vecCol), planes, t, hashFamily).as(s"bucket_$t"))): _*)
-      .withColumn("qn", sqrt(dotQ(col("qv"), col("qv")).cast("double")))
+    val b = features(df, Queries, col(idCol), quantize(col(vecCol)),
+      (0 until nTables).map(t =>
+        lshBucket(col(vecCol), planes, t, hashFamily).as(s"bucket_$t")): _*)
       .repartition(Par.of(df), col("query_id")) // barrier: buckets + norm computed once
     // the bucket self-join and the cross-table dedup move ID PAIRS ONLY:
     // shipping the two quantized vectors through the collision join
@@ -1148,25 +1022,16 @@ object Similarity {
     val qFeats = b.select(col("query_id"), col("qv"), col("qn"))
     val nFeats = b.select(col("query_id").as("neighbor_id"),
       col("qv").as("cv"), col("qn").as("cn"))
-    // candidate sets per query are bucket-sized (tens), so the plain window
-    // top-k wins here; the heap aggregate pays off on the brute-force path
-    // where every query sees the whole corpus (measured both ways at sf0.1)
-    val pairs = candIds
-      .join(qFeats, Seq("query_id"))
-      .join(nFeats, Seq("neighbor_id"))
-      .withColumn("cos_sim", safeCosine(col("qv"), col("cv"), col("qn"), col("cn")))
-      .filter(col("cos_sim").isNotNull)
     // window, not the heap aggregate, on purpose (re-measured session 13
-    // AFTER the id-pair dedup restructure): the heap's extra groupBy
-    // exchange lost at both ends — 0.59 vs 0.44 s at sf0.1 and 235 vs
-    // 213 s at the 16× fixed-plane shard — because the post-join pair
-    // rows are already skinny and the cosine compute dominates. (The IVF
-    // path keeps the heap: its pairs arrive pre-shuffled by cell, where
-    // the map-side partial top-k measured 37 vs 57 s at 16×.)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-    pairs.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rank"))
+    // AFTER the id-pair dedup restructure): candidate sets per query are
+    // bucket-sized (tens), and the heap's extra groupBy exchange lost at
+    // both ends — 0.59 vs 0.44 s at sf0.1 and 235 vs 213 s at the 16×
+    // fixed-plane shard — because the post-join pair rows are already
+    // skinny and the cosine compute dominates. (The IVF path keeps the
+    // heap: its pairs arrive pre-shuffled by cell, where the map-side
+    // partial top-k measured 37 vs 57 s at 16×.)
+    windowTopK(scored(candIds
+      .join(qFeats, Seq("query_id"))
+      .join(nFeats, Seq("neighbor_id")), exactCosine), k)
   }
 }

@@ -831,9 +831,10 @@ object LlmOps {
     * so cells, probe lists, candidates and ranks are pure integer
     * functions of the data — the oracle extends the shared kmeans CTE
     * chain with a top-nProbe probe ranking and the exact quantized
-    * cosine. The float sample-trained [[Similarity.ivfTopK]] remains the
-    * sample-fit production path behind `i3_ivf_serve_gate`. Recall is
-    * still driver-verified by `i3_ivf_recall_gate`. */
+    * cosine. The float sample-trained [[Similarity.ivfTopK]] remains for
+    * sample-fit workflows; `i3_ivf_serve_gate` gates the sample-fit serve
+    * path, [[Similarity.ivfServe]]. Recall is still driver-verified by
+    * `i3_ivf_recall_gate`. */
   def ivfAnn(s: SparkSession, d: String): DataFrame = {
     val e = Tables.embeddings(s, d)
     Similarity.ivfTopKExact(e, "vec_id", "embedding", k = 5,

@@ -39,15 +39,12 @@ import graft.llm.Similarity
   */
 object VectorServe {
 
-  private def requireIntegralId(df: DataFrame, idCol: String, side: String): Unit = {
-    import org.apache.spark.sql.types._
-    df.schema(idCol).dataType match {
-      case ByteType | ShortType | IntegerType | LongType => ()
-      case t => throw new IllegalArgumentException(
+  private def requireIntegralIds(
+      queryStream: DataFrame, corpus: DataFrame, idCol: String): Unit =
+    for ((df, side) <- Seq(queryStream -> "query", corpus -> "corpus"))
+      require(Similarity.integralId(df, idCol),
         s"VectorServe needs an integral $side id column (kernel ids are " +
-          s"long): $idCol is $t")
-    }
-  }
+          s"long): $idCol is ${df.schema(idCol).dataType}")
 
   /** Exact streaming serve: every arriving query row is scored against the
     * full broadcast corpus by the fused heap kernel
@@ -58,8 +55,7 @@ object VectorServe {
   def serveExact(
       queryStream: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, k: Int = 5): DataFrame = {
-    requireIntegralId(queryStream, idCol, "query")
-    requireIntegralId(corpus, idCol, "corpus")
+    requireIntegralIds(queryStream, corpus, idCol)
     Similarity.bruteForceTopKBroadcast(queryStream, corpus, idCol, vecCol, k)
   }
 
@@ -88,10 +84,15 @@ object VectorServe {
       queryStream: DataFrame, corpus: DataFrame,
       predicate: org.apache.spark.sql.Column,
       idCol: String, vecCol: String, k: Int = 5,
-      nBlocks: Int = 16, nCodes: Int = 256,
-      lloydIters: Int = 3, maxTrainSample: Int = 65536): DataFrame =
+      nBlocks: Int = 16, nCodes: Int = 256): DataFrame =
     servePq(queryStream, corpus.filter(predicate), idCol, vecCol, k,
-      nBlocks, nCodes, lloydIters, maxTrainSample)
+      nBlocks, nCodes)
+
+  /** A stream's rows with a vector as `(query_id: long, qv)`, for a kernel. */
+  private def queryRows(queryStream: DataFrame, idCol: String,
+      vecCol: String): DataFrame =
+    queryStream.filter(col(vecCol).isNotNull)
+      .select(col(idCol).cast("long").as("query_id"), col(vecCol).as("qv"))
 
   /** IVF streaming serve — the LATENCY axis online: the static corpus is
     * packed once into a cell-partitioned broadcast
@@ -107,28 +108,15 @@ object VectorServe {
   def serveIvf(
       queryStream: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, k: Int = 5,
-      nList: Int = 16, nProbe: Int = 4,
-      lloydIters: Int = 3, maxTrainSample: Int = 65536): DataFrame = {
-    requireIntegralId(queryStream, idCol, "query")
-    requireIntegralId(corpus, idCol, "corpus")
-    val idType = queryStream.schema(idCol).dataType
-    Similarity.ivfBroadcastIndex(
-      corpus, idCol, vecCol, nList, lloydIters, maxTrainSample) match {
-      case None => // empty corpus: an empty-but-well-typed append stream
-        queryStream.filter(lit(false)).select(
-          col(idCol).as("query_id"), col(idCol).as("neighbor_id"),
-          lit(0.0).as("cos_sim"), lit(1).cast("int").as("rank"))
+      nList: Int = 16, nProbe: Int = 4): DataFrame = {
+    requireIntegralIds(queryStream, corpus, idCol)
+    Similarity.ivfBroadcastIndex(corpus, idCol, vecCol, nList) match {
+      case None => Similarity.emptyResult(queryStream, col(idCol))
       case Some(bc) =>
-        queryStream.filter(col(vecCol).isNotNull)
-          .select(col(idCol).cast("long").as("query_id"), col(vecCol).as("qv"))
-          .select(col("query_id"), posexplode(
-            graft.functions.ArrayOps.ivfBroadcastTopK(
-              col("query_id"), col("qv"), bc, nProbe, k))
-            .as(Seq("pos", "entry")))
-          .select(col("query_id").cast(idType).as("query_id"),
-            col("entry.id").cast(idType).as("neighbor_id"),
-            col("entry.score").as("cos_sim"),
-            (col("pos") + 1).cast("int").as("rank"))
+        Similarity.emit(queryRows(queryStream, idCol, vecCol),
+          graft.functions.ArrayOps.ivfBroadcastTopK(
+            col("query_id"), col("qv"), bc, nProbe, k),
+          Some(queryStream.schema(idCol).dataType))
     }
   }
 
@@ -143,10 +131,9 @@ object VectorServe {
       queryStream: DataFrame, corpus: DataFrame,
       predicate: org.apache.spark.sql.Column,
       idCol: String, vecCol: String, k: Int = 5,
-      nList: Int = 16, nProbe: Int = 4,
-      lloydIters: Int = 3, maxTrainSample: Int = 65536): DataFrame =
+      nList: Int = 16, nProbe: Int = 4): DataFrame =
     serveIvf(queryStream, corpus.filter(predicate), idCol, vecCol, k,
-      nList, nProbe, lloydIters, maxTrainSample)
+      nList, nProbe)
 
   /** PQ streaming serve — the memory axis online: the static corpus is
     * encoded ONCE to an nBlocks-byte-per-vector code table (built
@@ -162,32 +149,15 @@ object VectorServe {
   def servePq(
       queryStream: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, k: Int = 5,
-      nBlocks: Int = 16, nCodes: Int = 256,
-      lloydIters: Int = 3, maxTrainSample: Int = 65536): DataFrame = {
-    requireIntegralId(queryStream, idCol, "query")
-    requireIntegralId(corpus, idCol, "corpus")
-    require(nCodes >= 2 && nCodes <= 256,
-      s"nCodes must be in [2, 256] (codes are byte-packed): $nCodes")
-    val idType = queryStream.schema(idCol).dataType
-    val feats = corpus.filter(col(vecCol).isNotNull)
-      .select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
-    Similarity.built(feats, nBlocks, nCodes, lloydIters, maxTrainSample) match {
-      case None => // empty corpus: an empty-but-well-typed append stream
-        queryStream.filter(lit(false)).select(
-          col(idCol).as("query_id"), col(idCol).as("neighbor_id"),
-          lit(0.0).as("cos_sim"), lit(1).cast("int").as("rank"))
+      nBlocks: Int = 16, nCodes: Int = 256): DataFrame = {
+    requireIntegralIds(queryStream, corpus, idCol)
+    Similarity.requireCodes(nCodes)
+    Similarity.built(Similarity.idVecs(corpus, idCol, vecCol), nBlocks, nCodes) match {
+      case None => Similarity.emptyResult(queryStream, col(idCol))
       case Some((books, table)) =>
-        queryStream.filter(col(vecCol).isNotNull)
-          .select(col(idCol).cast("long").as("query_id"),
-            col(vecCol).as("qv"))
-          .select(col("query_id"), posexplode(
-            graft.functions.PqOps.pqTopK(
-              col("query_id"), col("qv"), table, books, k))
-            .as(Seq("pos", "entry")))
-          .select(col("query_id").cast(idType).as("query_id"),
-            col("entry.id").cast(idType).as("neighbor_id"),
-            col("entry.score").as("cos_sim"),
-            (col("pos") + 1).cast("int").as("rank"))
+        Similarity.emit(queryRows(queryStream, idCol, vecCol),
+          graft.functions.PqOps.pqTopK(col("query_id"), col("qv"), table, books, k),
+          Some(queryStream.schema(idCol).dataType))
     }
   }
 }

@@ -27,8 +27,10 @@ class HarnessSpec extends AnyFunSuite {
   }
 
   test("the bench result line is one JSON object in run order") {
+    val spark = TestSpark.spark
     val line = Bench.resultLine(Seq("a1_x" -> 1.5, "b\"2" -> 0.25),
-      "/data/sf\t0.1", "/data/sf0.001", Map("MemAvailable" -> "42"))
+      "/data/sf\t0.1", "/data/sf0.001", Map("MemAvailable" -> "42"),
+      Bench.resolvedConfig(spark))
     assert(!line.contains('\n'))
     val rec = Json.parse(line).asInstanceOf[Map[String, Any]]
     assert(rec("value") == 1.75)
@@ -37,6 +39,14 @@ class HarnessSpec extends AnyFunSuite {
     assert(rec("sf") == "/data/sf\t0.1")
     assert(rec("box") == Map(
       "mem_available_kb" -> 42L, "cached_kb" -> 0L, "dirty_kb" -> 0L))
+    // the resolved config follows the existing keys, read from the session
+    assert(rec.keys.toSeq == Seq("metric", "value", "unit", "queries", "sf",
+      "runs", "agg", "warmup", "box", "cpus", "master", "shuffle_partitions", "aqe"))
+    assert(rec("cpus") == spark.sparkContext.defaultParallelism.toLong)
+    assert(rec("master") == spark.sparkContext.master)
+    assert(rec("shuffle_partitions") ==
+      spark.conf.get("spark.sql.shuffle.partitions").toLong)
+    assert(rec("aqe") == spark.conf.get("spark.sql.adaptive.enabled").toBoolean)
   }
 
   test("the spec session runs the mains' optimizer configuration") {

@@ -1429,15 +1429,41 @@ class LlmSpec extends AnyFunSuite {
   test("I3 exact-IVF returns the empty typed frame on empty/all-null corpora") {
     // without the guard KMeans.centroids produces zero seeds and
     // KMeansExprs.assign throws 'needs at least one centroid'
-    val vecs = Seq((1L, Array(1.0f, 0.0f)), (2L, Array(0.0f, 1.0f)))
-      .toDF("vec_id", "embedding")
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
+    val vecs = Seq((1L, Array(1.0f, 0.0f), 0), (2L, Array(0.0f, 1.0f), 1))
+      .toDF("vec_id", "embedding", "label")
+    // every public batch tier; the query-batch tiers serve `vecs` against
+    // the degenerate corpus
+    val tiers: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "batchTopK" -> (c => Similarity.batchTopK(vecs, c, "vec_id", "embedding", k = 3)),
+      "bruteForceTopK" -> (c =>
+        Similarity.bruteForceTopK(vecs, c, "vec_id", "embedding", k = 3)),
+      "hardNegatives" -> (c => Similarity.hardNegatives(
+        vecs, c, "vec_id", "embedding", "label", k = 3)),
+      "sq8TopK" -> (c => Similarity.sq8TopK(c, "vec_id", "embedding",
+        nQueries = 2, k = 3)),
+      "pqTopK" -> (c => Similarity.pqTopK(c, "vec_id", "embedding", k = 3)),
+      "pqTopKExact" -> (c => Similarity.pqTopKExact(c, "vec_id", "embedding", k = 3)),
+      "ivfTopK" -> (c => Similarity.ivfTopK(c, "vec_id", "embedding", k = 3)),
+      "ivfTopKExact" -> (c => Similarity.ivfTopKExact(c, "vec_id", "embedding", k = 3)),
+      "ivfPqTopKExact" -> (c =>
+        Similarity.ivfPqTopKExact(c, "vec_id", "embedding", k = 3)),
+      "ivfServe" -> (c => Similarity.ivfServe(vecs, c, "vec_id", "embedding", k = 3)),
+      "ivfPqServe" -> (c =>
+        Similarity.ivfPqServe(vecs, c, "vec_id", "embedding", k = 3)),
+      "lshTopK" -> (c => Similarity.lshTopK(c, "vec_id", "embedding", k = 3)))
     for (corpus <- Seq(
         vecs.limit(0),
         vecs.withColumn("embedding",
-          lit(null).cast("array<float>")))) {
-      val empty = Similarity.ivfTopKExact(corpus, "vec_id", "embedding", k = 3)
-      assert(empty.columns.toSeq ==
-        Seq("query_id", "neighbor_id", "cos_sim", "rank") && empty.count() == 0)
+          lit(null).cast("array<float>")));
+        (tier, run) <- tiers) {
+      val empty = run(corpus)
+      val neighbor = if (tier == "hardNegatives") "neg_id" else "neighbor_id"
+      assert(empty.schema.fields.map(f => f.name -> f.dataType).toSeq == Seq(
+        "query_id" -> LongType, neighbor -> LongType,
+        "cos_sim" -> DoubleType, "rank" -> IntegerType), tier)
+      assert(empty.count() == 0, tier)
     }
   }
 
@@ -1474,6 +1500,13 @@ class LlmSpec extends AnyFunSuite {
     assert(Similarity.pqCachedCount == 1)
     Similarity.pqTopK(e, "vec_id", "embedding", k = 1, nBlocks = 8).count()
     assert(Similarity.pqCachedCount == 2) // different codes → new entry
+    Similarity.releaseBroadcasts()
+    assert(Similarity.pqCachedCount == 0)
+    // the sample-trained and the integer-Lloyd table of one corpus, same
+    // nBlocks/nCodes, are two entries
+    Similarity.pqTopK(e, "vec_id", "embedding", k = 1).count()
+    Similarity.pqTopKExact(e, "vec_id", "embedding", k = 1).count()
+    assert(Similarity.pqCachedCount == 2)
     Similarity.releaseBroadcasts()
     assert(Similarity.pqCachedCount == 0)
   }
