@@ -58,12 +58,15 @@ object Harness {
       .filter { case (n, _) => parts.forall(_.exists(n.contains)) }
   }
 
-  /** Runs one query's `body`. A throw is reported on stderr and the caller
-    * moves on to the next query — unless it stopped the SparkContext (an
-    * executor OOM stops the whole local context): every later query would
-    * then fail in ~20 ms and record garbage, so the process exits 2. */
+  /** Runs one query's `body` — its build and its action — inside a
+    * [[graft.operators.Checkpoints.scope]], so the query's pins are
+    * released once the action is done. A throw is reported on stderr and
+    * the caller moves on to the next query — unless it stopped the
+    * SparkContext (an executor OOM stops the whole local context): every
+    * later query would then fail in ~20 ms and record garbage, so the
+    * process exits 2. */
   def guard(spark: SparkSession, tag: String, name: String)(body: => Unit): Unit =
-    try body catch { case e: Throwable =>
+    try graft.operators.Checkpoints.scope(body) catch { case e: Throwable =>
       System.err.println(s"[$tag] $name failed: $e")
       if (spark.sparkContext.isStopped) {
         System.err.println(s"[$tag] SparkContext died running $name — aborting")

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.Checkpoints
 
 /** Deduplication operators (SURVEY §2 Group I, I1/I2): exact, n-gram
   * Jaccard, MinHash+LSH, SimHash-banded. Everything is shuffle-scalable —
@@ -534,7 +535,7 @@ object Dedup {
         base.select(col(idCol).as("doc"),
           substring(trim(col(textCol)), 1, keyPrefixLen).as("sk")),
         "rn", col("sk"), col("doc"))
-      .localCheckpoint() // both candidate-join sides read it
+      .transform(Checkpoints.pin) // both candidate-join sides read it
     // integer `div` (not `/` + cast): double division drops rank
     // precision past 2^53 rows
     val a = ranked.select(col("doc").as("ia"), col("rn").as("rn_a"),
@@ -678,7 +679,7 @@ object Dedup {
     // plan). Pinning the signatures materializes the ~10×-per-shingle md5
     // family exactly once; the frame is one k-int array per doc, the same
     // bytes the old exchange already spilled.
-    val sigs = signatures(df, idCol, textCol, shingleN, k).localCheckpoint()
+    val sigs = Checkpoints.pin(signatures(df, idCol, textCol, shingleN, k))
     // id pairs cross the candidate shuffle; each side's signature attaches
     // once per id (the round-11 LSH-join discipline: payloads per side,
     // not per collision)
@@ -785,7 +786,7 @@ object Dedup {
     // search and surface as kept.
     val feat = base.join(asg, Seq("vid"), "left")
       .repartition(Par.of(df), col("cluster"))
-      .localCheckpoint()
+      .transform(Checkpoints.pin)
     val a = feat.select(col("cluster"), col("vid").as("va"),
       col("qv").as("qva"), col("qn").as("qna"))
     val b = feat.select(col("cluster"), col("vid").as("vb"),

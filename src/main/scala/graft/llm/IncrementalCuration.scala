@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.Checkpoints
 import graft.sinks.Bucketing
 
 /** Incremental curation — the daily-batch production shape (round-13
@@ -257,7 +258,7 @@ object IncrementalCuration {
     * increment doc with the full curation verdict —
     * (doc_id, is_batch_exact_dup, n_matches, best_match, best_jaccard,
     * is_dup, split, keep_threshold, mix_keep, quality_gate_met,
-    * curated_in). `retired` lists standing-corpus ids superseded by this
+    * curated_in). `retired` lists standing-corpus ids replaced by this
     * increment (removed docs + changed docs' old versions — a changed doc
     * appears in BOTH `retired` and the increment under its id); their
     * state rows are excluded from the probe and their live tokens leave
@@ -343,9 +344,9 @@ object IncrementalCuration {
     * output for this increment.
     *
     * Read-before-write discipline: the stats/tombstone/count deltas are
-    * computed and localCheckpoint-ed BEFORE any append touches the tables
-    * they read — correctness must not hinge on a captured DataFrame
-    * pinning a pre-append file listing.
+    * computed and pinned BEFORE any append touches the tables they read —
+    * correctness must not hinge on a captured DataFrame holding a
+    * pre-append file listing. The pins are released on return.
     *
     * Compaction trigger: if, after this update, tombstoned ids exceed
     * `compactFrac` of the live snapshot (and `compactMinTombstones`, so
@@ -367,17 +368,17 @@ object IncrementalCuration {
       nBands: Int = 16,
       n: Int = 3,
       compactFrac: Double = 0.5,
-      compactMinTombstones: Long = 10000L): Boolean = {
+      compactMinTombstones: Long = 10000L): Boolean = Checkpoints.scope {
     val spark = increment.sparkSession
     val g = state.nextSeq
     // ---- deltas FIRST (all reads of state tables precede all writes)
-    val stats = updatedSrcStats(state, increment, retired, idCol, textCol,
-      sourceCol).localCheckpoint()
+    val stats = Checkpoints.pin(updatedSrcStats(state, increment, retired,
+      idCol, textCol, sourceCol))
     val tombs = state.tombstones
       .unionByName(retired.select(col(idCol).cast("long").as("doc_id"),
         lit(g).as("dead_lt")))
       .groupBy(col("doc_id")).agg(max(col("dead_lt")).as("dead_lt"))
-      .localCheckpoint()
+      .transform(Checkpoints.pin)
     val nRetired = liveRetiredCount(state, retired, idCol)
     val nAdded = increment.count()
     val nLive = state.nLive - nRetired + nAdded
@@ -419,14 +420,14 @@ object IncrementalCuration {
     * compaction step, outside the per-increment serve path. `meta` is
     * untouched: generation numbers keep climbing across compactions. */
   def compactState(spark: SparkSession, st: StateTables,
-      buckets: Int = 32): Unit = {
+      buckets: Int = 32): Unit = Checkpoints.scope {
     val tombs = spark.table(st.tombstones)
-    val bands = dropDead(spark.table(st.bands), col("doc_b"), col("seq"),
-      tombs).localCheckpoint()
-    val feats = dropDead(spark.table(st.feats), col("doc_b"), col("seq"),
-      tombs).localCheckpoint()
-    val toks = dropDead(spark.table(st.docToks), col("doc_id"), col("seq"),
-      tombs).localCheckpoint()
+    val bands = Checkpoints.pin(
+      dropDead(spark.table(st.bands), col("doc_b"), col("seq"), tombs))
+    val feats = Checkpoints.pin(
+      dropDead(spark.table(st.feats), col("doc_b"), col("seq"), tombs))
+    val toks = Checkpoints.pin(
+      dropDead(spark.table(st.docToks), col("doc_id"), col("seq"), tombs))
     Bucketing.writeBucketed(bands, st.bands, "band_key", buckets)
     Bucketing.writeBucketed(feats, st.feats, "doc_b", buckets)
     Bucketing.writeBucketed(toks, st.docToks, "doc_id", buckets)

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.KMeansExprs
+import graft.operators.Checkpoints
 
 /** Deterministic Lloyd k-means over embedding columns in exact integer
   * fixed-point arithmetic — the semantic-clustering pass a corpus pipeline
@@ -49,7 +50,7 @@ object KMeans {
       .select(col(idCol).as("vid") +: quantize(col(vecCol)).as("q") +:
         passthrough.map(col): _*)
       .filter(col("q").isNotNull)
-      .localCheckpoint() // quantize once; every round rescans this
+      .transform(Checkpoints.pin) // quantize once; every round rescans this
     val cents = train(base, k, updates)
     val asg = KMeansExprs.assign(col("q"), cents)
     base.select(col("vid").as(idCol) +: passthrough.map(col) :+
@@ -59,17 +60,14 @@ object KMeans {
   /** The trained centroid table alone (same seeds, same update recurrence
     * as [[fit]] — bit-identical) for callers that need the centroids as a
     * reusable quantizer, e.g. IVF cell probing
-    * ([[Similarity.ivfTopKExact]]). The training checkpoint is released
-    * before returning (the collects inside the loop materialize eagerly). */
+    * ([[Similarity.ivfTopKExact]]). The training pin is released before
+    * returning (the collects inside the loop materialize eagerly). */
   def centroids(df: DataFrame, idCol: String, vecCol: String, k: Int,
-      updates: Int): Array[Array[Long]] = {
+      updates: Int): Array[Array[Long]] = Checkpoints.scope {
     require(k > 0 && updates >= 0, s"bad k=$k / updates=$updates")
-    val base = df
+    train(Checkpoints.pin(df
       .select(col(idCol).as("vid"), quantize(col(vecCol)).as("q"))
-      .filter(col("q").isNotNull)
-      .localCheckpoint()
-    try train(base, k, updates)
-    finally graft.operators.Checkpoints.release(base)
+      .filter(col("q").isNotNull)), k, updates)
   }
 
   /** Per-block codebooks for product quantization: block b's codebook is
@@ -97,12 +95,12 @@ object KMeans {
         java.util.Arrays.copyOfRange(v, b * bs, math.min((b + 1) * bs, dim)))
     }
     if (updates == 0) return (books, bs, dim)
-    val base = q.select(col("vid"),
-        posexplode(transform(sequence(lit(0), lit(mEff - 1)),
-          bb => slice(col("q"), bb * lit(bs) + lit(1), lit(bs))))
-          .as(Seq("b", "blk")))
-      .localCheckpoint() // slice once; every update rescans this
-    try {
+    Checkpoints.scope {
+      val base = q.select(col("vid"),
+          posexplode(transform(sequence(lit(0), lit(mEff - 1)),
+            bb => slice(col("q"), bb * lit(bs) + lit(1), lit(bs))))
+            .as(Seq("b", "blk")))
+        .transform(Checkpoints.pin) // slice once; every update rescans this
       for (_ <- 1 to updates) {
         val perDim = base
           .select(col("b"), KMeansExprs.blockAssign(col("b"), col("blk"), books).as("c"),
@@ -118,7 +116,7 @@ object KMeans {
         books = next
       }
       (books, bs, dim)
-    } finally graft.operators.Checkpoints.release(base)
+    }
   }
 
   private def train(base: DataFrame, k: Int,

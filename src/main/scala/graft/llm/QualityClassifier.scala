@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.{LrExprs, LrKernel}
+import graft.operators.Checkpoints
 
 /** Trained model: fixed-point weights (scale [[LrKernel.Scale]]) plus the
   * intercept in the same units. */
@@ -60,14 +61,14 @@ object QualityClassifier {
   def fit(df: DataFrame, textCol: String, label: Column, buckets: Int = 1024,
       iters: Int = 200, lrNum: Long = 1, lrDen: Long = 8,
       trainPct: Int = 100,
-      localFitMaxDocs: Long = LocalFitMaxDocs): LrModel = {
+      localFitMaxDocs: Long = LocalFitMaxDocs): LrModel = Checkpoints.scope {
     require(buckets > 0 && iters >= 0 && lrNum > 0 && lrDen > 0,
       s"bad LR hyperparameters: buckets=$buckets iters=$iters lr=$lrNum/$lrDen")
     val base0 = df.select(col(textCol).as("t"), label.cast("int").as("y"))
     val base = (if (trainPct < 100)
       Sampling.deterministicSample(base0, col("t"), trainPct) else base0)
       .filter(col("y").isin(0, 1))
-      .localCheckpoint() // materialize once; every GD pass rescans this
+      .transform(Checkpoints.pin) // materialize once; every GD pass rescans this
     val stats = base.agg(count(lit(1)),
       sum(coalesce(length(col("t")), lit(0)))).head()
     val n = stats.getLong(0)
@@ -122,7 +123,6 @@ object QualityClassifier {
       while (i < buckets) { w(i) -= lrNum * grad(i) / (lrDen * n); i += 1 }
       b0 -= lrNum * grad(buckets) / (lrDen * n)
     }
-    base.unpersist()
     LrModel(w, b0)
   }
 

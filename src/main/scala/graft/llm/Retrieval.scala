@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.Checkpoints
 
 /** Sparse (lexical) top-k retrieval — the BM25 complement to the dense ANN
   * surface in [[Similarity]]: a curation pipeline uses it to pull
@@ -49,7 +50,7 @@ object Retrieval {
     val tokenized = docs.filter(col(textCol).isNotNull)
       .select(col(idCol).as("doc_id"),
         split(trim(col(textCol)), " +").as("ws"))
-      .localCheckpoint()
+      .transform(Checkpoints.pin)
     val words = tokenized
       .select(col("doc_id"), size(col("ws")).as("dl"), explode(col("ws")).as("term"))
     val tf = words.groupBy(col("doc_id"), col("term"))

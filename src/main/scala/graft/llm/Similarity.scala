@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.{PqCodeTable, PqCodebooks, PqOps, TopKCorpus}
+import graft.operators.Checkpoints
 
 /** Similarity search over embedding columns (SURVEY §2 Group I, I3):
   * brute-force cosine top-k as the exactness baseline, LSH-bucketed
@@ -576,7 +577,7 @@ object Similarity {
     // reconstructed vectors, and unpinned each re-ran the per-dimension
     // min/max stats aggregate AND the dequantize kernel (round-14 plan
     // audit: the stats explode+aggregate subtree appeared twice)
-    val c = features(in, Corpus, col(idCol), recon).localCheckpoint()
+    val c = Checkpoints.pin(features(in, Corpus, col(idCol), recon))
     val q = c.filter(col("neighbor_id") < nQueries)
       .select(col("neighbor_id").as("query_id"), col("cv").as("qv"),
         col("cn").as("qn"))

@@ -1,141 +1,85 @@
 package graft.operators
 
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 
-/** Storage hygiene for iterative localCheckpoint loops.
+/** The one owner of pin lifetime. A pin is `Dataset.localCheckpoint`: the
+  * materialized rows cached as RDD blocks in the block manager, with the
+  * lineage truncated. `Dataset.unpersist()` does NOT release them (it only
+  * clears CacheManager entries; checkpoint caching happens a level below),
+  * so every pin is released through this object, by exactly one rule:
   *
-  * `Dataset.localCheckpoint()` caches the materialized rows as RDD blocks
-  * in the block manager, and `Dataset.unpersist()` does NOT release them
-  * (it only clears CacheManager entries, and checkpoint caching happens a
-  * level below). A loop that checkpoints per round therefore pins
-  * O(rounds × |V|) of blocks until the driver GCs the RDD references —
-  * on a long-lived session that is storage-quota leakage, not memory
-  * safety. The checkpointed RDD is reachable from the frame's analyzed
-  * plan (the `LogicalRDD` leaf the checkpoint rewrote it to), so the
-  * blocks can be dropped eagerly the moment a successor round has
-  * materialized.
+  *  - inside a [[scope]] (every main runs each query in one, through
+  *    `Harness.guard`; functions whose pins never escape open their own)
+  *    the pin is released when the scope's body returns or throws;
+  *  - a loop round, or an intermediate whose consumers have all finished
+  *    or been re-pinned, is released early with [[release]];
+  *  - [[graft.queries.StateOnce]] builds run [[unscoped]]: their pins
+  *    serve every later execution in the session;
+  *  - with no scope open, Spark's ContextCleaner drops the blocks once the
+  *    frame is garbage-collected.
+  *
+  * Local mode is assumed throughout: a pin whose blocks are lost (an
+  * executor dies) cannot recompute, because its lineage is gone.
   */
 private[graft] object Checkpoints {
 
-  /** Release the block-manager storage behind a localCheckpoint-ed frame.
-    * Safe to call only once every downstream consumer has either finished
-    * or been re-checkpointed — i.e. the standard loop shape
-    * `val prev = state; state = step(state).localCheckpoint();
-    * Checkpoints.release(prev)` (the new eager checkpoint materialized
-    * BEFORE the release).
-    *
-    * Deliberately acts only when the frame's ROOT is the checkpoint leaf
-    * (what `localCheckpoint()` returns): walking an arbitrary derived plan
-    * would also unpersist any SHARED checkpoint leaves it references
-    * (e.g. a loop's static edge table), and a localCheckpoint RDD whose
-    * blocks are dropped cannot recompute — its lineage is truncated by
-    * design. No-op on anything else. */
-  def release(df: DataFrame): Unit =
+  /** The open scopes on this thread, innermost first. */
+  private val scopes = new ThreadLocal[List[ArrayBuffer[RDD[_]]]] {
+    override def initialValue(): List[ArrayBuffer[RDD[_]]] = Nil
+  }
+
+  private def root(df: DataFrame): Option[RDD[_]] =
     df.queryExecution.analyzed match {
-      case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
-      case _ =>
+      case lr: LogicalRDD => Some(lr.rdd)
+      case _ => None
     }
 
-  /** Per-(session, slot) registry for checkpoints that live until the NEXT
-    * invocation of the same query supersedes them (the recursive-SQL
-    * queries hand a checkpointed input to a lazily-consumed result, so
-    * they cannot release in a try/finally). Keyed weakly by SparkSession,
-    * holding only a WEAK reference to the checkpoint's root RDD — storing
-    * the DataFrame itself would strongly reach the session through
-    * `Dataset.sparkSession` and pin the WeakHashMap key forever (the
-    * round-10 leak). One session's supersede can never release an RDD
-    * belonging to another session's context; a closed session's entries
-    * vanish; and an RDD the caller has dropped gets its blocks reclaimed
-    * by Spark's ContextCleaner on GC even if the slot never supersedes
-    * again. Two CONCURRENT invocations of the SAME query in ONE session
-    * are detected by the per-slot generation guard (round 12): the loser's
-    * frame fails loudly on consumption instead of silently racing. */
-  private val slots: java.util.Map[
-      org.apache.spark.sql.SparkSession,
-      java.util.concurrent.ConcurrentHashMap[
-        String, java.lang.ref.WeakReference[org.apache.spark.rdd.RDD[_]]]] =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap())
-
-  /** Per-(sessionUUID, slot) generation counters for the concurrent-use
-    * guard. Keyed by plain strings (no session pinning; bounded by the
-    * number of distinct slots); readable from GUARD tasks so a superseded
-    * frame fails loudly instead of surfacing Spark's block-not-found. In
-    * local mode (the battery) guard tasks see this map directly; on a
-    * multi-JVM cluster executors see an empty map and the guard
-    * deliberately no-ops (consumption then fails with Spark's own missing-
-    * checkpoint error — the guard narrows the failure, never widens it). */
-  private val gens =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  private[graft] def assertCurrent(key: String, gen: Long): Unit = {
-    val cur = gens.get(key)
-    if (cur != null && cur.longValue != gen)
-      throw new IllegalStateException(
-        s"checkpoint slot '$key' generation $gen was superseded by " +
-          s"generation $cur: a concurrent re-invocation of the same query " +
-          "released this result's blocks — consume each invocation's " +
-          "result before re-invoking (Checkpoints.supersede)")
-  }
-
-  /** Register `df` as slot `slot`'s live checkpoint for session `s`,
-    * releasing whatever the slot previously held. Returns `df` wrapped in
-    * a GENERATION GUARD (round 12): consuming a frame whose slot has since
-    * been superseded by a re-invocation fails loudly with the remedy in
-    * the message — the guard runs before the checkpoint scan in every
-    * task, so the clear error wins over the block-not-found the released
-    * blocks would otherwise produce. */
-  def supersede(s: org.apache.spark.sql.SparkSession, slot: String,
-      df: DataFrame): DataFrame = {
-    val rdd: org.apache.spark.rdd.RDD[
-        org.apache.spark.sql.catalyst.InternalRow] =
-      df.queryExecution.analyzed match {
-        case lr: LogicalRDD => lr.rdd
-        case _ => null // nothing releasable at the root; slot still advances
-      }
-    // identityHashCode distinguishes sessions well enough for a guard key
-    // (collisions only blur WHICH session superseded, never miss a bump)
-    val key = Integer.toHexString(System.identityHashCode(s)) + "/" + slot
-    // bump the generation BEFORE releasing the previous blocks, so a
-    // stale frame's guard observes the new generation no later than the
-    // blocks disappear
-    val gen = gens.merge(key, 1L, (a, b) => a + b).longValue
-    val m = slots.synchronized {
-      slots.computeIfAbsent(s, _ =>
-        new java.util.concurrent.ConcurrentHashMap[
-          String, java.lang.ref.WeakReference[org.apache.spark.rdd.RDD[_]]]())
+  /** `df.localCheckpoint`, registered with the innermost open scope. */
+  def pin(df: DataFrame): DataFrame = {
+    val p = df.localCheckpoint()
+    scopes.get match {
+      case open :: _ => open ++= root(p)
+      case Nil =>
     }
-    Option(m.put(slot, new java.lang.ref.WeakReference(rdd)))
-      .flatMap(r => Option(r.get()))
-      .foreach(_.unpersist(blocking = false))
-    if (rdd == null) df
-    else org.apache.spark.sql.graftbridge.Bridge.internalCreateDataFrame(
-      s, new GuardedCheckpointRDD(rdd, key, gen), df.schema)
+    p
   }
-}
 
-/** Pass-through RDD over a localCheckpoint's rows that asserts its slot
-  * generation is still current BEFORE pulling the parent iterator — the
-  * deterministic loud path for the concurrent same-slot race
-  * ([[Checkpoints.supersede]]). Narrow, partition-preserving, no
-  * serialization change (InternalRow in, InternalRow out). */
-private[graft] class GuardedCheckpointRDD(
-    parent: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-    key: String,
-    gen: Long)
-    extends org.apache.spark.rdd.RDD[
-      org.apache.spark.sql.catalyst.InternalRow](parent) {
-
-  override def getPartitions: Array[org.apache.spark.Partition] =
-    firstParent[org.apache.spark.sql.catalyst.InternalRow].partitions
-
-  override def compute(
-      split: org.apache.spark.Partition,
-      context: org.apache.spark.TaskContext)
-      : Iterator[org.apache.spark.sql.catalyst.InternalRow] = {
-    Checkpoints.assertCurrent(key, gen)
-    firstParent[org.apache.spark.sql.catalyst.InternalRow]
-      .iterator(split, context)
+  /** Runs `body`, then releases every pin made inside it (and not inside
+    * a nested scope). A frame `body` returns must not read those pins once
+    * the scope has closed. */
+  def scope[A](body: => A): A = {
+    val outer = scopes.get
+    val mine = ArrayBuffer.empty[RDD[_]]
+    scopes.set(mine :: outer)
+    try body
+    finally {
+      scopes.set(outer)
+      // a stopped context has no blocks left, and unpersisting on it
+      // would throw over the body's own failure
+      mine.foreach(r => if (!r.sparkContext.isStopped) r.unpersist(blocking = false))
+    }
   }
+
+  /** Runs `body` with every open scope suspended: its pins outlive them. */
+  def unscoped[A](body: => A): A = {
+    val outer = scopes.get
+    scopes.set(Nil)
+    try body finally scopes.set(outer)
+  }
+
+  /** Releases the blocks behind a pinned frame now. Safe only once every
+    * consumer has finished or been re-pinned — the loop shape
+    * `val prev = state; state = pin(step(state)); release(prev)`, the new
+    * pin materialized before the release.
+    *
+    * Acts only when the frame's ROOT is the checkpoint leaf (what [[pin]]
+    * returns): walking an arbitrary derived plan would also release any
+    * SHARED pins it references (e.g. a loop's static edge table). No-op on
+    * anything else. */
+  def release(df: DataFrame): Unit =
+    root(df).foreach(_.unpersist(blocking = false))
 }

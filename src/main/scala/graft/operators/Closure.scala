@@ -10,12 +10,12 @@ import org.apache.spark.storage.StorageLevel
   * (`composable_logs/opentelemetry_helpers.py:295-308`, `:433-451`). Two
   * Spark expressions of that walk exist side by side:
   *
-  *  - THIS operator: a driver-controlled iterative join to a fixpoint (and,
-  *    for groupable forests, the one-shuffle grouped walk below). Each
+  *  - THIS operator: for groupable forests, the one-shuffle grouped walk
+  *    below; for descendant sets, a driver-local walk under an edge budget
+  *    and otherwise a driver-controlled iterative join to a fixpoint. Each
   *    iteration extends the deepest frontier by one hop, so the number of
   *    shuffles equals the forest depth — span trees are ≤ ~6 deep, and the
   *    depth bound (not edge count) is what survives a 100 TB scale-up.
-  *    This is the library batch path: 0.63 s at sf0.1.
   *  - Spark 4's native `WITH RECURSIVE` (UnionLoop), exposed on the SQL
   *    surface by [[graft.queries.Relational.closureRecursiveSql]]: the form
   *    a SQL-only consumer writes. The UnionLoop re-executes its anchor/step
@@ -28,48 +28,6 @@ import org.apache.spark.storage.StorageLevel
   * the whole closure.
   */
 object Closure {
-
-  /** All (ancestor, descendant, depth) pairs reachable via parent→child edges.
-    *
-    * @param edges   DataFrame with columns (parentCol, childCol)
-    * @param maxIter hard bound on depth (cycles in malformed input terminate)
-    */
-  def transitiveClosure(
-      edges: DataFrame,
-      parentCol: String = "parent",
-      childCol: String = "child",
-      maxIter: Int = 30): DataFrame = {
-    val e = edges.select(
-      col(parentCol).as("ancestor"),
-      col(childCol).as("descendant")).persist(StorageLevel.MEMORY_AND_DISK)
-    e.count() // materialize once; reused every iteration
-
-    var acc = e.withColumn("depth", lit(1))
-    var frontier = acc.persist(StorageLevel.MEMORY_AND_DISK)
-    var frontierCount = frontier.count()
-    var iter = 1
-    while (frontierCount > 0 && iter < maxIter) {
-      val next = frontier.as("f")
-        .join(e.as("e"), col("f.descendant") === col("e.ancestor"))
-        .select(
-          col("f.ancestor").as("ancestor"),
-          col("e.descendant").as("descendant"),
-          (col("f.depth") + 1).as("depth"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      frontierCount = next.count()
-      frontier.unpersist(blocking = false)
-      if (frontierCount > 0) acc = acc.union(next)
-      frontier = next
-      iter += 1
-    }
-    frontier.unpersist(blocking = false)
-    // materialize the result before dropping the edge cache — otherwise the
-    // per-call persist of `e` accumulates across repeated calls
-    val result = acc.persist(StorageLevel.MEMORY_AND_DISK)
-    result.count()
-    e.unpersist(blocking = false)
-    result
-  }
 
   /** Generator emitting the full ancestor walk of one edge group:
     * input `array<struct<parent bigint, child bigint>>`, output rows
@@ -137,8 +95,7 @@ object Closure {
     * each group is a bounded forest, compute the closure with ONE shuffle
     * and an in-memory ancestor walk per group — no per-depth iteration.
     * Each node emits its ancestor chain, so work is proportional to the
-    * output size O(nodes × depth). Falls back to [[transitiveClosure]] for
-    * unpartitionable edge sets.
+    * output size O(nodes × depth).
     *
     * Ids are BIGINT; columns in: (keyCol, parentCol, childCol); out:
     * (ancestor, descendant, depth).
@@ -163,14 +120,6 @@ object Closure {
       .select(col("ancestor"), col("descendant"), col("depth"))
   }
 
-  /** (root, descendant) pairs for every root in `roots` (single column
-    * "id"), labeling each reachable node with the root it came from. A node
-    * under two roots appears once per root — exactly the semantics of the
-    * reference's per-task `bound_inclusive` loop
-    * (`opentelemetry_task_span_parser.py:378-410`), computed in one pass for
-    * ALL roots instead of one traversal per task (O(spans·depth) vs the
-    * reference's O(tasks × spans)).
-    */
   /** Edge-count ceiling for the driver-local walk: below it, the
     * per-iteration scheduling overhead of the distributed loop (a join +
     * count JOB per BFS level) dwarfs the actual work, so collecting the
@@ -239,6 +188,14 @@ object Closure {
         .findTightestCommonType(a, b).getOrElse(b)
     }
 
+  /** (root, descendant) pairs for every root in `roots` (single column
+    * "id"), labeling each reachable node with the root it came from. A node
+    * under two roots appears once per root — exactly the semantics of the
+    * reference's per-task `bound_inclusive` loop
+    * (`opentelemetry_task_span_parser.py:378-410`), computed in one pass for
+    * ALL roots instead of one traversal per task (O(spans·depth) vs the
+    * reference's O(tasks × spans)).
+    */
   def descendantsWithRoots(
       edges: DataFrame,
       roots: DataFrame,

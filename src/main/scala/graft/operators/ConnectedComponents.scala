@@ -73,7 +73,7 @@ object ConnectedComponents {
     // the keep/e2e family paid its LSH-or-all-pairs substrate 2×). The
     // symmetric union itself then reads the checkpointed blocks twice,
     // which costs nothing by comparison.
-    val p = pairs.select(col("doc_a"), col("doc_b")).localCheckpoint()
+    val p = pairs.select(col("doc_a"), col("doc_b")).transform(Checkpoints.pin)
     // budget-guarded driver-local path (the Closure/KCore discipline):
     // near-dup pair sets are output-sensitive — usually a few hundred
     // rows per corpus — and the distributed fixpoint costs a join +
@@ -103,6 +103,7 @@ object ConnectedComponents {
         org.apache.spark.sql.types.StructField("lbl",
           org.apache.spark.sql.types.LongType, nullable = false)))
       val lbl = spark.createDataFrame(lblRows, schema)
+      Checkpoints.release(p) // collected: nothing below reads it
       val endpointIds = lbl.select(col("id"))
       return nodes.select(col("id"))
         .unionByName(endpointIds)
@@ -116,11 +117,14 @@ object ConnectedComponents {
     // would otherwise never contribute its own id as a label candidate AND
     // would enter a round with a null prev, silently ending the fixpoint
     // one round early with wrong components
-    var labels = nodes.select(col("id"))
+    // `pinned` is the current round's pin; `labels` projects it (release
+    // acts only on a frame whose root is the pin)
+    var pinned = nodes.select(col("id"))
       .unionByName(edges.select(col("u").as("id")))
       .distinct()
       .select(col("id"), col("id").as("component"))
-      .localCheckpoint()
+      .transform(Checkpoints.pin)
+    var labels = pinned
     var changed = 1L
     var i = 0
     while (changed > 0 && i < maxIters) {
@@ -134,8 +138,11 @@ object ConnectedComponents {
         .groupBy(col("id"))
         .agg(min(col("component")).as("component"),
           min(when(col("self"), col("component"))).as("prev"))
-        .localCheckpoint() // eager: materializes the round
+        .transform(Checkpoints.pin) // eager: materializes the round
       changed = round.filter(col("component") < col("prev")).count()
+      // the new round has materialized: the previous one has no consumers
+      Checkpoints.release(pinned)
+      pinned = round
       labels = round.select(col("id"), col("component"))
       i += 1
     }
@@ -144,6 +151,7 @@ object ConnectedComponents {
         s"connected components did not converge in $maxIters iterations " +
           "(component diameter exceeds the cap — raise maxIters or use " +
           "starContraction)")
+    Checkpoints.release(p) // the result reads only the last round's pin
     labels
   }
 
@@ -195,11 +203,11 @@ object ConnectedComponents {
       .select(greatest(col("a"), col("b")).as("u"),
         least(col("a"), col("b")).as("v"))
       .distinct()
-      .localCheckpoint() // same lineage-truncation rationale as minLabel
+      .transform(Checkpoints.pin) // same lineage-truncation rationale as minLabel
     var changed = if (edges.isEmpty) 0L else Long.MaxValue
     var i = 0
     while (changed > 0 && i < maxIters) {
-      val next = smallStar(largeStar(edges)).localCheckpoint()
+      val next = Checkpoints.pin(smallStar(largeStar(edges)))
       // exact symmetric difference of two DISTINCT sets: every (u,v) key
       // appears once or twice in the union; twice ⇔ in both rounds
       changed = next.unionAll(edges).groupBy(col("u"), col("v"))

@@ -59,13 +59,14 @@ object GlobalRank {
   }
 
   /** `df` plus a `rankCol` long column holding the 1-based global rank in
-    * `sortCols` order. */
+    * `sortCols` order. The result reads the sorted pin, which the
+    * enclosing [[Checkpoints.scope]] releases. */
   def withGlobalRank(df: DataFrame, rankCol: String, sortCols: Column*): DataFrame = {
     val mid = "__global_rank_mid"
     val pinned = df.repartitionByRange(sortCols: _*)
       .sortWithinPartitions(sortCols: _*)
       .withColumn(mid, monotonically_increasing_id())
-      .localCheckpoint()
+      .transform(Checkpoints.pin)
     val offs = offsets(pinned
       .groupBy(spark_partition_id().as("pid"))
       .agg(count(lit(1)).as("cnt"))

@@ -61,7 +61,7 @@ object KCore {
     // budget count AND the collect (local) / both sym branches
     // (distributed) — without this it would execute 2-3 times
     val e = edges.select(col("a").cast("long").as("a"),
-      col("b").cast("long").as("b")).localCheckpoint()
+      col("b").cast("long").as("b")).transform(Checkpoints.pin)
     if (e.count() <= localPeelMaxEdges) {
       import java.lang.{Long => JLong}
       val pairs = e.collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -113,9 +113,9 @@ object KCore {
     val sym = e.select(col("a").as("u"), col("b").as("v"))
       .unionAll(e.select(col("b").as("u"), col("a").as("v")))
       .repartition(col("u"))
-      .localCheckpoint() // one shuffle serves every round's delta join
+      .transform(Checkpoints.pin) // one shuffle serves every round's delta join
     var deg = sym.groupBy(col("u")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
+      .transform(Checkpoints.pin)
     var rounds = 0
     while (true) {
       val doomed = deg.filter(col("deg") < k).select(col("u"))
@@ -140,7 +140,7 @@ object KCore {
         .join(dec, Seq("u"), "left")
         .select(col("u"),
           (col("deg") - coalesce(col("dec"), lit(0L))).as("deg"))
-        .localCheckpoint()
+        .transform(Checkpoints.pin)
       // the new checkpoint materialized eagerly above — drop the prior
       // round's blocks now, or a deep cascade pins O(rounds × |V|)
       Checkpoints.release(prev)

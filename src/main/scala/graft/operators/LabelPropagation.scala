@@ -32,10 +32,10 @@ object LabelPropagation {
     // ConnectedComponents.minLabel). e2 stays checkpointed as well: the
     // vote rounds re-read it, and keeping it a materialized scan preserves
     // the per-round plan shape the rounds were tuned on.
-    val e = edges.select(col("a"), col("b")).localCheckpoint()
+    val e = edges.select(col("a"), col("b")).transform(Checkpoints.pin)
     val e2 = e.select(col("a").as("u"), col("b").as("v"))
       .unionAll(e.select(col("b").as("u"), col("a").as("v")))
-      .localCheckpoint()
+      .transform(Checkpoints.pin)
     var labels = e2.select(col("v").as("node")).distinct()
       .withColumn("lbl", col("node"))
     for (r <- 1 to rounds) {

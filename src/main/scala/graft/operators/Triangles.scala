@@ -38,7 +38,7 @@ object Triangles {
     // and the degree-attach join — an expensive upstream generator (e.g.
     // the basket self-join behind the co-purchase graph) would otherwise
     // run 3× (round-14 plan audit). Edge-sized, id pairs only.
-    val e = edges.select(col("a"), col("b")).localCheckpoint()
+    val e = edges.select(col("a"), col("b")).transform(Checkpoints.pin)
     val deg = e.select(col("a").as("node"))
       .unionAll(e.select(col("b").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
@@ -52,7 +52,7 @@ object Triangles {
       when(aFirst, col("a")).otherwise(col("b")).as("src"),
       when(aFirst, col("b")).otherwise(col("a")).as("dst"),
       when(aFirst, col("deg_b")).otherwise(col("deg_a")).as("dst_deg"))
-      .localCheckpoint()
+      .transform(Checkpoints.pin)
     val wedges = oriented.as("o1")
       .join(oriented.as("o2"), col("o1.src") === col("o2.src"))
       .filter(struct(col("o1.dst_deg"), col("o1.dst")) <

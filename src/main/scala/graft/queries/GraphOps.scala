@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.{LabelPropagation, PageRank, Triangles}
+import graft.operators.{Checkpoints, LabelPropagation, PageRank, Triangles}
 
 /** Graph-analytics queries (EXT row I8): iterative weight propagation over
   * an edge set — the link-authority prior a crawl-curation pipeline feeds
@@ -27,7 +27,7 @@ object GraphOps {
     val pairs = Tables.lineitem(s, d)
       .select(col("l_partkey").as("p"), col("l_suppkey").as("sk"))
       .repartition(col("p")).distinct()
-      .localCheckpoint() // one 600k-pair dedup serves degrees, edges, nodes
+      .transform(Checkpoints.pin) // one 600k-pair dedup serves degrees, edges, nodes
     // bipartite degrees from the base PAIR table: two narrow groupBys
     // (600k → |parts| / |supps|) broadcast back into the pair scan —
     // cheaper than the generic distinct+group over the symmetric 2|E|

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import org.apache.spark.sql.expressions.Window
 import graft.llm.{Bpe, Chunking, Decontamination, Dedup, IncrementalCuration, KMeans, Multimodal, Privacy, QualityClassifier, Retrieval, Sampling, Similarity, Snapshots, TextAnalysis}
+import graft.operators.Checkpoints
 
 /** SURVEY §2 Group I — LLM-data-pipeline operators as oracle-checked
   * queries over `documents` / `embeddings`.
@@ -20,7 +21,7 @@ object LlmOps {
 
   /** The VERIFICATION-ANCHOR fixture slice (round 14): the exact
     * all-pairs rows (`i2_canonical_keep`, `i2_fuzzy_dedup_e2e`,
-    * `i6_curation_v4`) and the superseded blocked tier
+    * `i6_curation_v4`) and the demoted blocked tier
     * (`i2_canonical_keep_blocked`, `i6_curation_v5`) exist to verify the
     * SEMANTICS the scale-path defaults (LSH tier / v6 / v7) ride — their
     * pair substrates are the battery's declared scale-killers (~1.65
@@ -2036,7 +2037,7 @@ object LlmOps {
     curationV4Over(Tables.documents(s, d).filter(anchorSlice))
 
   private[graft] def curationV4Over(docs: DataFrame): DataFrame =
-    curationWith(docs, canonicalKeepOver, "i6_curation_v4.survivors")
+    curationWith(docs, canonicalKeepOver)
 
   /** I6p — curation v5: the same exact-dedup → canonical-keep →
     * temperature-mixture composition as v4, with the near-dup stage on
@@ -2055,11 +2056,11 @@ object LlmOps {
     curationV5Over(Tables.documents(s, d).filter(anchorSlice))
 
   private[graft] def curationV5Over(docs: DataFrame): DataFrame =
-    curationWith(docs, canonicalKeepBlockedOver, "i6_curation_v5.survivors")
+    curationWith(docs, canonicalKeepBlockedOver)
 
   private def curationWith(docs: DataFrame,
-      keepStage: DataFrame => DataFrame, slot: String): DataFrame = {
-    // localCheckpoint at each stage boundary: downstream stages fan out
+      keepStage: DataFrame => DataFrame): DataFrame = {
+    // pin at each stage boundary: downstream stages fan out
     // over their input (pairs + components + quality + mixture stats), so
     // an unpinned plan re-expands the dedup window under every consumer —
     // measured 21 planned shuffles vs 7 pinned. Same materialize-once
@@ -2069,17 +2070,15 @@ object LlmOps {
         min(col("doc_id")).over(Window.partitionBy(md5(col("text")))))
       .filter(col("text").isNull || col("doc_id") === col("__rep"))
       .drop("__rep")
-      .localCheckpoint()
+      .transform(Checkpoints.pin)
     val keepers = keepStage(exact)
       .filter(col("keep")).select("doc_id")
-    // the survivor checkpoint materializes eagerly here, so `exact` has
-    // no live consumers left — release its blocks now; the survivor
-    // frame feeds the lazily-consumed result, so it parks in the
-    // supersede registry (freed on the next invocation, session-scoped)
-    val surv = exact.join(keepers, Seq("doc_id")).localCheckpoint()
-    graft.operators.Checkpoints.release(exact)
-    temperatureMixtureOver(graft.operators.Checkpoints.supersede(
-      docs.sparkSession, slot, surv))
+    // the survivor pin materializes eagerly here, so `exact` has no live
+    // consumers left — release its blocks now; the survivor pin feeds the
+    // lazily consumed result and lives as long as the enclosing scope
+    val surv = exact.join(keepers, Seq("doc_id")).transform(Checkpoints.pin)
+    Checkpoints.release(exact)
+    temperatureMixtureOver(surv)
   }
 
   private val curationV4Sql =
@@ -2130,7 +2129,7 @@ object LlmOps {
     curationV6Over(Tables.documents(s, d))
 
   private[graft] def curationV6Over(docs: DataFrame): DataFrame =
-    curationWith(docs, canonicalKeepLshOver, "i6_curation_v6.survivors")
+    curationWith(docs, canonicalKeepLshOver)
 
   private val curationV6Sql =
     s"""WITH RECURSIVE exact AS MATERIALIZED (
@@ -2229,9 +2228,9 @@ object LlmOps {
       val diff = Snapshots.diff(a, b, "doc_id", "text")
       (IncrementalCuration.loadState(s, st),
         b.join(diff.filter(col("change_type").isin("added", "changed")),
-          Seq("doc_id")).localCheckpoint(),
+          Seq("doc_id")).transform(Checkpoints.pin),
         diff.filter(col("change_type").isin("removed", "changed"))
-          .select("doc_id").localCheckpoint())
+          .select("doc_id").transform(Checkpoints.pin))
     }
     IncrementalCuration.processIncrement(state, inc, retired,
       "doc_id", "text", "source",

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.operators.{AsOfJoin, Closure}
+import graft.operators.{AsOfJoin, Checkpoints, Closure}
 
 /** SURVEY §2 Group D (+A7/A9/B7 shapes) as oracle-checked queries over the
   * `/root/testdata` fixtures.
@@ -568,9 +568,7 @@ object Relational {
     * event rank rn, parent = rn/2) — the A7 subtree-selection kernel on
     * oracle-checkable data; the oracle is a recursive CTE. The edge set is
     * partitionable by user, so the Spark side uses the one-shuffle grouped
-    * walk ([[Closure.treeClosureGrouped]]); the generic iterative
-    * [[Closure.transitiveClosure]] (exercised by the span ops + specs)
-    * remains the fallback for unpartitionable graphs. */
+    * walk ([[Closure.treeClosureGrouped]]). */
   def closureTree(s: SparkSession, d: String): DataFrame =
     Closure.treeClosureGrouped(syntheticTreeEdges(s, d), "user_id")
       .select(col("ancestor"), col("descendant"), col("depth"))
@@ -623,16 +621,17 @@ object Relational {
     * recursive CTE. */
   def closureRecursiveSql(s: SparkSession, d: String): DataFrame = {
     // materialize the edge derivation ONCE: the UnionLoop re-executes its
-    // anchor/step subplans each iteration, so an un-checkpointed view
-    // would replay the window + self-join per depth level
+    // anchor/step subplans each iteration, so an unpinned view would
+    // replay the window + self-join per depth level. The lazy result reads
+    // the pin, so the caller's scope (not this call) releases it.
     val edges = syntheticTreeEdges(s, d)
       .select(col("parent"), col("child"))
-      .localCheckpoint()
+      .transform(Checkpoints.pin)
     // a unique view name per invocation (no cross-invocation races), and
     // the view is dropped as soon as the plan below has bound to it
     val view = s"__a7_sql_edges_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     edges.createOrReplaceTempView(view)
-    val out = try s.sql(
+    try s.sql(
       s"""WITH RECURSIVE closure (ancestor, descendant, depth) AS (
          |  SELECT parent, child, 1 FROM $view
          |  UNION ALL
@@ -641,10 +640,6 @@ object Relational {
          |)
          |SELECT ancestor, descendant, depth FROM closure""".stripMargin)
     finally s.catalog.dropTempView(view)
-    // the checkpoint must outlive this call (the result is lazy); the next
-    // invocation's supersede releases it — see Checkpoints.supersede
-    graft.operators.Checkpoints.supersede(s, "a7_sql_edges", edges)
-    out
   }
 
   /** Shared derivation for the A8/A10 SQL-surface rows: the per-user probe
@@ -704,13 +699,13 @@ object Relational {
     // checkpoint both UnionLoop inputs: the loop re-executes its step (and
     // the outer query its anchor) per iteration, so an un-checkpointed
     // window/self-join derivation would replay per depth level
-    val edges = syntheticTreeEdges(s, d).localCheckpoint()
-    val probes = treeProbes(s, d).localCheckpoint()
+    val edges = Checkpoints.pin(syntheticTreeEdges(s, d))
+    val probes = Checkpoints.pin(treeProbes(s, d))
     val tag = java.util.UUID.randomUUID().toString.replace("-", "")
     val (ev, pv) = (s"__a8_sql_edges_$tag", s"__a8_sql_probes_$tag")
     edges.createOrReplaceTempView(ev)
     probes.createOrReplaceTempView(pv)
-    val out = try s.sql(
+    try s.sql(
       s"""WITH RECURSIVE walk (user_id, src, node) AS (
          |  SELECT user_id, root_id, root_id FROM $pv
          |  UNION ALL SELECT user_id, mid_id, mid_id FROM $pv
@@ -726,9 +721,6 @@ object Relational {
          |FROM $pv p JOIN walk w ON w.user_id = p.user_id
          |GROUP BY p.user_id""".stripMargin)
     finally { s.catalog.dropTempView(ev); s.catalog.dropTempView(pv) }
-    graft.operators.Checkpoints.supersede(s, "a8_sql_edges", edges)
-    graft.operators.Checkpoints.supersede(s, "a8_sql_probes", probes)
-    out
   }
 
   private val pathRecursiveSqlOracle =
@@ -754,13 +746,13 @@ object Relational {
     * SQL-only consumer computes about a subtree. Seeded at one node per
     * user; the recursion touches only the bounded subtree. */
   def boundByRecursiveSql(s: SparkSession, d: String): DataFrame = {
-    val edges = syntheticTreeEdges(s, d).localCheckpoint()
-    val probes = treeProbes(s, d).localCheckpoint()
+    val edges = Checkpoints.pin(syntheticTreeEdges(s, d))
+    val probes = Checkpoints.pin(treeProbes(s, d))
     val tag = java.util.UUID.randomUUID().toString.replace("-", "")
     val (ev, pv) = (s"__a10_sql_edges_$tag", s"__a10_sql_probes_$tag")
     edges.createOrReplaceTempView(ev)
     probes.createOrReplaceTempView(pv)
-    val out = try s.sql(
+    try s.sql(
       s"""WITH RECURSIVE sub (user_id, node, rel_depth) AS (
          |  SELECT user_id, mid_id, 0 FROM $pv
          |  UNION ALL
@@ -771,9 +763,6 @@ object Relational {
          |  CAST(MAX(rel_depth) AS INT) AS height
          |FROM sub GROUP BY user_id""".stripMargin)
     finally { s.catalog.dropTempView(ev); s.catalog.dropTempView(pv) }
-    graft.operators.Checkpoints.supersede(s, "a10_sql_edges", edges)
-    graft.operators.Checkpoints.supersede(s, "a10_sql_probes", probes)
-    out
   }
 
   private val boundByRecursiveSqlOracle =

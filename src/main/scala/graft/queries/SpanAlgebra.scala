@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.operators.GlobalRank
+import graft.operators.{Checkpoints, GlobalRank}
 import graft.parser.SpanParser
 import graft.spans.SpansOps._
 
@@ -520,7 +520,7 @@ object SpanAlgebra {
     // and the duplicate's filter below scan it instead of re-running the
     // derivation (4-branch union × id-rewrite) each
     val spans = with0x(spansFromOrders(s, d,
-      Some(col("o_custkey") === cust))).coalesce(1).localCheckpoint()
+      Some(col("o_custkey") === cust))).coalesce(1).transform(Checkpoints.pin)
     val clean = SpanParser.parseSpans(spans)
     val nClean = clean.taskRuns.map(_.loggedValues.size).sum.toLong
     // inject the duplicate: same task, same logged name, fresh span id

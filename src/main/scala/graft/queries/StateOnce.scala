@@ -23,10 +23,13 @@ private[graft] object StateOnce {
   private val cache = TrieMap.empty[(String, String), Any]
 
   /** Run `body` once per (key, dir) and cache its value — which may be a
-    * Unit (table-writing builds), a DataFrame (localCheckpoint-ed
-    * increment-sized frames), or a loaded-state handle. */
+    * Unit (table-writing builds), a DataFrame (pinned increment-sized
+    * frames), or a loaded-state handle. The body runs
+    * [[graft.operators.Checkpoints.unscoped]]: the cached value outlives
+    * the query that built it, and so must the pins it reads. */
   def once[A](key: String, dir: String)(body: => A): A =
-    cache.getOrElseUpdate((key, dir), body).asInstanceOf[A]
+    cache.getOrElseUpdate((key, dir),
+      graft.operators.Checkpoints.unscoped(body)).asInstanceOf[A]
 
   /** Test hook: forget everything (state tables themselves persist). */
   private[graft] def reset(): Unit = cache.clear()

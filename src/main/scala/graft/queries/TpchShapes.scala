@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.Checkpoints
 
 /** The remaining classic TPC-H query shapes (Q4, Q12, Q14, Q16, Q17, Q21,
   * Q22) adapted to the fixture schema — SURVEY §2 Group D rows D3/D4/D7/D8.
@@ -318,8 +319,7 @@ object TpchShapes {
     * `rank() OVER (ORDER BY total_rev)` window: an empty partition key
     * funnels every supplier through one task, the textbook Q15 scale trap
     * (|suppliers| is data-sized — ~10M at 100 TB). The revenue view is
-    * localCheckpoint-ed (|suppliers| slim rows, session-scoped via
-    * Checkpoints.supersede) so the fact table is READ ONCE — AQE's
+    * pinned (|suppliers| slim rows) so the fact table is READ ONCE — AQE's
     * broadcast conversion on the max branch defeats ReusedExchange here,
     * the jaccardPairs lesson; the max then costs one broadcast of a
     * single row and the whole plan stays partition-parallel. Comparison
@@ -329,14 +329,13 @@ object TpchShapes {
     */
   def topSupplier(s: SparkSession, d: String): DataFrame = {
     val discPrice = dec(col("l_extendedprice")) * dec(lit(1.0) - col("l_discount"))
-    val rev = graft.operators.Checkpoints.supersede(s, "d10_top_supplier_rev",
-      Tables.lineitem(s, d)
-        .filter(col("l_shipdate") >= lit("1997-01-01").cast("timestamp") &&
-          col("l_shipdate") < lit("1997-04-01").cast("timestamp"))
-        .select(col("l_suppkey"), col("l_extendedprice"), col("l_discount"))
-        .groupBy(col("l_suppkey"))
-        .agg(sum(discPrice).as("total_rev"))
-        .localCheckpoint())
+    val rev = Tables.lineitem(s, d)
+      .filter(col("l_shipdate") >= lit("1997-01-01").cast("timestamp") &&
+        col("l_shipdate") < lit("1997-04-01").cast("timestamp"))
+      .select(col("l_suppkey"), col("l_extendedprice"), col("l_discount"))
+      .groupBy(col("l_suppkey"))
+      .agg(sum(discPrice).as("total_rev"))
+      .transform(Checkpoints.pin)
     val best = rev.agg(max(col("total_rev")).as("best_rev"))
     rev.join(broadcast(best), col("total_rev") === col("best_rev"))
       .join(Tables.supplier(s, d)

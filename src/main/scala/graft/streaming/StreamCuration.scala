@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.llm.IncrementalCuration
 import graft.llm.IncrementalCuration.StateTables
+import graft.operators.Checkpoints
 import graft.sinks.Bucketing
 
 /** H14 — STREAMING incremental curation: the v7 daily-batch loop
@@ -99,7 +100,9 @@ object StreamCuration {
 
   /** The `foreachBatch` handler (curried — plug the first list in, pass
     * the rest to `foreachBatch`). Runnable directly for batch-mode tests
-    * and backfills: `applyBatch(...)(increment, batchId)`. */
+    * and backfills: `applyBatch(...)(increment, batchId)`. Every pin it
+    * makes is released before it returns, so a long-running stream holds
+    * none between micro-batches. */
   def applyBatch(
       st: StateTables,
       progressTable: String,
@@ -117,12 +120,12 @@ object StreamCuration {
       accFloor: Double = 0.6,
       compactFrac: Double = 0.5,
       compactMinTombstones: Long = 10000L)(
-      batch: DataFrame, batchId: Long): Unit = {
+      batch: DataFrame, batchId: Long): Unit = Checkpoints.scope {
     val spark = batch.sparkSession
     // pin the micro-batch: the handler reads it several times (split,
     // liveness probe, verdicts, state writes) and a foreachBatch frame
     // is only valid inside this call
-    val rows = batch.localCheckpoint()
+    val rows = Checkpoints.pin(batch)
     val upserts = opCol.map(c =>
       rows.filter(coalesce(col(c) =!= "retire", lit(true)))).getOrElse(rows)
     val retireExplicit = opCol.map(c => rows.filter(col(c) === "retire")
@@ -189,16 +192,16 @@ object StreamCuration {
     val g = state0.nextSeq
     logRow(spark, progressTable, batchId, "start", g)
     val inc = upserts.select(col(idCol), col(textCol), col(sourceCol))
-    // implicit change detection: an upsert of a LIVE id supersedes the
+    // implicit change detection: an upsert of a LIVE id replaces the
     // standing version (v7's contract then wants the id in BOTH retired
     // and the increment)
     val changed = IncrementalCuration.liveDocIds(state0, inc, idCol)
     val retired = retireExplicit
       .unionByName(changed.select(col("doc_id").as(idCol)))
-      .distinct().localCheckpoint()
+      .distinct().transform(Checkpoints.pin)
     val verdicts = IncrementalCuration.processIncrement(state0, inc, retired,
       idCol, textCol, sourceCol, shingleN, k, nBands, n, threshold, accFloor)
-      .localCheckpoint()
+      .transform(Checkpoints.pin)
     Bucketing.overwritePartition(
       verdicts.withColumn("batch_id", lit(batchId)), verdictTable, "batch_id")
     IncrementalCuration.updateState(st, state0, inc, verdicts, retired,

@@ -1,11 +1,8 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.types.StructType
 
 /** Column ⇄ Expression bridge. Spark 4 made `ExpressionUtils` private[sql];
   * custom Catalyst expressions (SURVEY §4.2) need this one-hop accessor,
@@ -13,12 +10,4 @@ import org.apache.spark.sql.types.StructType
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
-
-  /** InternalRow-RDD → DataFrame without the Row round-trip
-    * (`SparkSession.internalCreateDataFrame` is private[sql]); used by
-    * checkpoint-generation guards that wrap an existing LogicalRDD. */
-  def internalCreateDataFrame(
-      s: SparkSession, rdd: RDD[InternalRow], schema: StructType): DataFrame =
-    s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .internalCreateDataFrame(rdd, schema)
 }

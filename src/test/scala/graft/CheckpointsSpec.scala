@@ -1,46 +1,85 @@
 package graft
 
-import org.apache.spark.sql.functions._
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Checkpoints
+import graft.queries.Tables
 
-/** The supersede-slot lifecycle: release-on-supersede (storage hygiene)
-  * and the round-12 generation guard — two concurrent invocations of the
-  * same slot must fail LOUDLY on the loser's consumption, with the remedy
-  * in the message, instead of surfacing Spark's block-not-found (or, in
-  * the worst interleaving, silently reading half-released blocks). */
+/** Pin lifetime ([[graft.operators.Checkpoints]]): a scope releases the
+  * pins made inside it — and only those — however the query built them,
+  * and a lazily consumed result stays valid until its scope closes, no
+  * matter how many other invocations of the same query interleave. */
 class CheckpointsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  test("supersede guard: the superseded invocation fails loudly, the winner serves") {
-    // invocation A registers its checkpoint; B re-invokes the SAME slot
-    // before A's result was consumed (the concurrent race, serialized
-    // here for determinism)
-    val cpA = Seq((1L, "a"), (2L, "b")).toDF("id", "v").localCheckpoint()
-    val frameA = Checkpoints.supersede(spark, "spec.race.slot", cpA)
-    val cpB = Seq((3L, "c")).toDF("id", "v").localCheckpoint()
-    val frameB = Checkpoints.supersede(spark, "spec.race.slot", cpB)
-    // the loser: every task's guard sees the newer generation BEFORE
-    // touching the released blocks
-    val e = intercept[Exception] { frameA.count() }
-    def messages(t: Throwable): Seq[String] =
-      if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
-    assert(messages(e).exists(_.contains("superseded")),
-      s"expected the generation-guard message, got: ${messages(e).mkString(" | ")}")
-    // the winner is unaffected, and derived plans keep working
-    assert(frameB.count() == 1L)
-    assert(frameB.filter(col("id") === 3L).select(col("v")).head().getString(0) == "c")
+  private val sf = "/root/testdata/sf0.001"
+
+  private def pinned: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  test("a scope releases its own pins; nested scopes and release compose") {
+    val before = pinned
+    val (outer, inner) = Checkpoints.scope {
+      val outer = Checkpoints.pin(Seq(1L, 2L).toDF("k"))
+      val inner = Checkpoints.scope {
+        val inner = Checkpoints.pin(Seq(3L).toDF("k"))
+        assert((pinned -- before).size == 2)
+        inner
+      }
+      // the inner scope released its pin only
+      assert((pinned -- before).size == 1)
+      assert(outer.count() == 2L)
+      (outer, inner)
+    }
+    assert((pinned -- before).isEmpty)
+    // release is the early exit: it acts on the pin itself
+    val loose = Checkpoints.pin(Seq(4L).toDF("k"))
+    assert((pinned -- before).size == 1)
+    Checkpoints.release(loose)
+    assert((pinned -- before).isEmpty)
+    assert(outer != null && inner != null)
   }
 
-  test("supersede guard: serial reuse never trips — same frame consumed repeatedly") {
-    val cp = Seq((1L, 10L), (2L, 20L)).toDF("k", "n").localCheckpoint()
-    val frame = Checkpoints.supersede(spark, "spec.serial.slot", cp)
-    // multiple actions on the CURRENT generation all pass (Bench's
-    // 3-pass timing shape), including shuffling consumers
-    assert(frame.count() == 2L)
-    assert(frame.groupBy(col("k")).agg(sum(col("n"))).count() == 2L)
-    assert(frame.agg(sum(col("n"))).head().getLong(0) == 30L)
+  test("two interleaved topSupplier invocations both serve") {
+    val q = SparkEntry.queries("d10_top_supplier")
+    val (a, b) = Checkpoints.scope {
+      // build A, build B, then consume A
+      val a = q(spark, sf)
+      val b = q(spark, sf)
+      (a.collect().map(_.toSeq).toSeq, b.collect().map(_.toSeq).toSeq)
+    }
+    Tables.lineitem(spark, sf).createOrReplaceTempView("lineitem")
+    Tables.supplier(spark, sf).createOrReplaceTempView("supplier")
+    val want =
+      try spark.sql(SparkEntry.oracleSql("d10_top_supplier"))
+        .collect().map(_.toSeq).toSeq
+      finally Seq("lineitem", "supplier").foreach(spark.catalog.dropTempView)
+    assert(want.nonEmpty)
+    assert(a == want)
+    assert(b == want)
+  }
+
+  test("every battery query releases its pins when its scope closes") {
+    // the StateOnce rows build session-lived state (and pins) on first
+    // use; build those once before measuring
+    Seq("i2_incremental_index", "i2_incremental_band_index",
+      "i6_curation_v7_incremental").foreach(n => SparkEntry.queries(n)(spark, sf))
+    // results stay referenced to the end, so no pin is reclaimed by GC
+    val held = ArrayBuffer.empty[DataFrame]
+    val grown = Harness.queries(None).flatMap { case (name, fn) =>
+      val before = pinned
+      held += Checkpoints.scope {
+        val df = fn(spark, sf)
+        df.write.format("noop").mode("overwrite").save()
+        df
+      }
+      val left = pinned -- before
+      if (left.isEmpty) None else Some(name -> left.size)
+    }
+    assert(grown.isEmpty, s"queries left pins behind their scope: $grown")
+    assert(held.size == SparkEntry.queries.size)
   }
 }

@@ -1,8 +1,11 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.Json
+import graft.operators.Checkpoints
+import graft.queries.StateOnce
 
 /** [[Harness]]: query selection, the JSON the mains write, and the
   * spec session's configuration. */
@@ -54,5 +57,40 @@ class HarnessSpec extends AnyFunSuite {
     assert(conf.get("spark.sql.optimizer.excludedRules") == Harness.ExcludedRules)
     assert(Harness.ExcludedRules.contains("InferFiltersFromGenerate"))
     assert(conf.get("spark.sql.session.timeZone") == "UTC")
+  }
+
+  test("a pin made inside Harness.guard is released after the body") {
+    val spark = TestSpark.spark
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    var held: DataFrame = null
+    var during = 0
+    Harness.guard(spark, "spec", "pin") {
+      held = Checkpoints.pin(spark.range(10).toDF())
+      during = (sc.getPersistentRDDs.keySet -- before).size
+    }
+    assert(during == 1)
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
+    assert(held != null)
+  }
+
+  test("a pin made inside StateOnce.once survives the guard around it") {
+    val spark = TestSpark.spark
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    var rows = 0L
+    Harness.guard(spark, "spec", "once") {
+      rows = StateOnce.once("spec.harness.pin", "spec") {
+        Checkpoints.pin(spark.range(5).toDF())
+      }.count()
+    }
+    val survived = sc.getPersistentRDDs.keySet -- before
+    assert(rows == 5L && survived.size == 1)
+    // the memoized frame still serves from its blocks
+    val again = StateOnce.once[DataFrame](
+      "spec.harness.pin", "spec")(fail("memoized value rebuilt"))
+    assert(again.count() == 5L)
+    Checkpoints.release(again)
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
   }
 }

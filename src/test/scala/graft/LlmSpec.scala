@@ -97,6 +97,21 @@ class LlmSpec extends AnyFunSuite {
         } finally ConnectedComponents.LocalUnionFindMaxEdges = saved
       assert(local == dist, s"trial $trial (n=$n, edges=$edges)")
     }
+    // a 20-node path takes ~20 distributed rounds; the pins still live
+    // after the call, while its result is held, must not grow with them
+    val sc = spark.sparkContext
+    def pinned = sc.getPersistentRDDs.keySet
+    val path = (0L until 20L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val before = pinned
+    val saved = ConnectedComponents.LocalUnionFindMaxEdges
+    val held =
+      try {
+        ConnectedComponents.LocalUnionFindMaxEdges = 0L
+        ConnectedComponents.minLabel((0L to 20L).toDF("id"), path, maxIters = 30)
+      } finally ConnectedComponents.LocalUnionFindMaxEdges = saved
+    val grown = pinned -- before
+    assert(grown.size <= 2, s"${grown.size} pins outlive a 20-round minLabel")
+    assert(held.filter(col("component") =!= 0L).count() == 0L)
   }
 
   test("I2 star contraction handles a long chain in O(log n) rounds") {
@@ -1574,6 +1589,9 @@ class LlmSpec extends AnyFunSuite {
     val bc2 = Similarity.cachedBroadcastFor(vecs2, "vec_id", "embedding")
     assert(bc2.nonEmpty && (bc2.get eq bc1.get),
       "plan-identical corpus must reuse the cached broadcast")
+    Similarity.releaseBroadcasts()
+    assert(Similarity.cachedBroadcastCount == 0)
+    assert(Similarity.cachedBroadcastFor(vecs, "vec_id", "embedding").isEmpty)
   }
 
   test("I3 cosine matches quantized cosine closely") {

@@ -102,4 +102,15 @@ class QualityClassifierSpec extends AnyFunSuite {
     val acc = correct.toDouble / n
     assert(acc >= 0.85, s"sf0.001 accuracy $acc under floor")
   }
+
+  test("fit releases its training pin on both GD paths") {
+    val sc = spark.sparkContext
+    for (localMax <- Seq(QualityClassifier.LocalFitMaxDocs, 0L)) {
+      val before = sc.getPersistentRDDs.keySet
+      QualityClassifier.fit(synth, "text", col("y"), buckets = 64, iters = 2,
+        localFitMaxDocs = localMax)
+      val grown = sc.getPersistentRDDs.keySet -- before
+      assert(grown.isEmpty, s"localFitMaxDocs=$localMax left pins $grown")
+    }
+  }
 }

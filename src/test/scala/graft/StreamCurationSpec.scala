@@ -211,4 +211,21 @@ class StreamCurationSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("duplicate ids"), e.getMessage)
   }
+
+  test("micro-batches leave no pinned RDDs behind") {
+    val t = st("pins")
+    IncrementalCuration.buildState(
+      standing.toDF("doc_id", "text", "source"),
+      "doc_id", "text", "source", t, lrIters = 5)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    Seq(b0, b1, b2).zipWithIndex.foreach { case (b, id) =>
+      StreamCuration.applyBatch(t, "scs_pins_progress", "scs_pins_verdicts")(
+        b.toDF("doc_id", "text", "source", "op"), id.toLong)
+      val grown = sc.getPersistentRDDs.keySet -- before
+      assert(grown.isEmpty, s"batch $id left pins $grown")
+    }
+    assert(spark.table("scs_pins_progress")
+      .filter(col("phase") === "done").agg(max("batch_id")).head().getLong(0) == 2L)
+  }
 }
