@@ -11,8 +11,16 @@ script compares
     any two runs of the same plan: expression ids (`#123`), exchange and
     subquery `plan_id=`s, RDD ids (`MapPartitionsRDD[42]`) with their
     call-site line numbers, the checkout's warehouse directory, JVM object
-    hashes of array literals (`[J@1c0293a`), and the generated
+    hashes of array literals (`[J@1c0293a`), JVM lambda class names
+    (`CodecOps$$$Lambda$5655/0x00007f16e15b35e0`), and the generated
     lambda-variable names (`x_17`).
+
+Spark's distinct-aggregate rewrite (an `Expand` tagging each row with a
+`gid` per distinct group, then the aggregates over it) orders its groups
+differently from run to run. In the `Expand` operator that emits `gid` and
+in every aggregate or exchange that reads it, each bracketed or
+parenthesized list is therefore compared as a multiset, and the group
+numbers (`gid = 2`, the projections' trailing literals) are dropped.
 
 A row whose operator tree differs is a plan change. A row whose tree is the
 same but whose normalized details differ changed only expressions or alias
@@ -29,6 +37,7 @@ import re
 import sys
 
 NORMALIZE = [
+    (re.compile(r"\$Lambda(\$\d+)?/0x[0-9a-f]+"), "$Lambda"),
     (re.compile(r"#\d+L?"), "#N"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
@@ -46,6 +55,55 @@ def normalize(line):
     return line.rstrip()
 
 
+OPERATOR = re.compile(r"^\(\d+\) (\S+)")
+GID = re.compile(r"\bgid#N\b")
+GROUP_NO = re.compile(r"(\bgid#N = )\d+|(?<=, )\d+(?=\])")
+GROUPED = ("Expand", "HashAggregate", "ObjectHashAggregate", "SortAggregate",
+           "Exchange")
+
+
+def as_multisets(line):
+    """`line` with the top-level elements of every [...] / (...) list sorted,
+    innermost lists first, and the distinct-group numbers dropped."""
+    line = GROUP_NO.sub(lambda m: (m.group(1) or "") + "G", line)
+    stack = [[""]]  # per open list: its elements so far
+    for c in line:
+        if c in "[(":
+            stack.append([""])
+        elif c in "])" and len(stack) > 1:
+            elems = stack.pop()
+            stack[-1][-1] += "[" + ", ".join(sorted(e.strip() for e in elems)) + "]"
+        elif c == "," and len(stack) > 1:
+            stack[-1].append("")
+        else:
+            stack[-1][-1] += c
+    while len(stack) > 1:  # unbalanced (a truncated line): close what is open
+        elems = stack.pop()
+        stack[-1][-1] += "[" + ", ".join(elems)
+    return stack[0][0]
+
+
+def details_of(lines):
+    """Normalized detail lines; the blocks of the distinct-aggregate rewrite
+    (an Expand emitting `gid`, aggregates and exchanges reading it) compare
+    their lists as multisets."""
+    blocks, cur = [], None
+    for l in lines:
+        if not l.strip():
+            continue
+        m = OPERATOR.match(l)
+        if m or cur is None:
+            cur = [m.group(1) if m else None, []]
+            blocks.append(cur)
+        cur[1].append(normalize(l))
+    details = []
+    for op, ls in blocks:
+        if op in GROUPED and any(GID.search(l) for l in ls[1:]):
+            ls = ls[:1] + [as_multisets(l) for l in ls[1:]]
+        details.extend(ls)
+    return details
+
+
 def split_plan(text):
     """(operator tree lines, normalized detail lines) of one formatted dump."""
     lines = text.splitlines()
@@ -56,8 +114,7 @@ def split_plan(text):
     while i < len(lines) and lines[i].strip():
         tree.append(lines[i].rstrip())
         i += 1
-    details = [normalize(l) for l in lines[i:] if l.strip()]
-    return tree, details
+    return tree, details_of(lines[i:])
 
 
 def read(path):

@@ -48,14 +48,14 @@ object Harness {
     }
   }
 
-  /** `SparkEntry.queries` sorted by name (execution and output order stay
-    * stable run to run), narrowed to the names containing one of the
-    * comma-separated substrings in `filter`. */
+  /** The battery rows' queries (`SparkEntry.rows`) sorted by name
+    * (execution and output order stay stable run to run), narrowed to the
+    * names containing one of the comma-separated substrings in `filter`. */
   def queries(
       filter: Option[String] = sys.env.get("SPARK_GRAFT_QUERIES")): Seq[(String, Query)] = {
     val parts = filter.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => parts.forall(_.exists(n.contains)) }
+    SparkEntry.rows.values.toSeq.sortBy(_.name)
+      .collect { case r if parts.forall(_.exists(r.name.contains)) => r.name -> r.run }
   }
 
   /** Runs one query's `body` — its build and its action — inside a

@@ -1,14 +1,20 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.queries.{CodecOps, GraphOps, LlmOps, Relational, SpanAlgebra, TpchShapes}
+import scala.collection.immutable.ListMap
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.queries.{Battery, CodecOps, GraphOps, LlmOps, Relational, SpanAlgebra, TpchShapes}
+
+/** The battery contract — see SURVEY.md §7.
   *
-  * `queries` maps every implemented SURVEY §2 operator to a DataFrame query
-  * over the `/root/testdata` fixtures; `oracleSql` holds the DuckDB-runnable
-  * equivalent for the driver's hash-compare. Names key into SURVEY §2 rows
-  * (d07 = Group D row 7, a7 = Group A row 7, i1 = Group I row 1, ...).
+  * Each module declares each of its battery rows once, as a
+  * [[graft.queries.Battery.Row]] (name, Spark query over a fixture
+  * directory, DuckDB oracle SQL) in its `rows` list. [[rows]]
+  * concatenates the lists and fails initialization, naming the
+  * offenders, if a name repeats; [[queries]] and [[oracleSql]] are the
+  * two views the oracle check (`graft.Verify` + `scripts/check.py`) and
+  * the benchmark read. Names key into SURVEY §2 rows (d07 = Group D
+  * row 7, a7 = Group A row 7, i1 = Group I row 1, ...).
   */
 object SparkEntry {
 
@@ -16,14 +22,16 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Relational.pricingSummary(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Relational.queries ++ LlmOps.queries ++ SpanAlgebra.queries ++
-      CodecOps.queries ++ TpchShapes.queries ++ GraphOps.queries
+  /** Every battery row by name, in module declaration order. */
+  lazy val rows: ListMap[String, Battery.Row] = Battery.table(
+    Relational.rows ++ LlmOps.rows ++ SpanAlgebra.rows ++
+      CodecOps.rows ++ TpchShapes.rows ++ GraphOps.rows)
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted keys get a rows-only check. */
+  /** Each row's Spark query. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    rows.map { case (n, r) => n -> r.run }
+
+  /** Each row's DuckDB oracle SQL, over the same parquet tables. */
   def oracleSql: Map[String, String] =
-    Relational.oracles ++ LlmOps.oracles ++ SpanAlgebra.oracles ++
-      CodecOps.oracles ++ TpchShapes.oracles ++ GraphOps.oracles
+    rows.map { case (n, r) => n -> r.oracle }
 }

@@ -84,6 +84,20 @@ object AttrCodec {
       s"Attribute value should decode to a scalar, got: $other")
   }
 
+  /** The one value of attribute `k` from its raw renderings across spans:
+    * a key bound to two distinct values is the attribute-union conflict
+    * (`opentelemetry_helpers.py:459-491`), raised as an
+    * IllegalArgumentException naming the key and two of the values. */
+  def resolve(k: String, raws: Seq[String]): Any = {
+    val distinct = raws.distinct
+    if (distinct.size > 1) {
+      val vs = distinct.map(parse)
+      throw new IllegalArgumentException(
+        s"Encountered key=$k with different values ${vs.head} and ${vs(1)}")
+    }
+    parse(distinct.head)
+  }
+
   def renderMap(m: Map[String, Any]): Map[String, String] =
     m.map { case (k, v) => k -> render(v) }
 

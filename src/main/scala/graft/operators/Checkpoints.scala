@@ -5,6 +5,7 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** The one owner of pin lifetime. A pin is `Dataset.localCheckpoint`: the
   * materialized rows cached as RDD blocks in the block manager, with the
@@ -60,7 +61,7 @@ private[graft] object Checkpoints {
       scopes.set(outer)
       // a stopped context has no blocks left, and unpersisting on it
       // would throw over the body's own failure
-      mine.foreach(r => if (!r.sparkContext.isStopped) r.unpersist(blocking = false))
+      mine.foreach(r => if (!r.sparkContext.isStopped) unpersist(r))
     }
   }
 
@@ -80,6 +81,10 @@ private[graft] object Checkpoints {
     * returns): walking an arbitrary derived plan would also release any
     * SHARED pins it references (e.g. a loop's static edge table). No-op on
     * anything else. */
-  def release(df: DataFrame): Unit =
-    root(df).foreach(_.unpersist(blocking = false))
+  def release(df: DataFrame): Unit = root(df).foreach(unpersist)
+
+  /** Drops a pin's blocks without `RDD.unpersist`, which logs a WARN for
+    * every locally checkpointed RDD (its lineage cannot recompute) — the
+    * expected state of every pin this object releases. */
+  private def unpersist(r: RDD[_]): Unit = Bridge.unpersistRDD(r)
 }

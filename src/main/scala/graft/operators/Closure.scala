@@ -157,20 +157,13 @@ object Closure {
   private def localResultDF(
       edges: DataFrame,
       pairs: Seq[(Any, Any)],
-      rootType: org.apache.spark.sql.types.DataType,
-      idType: org.apache.spark.sql.types.DataType,
-      withRoot: Boolean): DataFrame = {
+      idType: org.apache.spark.sql.types.DataType): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{StructField, StructType}
     import scala.jdk.CollectionConverters._
-    val (schema, rows) =
-      if (withRoot)
-        (StructType(Seq(StructField("root", rootType), StructField("id", idType))),
-          pairs.map { case (r, i) => Row(r, i) })
-      else
-        (StructType(Seq(StructField("id", idType))),
-          pairs.map { case (_, i) => Row(i) }.distinct)
-    edges.sparkSession.createDataFrame(rows.asJava, schema)
+    val schema = StructType(Seq(StructField("root", idType), StructField("id", idType)))
+    edges.sparkSession.createDataFrame(
+      pairs.map { case (r, i) => Row(r, i) }.asJava, schema)
   }
 
   /** Common id type across the parent/child/root columns. The driver-local
@@ -219,7 +212,7 @@ object Closure {
       val rootVals = r.select(col("root")).distinct().collect().map(_.get(0))
       val pairs = (localDescendants(collected, rootVals) ++
         (if (inclusive) rootVals.map(v => (v, v)) else Nil)).distinct
-      return localResultDF(edges, pairs, idT, idT, withRoot = true)
+      return localResultDF(edges, pairs, idT)
     }
 
     var acc = if (inclusive) r else r.limit(0)
@@ -246,7 +239,8 @@ object Closure {
   }
 
   /** Descendant node set reachable from `roots` (single column "id"),
-    * mirroring `Spans.bound_under` (ref `opentelemetry_helpers.py:433-443`).
+    * mirroring `Spans.bound_under` (ref `opentelemetry_helpers.py:433-443`):
+    * the [[descendantsWithRoots]] walk with the root label dropped.
     * Returns one column "id"; set `inclusive` to keep the roots themselves
     * (`bound_inclusive`, `:445-451`).
     */
@@ -256,41 +250,7 @@ object Closure {
       parentCol: String = "parent",
       childCol: String = "child",
       inclusive: Boolean = false,
-      maxIter: Int = 30): DataFrame = {
-    val idT = commonIdType(Seq(
-      edges.schema(parentCol).dataType, edges.schema(childCol).dataType,
-      roots.schema.head.dataType))
-    val e = edges.select(
-        col(parentCol).cast(idT).as("p"), col(childCol).cast(idT).as("c"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nEdges = e.count()
-    val r = roots.select(col(roots.columns.head).cast(idT).as("id"))
-
-    if (nEdges <= LocalWalkMaxEdges) {
-      val collected = e.collect().map(row => (row.get(0), row.get(1)))
-      e.unpersist(blocking = false)
-      val rootVals = r.distinct().collect().map(_.get(0))
-      val pairs = (localDescendants(collected, rootVals) ++
-        (if (inclusive) rootVals.map(v => (v, v)) else Nil)).distinct
-      return localResultDF(edges, pairs, idT, idT, withRoot = false)
-    }
-
-    var acc = if (inclusive) r else r.limit(0)
-    var frontier = r.persist(StorageLevel.MEMORY_AND_DISK)
-    var n = frontier.count()
-    var iter = 0
-    while (n > 0 && iter < maxIter) {
-      val next = frontier.join(e, col("id") === col("p"))
-        .select(col("c").as("id")).distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      n = next.count()
-      frontier.unpersist(blocking = false)
-      if (n > 0) acc = acc.union(next).distinct()
-      frontier = next
-      iter += 1
-    }
-    frontier.unpersist(blocking = false)
-    e.unpersist(blocking = false)
-    acc
-  }
+      maxIter: Int = 30): DataFrame =
+    descendantsWithRoots(edges, roots, parentCol, childCol, inclusive, maxIter)
+      .select("id").distinct()
 }

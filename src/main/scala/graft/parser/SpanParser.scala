@@ -9,7 +9,6 @@ import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.functions._
 
 import graft.model.{AttrCodec, SerializedData, SpanEventRow}
-import graft.operators.Closure
 import graft.spans.SpansOps._
 
 /** One span as the driver-side parse reads it: the narrow projection
@@ -43,7 +42,7 @@ object ParseSpan {
   * building it with distributed joins only adds a job per step.
   *
   * The distributed path is for large logs: [[taggedSpans]] /
-  * [[namedValuesDF]] / [[artifactsDF]] / [[taskRunsDF]] stay in Spark and
+  * [[namedValuesDF]] / [[taskRunsDF]] stay in Spark and
   * never collect the log. Both paths attribute spans to tasks through the
   * same walk, [[TaskAncestry]], with ownership keyed by (trace id, span
   * id).
@@ -105,8 +104,7 @@ object SpanParser {
     * Spans are partitionable by trace (one workflow run per trace — the
     * same bound the reference assumes by holding a run's spans in one
     * list), so ownership is ONE shuffle + an in-memory ancestor walk per
-    * trace, not a per-depth iterative join. [[Closure.descendantsWithRoots]]
-    * remains the fallback for pathological single-trace volumes. */
+    * trace, not a per-depth iterative join. */
   def taggedSpans(spans: DataFrame): DataFrame = {
     import org.apache.spark.sql.graftbridge.Bridge
     spans
@@ -176,18 +174,6 @@ object SpanParser {
       copy(child = newChild)
   }
 
-  /** Iterative-join variant of [[taggedSpans]] (no per-trace memory
-    * bound). NOT selected automatically — call it in place of
-    * [[taggedSpans]] when a single trace is too large for one executor's
-    * memory. Emits (task_span_id, id) only: it walks span ids across
-    * traces, so it needs ids that are unique in the whole log. */
-  def taggedSpansIterative(spans: DataFrame): DataFrame = {
-    val roots = spans.filterNested(Seq("name"), "execute-task")
-      .select(col("context.span_id"))
-    Closure.descendantsWithRoots(spans.spanEdges(), roots, inclusive = true)
-      .withColumnRenamed("root", "task_span_id")
-  }
-
   /** Payload spans (`named-value` / `artefact`, status OK) joined to their
     * owning task in the same trace. */
   def payloadDF(spans: DataFrame, pairs: DataFrame, spanName: String): DataFrame =
@@ -200,9 +186,6 @@ object SpanParser {
 
   def namedValuesDF(spans: DataFrame): DataFrame =
     payloadDF(spans, taggedSpans(spans), "named-value")
-
-  def artifactsDF(spans: DataFrame): DataFrame =
-    payloadDF(spans, taggedSpans(spans), "artefact")
 
   /** The full parse (B3/B4): spans → [[WorkflowSummary]] in one Spark job. */
   def parseSpans(spans: DataFrame): WorkflowSummary =
@@ -396,25 +379,13 @@ object SpanParser {
     ss.sortBy(s => (Option(s.startTime).getOrElse(""), Option(s.spanId).getOrElse("")))
 
   /** Attribute union of (key, raw value) entries: one value per key, or
-    * the [[resolveAttr]] conflict error. */
+    * the [[AttrCodec.resolve]] conflict error. */
   private def resolveAttrs(entries: Iterator[(String, String)]): Map[String, Any] = {
     val raws = mutable.LinkedHashMap.empty[String, mutable.LinkedHashSet[String]]
     entries.foreach { case (k, v) =>
       raws.getOrElseUpdate(k, mutable.LinkedHashSet.empty) += v
     }
-    raws.iterator.map { case (k, vs) => k -> resolveAttr(k, vs.toSeq) }.toMap
-  }
-
-  /** Single attribute value for `k` from its distinct raw renderings —
-    * throws the attributesUnion conflict contract on divergence. */
-  private[graft] def resolveAttr(k: String, raws: Seq[String]): Any = {
-    val distinct = raws.distinct
-    if (distinct.size > 1) {
-      val vs = distinct.map(AttrCodec.parse)
-      throw new IllegalArgumentException(
-        s"Encountered key=$k with different values ${vs.head} and ${vs(1)}")
-    }
-    AttrCodec.parse(distinct.head)
+    raws.iterator.map { case (k, vs) => k -> AttrCodec.resolve(k, vs.toSeq) }.toMap
   }
 
   /** Sort key tolerant of null/malformed timestamps (sorted first, like the

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.SerializedData
+import graft.queries.Battery.Row
 
 /** SURVEY §2 C1/C2 — the typed scalar codec as an oracle-checked query.
   *
@@ -67,11 +68,7 @@ object CodecOps {
       | true AS roundtrip_ok
       |FROM orders""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "c1c2_codec_roundtrip" -> codecRoundtrip _
-  )
-
-  val oracles: Map[String, String] = Map(
-    "c1c2_codec_roundtrip" -> codecRoundtripSql
+  val rows: Seq[Row] = Seq(
+    Row("c1c2_codec_roundtrip", codecRoundtrip, codecRoundtripSql)
   )
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{Checkpoints, LabelPropagation, PageRank, Triangles}
+import graft.queries.Battery.Row
 
 /** Graph-analytics queries (EXT row I8): iterative weight propagation over
   * an edge set — the link-authority prior a crawl-curation pipeline feeds
@@ -51,8 +52,21 @@ object GraphOps {
       .limit(50)
   }
 
-  private val pagerankSql =
-    """WITH pairs AS (
+  private val pagerankSql = {
+    // one damping round per CTE, each reading the previous round's ranks
+    val iters = 3
+    val rounds = (1 to iters).map { i =>
+      s"""it$i AS (
+        |  SELECT n.node,
+        |    (15 * (1000000000000 // p.n)) // 100
+        |      + (85 * COALESCE(SUM(r.r // d.outdeg), 0)) // 100 AS r
+        |  FROM nodes n CROSS JOIN params p
+        |  LEFT JOIN edges e ON e.v = n.node
+        |  LEFT JOIN ${if (i == 1) "r0" else s"it${i - 1}"} r ON r.node = e.u
+        |  LEFT JOIN deg d ON d.u = e.u
+        |  GROUP BY n.node, p.n)""".stripMargin
+    }.mkString(",\n")
+    s"""WITH pairs AS (
       |  SELECT DISTINCT l_partkey AS p, l_suppkey AS sk FROM lineitem),
       |edges AS (
       |  SELECT p AS u, sk + 1000000000 AS v FROM pairs
@@ -62,35 +76,10 @@ object GraphOps {
       |params AS (SELECT COUNT(*) AS n FROM nodes),
       |deg AS (SELECT u, COUNT(*) AS outdeg FROM edges GROUP BY u),
       |r0 AS (SELECT node, 1000000000000 // n AS r FROM nodes, params),
-      |it1 AS (
-      |  SELECT n.node,
-      |    (15 * (1000000000000 // p.n)) // 100
-      |      + (85 * COALESCE(SUM(r.r // d.outdeg), 0)) // 100 AS r
-      |  FROM nodes n CROSS JOIN params p
-      |  LEFT JOIN edges e ON e.v = n.node
-      |  LEFT JOIN r0 r ON r.node = e.u
-      |  LEFT JOIN deg d ON d.u = e.u
-      |  GROUP BY n.node, p.n),
-      |it2 AS (
-      |  SELECT n.node,
-      |    (15 * (1000000000000 // p.n)) // 100
-      |      + (85 * COALESCE(SUM(r.r // d.outdeg), 0)) // 100 AS r
-      |  FROM nodes n CROSS JOIN params p
-      |  LEFT JOIN edges e ON e.v = n.node
-      |  LEFT JOIN it1 r ON r.node = e.u
-      |  LEFT JOIN deg d ON d.u = e.u
-      |  GROUP BY n.node, p.n),
-      |it3 AS (
-      |  SELECT n.node,
-      |    (15 * (1000000000000 // p.n)) // 100
-      |      + (85 * COALESCE(SUM(r.r // d.outdeg), 0)) // 100 AS r
-      |  FROM nodes n CROSS JOIN params p
-      |  LEFT JOIN edges e ON e.v = n.node
-      |  LEFT JOIN it2 r ON r.node = e.u
-      |  LEFT JOIN deg d ON d.u = e.u
-      |  GROUP BY n.node, p.n)
-      |SELECT node, CAST(r AS BIGINT) AS rank_u FROM it3
+      |$rounds
+      |SELECT node, CAST(r AS BIGINT) AS rank_u FROM it$iters
       |ORDER BY rank_u DESC, node LIMIT 50""".stripMargin
+  }
 
   /** The high-quantity co-purchase graph shared by `i8_triangles` and
     * `i8_communities`: distinct part pairs appearing together among an
@@ -157,27 +146,27 @@ object GraphOps {
       .limit(25)
   }
 
-  private val communityCountsSql =
+  private val communityCountsSql = {
+    // one synchronous vote per CTE: most frequent neighbor label, ties to
+    // the smallest
+    val votes = 2
+    val rounds = (1 to votes).map { i =>
+      s"""r$i AS (
+        |  SELECT node, lbl FROM (
+        |    SELECT e2.v AS node, l.lbl, COUNT(*) AS c,
+        |      ROW_NUMBER() OVER (PARTITION BY e2.v
+        |        ORDER BY COUNT(*) DESC, l.lbl) AS rn
+        |    FROM e2 JOIN ${if (i == 1) "l0" else s"r${i - 1}"} l ON l.node = e2.u
+        |    GROUP BY e2.v, l.lbl) WHERE rn = 1)""".stripMargin
+    }.mkString(",\n")
     s"""WITH $copurchaseEdgesCte,
       |e2 AS (SELECT u, v FROM e UNION ALL SELECT v AS u, u AS v FROM e),
       |l0 AS (SELECT DISTINCT u AS node, u AS lbl FROM e2),
-      |r1 AS (
-      |  SELECT node, lbl FROM (
-      |    SELECT e2.v AS node, l.lbl, COUNT(*) AS c,
-      |      ROW_NUMBER() OVER (PARTITION BY e2.v
-      |        ORDER BY COUNT(*) DESC, l.lbl) AS rn
-      |    FROM e2 JOIN l0 l ON l.node = e2.u
-      |    GROUP BY e2.v, l.lbl) WHERE rn = 1),
-      |r2 AS (
-      |  SELECT node, lbl FROM (
-      |    SELECT e2.v AS node, l.lbl, COUNT(*) AS c,
-      |      ROW_NUMBER() OVER (PARTITION BY e2.v
-      |        ORDER BY COUNT(*) DESC, l.lbl) AS rn
-      |    FROM e2 JOIN r1 l ON l.node = e2.u
-      |    GROUP BY e2.v, l.lbl) WHERE rn = 1)
+      |$rounds
       |SELECT lbl AS community, COUNT(*) AS n_members
-      |FROM r2 GROUP BY 1
+      |FROM r$votes GROUP BY 1
       |ORDER BY n_members DESC, community LIMIT 25""".stripMargin
+  }
 
   /** I8d — 20-core of the co-purchase graph ([[graft.operators.KCore]]):
     * synchronous peeling run to TRUE convergence (3/8/10 rounds at sf
@@ -216,17 +205,10 @@ object GraphOps {
       |GROUP BY s.u""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "i8_pagerank" -> pagerank _,
-    "i8_triangles" -> triangleCounts _,
-    "i8_communities" -> communityCounts _,
-    "i8_kcore" -> kcore _
-  )
-
-  val oracles: Map[String, String] = Map(
-    "i8_pagerank" -> pagerankSql,
-    "i8_triangles" -> triangleCountsSql,
-    "i8_communities" -> communityCountsSql,
-    "i8_kcore" -> kcoreSql
+  val rows: Seq[Row] = Seq(
+    Row("i8_pagerank", pagerank, pagerankSql),
+    Row("i8_triangles", triangleCounts, triangleCountsSql),
+    Row("i8_communities", communityCounts, communityCountsSql),
+    Row("i8_kcore", kcore, kcoreSql)
   )
 }

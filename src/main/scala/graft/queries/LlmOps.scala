@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.llm.{Bpe, Chunking, Decontamination, Dedup, IncrementalCuration, KMeans, Multimodal, Privacy, QualityClassifier, Retrieval, Sampling, Similarity, Snapshots, TextAnalysis}
 import graft.operators.Checkpoints
+import graft.queries.Battery.Row
 
 /** SURVEY §2 Group I — LLM-data-pipeline operators as oracle-checked
   * queries over `documents` / `embeddings`.
@@ -58,6 +59,19 @@ object LlmOps {
     Dedup.jaccardPairs(docs, "doc_id", "text", n = 3, threshold = threshold,
       maxShingleFreq = Some(1000), shingler = Dedup.wordShingles)
 
+  /** The oracle's distinct word-3-gram shingles of a word array `w` —
+    * the SQL twin of [[Dedup.wordShingles]], shared by every word-3-gram
+    * oracle below. */
+  private val wordShinglesSql =
+    """list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
+      |   for i in range(1, len(w) - 1)])""".stripMargin
+
+  /** Exact Jaccard of two docs' shingle lists `sa.s` and `sb.s` — the SQL
+    * twin of the verify stage's `setJaccard`. */
+  private val setJaccardSql =
+    """CAST(len(list_intersect(sa.s, sb.s)) AS DOUBLE)
+      |   / (len(sa.s) + len(sb.s) - len(list_intersect(sa.s, sb.s)))""".stripMargin
+
   /** Word-3-gram Jaccard pair SQL at `threshold` — shared by the
     * `i2_ngram_jaccard` oracle and the containment gate's oracle.
     * Parameterized over the input relation so composed pipelines
@@ -65,8 +79,7 @@ object LlmOps {
   private def ngramJaccardSqlAt(threshold: Double, rel: String = "documents") =
     s"""WITH ws AS (SELECT doc_id, regexp_split_to_array(text, ' +') AS w FROM $rel),
       |sh AS (
-      | SELECT doc_id, unnest(list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-      |   for i in range(1, len(w) - 1)])) AS s
+      | SELECT doc_id, unnest($wordShinglesSql) AS s
       | FROM ws WHERE len(w) >= 3),
       |freq AS (SELECT s FROM sh GROUP BY s HAVING COUNT(*) <= 1000),
       |shf AS (SELECT doc_id, sh.s FROM sh JOIN freq ON sh.s = freq.s),
@@ -110,6 +123,50 @@ object LlmOps {
       | MIN(r) = id AS is_representative
       |FROM reach GROUP BY id""".stripMargin
 
+  /** The verdict CTEs over scored pairs `j(doc_q, doc_b, jac)` — the SQL
+    * twin of `Dedup.verdicts`: `v` per-batch-doc match count and best
+    * Jaccard, `bm` the best match (smallest base id on ties). */
+  private val verdictCtesSql =
+    """v AS (SELECT doc_q, COUNT(*) AS n_matches, MAX(jac) AS best_jaccard
+      | FROM j GROUP BY 1),
+      |bm AS (SELECT j.doc_q, MIN(j.doc_b) AS best_match
+      | FROM j JOIN v ON j.doc_q = v.doc_q AND j.jac = v.best_jaccard
+      | GROUP BY 1)""".stripMargin
+
+  /** [[verdictCtesSql]] and the one-row-per-batch-doc verdict select of
+    * the incremental rows (batch = doc_id % 10 == 0). */
+  private val batchVerdictsSql =
+    s"""$verdictCtesSql
+      |SELECT d.doc_id, CAST(COALESCE(v.n_matches, 0) AS BIGINT) AS n_matches,
+      | bm.best_match, v.best_jaccard, v.doc_q IS NOT NULL AS is_dup
+      |FROM documents d
+      |LEFT JOIN v ON v.doc_q = d.doc_id
+      |LEFT JOIN bm ON bm.doc_q = d.doc_id
+      |WHERE d.doc_id % 10 = 0""".stripMargin
+
+  /** The incremental rows' distinct word-3-gram shingles
+    * `sh(doc_id, is_batch, s)`, batch = doc_id % 10 == 0. */
+  private val batchShinglesCtes =
+    s"""ws AS (SELECT doc_id, doc_id % 10 = 0 AS is_batch,
+      |  regexp_split_to_array(text, ' +') AS w FROM documents),
+      |sh AS (
+      | SELECT doc_id, is_batch,
+      |  unnest($wordShinglesSql) AS s
+      | FROM ws WHERE len(w) >= 3)""".stripMargin
+
+  /** Batch × base Jaccard `j(doc_q, doc_b, jac)` at 0.5 from shared-shingle
+    * counts `shared(doc_q, doc_b, n_shared)` and uncapped `sizes(doc_id,
+    * n_sh)`, then [[batchVerdictsSql]]. */
+  private val sharedJaccardVerdictsSql =
+    s"""j AS (
+      | SELECT doc_q, doc_b,
+      |  CAST(n_shared AS DOUBLE) / (sa.n_sh + sb.n_sh - n_shared) AS jac
+      | FROM shared
+      | JOIN sizes sa ON sa.doc_id = doc_q
+      | JOIN sizes sb ON sb.doc_id = doc_b
+      | WHERE CAST(n_shared AS DOUBLE) / (sa.n_sh + sb.n_sh - n_shared) >= 0.5),
+      |$batchVerdictsSql""".stripMargin
+
   /** I2i — incremental dedup ([[Dedup.incrementalDedup]]): the 10%
     * increment (doc_id % 10 == 0) deduped against the standing 90% base —
     * the daily-batch-vs-corpus production shape. One verdict row per
@@ -128,13 +185,7 @@ object LlmOps {
   }
 
   private val incrementalDedupSql =
-    """WITH ws AS (SELECT doc_id, doc_id % 10 = 0 AS is_batch,
-      |  regexp_split_to_array(text, ' +') AS w FROM documents),
-      |sh AS (
-      | SELECT doc_id, is_batch,
-      |  unnest(list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-      |   for i in range(1, len(w) - 1)])) AS s
-      | FROM ws WHERE len(w) >= 3),
+    s"""WITH $batchShinglesCtes,
       |freq AS (SELECT s FROM sh GROUP BY s HAVING COUNT(*) <= 1000),
       |shf AS (SELECT doc_id, is_batch, sh.s FROM sh JOIN freq ON sh.s = freq.s),
       |sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY 1),
@@ -142,24 +193,7 @@ object LlmOps {
       | SELECT a.doc_id AS doc_q, b.doc_id AS doc_b, COUNT(*) AS n_shared
       | FROM shf a JOIN shf b ON a.s = b.s AND a.is_batch AND NOT b.is_batch
       | GROUP BY 1, 2),
-      |j AS (
-      | SELECT doc_q, doc_b,
-      |  CAST(n_shared AS DOUBLE) / (sa.n_sh + sb.n_sh - n_shared) AS jac
-      | FROM shared
-      | JOIN sizes sa ON sa.doc_id = doc_q
-      | JOIN sizes sb ON sb.doc_id = doc_b
-      | WHERE CAST(n_shared AS DOUBLE) / (sa.n_sh + sb.n_sh - n_shared) >= 0.5),
-      |v AS (SELECT doc_q, COUNT(*) AS n_matches, MAX(jac) AS best_jaccard
-      | FROM j GROUP BY 1),
-      |bm AS (SELECT j.doc_q, MIN(j.doc_b) AS best_match
-      | FROM j JOIN v ON j.doc_q = v.doc_q AND j.jac = v.best_jaccard
-      | GROUP BY 1)
-      |SELECT d.doc_id, CAST(COALESCE(v.n_matches, 0) AS BIGINT) AS n_matches,
-      | bm.best_match, v.best_jaccard, v.doc_q IS NOT NULL AS is_dup
-      |FROM documents d
-      |LEFT JOIN v ON v.doc_q = d.doc_id
-      |LEFT JOIN bm ON bm.doc_q = d.doc_id
-      |WHERE d.doc_id % 10 = 0""".stripMargin
+      |$sharedJaccardVerdictsSql""".stripMargin
 
   /** I2i-INDEX — incremental dedup against a PERSISTED posting index: the
     * base side's (shingle → posting list, sizes, counts) artifact is
@@ -191,13 +225,7 @@ object LlmOps {
   }
 
   private val incrementalIndexSql =
-    """WITH ws AS (SELECT doc_id, doc_id % 10 = 0 AS is_batch,
-      |  regexp_split_to_array(text, ' +') AS w FROM documents),
-      |sh AS (
-      | SELECT doc_id, is_batch,
-      |  unnest(list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-      |   for i in range(1, len(w) - 1)])) AS s
-      | FROM ws WHERE len(w) >= 3),
+    s"""WITH $batchShinglesCtes,
       |freq AS (SELECT s FROM sh WHERE NOT is_batch
       | GROUP BY s HAVING COUNT(*) <= 1000),
       |bsh AS (SELECT doc_id, sh.s FROM sh JOIN freq ON sh.s = freq.s
@@ -207,24 +235,7 @@ object LlmOps {
       | SELECT a.doc_id AS doc_q, b.doc_id AS doc_b, COUNT(*) AS n_shared
       | FROM sh a JOIN bsh b ON a.s = b.s AND a.is_batch
       | GROUP BY 1, 2),
-      |j AS (
-      | SELECT doc_q, doc_b,
-      |  CAST(n_shared AS DOUBLE) / (sa.n_sh + sb.n_sh - n_shared) AS jac
-      | FROM shared
-      | JOIN sizes sa ON sa.doc_id = doc_q
-      | JOIN sizes sb ON sb.doc_id = doc_b
-      | WHERE CAST(n_shared AS DOUBLE) / (sa.n_sh + sb.n_sh - n_shared) >= 0.5),
-      |v AS (SELECT doc_q, COUNT(*) AS n_matches, MAX(jac) AS best_jaccard
-      | FROM j GROUP BY 1),
-      |bm AS (SELECT j.doc_q, MIN(j.doc_b) AS best_match
-      | FROM j JOIN v ON j.doc_q = v.doc_q AND j.jac = v.best_jaccard
-      | GROUP BY 1)
-      |SELECT d.doc_id, CAST(COALESCE(v.n_matches, 0) AS BIGINT) AS n_matches,
-      | bm.best_match, v.best_jaccard, v.doc_q IS NOT NULL AS is_dup
-      |FROM documents d
-      |LEFT JOIN v ON v.doc_q = d.doc_id
-      |LEFT JOIN bm ON bm.doc_q = d.doc_id
-      |WHERE d.doc_id % 10 = 0""".stripMargin
+      |$sharedJaccardVerdictsSql""".stripMargin
 
   /** I2i-BAND — near-dup verdicts from the PERSISTED band index
     * ([[graft.llm.Dedup.buildBandIndex]]): the stored artifact is
@@ -278,29 +289,16 @@ object LlmOps {
       |wws AS (SELECT doc_id, regexp_split_to_array(text, ' +') AS w
       | FROM ws WHERE text IS NOT NULL),
       |wsh AS (
-      | SELECT doc_id, list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-      |   for i in range(1, len(w) - 1)]) AS s
+      | SELECT doc_id, $wordShinglesSql AS s
       | FROM wws WHERE len(w) >= 3),
       |j AS (
       | SELECT doc_q, doc_b,
-      |  CAST(len(list_intersect(sa.s, sb.s)) AS DOUBLE)
-      |   / (len(sa.s) + len(sb.s) - len(list_intersect(sa.s, sb.s))) AS jac
+      |  $setJaccardSql AS jac
       | FROM cand
       | JOIN wsh sa ON sa.doc_id = doc_q
       | JOIN wsh sb ON sb.doc_id = doc_b
-      | WHERE CAST(len(list_intersect(sa.s, sb.s)) AS DOUBLE)
-      |   / (len(sa.s) + len(sb.s) - len(list_intersect(sa.s, sb.s))) >= 0.5),
-      |v AS (SELECT doc_q, COUNT(*) AS n_matches, MAX(jac) AS best_jaccard
-      | FROM j GROUP BY 1),
-      |bm AS (SELECT j.doc_q, MIN(j.doc_b) AS best_match
-      | FROM j JOIN v ON j.doc_q = v.doc_q AND j.jac = v.best_jaccard
-      | GROUP BY 1)
-      |SELECT d.doc_id, CAST(COALESCE(v.n_matches, 0) AS BIGINT) AS n_matches,
-      | bm.best_match, v.best_jaccard, v.doc_q IS NOT NULL AS is_dup
-      |FROM documents d
-      |LEFT JOIN v ON v.doc_q = d.doc_id
-      |LEFT JOIN bm ON bm.doc_q = d.doc_id
-      |WHERE d.doc_id % 10 = 0""".stripMargin
+      | WHERE $setJaccardSql >= 0.5),
+      |$batchVerdictsSql""".stripMargin
 
   /** I2j — canonical selection: WHICH copy of a near-dup cluster
     * survives. `i2_fuzzy_dedup_e2e` pins the structural min-id rule; real
@@ -382,16 +380,14 @@ object LlmOps {
       | FROM snr a JOIN snr b ON b.rn > a.rn AND b.rn <= a.rn + 8),
       |snws AS (SELECT doc_id, regexp_split_to_array(text, ' +') AS w FROM snb),
       |snsh AS (
-      | SELECT doc_id, list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-      |   for i in range(1, len(w) - 1)]) AS s
+      | SELECT doc_id, $wordShinglesSql AS s
       | FROM snws WHERE len(w) >= 3),
       |high AS (
       | SELECT ca AS doc_a, cb AS doc_b
       | FROM sncand
       | JOIN snsh sa ON sa.doc_id = ca
       | JOIN snsh sb ON sb.doc_id = cb
-      | WHERE CAST(len(list_intersect(sa.s, sb.s)) AS DOUBLE)
-      |   / (len(sa.s) + len(sb.s) - len(list_intersect(sa.s, sb.s))) >= 0.5)""".stripMargin
+      | WHERE $setJaccardSql >= 0.5)""".stripMargin
 
   /** The canonical-keep CTE chain over `rel` (sans leading WITH) — shared
     * by the standalone oracle and the composed i6_curation_v4 oracle. */
@@ -637,16 +633,14 @@ object LlmOps {
       |lws AS (SELECT doc_id, regexp_split_to_array(text, ' +') AS w
       | FROM $rel WHERE text IS NOT NULL),
       |lsh3 AS (
-      | SELECT doc_id, list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-      |   for i in range(1, len(w) - 1)]) AS s
+      | SELECT doc_id, $wordShinglesSql AS s
       | FROM lws WHERE len(w) >= 3),
       |high AS (
       | SELECT ca AS doc_a, cb AS doc_b
       | FROM lshcand
       | JOIN lsh3 sa ON sa.doc_id = ca
       | JOIN lsh3 sb ON sb.doc_id = cb
-      | WHERE CAST(len(list_intersect(sa.s, sb.s)) AS DOUBLE)
-      |   / (len(sa.s) + len(sb.s) - len(list_intersect(sa.s, sb.s))) >= 0.5)""".stripMargin
+      | WHERE $setJaccardSql >= 0.5)""".stripMargin
 
   private val simhashContainmentSql =
     s"""WITH high AS (${ngramJaccardSqlAt(0.7)})
@@ -842,23 +836,23 @@ object LlmOps {
       nList = 16, nProbe = 4, updates = 1)
   }
 
-  private val ivfAnnSql =
-    s"""WITH ${kmeansAssignCteK(16)},
-      |probes AS (
-      | SELECT vec_id AS query_id, cid FROM (
-      |  SELECT vec_id, cid,
-      |   ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-      |  FROM d1) WHERE rn <= 4),
-      |qs AS (
+  /** The quantized-cosine features of every embedding: `qs` (the 1e-6
+    * integer grid), `fl` (one row per component) and `nr` (norms) —
+    * shared by the IVF, LSH and SemDeDup oracles. */
+  private val cosineFeatureCtes =
+    """qs AS (
       | SELECT vec_id, [CAST(floor(CAST(x AS DOUBLE)*1000000) AS BIGINT) for x in embedding] AS v
       | FROM embeddings),
       |fl AS (SELECT vec_id, unnest(v) AS e, generate_subscripts(v,1) AS i FROM qs),
-      |nr AS (SELECT vec_id, sqrt(CAST(SUM(e*e) AS DOUBLE)) AS nrm FROM fl GROUP BY 1),
-      |cand AS (
-      | SELECT p.query_id, a1.vec_id AS neighbor_id
-      | FROM probes p JOIN a1 ON a1.cid = p.cid
-      |  AND a1.vec_id <> p.query_id),
-      |dots AS (
+      |nr AS (SELECT vec_id, sqrt(CAST(SUM(e*e) AS DOUBLE)) AS nrm FROM fl GROUP BY 1)""".stripMargin
+
+  /** The exact-cosine rerank of ANN candidates `cand(query_id,
+    * neighbor_id)` over [[cosineFeatureCtes]]: the dot products (as CTE
+    * `dots`; the LSH oracle, which has a `dots` CTE already, names it
+    * otherwise), then the top-5 per query (ties to the smallest neighbor
+    * id) — shared by the IVF and LSH top-k oracles. */
+  private def candCosineRankSql(dots: String) =
+    s"""$dots AS (
       | SELECT c.query_id, c.neighbor_id, SUM(fa.e*fb.e) AS dot
       | FROM cand c
       | JOIN fl fa ON fa.vec_id = c.query_id
@@ -870,10 +864,38 @@ object LlmOps {
       |  ROW_NUMBER() OVER (PARTITION BY query_id
       |   ORDER BY CAST(dot AS DOUBLE) / (na.nrm * nb.nrm) DESC,
       |    neighbor_id ASC) AS rank
-      | FROM dots
+      | FROM $dots
       | JOIN nr na ON na.vec_id = query_id
       | JOIN nr nb ON nb.vec_id = neighbor_id
       | WHERE na.nrm > 0 AND nb.nrm > 0)
+      |WHERE rank <= 5""".stripMargin
+
+  private val ivfAnnSql =
+    s"""WITH ${kmeansAssignCteK(16)},
+      |probes AS (
+      | SELECT vec_id AS query_id, cid FROM (
+      |  SELECT vec_id, cid,
+      |   ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
+      |  FROM d1) WHERE rn <= 4),
+      |$cosineFeatureCtes,
+      |cand AS (
+      | SELECT p.query_id, a1.vec_id AS neighbor_id
+      | FROM probes p JOIN a1 ON a1.cid = p.cid
+      |  AND a1.vec_id <> p.query_id),
+      |${candCosineRankSql("dots")}""".stripMargin
+
+  /** The PQ-ADC top-5 select over `pair(query_id, neighbor_id, dot, rn2)`
+    * and the query norms CTE `qn` — the cosine against each corpus row's
+    * reconstruction norm, shared by the PQ and IVF-PQ top-k oracles. */
+  private def pqRankSql(qn: String) =
+    s"""SELECT query_id, neighbor_id, cos_sim, rank FROM (
+      | SELECT p.query_id, p.neighbor_id,
+      |  CAST(p.dot AS DOUBLE) / (q.nrm * sqrt(CAST(p.rn2 AS DOUBLE))) AS cos_sim,
+      |  ROW_NUMBER() OVER (PARTITION BY p.query_id
+      |   ORDER BY CAST(p.dot AS DOUBLE) / (q.nrm * sqrt(CAST(p.rn2 AS DOUBLE))) DESC,
+      |    p.neighbor_id ASC) AS rank
+      | FROM pair p JOIN $qn q ON q.vec_id = p.query_id
+      | WHERE q.nrm > 0 AND p.rn2 > 0)
       |WHERE rank <= 5""".stripMargin
 
   def pqRecallGate(s: SparkSession, d: String): DataFrame =
@@ -937,15 +959,7 @@ object LlmOps {
       | JOIN p_lut l ON l.qid = c.query_id AND l.b = cd.b AND l.cid = cd.cid
       | JOIN p_n2 n2 ON n2.b = cd.b AND n2.cid = cd.cid
       | GROUP BY 1, 2)
-      |SELECT query_id, neighbor_id, cos_sim, rank FROM (
-      | SELECT p.query_id, p.neighbor_id,
-      |  CAST(p.dot AS DOUBLE) / (q.nrm * sqrt(CAST(p.rn2 AS DOUBLE))) AS cos_sim,
-      |  ROW_NUMBER() OVER (PARTITION BY p.query_id
-      |   ORDER BY CAST(p.dot AS DOUBLE) / (q.nrm * sqrt(CAST(p.rn2 AS DOUBLE))) DESC,
-      |    p.neighbor_id ASC) AS rank
-      | FROM pair p JOIN p_qn q ON q.vec_id = p.query_id
-      | WHERE q.nrm > 0 AND p.rn2 > 0)
-      |WHERE rank <= 5""".stripMargin
+      |${pqRankSql("p_qn")}""".stripMargin
 
   /** The PQ k-means/encode/score CTE chain, name-prefixed so the
     * standalone `i3_pq_ann_topk` oracle and the composed
@@ -1013,15 +1027,26 @@ object LlmOps {
       | JOIN lut l ON l.b = c.b AND l.cid = c.cid AND l.qid <> c.vec_id
       | JOIN n2 ON n2.b = c.b AND n2.cid = c.cid
       | GROUP BY 1, 2)
-      |SELECT query_id, neighbor_id, cos_sim, rank FROM (
-      | SELECT p.query_id, p.neighbor_id,
-      |  CAST(p.dot AS DOUBLE) / (q.nrm * sqrt(CAST(p.rn2 AS DOUBLE))) AS cos_sim,
-      |  ROW_NUMBER() OVER (PARTITION BY p.query_id
-      |   ORDER BY CAST(p.dot AS DOUBLE) / (q.nrm * sqrt(CAST(p.rn2 AS DOUBLE))) DESC,
-      |    p.neighbor_id ASC) AS rank
-      | FROM pair p JOIN qn q ON q.vec_id = p.query_id
-      | WHERE q.nrm > 0 AND p.rn2 > 0)
+      |${pqRankSql("qn")}""".stripMargin
+
+  /** The exact-cosine top-5 select over `dots(query_id, neighbor_id,
+    * dot)` and squared `norms(vec_id, nrm)`, ranked per query (ties to
+    * the smallest neighbor id) — shared by the brute-force, query-batch,
+    * filtered and SQ8 top-k oracles. `nonZeroNorms` drops pairs with a
+    * zero-norm side. */
+  private def cosineRankSql(nonZeroNorms: Boolean) = {
+    val nz = if (nonZeroNorms) "\n WHERE na.nrm > 0 AND nb.nrm > 0" else ""
+    s"""SELECT query_id, neighbor_id, cos_sim, rank FROM (
+      | SELECT query_id, neighbor_id,
+      |  CAST(dot AS DOUBLE) / (sqrt(CAST(na.nrm AS DOUBLE)) * sqrt(CAST(nb.nrm AS DOUBLE))) AS cos_sim,
+      |  ROW_NUMBER() OVER (PARTITION BY query_id
+      |    ORDER BY CAST(dot AS DOUBLE) / (sqrt(CAST(na.nrm AS DOUBLE)) * sqrt(CAST(nb.nrm AS DOUBLE))) DESC,
+      |      neighbor_id ASC) AS rank
+      | FROM dots
+      | JOIN norms na ON na.vec_id = query_id
+      | JOIN norms nb ON nb.vec_id = neighbor_id$nz)
       |WHERE rank <= 5""".stripMargin
+  }
 
   /** I3a — brute-force cosine top-5 neighbors per embedding. */
   def cosineTopK(s: SparkSession, d: String): DataFrame = {
@@ -1045,7 +1070,7 @@ object LlmOps {
   }
 
   private val queryBatchTopKSql =
-    """WITH v AS (
+    s"""WITH v AS (
       | SELECT vec_id, [CAST(floor(CAST(x AS DOUBLE)*1000000) AS BIGINT) for x in embedding] AS v
       | FROM embeddings),
       |flat AS (SELECT vec_id, unnest(v) AS e, generate_subscripts(v,1) AS i FROM v),
@@ -1054,17 +1079,7 @@ object LlmOps {
       | SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, SUM(q.e*c.e) AS dot
       | FROM flat q JOIN flat c ON q.i = c.i AND q.vec_id < 64 AND c.vec_id >= 64
       | GROUP BY 1, 2)
-      |SELECT query_id, neighbor_id, cos_sim, rank FROM (
-      | SELECT query_id, neighbor_id,
-      |  CAST(dot AS DOUBLE) / (sqrt(CAST(na.nrm AS DOUBLE)) * sqrt(CAST(nb.nrm AS DOUBLE))) AS cos_sim,
-      |  ROW_NUMBER() OVER (PARTITION BY query_id
-      |    ORDER BY CAST(dot AS DOUBLE) / (sqrt(CAST(na.nrm AS DOUBLE)) * sqrt(CAST(nb.nrm AS DOUBLE))) DESC,
-      |      neighbor_id ASC) AS rank
-      | FROM dots
-      | JOIN norms na ON na.vec_id = query_id
-      | JOIN norms nb ON nb.vec_id = neighbor_id
-      | WHERE na.nrm > 0 AND nb.nrm > 0)
-      |WHERE rank <= 5""".stripMargin
+      |${cosineRankSql(nonZeroNorms = true)}""".stripMargin
 
   /** I3k — FILTERED vector serving: top-5 under a metadata predicate
     * (`label IN (0, 1)`), the restriction axis every production vector
@@ -1086,7 +1101,7 @@ object LlmOps {
   }
 
   private val filteredTopKSql =
-    """WITH v AS (
+    s"""WITH v AS (
       | SELECT vec_id, label,
       |  [CAST(floor(CAST(x AS DOUBLE)*1000000) AS BIGINT) for x in embedding] AS v
       | FROM embeddings),
@@ -1097,17 +1112,7 @@ object LlmOps {
       | FROM flat q JOIN flat c ON q.i = c.i AND q.vec_id < 32
       |  AND c.vec_id >= 32 AND c.label IN (0, 1)
       | GROUP BY 1, 2)
-      |SELECT query_id, neighbor_id, cos_sim, rank FROM (
-      | SELECT query_id, neighbor_id,
-      |  CAST(dot AS DOUBLE) / (sqrt(CAST(na.nrm AS DOUBLE)) * sqrt(CAST(nb.nrm AS DOUBLE))) AS cos_sim,
-      |  ROW_NUMBER() OVER (PARTITION BY query_id
-      |    ORDER BY CAST(dot AS DOUBLE) / (sqrt(CAST(na.nrm AS DOUBLE)) * sqrt(CAST(nb.nrm AS DOUBLE))) DESC,
-      |      neighbor_id ASC) AS rank
-      | FROM dots
-      | JOIN norms na ON na.vec_id = query_id
-      | JOIN norms nb ON nb.vec_id = neighbor_id
-      | WHERE na.nrm > 0 AND nb.nrm > 0)
-      |WHERE rank <= 5""".stripMargin
+      |${cosineRankSql(nonZeroNorms = true)}""".stripMargin
 
   /** I3f scale path — IVF-accelerated serving gate: rank-1 recall of
     * [[Similarity.ivfServe]] (cell-probed corpus scan) against exact
@@ -1156,7 +1161,7 @@ object LlmOps {
       |FROM embeddings WHERE vec_id < 64""".stripMargin
 
   private val cosineTopKSql =
-    """WITH q AS (
+    s"""WITH q AS (
       | SELECT vec_id, [CAST(floor(CAST(x AS DOUBLE)*1000000) AS BIGINT) for x in embedding] AS v
       | FROM embeddings),
       |flat AS (SELECT vec_id, unnest(v) AS e, generate_subscripts(v,1) AS i FROM q),
@@ -1164,16 +1169,7 @@ object LlmOps {
       |dots AS (
       | SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id, SUM(a.e*b.e) AS dot
       | FROM flat a JOIN flat b ON a.i = b.i AND a.vec_id <> b.vec_id GROUP BY 1, 2)
-      |SELECT query_id, neighbor_id, cos_sim, rank FROM (
-      | SELECT query_id, neighbor_id,
-      |  CAST(dot AS DOUBLE) / (sqrt(CAST(na.nrm AS DOUBLE)) * sqrt(CAST(nb.nrm AS DOUBLE))) AS cos_sim,
-      |  ROW_NUMBER() OVER (PARTITION BY query_id
-      |    ORDER BY CAST(dot AS DOUBLE) / (sqrt(CAST(na.nrm AS DOUBLE)) * sqrt(CAST(nb.nrm AS DOUBLE))) DESC,
-      |      neighbor_id ASC) AS rank
-      | FROM dots
-      | JOIN norms na ON na.vec_id = query_id
-      | JOIN norms nb ON nb.vec_id = neighbor_id)
-      |WHERE rank <= 5""".stripMargin
+      |${cosineRankSql(nonZeroNorms = false)}""".stripMargin
 
   /** I3j — scalar-quantization (SQ8) retrieval
     * ([[Similarity.sq8TopK]]): the 10 lowest-id vectors served against
@@ -1187,7 +1183,7 @@ object LlmOps {
       nQueries = 10, k = 5)
 
   private val sq8TopKSql =
-    """WITH e AS (
+    s"""WITH e AS (
       | SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS v
       | FROM embeddings WHERE embedding IS NOT NULL),
       |flat AS (SELECT vec_id, unnest(v) AS x, generate_subscripts(v,1) AS i FROM e),
@@ -1206,16 +1202,7 @@ object LlmOps {
       | FROM recon q JOIN recon c ON q.i = c.i
       |  AND q.vec_id < 10 AND c.vec_id <> q.vec_id
       | GROUP BY 1, 2)
-      |SELECT query_id, neighbor_id, cos_sim, rank FROM (
-      | SELECT query_id, neighbor_id,
-      |  CAST(dot AS DOUBLE) / (sqrt(CAST(na.nrm AS DOUBLE)) * sqrt(CAST(nb.nrm AS DOUBLE))) AS cos_sim,
-      |  ROW_NUMBER() OVER (PARTITION BY query_id
-      |    ORDER BY CAST(dot AS DOUBLE) / (sqrt(CAST(na.nrm AS DOUBLE)) * sqrt(CAST(nb.nrm AS DOUBLE))) DESC,
-      |      neighbor_id ASC) AS rank
-      | FROM dots
-      | JOIN norms na ON na.vec_id = query_id
-      | JOIN norms nb ON nb.vec_id = neighbor_id)
-      |WHERE rank <= 5""".stripMargin
+      |${cosineRankSql(nonZeroNorms = false)}""".stripMargin
 
   /** I3h — hard-negative mining: for the 50 lowest-id query vectors, the
     * top-5 most similar corpus vectors with a DIFFERENT label. See
@@ -1270,7 +1257,7 @@ object LlmOps {
       window = 8, keyPrefixLen = 24, n = 3, threshold = 0.5)
 
   private val sortedNeighborsSql =
-    """WITH base AS (
+    s"""WITH base AS (
       | SELECT doc_id, text, substr(trim(text), 1, 24) AS sk
       | FROM documents WHERE text IS NOT NULL),
       |r AS (
@@ -1282,8 +1269,7 @@ object LlmOps {
       | FROM r a JOIN r b ON b.rn > a.rn AND b.rn <= a.rn + 8),
       |ws AS (SELECT doc_id, regexp_split_to_array(text, ' +') AS w FROM base),
       |sh AS (
-      | SELECT doc_id, list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-      |   for i in range(1, len(w) - 1)]) AS s
+      | SELECT doc_id, $wordShinglesSql AS s
       | FROM ws WHERE len(w) >= 3),
       |scored AS (
       | SELECT ca AS doc_a, cb AS doc_b,
@@ -1386,11 +1372,7 @@ object LlmOps {
 
   private val semDedupSql =
     s"""WITH $kmeansAssignCte,
-      |qs AS (
-      | SELECT vec_id, [CAST(floor(CAST(x AS DOUBLE)*1000000) AS BIGINT) for x in embedding] AS v
-      | FROM embeddings),
-      |fl AS (SELECT vec_id, unnest(v) AS e, generate_subscripts(v,1) AS i FROM qs),
-      |nr AS (SELECT vec_id, sqrt(CAST(SUM(e*e) AS DOUBLE)) AS nrm FROM fl GROUP BY 1),
+      |$cosineFeatureCtes,
       |dots AS (
       | SELECT aa.vec_id AS va, bb.vec_id AS vb, SUM(fa.e*fb.e) AS dot
       | FROM a1 aa JOIN a1 bb ON aa.cid = bb.cid AND aa.vec_id < bb.vec_id
@@ -1540,12 +1522,7 @@ object LlmOps {
     * the auto row. */
   private def lshTopKSqlWith(nTables: Int, planesSrc: String) = {
     val wVal = Relational.hexValSql("'lsh:' || t.t || ':' || j.j || ':' || (d.i - 1)", 1)
-    s"""WITH qs AS (
-      | SELECT vec_id,
-      |  [CAST(floor(CAST(x AS DOUBLE)*1000000) AS BIGINT) for x in embedding] AS v
-      | FROM embeddings),
-      |fl AS (SELECT vec_id, unnest(v) AS e, generate_subscripts(v,1) AS i FROM qs),
-      |nr AS (SELECT vec_id, sqrt(CAST(SUM(e*e) AS DOUBLE)) AS nrm FROM fl GROUP BY 1),
+    s"""WITH $cosineFeatureCtes,
       |dims AS (SELECT DISTINCT i FROM fl),
       |pl AS ($planesSrc),
       |js AS (SELECT unnest(range(p)) AS j FROM pl),
@@ -1563,23 +1540,7 @@ object LlmOps {
       | SELECT DISTINCT a.vec_id AS query_id, b.vec_id AS neighbor_id
       | FROM buckets a JOIN buckets b
       |  ON b.t = a.t AND b.bucket = a.bucket AND b.vec_id <> a.vec_id),
-      |dot2 AS (
-      | SELECT c.query_id, c.neighbor_id, SUM(fa.e*fb.e) AS dot
-      | FROM cand c
-      | JOIN fl fa ON fa.vec_id = c.query_id
-      | JOIN fl fb ON fb.vec_id = c.neighbor_id AND fb.i = fa.i
-      | GROUP BY 1, 2)
-      |SELECT query_id, neighbor_id, cos_sim, rank FROM (
-      | SELECT query_id, neighbor_id,
-      |  CAST(dot AS DOUBLE) / (na.nrm * nb.nrm) AS cos_sim,
-      |  ROW_NUMBER() OVER (PARTITION BY query_id
-      |   ORDER BY CAST(dot AS DOUBLE) / (na.nrm * nb.nrm) DESC,
-      |    neighbor_id ASC) AS rank
-      | FROM dot2
-      | JOIN nr na ON na.vec_id = query_id
-      | JOIN nr nb ON nb.vec_id = neighbor_id
-      | WHERE na.nrm > 0 AND nb.nrm > 0)
-      |WHERE rank <= 5""".stripMargin
+      |${candCosineRankSql("dot2")}""".stripMargin
   }
 
   private val lshAnnSql = lshTopKSqlWith(8, "SELECT 6 AS p")
@@ -2081,15 +2042,19 @@ object LlmOps {
     temperatureMixtureOver(surv)
   }
 
-  private val curationV4Sql =
-    s"""WITH RECURSIVE $anchorSliceCte,
-      |exact AS MATERIALIZED (
+  /** The oracle twin of [[curationWith]]: exact dedup (min id per content
+    * hash) → the `keepCtes` canonical-keep chain over the survivors →
+    * temperature mixture over the kept rows. `sliced` runs it on the
+    * anchor slice, as the v4/v5 rows do. */
+  private def curationSql(sliced: Boolean, keepCtes: String => String) = {
+    val (slice, rel) = if (sliced) (s"$anchorSliceCte,\n", "docs2") else ("", "documents")
+    s"""WITH RECURSIVE ${slice}exact AS MATERIALIZED (
       | SELECT doc_id, text, lang, source, n_chars FROM (
       |  SELECT doc_id, text, lang, source, n_chars,
       |   MIN(doc_id) OVER (PARTITION BY md5(text)) AS rep
-      |  FROM docs2)
+      |  FROM $rel)
       | WHERE text IS NULL OR doc_id = rep),
-      |${canonicalKeepCtesOver("exact")},
+      |${keepCtes("exact")},
       |surv AS MATERIALIZED (
       | SELECT e.doc_id, e.source, e.text FROM exact e
       | JOIN x ON x.doc_id = e.doc_id
@@ -2097,23 +2062,11 @@ object LlmOps {
       |  AND e.doc_id = k.keep_id),
       |${temperatureCtesOver("surv")}
       |$temperatureSelectSql""".stripMargin
+  }
 
-  private val curationV5Sql =
-    s"""WITH RECURSIVE $anchorSliceCte,
-      |exact AS MATERIALIZED (
-      | SELECT doc_id, text, lang, source, n_chars FROM (
-      |  SELECT doc_id, text, lang, source, n_chars,
-      |   MIN(doc_id) OVER (PARTITION BY md5(text)) AS rep
-      |  FROM docs2)
-      | WHERE text IS NULL OR doc_id = rep),
-      |${canonicalKeepBlockedCtesOver("exact")},
-      |surv AS MATERIALIZED (
-      | SELECT e.doc_id, e.source, e.text FROM exact e
-      | JOIN x ON x.doc_id = e.doc_id
-      | JOIN keepid k ON k.component = x.component
-      |  AND e.doc_id = k.keep_id),
-      |${temperatureCtesOver("surv")}
-      |$temperatureSelectSql""".stripMargin
+  private val curationV4Sql = curationSql(sliced = true, canonicalKeepCtesOver)
+
+  private val curationV5Sql = curationSql(sliced = true, canonicalKeepBlockedCtesOver)
 
   /** I6q — curation v6: the same exact-dedup → canonical-keep →
     * temperature-mixture composition as v4/v5, with the near-dup stage on
@@ -2131,21 +2084,7 @@ object LlmOps {
   private[graft] def curationV6Over(docs: DataFrame): DataFrame =
     curationWith(docs, canonicalKeepLshOver)
 
-  private val curationV6Sql =
-    s"""WITH RECURSIVE exact AS MATERIALIZED (
-      | SELECT doc_id, text, lang, source, n_chars FROM (
-      |  SELECT doc_id, text, lang, source, n_chars,
-      |   MIN(doc_id) OVER (PARTITION BY md5(text)) AS rep
-      |  FROM documents)
-      | WHERE text IS NULL OR doc_id = rep),
-      |${canonicalKeepLshCtesOver("exact")},
-      |surv AS MATERIALIZED (
-      | SELECT e.doc_id, e.source, e.text FROM exact e
-      | JOIN x ON x.doc_id = e.doc_id
-      | JOIN keepid k ON k.component = x.component
-      |  AND e.doc_id = k.keep_id),
-      |${temperatureCtesOver("surv")}
-      |$temperatureSelectSql""".stripMargin
+  private val curationV6Sql = curationSql(sliced = false, canonicalKeepLshCtesOver)
 
   /** Measured persisted-LR accuracy on the v7 INCREMENT (loaded model
     * scoring the diff's added+changed docs, 2026-08-16;
@@ -2260,8 +2199,7 @@ object LlmOps {
       s"""${p}w AS (SELECT doc_id, regexp_split_to_array(text, ' +') AS w
         | FROM $rel WHERE text IS NOT NULL),
         |${p}wsh AS (
-        | SELECT doc_id, list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-        |   for i in range(1, len(w) - 1)]) AS s
+        | SELECT doc_id, $wordShinglesSql AS s
         | FROM ${p}w WHERE len(w) >= 3)""".stripMargin
     s"""WITH bkt AS (
       | SELECT doc_id, text, source, ${bucketSql("text")} AS bucket
@@ -2298,18 +2236,12 @@ object LlmOps {
       |${wshCtes("i", "inc")},
       |j AS (
       | SELECT doc_q, doc_b,
-      |  CAST(len(list_intersect(sa.s, sb.s)) AS DOUBLE)
-      |   / (len(sa.s) + len(sb.s) - len(list_intersect(sa.s, sb.s))) AS jac
+      |  $setJaccardSql AS jac
       | FROM cand
       | JOIN iwsh sa ON sa.doc_id = doc_q
       | JOIN awsh sb ON sb.doc_id = doc_b
-      | WHERE CAST(len(list_intersect(sa.s, sb.s)) AS DOUBLE)
-      |   / (len(sa.s) + len(sb.s) - len(list_intersect(sa.s, sb.s))) >= 0.5),
-      |v AS (SELECT doc_q, COUNT(*) AS n_matches, MAX(jac) AS best_jaccard
-      | FROM j GROUP BY 1),
-      |bm AS (SELECT j.doc_q, MIN(j.doc_b) AS best_match
-      | FROM j JOIN v ON j.doc_q = v.doc_q AND j.jac = v.best_jaccard
-      | GROUP BY 1),
+      | WHERE $setJaccardSql >= 0.5),
+      |$verdictCtesSql,
       |bed AS (SELECT doc_id, text IS NOT NULL
       |  AND doc_id <> MIN(doc_id) OVER (PARTITION BY md5(text))
       |  AS is_batch_exact_dup FROM inc),
@@ -3577,185 +3509,94 @@ object LlmOps {
       |   FROM documents) WHERE w <> '') AS tokens_before,
       | true AS conserve_ok, true AS roundtrip_ok""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "i1_dedup_exact" -> dedupExact _,
-    "i1_bloom_reference_dedup" -> bloomReferenceDedup _,
-    "i2_ngram_jaccard" -> ngramJaccard _,
-    "i2_incremental_dedup" -> incrementalDedup _,
-    "i2_incremental_index" -> incrementalIndexDedup _,
-    "i2_incremental_band_index" -> incrementalBandIndexDedup _,
-    "i2_canonical_keep" -> canonicalKeep _,
-    "i2_canonical_keep_blocked" -> canonicalKeepBlocked _,
-    "i2_canonical_keep_lsh" -> canonicalKeepLsh _,
-    "i6_curation_v6" -> curationV6 _,
-    "i6_curation_v7_incremental" -> curationV7Incremental _,
-    "i6_temperature_mixture" -> temperatureMixture _,
-    "i4_image_ahash" -> imageAhash _,
-    "i6_curation_v4" -> curationV4 _,
-    "i6_curation_v5" -> curationV5 _,
-    "i2_fuzzy_dedup_e2e" -> fuzzyDedupE2e _,
-    "i2_minhash_lsh_candidates" -> minhashCandidates _,
-    "i2_sig_verified_pairs" -> sigVerifiedPairs _,
-    "i2_minhash_containment" -> minhashContainmentGate _,
-    "i2_simhash_pairs" -> simhashPairs _,
-    "i2_simhash_containment" -> simhashContainmentGate _,
-    "i2_embedding_neardup" -> embeddingNearDups _,
-    "i2_neardup_blocked_gate" -> neardupBlockedGate _,
-    "i3_cosine_topk" -> cosineTopK _,
-    "i3_sq8_topk" -> sq8TopK _,
-    "i3_query_batch_topk" -> queryBatchTopK _,
-    "i3_filtered_topk" -> filteredTopK _,
-    "i3_ivf_serve_gate" -> ivfServeGate _,
-    "i3_ivfpq_serve_gate" -> ivfPqServeGate _,
-    "i3_lsh_ann_topk" -> lshAnn _,
-    "i3_lsh_auto_topk" -> lshAutoAnn _,
-    "i3_lsh_recall_gate" -> lshRecallGate _,
-    "i3_ivf_ann_topk" -> ivfAnn _,
-    "i3_ivfpq_topk" -> ivfPqAnn _,
-    "i3_ivf_recall_gate" -> ivfRecallGate _,
-    "i3_pq_ann_topk" -> pqAnn _,
-    "i3_pq_recall_gate" -> pqRecallGate _,
-    "i3_kmeans" -> kmeansClusters _,
-    "i2_semdedup" -> semDedup _,
-    "i6_proto_prune" -> protoPrune _,
-    "i3_hard_negatives" -> hardNegatives _,
-    "i6_snapshot_diff" -> snapshotDiff _,
-    "i3_bm25_topk" -> bm25TopK _,
-    "i2_sorted_neighbors" -> sortedNeighbors _,
-    "i6_expectations" -> expectations _,
-    "i6_cluster_balance" -> clusterBalance _,
-    "i5_lang_id" -> langId _,
-    "i5_quality_score" -> qualityScore _,
-    "i5_token_counts" -> tokenCounts _,
-    "i5_fingerprints" -> fingerprints _,
-    "i5_repetition" -> repetition _,
-    "i4_multimodal_meta" -> multimodalMeta _,
-    "i5_quality_quantile_gate" -> qualityQuantileGate _,
-    "i6_dataset_split" -> datasetSplit _,
-    "i6_split_leakage" -> splitLeakage _,
-    "i6_corpus_curation" -> corpusCuration _,
-    "i6_filter_attrition" -> filterAttrition _,
-    "i6_doc_provenance" -> docProvenance _,
-    "i6_stratified_cap" -> stratifiedCap _,
-    "i6_mixture_sample" -> mixtureSample _,
-    "i7_pii_scrub" -> piiScrub _,
-    "i7_decontamination" -> decontamination _,
-    "i7_chunk_windows" -> chunkWindows _,
-    "i7_pack_gate" -> packGate _,
-    "i7_token_shards" -> tokenShards _,
-    "i5_vocab_stats" -> vocabStats _,
-    "i5_langid_confusion" -> langIdConfusion _,
-    "i5_salient_terms" -> salientTerms _,
-    "i5_bigram_lm" -> bigramLm _,
-    "i5_lm_score" -> lmScore _,
-    "i2_dup_spans" -> dupSpans _,
-    "i2_span_cut" -> spanCut _,
-    "i6_curation_v2" -> curationV2 _,
-    "i7_decontam_spans" -> decontamSpans _,
-    "i6_data_card" -> dataCard _,
-    "i2_editdist_blocked" -> editdistBlocked _,
-    "d08_heavy_hitters" -> heavyHitters _,
-    "i5_inverted_index" -> invertedIndex _,
-    "i6_table_fingerprint" -> tableFingerprint _,
-    "i5_lr_quality_gate" -> lrQualityGate _,
-    "i6_dsir_weights" -> dsirWeights _,
-    "i5_bpe_stats" -> bpeStats _,
-    "i5_bpe_train" -> bpeTrain _,
-    "i5_bpe_encode_gate" -> bpeEncodeGate _,
-    "i6_token_budget" -> tokenBudget _,
-    "i7_blocklist" -> blocklist _,
-    "i6_curation_v3" -> curationV3 _,
-    "i5_lexical_diversity" -> lexicalDiversity _
-  )
-
-  val oracles: Map[String, String] = Map(
-    "i1_dedup_exact" -> dedupExactSql,
-    "i1_bloom_reference_dedup" -> bloomReferenceDedupSql,
-    "i2_ngram_jaccard" -> ngramJaccardSql,
-    "i2_incremental_dedup" -> incrementalDedupSql,
-    "i2_incremental_index" -> incrementalIndexSql,
-    "i2_incremental_band_index" -> incrementalBandIndexSql,
-    "i2_canonical_keep" -> canonicalKeepSql,
-    "i2_canonical_keep_blocked" -> canonicalKeepBlockedSql,
-    "i2_canonical_keep_lsh" -> canonicalKeepLshSql,
-    "i6_curation_v6" -> curationV6Sql,
-    "i6_curation_v7_incremental" -> curationV7Sql,
-    "i6_temperature_mixture" -> temperatureMixtureSql,
-    "i4_image_ahash" -> imageAhashSql,
-    "i6_curation_v4" -> curationV4Sql,
-    "i6_curation_v5" -> curationV5Sql,
-    "i2_fuzzy_dedup_e2e" -> fuzzyDedupE2eSql,
-    "i2_minhash_containment" -> minhashContainmentSql,
-    "i2_minhash_lsh_candidates" -> minhashCandidatesSql,
-    "i2_sig_verified_pairs" -> sigVerifiedPairsSql,
-    "i2_simhash_pairs" -> simhashPairsSql,
-    "i2_simhash_containment" -> simhashContainmentSql,
-    "i2_embedding_neardup" -> embeddingNearDupsSql,
-    "i2_neardup_blocked_gate" -> neardupBlockedGateSql,
-    "i3_cosine_topk" -> cosineTopKSql,
-    "i3_sq8_topk" -> sq8TopKSql,
-    "i3_query_batch_topk" -> queryBatchTopKSql,
-    "i3_filtered_topk" -> filteredTopKSql,
-    "i3_ivf_serve_gate" -> serveGateSql,
-    "i3_ivfpq_serve_gate" -> serveGateSql,
-    "i3_lsh_ann_topk" -> lshAnnSql,
-    "i3_lsh_auto_topk" -> lshAutoAnnSql,
-    "i3_lsh_recall_gate" -> recallGateSql,
-    "i3_ivf_recall_gate" -> recallGateSql,
-    "i3_pq_recall_gate" -> recallGateSql,
-    "i3_kmeans" -> kmeansClustersSql,
-    "i3_ivf_ann_topk" -> ivfAnnSql,
-    "i3_ivfpq_topk" -> ivfPqAnnSql,
-    "i3_pq_ann_topk" -> pqAnnSql,
-    "i2_semdedup" -> semDedupSql,
-    "i6_proto_prune" -> protoPruneSql,
-    "i3_hard_negatives" -> hardNegativesSql,
-    "i6_snapshot_diff" -> snapshotDiffSql,
-    "i3_bm25_topk" -> bm25TopKSql,
-    "i2_sorted_neighbors" -> sortedNeighborsSql,
-    "i6_expectations" -> expectationsSql,
-    "i6_cluster_balance" -> clusterBalanceSql,
-    "i5_lang_id" -> langIdSql,
-    "i5_quality_score" -> qualityScoreSql,
-    "i5_token_counts" -> tokenCountsSql,
-    "i5_fingerprints" -> fingerprintsSql,
-    "i5_repetition" -> repetitionSql,
-    "i4_multimodal_meta" -> multimodalMetaSql,
-    "i5_quality_quantile_gate" -> qualityQuantileGateSql,
-    "i6_dataset_split" -> datasetSplitSql,
-    "i6_split_leakage" -> splitLeakageSql,
-    "i6_corpus_curation" -> corpusCurationSql,
-    "i6_filter_attrition" -> filterAttritionSql,
-    "i6_doc_provenance" -> docProvenanceSql,
-    "i6_stratified_cap" -> stratifiedCapSql,
-    "i6_mixture_sample" -> mixtureSampleSql,
-    "i7_pii_scrub" -> piiScrubSql,
-    "i7_decontamination" -> decontaminationSql,
-    "i7_chunk_windows" -> chunkWindowsSql,
-    "i7_pack_gate" -> packGateSql,
-    "i7_token_shards" -> tokenShardsSql,
-    "i5_vocab_stats" -> vocabStatsSql,
-    "i5_langid_confusion" -> langIdConfusionSql,
-    "i5_salient_terms" -> salientTermsSql,
-    "i5_bigram_lm" -> bigramLmSql,
-    "i5_lm_score" -> lmScoreSql,
-    "i2_dup_spans" -> dupSpansSql,
-    "i2_span_cut" -> spanCutSql,
-    "i6_curation_v2" -> curationV2Sql,
-    "i7_decontam_spans" -> decontamSpansSql,
-    "i6_data_card" -> dataCardSql,
-    "i2_editdist_blocked" -> editdistBlockedSql,
-    "d08_heavy_hitters" -> heavyHittersSql,
-    "i5_inverted_index" -> invertedIndexSql,
-    "i6_table_fingerprint" -> tableFingerprintSql,
-    "i5_lr_quality_gate" -> lrQualityGateSql,
-    "i6_dsir_weights" -> dsirWeightsSql,
-    "i5_bpe_stats" -> bpeStatsSql,
-    "i5_bpe_train" -> bpeTrainSql,
-    "i5_bpe_encode_gate" -> bpeEncodeGateSql,
-    "i6_token_budget" -> tokenBudgetSql,
-    "i7_blocklist" -> blocklistSql,
-    "i6_curation_v3" -> curationV3Sql,
-    "i5_lexical_diversity" -> lexicalDiversitySql
+  val rows: Seq[Row] = Seq(
+    Row("i1_dedup_exact", dedupExact, dedupExactSql),
+    Row("i1_bloom_reference_dedup", bloomReferenceDedup, bloomReferenceDedupSql),
+    Row("i2_ngram_jaccard", ngramJaccard, ngramJaccardSql),
+    Row("i2_incremental_dedup", incrementalDedup, incrementalDedupSql),
+    Row("i2_incremental_index", incrementalIndexDedup, incrementalIndexSql),
+    Row("i2_incremental_band_index", incrementalBandIndexDedup, incrementalBandIndexSql),
+    Row("i2_canonical_keep", canonicalKeep, canonicalKeepSql),
+    Row("i2_canonical_keep_blocked", canonicalKeepBlocked, canonicalKeepBlockedSql),
+    Row("i2_canonical_keep_lsh", canonicalKeepLsh, canonicalKeepLshSql),
+    Row("i6_curation_v6", curationV6, curationV6Sql),
+    Row("i6_curation_v7_incremental", curationV7Incremental, curationV7Sql),
+    Row("i6_temperature_mixture", temperatureMixture, temperatureMixtureSql),
+    Row("i4_image_ahash", imageAhash, imageAhashSql),
+    Row("i6_curation_v4", curationV4, curationV4Sql),
+    Row("i6_curation_v5", curationV5, curationV5Sql),
+    Row("i2_fuzzy_dedup_e2e", fuzzyDedupE2e, fuzzyDedupE2eSql),
+    Row("i2_minhash_lsh_candidates", minhashCandidates, minhashCandidatesSql),
+    Row("i2_sig_verified_pairs", sigVerifiedPairs, sigVerifiedPairsSql),
+    Row("i2_minhash_containment", minhashContainmentGate, minhashContainmentSql),
+    Row("i2_simhash_pairs", simhashPairs, simhashPairsSql),
+    Row("i2_simhash_containment", simhashContainmentGate, simhashContainmentSql),
+    Row("i2_embedding_neardup", embeddingNearDups, embeddingNearDupsSql),
+    Row("i2_neardup_blocked_gate", neardupBlockedGate, neardupBlockedGateSql),
+    Row("i3_cosine_topk", cosineTopK, cosineTopKSql),
+    Row("i3_sq8_topk", sq8TopK, sq8TopKSql),
+    Row("i3_query_batch_topk", queryBatchTopK, queryBatchTopKSql),
+    Row("i3_filtered_topk", filteredTopK, filteredTopKSql),
+    Row("i3_ivf_serve_gate", ivfServeGate, serveGateSql),
+    Row("i3_ivfpq_serve_gate", ivfPqServeGate, serveGateSql),
+    Row("i3_lsh_ann_topk", lshAnn, lshAnnSql),
+    Row("i3_lsh_auto_topk", lshAutoAnn, lshAutoAnnSql),
+    Row("i3_lsh_recall_gate", lshRecallGate, recallGateSql),
+    Row("i3_ivf_ann_topk", ivfAnn, ivfAnnSql),
+    Row("i3_ivfpq_topk", ivfPqAnn, ivfPqAnnSql),
+    Row("i3_ivf_recall_gate", ivfRecallGate, recallGateSql),
+    Row("i3_pq_ann_topk", pqAnn, pqAnnSql),
+    Row("i3_pq_recall_gate", pqRecallGate, recallGateSql),
+    Row("i3_kmeans", kmeansClusters, kmeansClustersSql),
+    Row("i2_semdedup", semDedup, semDedupSql),
+    Row("i6_proto_prune", protoPrune, protoPruneSql),
+    Row("i3_hard_negatives", hardNegatives, hardNegativesSql),
+    Row("i6_snapshot_diff", snapshotDiff, snapshotDiffSql),
+    Row("i3_bm25_topk", bm25TopK, bm25TopKSql),
+    Row("i2_sorted_neighbors", sortedNeighbors, sortedNeighborsSql),
+    Row("i6_expectations", expectations, expectationsSql),
+    Row("i6_cluster_balance", clusterBalance, clusterBalanceSql),
+    Row("i5_lang_id", langId, langIdSql),
+    Row("i5_quality_score", qualityScore, qualityScoreSql),
+    Row("i5_token_counts", tokenCounts, tokenCountsSql),
+    Row("i5_fingerprints", fingerprints, fingerprintsSql),
+    Row("i5_repetition", repetition, repetitionSql),
+    Row("i4_multimodal_meta", multimodalMeta, multimodalMetaSql),
+    Row("i5_quality_quantile_gate", qualityQuantileGate, qualityQuantileGateSql),
+    Row("i6_dataset_split", datasetSplit, datasetSplitSql),
+    Row("i6_split_leakage", splitLeakage, splitLeakageSql),
+    Row("i6_corpus_curation", corpusCuration, corpusCurationSql),
+    Row("i6_filter_attrition", filterAttrition, filterAttritionSql),
+    Row("i6_doc_provenance", docProvenance, docProvenanceSql),
+    Row("i6_stratified_cap", stratifiedCap, stratifiedCapSql),
+    Row("i6_mixture_sample", mixtureSample, mixtureSampleSql),
+    Row("i7_pii_scrub", piiScrub, piiScrubSql),
+    Row("i7_decontamination", decontamination, decontaminationSql),
+    Row("i7_chunk_windows", chunkWindows, chunkWindowsSql),
+    Row("i7_pack_gate", packGate, packGateSql),
+    Row("i7_token_shards", tokenShards, tokenShardsSql),
+    Row("i5_vocab_stats", vocabStats, vocabStatsSql),
+    Row("i5_langid_confusion", langIdConfusion, langIdConfusionSql),
+    Row("i5_salient_terms", salientTerms, salientTermsSql),
+    Row("i5_bigram_lm", bigramLm, bigramLmSql),
+    Row("i5_lm_score", lmScore, lmScoreSql),
+    Row("i2_dup_spans", dupSpans, dupSpansSql),
+    Row("i2_span_cut", spanCut, spanCutSql),
+    Row("i6_curation_v2", curationV2, curationV2Sql),
+    Row("i7_decontam_spans", decontamSpans, decontamSpansSql),
+    Row("i6_data_card", dataCard, dataCardSql),
+    Row("i2_editdist_blocked", editdistBlocked, editdistBlockedSql),
+    Row("d08_heavy_hitters", heavyHitters, heavyHittersSql),
+    Row("i5_inverted_index", invertedIndex, invertedIndexSql),
+    Row("i6_table_fingerprint", tableFingerprint, tableFingerprintSql),
+    Row("i5_lr_quality_gate", lrQualityGate, lrQualityGateSql),
+    Row("i6_dsir_weights", dsirWeights, dsirWeightsSql),
+    Row("i5_bpe_stats", bpeStats, bpeStatsSql),
+    Row("i5_bpe_train", bpeTrain, bpeTrainSql),
+    Row("i5_bpe_encode_gate", bpeEncodeGate, bpeEncodeGateSql),
+    Row("i6_token_budget", tokenBudget, tokenBudgetSql),
+    Row("i7_blocklist", blocklist, blocklistSql),
+    Row("i6_curation_v3", curationV3, curationV3Sql),
+    Row("i5_lexical_diversity", lexicalDiversity, lexicalDiversitySql)
   )
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.{AsOfJoin, Checkpoints, Closure}
+import graft.queries.Battery.Row
 
 /** SURVEY §2 Group D (+A7/A9/B7 shapes) as oracle-checked queries over the
   * `/root/testdata` fixtures.
@@ -16,6 +17,12 @@ import graft.operators.{AsOfJoin, Checkpoints, Closure}
   *  - no libm-dependent functions (exp/ln/trig) in checked outputs.
   */
 object Relational {
+
+  /** The oracle's exact revenue sum: sum(extendedprice × (1 − discount))
+    * in DECIMAL(18,2), cast to double once (see the header). */
+  private val revenueSql =
+    """CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
+      |   * CAST(1.0 - l_discount AS DECIMAL(18,2))) AS DOUBLE)""".stripMargin
 
   private def dec(c: Column): Column = c.cast("decimal(18,2)")
 
@@ -37,10 +44,10 @@ object Relational {
         count(lit(1)).as("count_order"))
 
   private val pricingSummarySql =
-    """SELECT l_returnflag, l_linestatus,
+    s"""SELECT l_returnflag, l_linestatus,
       | CAST(SUM(l_quantity) AS BIGINT) AS sum_qty,
       | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-      | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1.0 - l_discount AS DECIMAL(18,2))) AS DOUBLE) AS sum_disc_price,
+      | $revenueSql AS sum_disc_price,
       | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1.0 - l_discount AS DECIMAL(18,2)) * CAST(1.0 + l_tax AS DECIMAL(18,2))) AS DOUBLE) AS sum_charge,
       | COUNT(*) AS count_order
       |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
@@ -69,8 +76,8 @@ object Relational {
   }
 
   private val revenueByNationSql =
-    """SELECT r_name, n_name,
-      | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1.0 - l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
+    s"""SELECT r_name, n_name,
+      | $revenueSql AS revenue,
       | COUNT(*) AS n_items
       |FROM lineitem
       |JOIN orders   ON l_orderkey = o_orderkey
@@ -100,8 +107,8 @@ object Relational {
   }
 
   private val saltedSkewJoinSql =
-    """SELECT o_orderpriority,
-      | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1.0 - l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
+    s"""SELECT o_orderpriority,
+      | $revenueSql AS revenue,
       | COUNT(*) AS n_items
       |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
       |GROUP BY o_orderpriority""".stripMargin
@@ -1315,11 +1322,10 @@ object Relational {
   }
 
   private val shippingPrioritySql =
-    """SELECT l_orderkey,
+    s"""SELECT l_orderkey,
       | strftime(CAST(o_orderdate AS DATE), '%Y-%m-%d') AS o_orderdate,
       | o_orderpriority,
-      | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-      |   * CAST(1.0 - l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue
+      | $revenueSql AS revenue
       |FROM lineitem
       |JOIN orders ON l_orderkey = o_orderkey
       |JOIN customer ON o_custkey = c_custkey
@@ -1443,9 +1449,8 @@ object Relational {
   }
 
   private val localSupplierVolumeSql =
-    """SELECT n_name,
-      | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-      |   * CAST(1.0 - l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
+    s"""SELECT n_name,
+      | $revenueSql AS revenue,
       | COUNT(*) AS n_items
       |FROM lineitem
       |JOIN orders   ON l_orderkey = o_orderkey
@@ -1499,10 +1504,9 @@ object Relational {
   }
 
   private val volumeShippingSql =
-    """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
+    s"""SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
       | CAST(year(l_shipdate) AS INT) AS l_year,
-      | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-      |   * CAST(1.0 - l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
+      | $revenueSql AS revenue,
       | COUNT(*) AS n_items
       |FROM lineitem
       |JOIN supplier  ON l_suppkey = s_suppkey
@@ -1610,9 +1614,8 @@ object Relational {
   }
 
   private val returnedTopCustomersSql =
-    """SELECT c_custkey, c_name, c_acctbal,
-      | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-      |   * CAST(1.0 - l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
+    s"""SELECT c_custkey, c_name, c_acctbal,
+      | $revenueSql AS revenue,
       | COUNT(*) AS n_items
       |FROM lineitem
       |JOIN orders   ON l_orderkey = o_orderkey
@@ -1653,9 +1656,8 @@ object Relational {
   }
 
   private val disjunctivePartsSql =
-    """SELECT
-      | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-      |   * CAST(1.0 - l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
+    s"""SELECT
+      | $revenueSql AS revenue,
       | COUNT(*) AS n_items
       |FROM lineitem JOIN part ON l_partkey = p_partkey
       |WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15
@@ -2018,135 +2020,69 @@ object Relational {
        | MIN(u) AS u_min, MAX(u) AS u_max, MIN(m) AS m_min, MAX(m) AS m_max
        |FROM z GROUP BY 1""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "d01_zorder_cells" -> zorderCells _,
-    "d07_agg_pricing" -> pricingSummary _,
-    "d03_join_revenue_by_nation" -> revenueByNation _,
-    "d03_salted_skew_join" -> saltedSkewJoin _,
-    "d11_topk_orders" -> topOrders _,
-    "d04_semi_anti_customers" -> semiAntiCustomers _,
-    "d08_distinct_counts" -> distinctCounts _,
-    "d08_approx_error_gate" -> approxDistinctGate _,
-    "d08_hll_registers" -> hllRegisters _,
-    "d08_quantile_gate" -> quantileSketchGate _,
-    "d10_window_topk_per_customer" -> topOrdersPerCustomer _,
-    "d10_window_running_total" -> runningTotal _,
-    "d10_window_lag_delta" -> eventDeltas _,
-    "d09_rollup_quantities" -> rollupQuantities _,
-    "d09_cube_orders" -> cubeOrders _,
-    "d09_grouping_sets" -> groupingSets _,
-    "d12_setops_custkeys" -> setOpsCustkeys _,
-    "d13_string_fns" -> stringFns _,
-    "d14_date_fns" -> dateFns _,
-    "c3_time_epoch_fns" -> timeFns _,
-    "d15_math_fns" -> mathFns _,
-    "d05_range_join_events" -> rangeJoinEvents _,
-    "d06_asof_prior_event" -> asofPriorEvent _,
-    "d06_asof_staleness" -> asofStaleness _,
-    "a7_closure_tree" -> closureTree _,
-    "a7_closure_recursive_sql" -> closureRecursiveSql _,
-    "a8_path_recursive_sql" -> pathRecursiveSql _,
-    "a10_bound_by_recursive_sql" -> boundByRecursiveSql _,
-    "b7_last_write_wins" -> lastWriteWins _,
-    "a9_anti_join_roots" -> neverOrderedParts _,
-    "d16_array_fns" -> arrayFns _,
-    "d17_json_fns" -> jsonFns _,
-    "d17_variant_shred" -> variantShred _,
-    "d07_above_customer_avg" -> aboveCustomerAvg _,
-    "d12_union_tagged" -> unionTagged _,
-    "d09_pivot_event_types" -> pivotEventTypes _,
-    "d09_unpivot" -> unpivotEventTypes _,
-    "d10_session_windows" -> sessionWindows _,
-    "d10_window_ntile" -> windowNtile _,
-    "d10_tumbling_window" -> tumblingThroughput _,
-    "d07_percentiles" -> percentiles _,
-    "d10_resample_ffill" -> resampleFfill _,
-    "d05_interval_concurrency" -> intervalConcurrency _,
-    "d08_cms_gate" -> cmsGate _,
-    "d10_funnel" -> funnel _,
-    "d07_retention_cohorts" -> retentionCohorts _,
-    "d03_shipping_priority" -> shippingPriority _,
-    "d07_big_spenders" -> bigSpenders _,
-    "d07_outliers" -> outliers _,
-    "d03_local_supplier_volume" -> localSupplierVolume _,
-    "d03_volume_shipping" -> volumeShipping _,
-    "d07_market_share" -> marketShare _,
-    "d03_returned_top_customers" -> returnedTopCustomers _,
-    "d03_disjunctive_parts" -> disjunctiveParts _,
-    "d11_pareto_orders" -> paretoOrders _,
-    "d10_rolling_7d" -> rolling7d _,
-    "d10_hopping_window" -> hoppingWindow _,
-    "d12_merge_upsert" -> mergeUpsert _,
-    "d07_cust_order_distribution" -> custOrderDistribution _,
-    "d10_session_paths" -> sessionPaths _,
-    "d10_sliding_distinct" -> slidingDistinct _,
-    "d07_incremental_agg" -> incrementalAgg _,
-    "d03_basket_pairs" -> basketPairs _
-  )
-
-  val oracles: Map[String, String] = Map(
-    "d01_zorder_cells" -> zorderCellsSql,
-    "d07_agg_pricing" -> pricingSummarySql,
-    "d03_join_revenue_by_nation" -> revenueByNationSql,
-    "d03_salted_skew_join" -> saltedSkewJoinSql,
-    "d11_topk_orders" -> topOrdersSql,
-    "d04_semi_anti_customers" -> semiAntiCustomersSql,
-    "d08_distinct_counts" -> distinctCountsSql,
-    "d08_approx_error_gate" -> approxDistinctGateSql,
-    "d08_hll_registers" -> hllRegistersSql,
-    "d08_quantile_gate" -> quantileSketchGateSql,
-    "d10_window_topk_per_customer" -> topOrdersPerCustomerSql,
-    "d10_window_running_total" -> runningTotalSql,
-    "d10_window_lag_delta" -> eventDeltasSql,
-    "d09_rollup_quantities" -> rollupQuantitiesSql,
-    "d09_cube_orders" -> cubeOrdersSql,
-    "d09_grouping_sets" -> groupingSetsSql,
-    "d12_setops_custkeys" -> setOpsCustkeysSql,
-    "d13_string_fns" -> stringFnsSql,
-    "d14_date_fns" -> dateFnsSql,
-    "c3_time_epoch_fns" -> timeFnsSql,
-    "d15_math_fns" -> mathFnsSql,
-    "d05_range_join_events" -> rangeJoinEventsSql,
-    "d06_asof_prior_event" -> asofPriorEventSql,
-    "d06_asof_staleness" -> asofStalenessSql,
-    "a7_closure_tree" -> closureTreeSql,
-    "a7_closure_recursive_sql" -> closureTreeSql,
-    "a8_path_recursive_sql" -> pathRecursiveSqlOracle,
-    "a10_bound_by_recursive_sql" -> boundByRecursiveSqlOracle,
-    "b7_last_write_wins" -> lastWriteWinsSql,
-    "a9_anti_join_roots" -> neverOrderedPartsSql,
-    "d16_array_fns" -> arrayFnsSql,
-    "d17_json_fns" -> jsonFnsSql,
-    "d17_variant_shred" -> variantShredSql,
-    "d07_above_customer_avg" -> aboveCustomerAvgSql,
-    "d12_union_tagged" -> unionTaggedSql,
-    "d09_pivot_event_types" -> pivotEventTypesSql,
-    "d09_unpivot" -> unpivotEventTypesSql,
-    "d10_session_windows" -> sessionWindowsSql,
-    "d10_window_ntile" -> windowNtileSql,
-    "d10_tumbling_window" -> tumblingThroughputSql,
-    "d07_percentiles" -> percentilesSql,
-    "d10_resample_ffill" -> resampleFfillSql,
-    "d05_interval_concurrency" -> intervalConcurrencySql,
-    "d08_cms_gate" -> cmsGateSql,
-    "d10_funnel" -> funnelSql,
-    "d07_retention_cohorts" -> retentionCohortsSql,
-    "d03_shipping_priority" -> shippingPrioritySql,
-    "d07_big_spenders" -> bigSpendersSql,
-    "d07_outliers" -> outliersSql,
-    "d03_local_supplier_volume" -> localSupplierVolumeSql,
-    "d03_volume_shipping" -> volumeShippingSql,
-    "d07_market_share" -> marketShareSql,
-    "d03_returned_top_customers" -> returnedTopCustomersSql,
-    "d03_disjunctive_parts" -> disjunctivePartsSql,
-    "d11_pareto_orders" -> paretoOrdersSql,
-    "d10_rolling_7d" -> rolling7dSql,
-    "d10_hopping_window" -> hoppingWindowSql,
-    "d12_merge_upsert" -> mergeUpsertSql,
-    "d07_cust_order_distribution" -> custOrderDistributionSql,
-    "d10_session_paths" -> sessionPathsSql,
-    "d10_sliding_distinct" -> slidingDistinctSql,
-    "d07_incremental_agg" -> incrementalAggSql,
-    "d03_basket_pairs" -> basketPairsSql
+  val rows: Seq[Row] = Seq(
+    Row("d01_zorder_cells", zorderCells, zorderCellsSql),
+    Row("d07_agg_pricing", pricingSummary, pricingSummarySql),
+    Row("d03_join_revenue_by_nation", revenueByNation, revenueByNationSql),
+    Row("d03_salted_skew_join", saltedSkewJoin, saltedSkewJoinSql),
+    Row("d11_topk_orders", topOrders, topOrdersSql),
+    Row("d04_semi_anti_customers", semiAntiCustomers, semiAntiCustomersSql),
+    Row("d08_distinct_counts", distinctCounts, distinctCountsSql),
+    Row("d08_approx_error_gate", approxDistinctGate, approxDistinctGateSql),
+    Row("d08_hll_registers", hllRegisters, hllRegistersSql),
+    Row("d08_quantile_gate", quantileSketchGate, quantileSketchGateSql),
+    Row("d10_window_topk_per_customer", topOrdersPerCustomer, topOrdersPerCustomerSql),
+    Row("d10_window_running_total", runningTotal, runningTotalSql),
+    Row("d10_window_lag_delta", eventDeltas, eventDeltasSql),
+    Row("d09_rollup_quantities", rollupQuantities, rollupQuantitiesSql),
+    Row("d09_cube_orders", cubeOrders, cubeOrdersSql),
+    Row("d09_grouping_sets", groupingSets, groupingSetsSql),
+    Row("d12_setops_custkeys", setOpsCustkeys, setOpsCustkeysSql),
+    Row("d13_string_fns", stringFns, stringFnsSql),
+    Row("d14_date_fns", dateFns, dateFnsSql),
+    Row("c3_time_epoch_fns", timeFns, timeFnsSql),
+    Row("d15_math_fns", mathFns, mathFnsSql),
+    Row("d05_range_join_events", rangeJoinEvents, rangeJoinEventsSql),
+    Row("d06_asof_prior_event", asofPriorEvent, asofPriorEventSql),
+    Row("d06_asof_staleness", asofStaleness, asofStalenessSql),
+    Row("a7_closure_tree", closureTree, closureTreeSql),
+    Row("a7_closure_recursive_sql", closureRecursiveSql, closureTreeSql),
+    Row("a8_path_recursive_sql", pathRecursiveSql, pathRecursiveSqlOracle),
+    Row("a10_bound_by_recursive_sql", boundByRecursiveSql, boundByRecursiveSqlOracle),
+    Row("b7_last_write_wins", lastWriteWins, lastWriteWinsSql),
+    Row("a9_anti_join_roots", neverOrderedParts, neverOrderedPartsSql),
+    Row("d16_array_fns", arrayFns, arrayFnsSql),
+    Row("d17_json_fns", jsonFns, jsonFnsSql),
+    Row("d17_variant_shred", variantShred, variantShredSql),
+    Row("d07_above_customer_avg", aboveCustomerAvg, aboveCustomerAvgSql),
+    Row("d12_union_tagged", unionTagged, unionTaggedSql),
+    Row("d09_pivot_event_types", pivotEventTypes, pivotEventTypesSql),
+    Row("d09_unpivot", unpivotEventTypes, unpivotEventTypesSql),
+    Row("d10_session_windows", sessionWindows, sessionWindowsSql),
+    Row("d10_window_ntile", windowNtile, windowNtileSql),
+    Row("d10_tumbling_window", tumblingThroughput, tumblingThroughputSql),
+    Row("d07_percentiles", percentiles, percentilesSql),
+    Row("d10_resample_ffill", resampleFfill, resampleFfillSql),
+    Row("d05_interval_concurrency", intervalConcurrency, intervalConcurrencySql),
+    Row("d08_cms_gate", cmsGate, cmsGateSql),
+    Row("d10_funnel", funnel, funnelSql),
+    Row("d07_retention_cohorts", retentionCohorts, retentionCohortsSql),
+    Row("d03_shipping_priority", shippingPriority, shippingPrioritySql),
+    Row("d07_big_spenders", bigSpenders, bigSpendersSql),
+    Row("d07_outliers", outliers, outliersSql),
+    Row("d03_local_supplier_volume", localSupplierVolume, localSupplierVolumeSql),
+    Row("d03_volume_shipping", volumeShipping, volumeShippingSql),
+    Row("d07_market_share", marketShare, marketShareSql),
+    Row("d03_returned_top_customers", returnedTopCustomers, returnedTopCustomersSql),
+    Row("d03_disjunctive_parts", disjunctiveParts, disjunctivePartsSql),
+    Row("d11_pareto_orders", paretoOrders, paretoOrdersSql),
+    Row("d10_rolling_7d", rolling7d, rolling7dSql),
+    Row("d10_hopping_window", hoppingWindow, hoppingWindowSql),
+    Row("d12_merge_upsert", mergeUpsert, mergeUpsertSql),
+    Row("d07_cust_order_distribution", custOrderDistribution, custOrderDistributionSql),
+    Row("d10_session_paths", sessionPaths, sessionPathsSql),
+    Row("d10_sliding_distinct", slidingDistinct, slidingDistinctSql),
+    Row("d07_incremental_agg", incrementalAgg, incrementalAggSql),
+    Row("d03_basket_pairs", basketPairs, basketPairsSql)
   )
 }

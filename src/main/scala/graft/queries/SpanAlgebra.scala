@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.operators.{Checkpoints, GlobalRank}
 import graft.parser.SpanParser
 import graft.spans.SpansOps._
+import graft.queries.Battery.Row
 
 /** Oracle coverage for the span algebra (SURVEY §2 Group A/B) — the
   * engine's core domain previously verified only by ScalaTest.
@@ -652,35 +653,19 @@ object SpanAlgebra {
   private val graphEqualitySql =
     """SELECT true AS eq_permuted, false AS eq_truncated"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "a1_nested_filter" -> nestedFilter _,
-    "a10_graph_equality" -> graphEquality _,
-    "a2_sort_ranks" -> sortRanks _,
-    "a3_len_membership" -> lenMembership _,
-    "a8_path_containment" -> pathContainment _,
-    "b3_task_runs" -> taskRuns _,
-    "b4_workflow_timing" -> workflowTiming _,
-    "b5_artifact_rows" -> artifactRows _,
-    "b6_dup_reject" -> dupReject _,
-    "a4_attr_union_conflicts" -> attrUnionConflicts _,
-    "a5_exception_harvest" -> exceptionHarvest _,
-    "a6_span_edges" -> spanEdges _,
-    "b1b2_dep_forms_agree" -> depFormsAgree _
-  )
-
-  val oracles: Map[String, String] = Map(
-    "a1_nested_filter" -> nestedFilterSql,
-    "a10_graph_equality" -> graphEqualitySql,
-    "a2_sort_ranks" -> sortRanksSql,
-    "a3_len_membership" -> lenMembershipSql,
-    "a8_path_containment" -> pathContainmentSql,
-    "b3_task_runs" -> taskRunsSql,
-    "b4_workflow_timing" -> workflowTimingSql,
-    "b5_artifact_rows" -> artifactRowsSql,
-    "b6_dup_reject" -> dupRejectSql,
-    "a4_attr_union_conflicts" -> attrUnionConflictsSql,
-    "a5_exception_harvest" -> exceptionHarvestSql,
-    "a6_span_edges" -> spanEdgesSql,
-    "b1b2_dep_forms_agree" -> depFormsAgreeSql
+  val rows: Seq[Row] = Seq(
+    Row("a1_nested_filter", nestedFilter, nestedFilterSql),
+    Row("a10_graph_equality", graphEquality, graphEqualitySql),
+    Row("a2_sort_ranks", sortRanks, sortRanksSql),
+    Row("a3_len_membership", lenMembership, lenMembershipSql),
+    Row("a8_path_containment", pathContainment, pathContainmentSql),
+    Row("b3_task_runs", taskRuns, taskRunsSql),
+    Row("b4_workflow_timing", workflowTiming, workflowTimingSql),
+    Row("b5_artifact_rows", artifactRows, artifactRowsSql),
+    Row("b6_dup_reject", dupReject, dupRejectSql),
+    Row("a4_attr_union_conflicts", attrUnionConflicts, attrUnionConflictsSql),
+    Row("a5_exception_harvest", exceptionHarvest, exceptionHarvestSql),
+    Row("a6_span_edges", spanEdges, spanEdgesSql),
+    Row("b1b2_dep_forms_agree", depFormsAgree, depFormsAgreeSql)
   )
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.Checkpoints
+import graft.queries.Battery.Row
 
 /** The remaining classic TPC-H query shapes (Q4, Q12, Q14, Q16, Q17, Q21,
   * Q22) adapted to the fixture schema — SURVEY §2 Group D rows D3/D4/D7/D8.
@@ -360,27 +361,15 @@ object TpchShapes {
       |WHERE total_rev = (SELECT MAX(total_rev) FROM revenue)
       |ORDER BY s_suppkey""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "d04_priority_exists" -> priorityExists _,
-    "d07_line_priority_classes" -> linePriorityClasses _,
-    "d07_promo_revenue" -> promoRevenue _,
-    "d08_part_supplier_counts" -> partSupplierCounts _,
-    "d07_small_qty_revenue" -> smallQtyRevenue _,
-    "d04_sole_late_supplier" -> soleLateSupplier _,
-    "d04_dormant_customers" -> dormantCustomers _,
-    "d07_forecast_revenue" -> forecastRevenue _,
-    "d10_top_supplier" -> topSupplier _
-  )
-
-  val oracles: Map[String, String] = Map(
-    "d04_priority_exists" -> priorityExistsSql,
-    "d07_line_priority_classes" -> linePriorityClassesSql,
-    "d07_promo_revenue" -> promoRevenueSql,
-    "d08_part_supplier_counts" -> partSupplierCountsSql,
-    "d07_small_qty_revenue" -> smallQtyRevenueSql,
-    "d04_sole_late_supplier" -> soleLateSupplierSql,
-    "d04_dormant_customers" -> dormantCustomersSql,
-    "d07_forecast_revenue" -> forecastRevenueSql,
-    "d10_top_supplier" -> topSupplierSql
+  val rows: Seq[Row] = Seq(
+    Row("d04_priority_exists", priorityExists, priorityExistsSql),
+    Row("d07_line_priority_classes", linePriorityClasses, linePriorityClassesSql),
+    Row("d07_promo_revenue", promoRevenue, promoRevenueSql),
+    Row("d08_part_supplier_counts", partSupplierCounts, partSupplierCountsSql),
+    Row("d07_small_qty_revenue", smallQtyRevenue, smallQtyRevenueSql),
+    Row("d04_sole_late_supplier", soleLateSupplier, soleLateSupplierSql),
+    Row("d04_dormant_customers", dormantCustomers, dormantCustomersSql),
+    Row("d07_forecast_revenue", forecastRevenue, forecastRevenueSql),
+    Row("d10_top_supplier", topSupplier, topSupplierSql)
   )
 }

@@ -66,17 +66,10 @@ object SpansOps {
         case Some(ps) =>
           entries.filter(ps.map(p => col("k").startsWith(p)).reduce(_ || _))
       }
-      val grouped = filtered.groupBy(col("k"))
+      filtered.groupBy(col("k"))
         .agg(collect_set(col("v")).as("vs"))
         .collect()
-      val conflict = grouped.find(_.getSeq[String](1).size > 1)
-      conflict.foreach { row =>
-        val k = row.getString(0)
-        val vs = row.getSeq[String](1).map(AttrCodec.parse)
-        throw new IllegalArgumentException(
-          s"Encountered key=$k with different values ${vs.head} and ${vs(1)}")
-      }
-      grouped.map(r => r.getString(0) -> AttrCodec.parse(r.getSeq[String](1).head))
+        .map(r => r.getString(0) -> AttrCodec.resolve(r.getString(0), r.getSeq[String](1)))
         .toMap
     }
 

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.Json
 import graft.operators.Checkpoints
-import graft.queries.StateOnce
+import graft.queries.{Battery, StateOnce}
 
 /** [[Harness]]: query selection, the JSON the mains write, and the
   * spec session's configuration. */
@@ -18,6 +18,21 @@ class HarnessSpec extends AnyFunSuite {
     assert(some == all.filter(n => n.contains("a2_") || n.contains("d03_")))
     assert(some.contains("a2_sort_ranks") && some.exists(_.startsWith("d03_")))
     assert(Harness.queries(Some("no_such_query")).isEmpty)
+  }
+
+  test("every battery row has one query and one oracle") {
+    assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
+    assert(SparkEntry.queries.size == 178)
+    assert(SparkEntry.oracleSql.size == 178)
+  }
+
+  test("a row table whose list repeats a name throws, naming the repeat") {
+    val q: Harness.Query = (s, _) => s.range(1).toDF()
+    val rows = Seq(Battery.Row("x1", q, "SELECT 1"), Battery.Row("x2", q, "SELECT 2"),
+      Battery.Row("x1", q, "SELECT 3"))
+    val e = intercept[IllegalArgumentException](Battery.table(rows))
+    assert(e.getMessage.contains("x1") && !e.getMessage.contains("x2"))
+    assert(Battery.table(rows.take(2)).keys.toSeq == Seq("x1", "x2"))
   }
 
   test("oracle_sql.json escapes quotes, tabs and control characters") {

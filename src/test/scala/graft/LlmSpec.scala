@@ -2711,7 +2711,7 @@ class LlmSpec extends AnyFunSuite {
       (3L, null.asInstanceOf[String], "en", "s", 0L), (4L, "x", "en", "s", 1L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val rows = graft.queries.LlmOps.queries("i5_lexical_diversity")(spark, dir)
+    val rows = SparkEntry.queries("i5_lexical_diversity")(spark, dir)
       .collect().map(r => r.getLong(0) -> r).toMap
     // (doc_id, n_tokens, n_types, ttr, n_hapax)
     assert(rows(1L).getLong(1) == 7 && rows(1L).getLong(2) == 4)

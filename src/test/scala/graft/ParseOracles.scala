@@ -96,7 +96,7 @@ object ParseOracles {
       .getOrElse(Timing(null, null))
     val workflowAttributes: Map[String, Any] = rows("wattr")
       .groupBy(_.getString(2))
-      .map { case (k, rs) => k -> SpanParser.resolveAttr(k, rs.map(_.getString(3)).toSeq) }
+      .map { case (k, rs) => k -> AttrCodec.resolve(k, rs.map(_.getString(3)).toSeq) }
     val topSpanId: String =
       workflowAttributes.get("workflow.workflow_run_id") match {
         case Some(s: String) => s
@@ -106,7 +106,7 @@ object ParseOracles {
       .groupBy(r => (r.getString(1), r.getString(2)))
       .toSeq
       .map { case ((task, k), rs) =>
-        (task, k, SpanParser.resolveAttr(k, rs.map(_.getString(3)).toSeq))
+        (task, k, AttrCodec.resolve(k, rs.map(_.getString(3)).toSeq))
       }
       .groupBy(_._1)
       .map { case (task, entries) => task -> entries.map(e => e._2 -> e._3).toMap }

@@ -92,20 +92,20 @@ class PlanSpec extends AnyFunSuite {
       spark.conf.set("spark.sql.codegen.fallback", "false")
       // DSIR scoring: model broadcast by closure — one scan, no exchange,
       // no join, codegen'd projection
-      val dsir = graft.queries.LlmOps.queries("i6_dsir_weights")(spark, sf)
+      val dsir = SparkEntry.queries("i6_dsir_weights")(spark, sf)
       val dsirPlan = executedPlan(dsir)
       assert(!dsirPlan.contains("Exchange") && !dsirPlan.contains("Join"),
         dsirPlan)
       assert(dsirPlan.split("\n").exists(l =>
         l.contains("Project") && l.trim.startsWith("*")), dsirPlan)
       // blocklist: Aho–Corasick expression in a starred projection
-      val bl = graft.queries.LlmOps.queries("i7_blocklist")(spark, sf)
+      val bl = SparkEntry.queries("i7_blocklist")(spark, sf)
       val blPlan = executedPlan(bl)
       assert(!blPlan.contains("Exchange"), blPlan)
       assert(blPlan.split("\n").exists(l =>
         l.contains("Project") && l.trim.startsWith("*")), blPlan)
       // lexical diversity: sorted-array neighbor scan, no explode/shuffle
-      val lex = graft.queries.LlmOps.queries("i5_lexical_diversity")(spark, sf)
+      val lex = SparkEntry.queries("i5_lexical_diversity")(spark, sf)
       val lexPlan = executedPlan(lex)
       assert(!lexPlan.contains("Exchange") && !lexPlan.contains("Generate"),
         lexPlan)
@@ -165,14 +165,14 @@ class PlanSpec extends AnyFunSuite {
 
   test("bigram top-k plans as TakeOrderedAndProject, never a global sort") {
     val plan = executedPlan(
-      graft.queries.LlmOps.queries("i5_bigram_lm")(spark, sf))
+      SparkEntry.queries("i5_bigram_lm")(spark, sf))
     assert(plan.contains("TakeOrderedAndProject"), plan)
     assert(!plan.contains("Sort ["), plan) // no full-result sort operator
   }
 
   test("salient terms ship only top-1 per doc across the shuffle") {
     val plan = executedPlan(
-      graft.queries.LlmOps.queries("i5_salient_terms")(spark, sf))
+      SparkEntry.queries("i5_salient_terms")(spark, sf))
     // partial WindowGroupLimit below the exchange (like stratifiedCap) and
     // a broadcast of the vocabulary-sized document-frequency side
     assert(plan.split("\n").exists(l =>
