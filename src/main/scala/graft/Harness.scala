@@ -22,6 +22,13 @@ object Harness {
     * explode, which swung generate-heavy rows by more than 5×. */
   val ExcludedRules = "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
 
+  /** Entries of Spark's generated-class cache (a static conf, default
+    * 100). Janino reuses a class only while its source is still cached;
+    * one battery pass at sf0.01 leaves 2,355 distinct sources in the cache
+    * (2,509 after three), so at 100 entries every warm pass recompiled
+    * every class. The headroom covers the sources later passes add. */
+  val CodegenCacheEntries = 4000
+
   /** The session configuration every main runs, as a builder so a caller
     * can add settings of its own before [[session]]. */
   def builder(): SparkSession.Builder = SparkSession.builder()
@@ -29,6 +36,7 @@ object Harness {
     .config("spark.sql.shuffle.partitions", cpus)
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.optimizer.excludedRules", ExcludedRules)
+    .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
     .config("spark.ui.enabled", "false")
 
   def session(b: SparkSession.Builder = builder()): SparkSession = {

@@ -66,6 +66,38 @@ object KMeansKernel {
     }
     new GenericInternalRow(Array[Any](best, bestD))
   }
+
+  /** The `nProbe` nearest centroid indices of `vec`, ordered by (squared
+    * distance asc, index asc): every distance is needed for the ranking,
+    * so there is no early exit. */
+  def nearestCells(vec: ArrayData, cents: Array[Array[Long]], nProbe: Int): Array[Int] = {
+    val n = vec.numElements()
+    val m = cents.length
+    val dists = new Array[Long](m)
+    var c = 0
+    while (c < m) {
+      val cent = cents(c)
+      if (cent.length != n) {
+        throw new IllegalArgumentException(
+          s"kmeans_nearest_cells: vector dim $n != centroid dim ${cent.length}")
+      }
+      var d = 0L
+      var i = 0
+      while (i < n) {
+        val t = vec.getLong(i) - cent(i)
+        if (t > MaxDelta || t < -MaxDelta) {
+          throw new IllegalArgumentException(
+            s"kmeans_nearest_cells: |element - centroid| exceeds 2^25; " +
+              "inputs must sit on the quantized integer grid")
+        }
+        d += t * t
+        i += 1
+      }
+      dists(c) = d
+      c += 1
+    }
+    (0 until m).sortBy(c => (dists(c), c)).take(nProbe).toArray
+  }
 }
 
 /** `struct(cluster int, dist bigint)` nearest-centroid assignment of an
@@ -137,37 +169,10 @@ case class KMeansNearestCellsExpr(child: Expression,
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "kmeans_nearest_cells"
 
-  override def nullSafeEval(input: Any): Any = {
-    val vec = input.asInstanceOf[ArrayData]
-    val n = vec.numElements()
-    val m = centroids.length
-    val dists = new Array[Long](m)
-    var c = 0
-    while (c < m) {
-      val cent = centroids(c)
-      if (cent.length != n) {
-        throw new IllegalArgumentException(
-          s"kmeans_nearest_cells: vector dim $n != centroid dim ${cent.length}")
-      }
-      var d = 0L
-      var i = 0
-      while (i < n) {
-        val t = vec.getLong(i) - cent(i)
-        if (t > KMeansKernel.MaxDelta || t < -KMeansKernel.MaxDelta) {
-          throw new IllegalArgumentException(
-            s"kmeans_nearest_cells: |element - centroid| exceeds 2^25; " +
-              "inputs must sit on the quantized integer grid")
-        }
-        d += t * t
-        i += 1
-      }
-      dists(c) = d
-      c += 1
-    }
-    val order = (0 until m).sortBy(c => (dists(c), c)).take(nProbe)
+  override def nullSafeEval(input: Any): Any =
     new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      order.map(Int.box).toArray[Any])
-  }
+      KMeansKernel.nearestCells(input.asInstanceOf[ArrayData], centroids, nProbe)
+        .map(Int.box).toArray[Any])
 
   override protected def withNewChildInternal(newChild: Expression) =
     copy(child = newChild)

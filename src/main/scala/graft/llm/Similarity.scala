@@ -6,7 +6,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.functions.{PqCodeTable, PqCodebooks, PqOps, TopKCorpus}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+
+import graft.functions.{IvfPqIndex, KMeansKernel, PqCodeTable, PqCodebooks, PqKernel, PqOps, TopKCorpus}
 import graft.operators.Checkpoints
 
 /** Similarity search over embedding columns (SURVEY §2 Group I, I3):
@@ -29,7 +31,8 @@ import graft.operators.Checkpoints
   * | [[sq8TopK]] | SQ8 reconstruction | broadcast queries, id ≠ | exact | heap |
   * | [[pqTopK]], [[pqTopKExact]] | — | broadcast code table kernel | ADC (fused) | emit |
   * | [[ivfTopK]], [[ivfTopKExact]] | both sides | cell self-join | exact | heap |
-  * | [[ivfPqTopKExact]] | codes | cell self-join | ADC | heap |
+  * | [[ivfPqTopKExact]] | collected cell table | probe cells in the kernel | ADC table (fused) | emit |
+  * | same, over the collect budget | codes | cell self-join | ADC | heap |
   * | [[ivfServe]] | both sides | broadcast probes | exact | heap |
   * | [[ivfPqServe]] | codes | broadcast probes | ADC | heap |
   * | [[lshTopK]] | both sides | bucket self-join | exact | window |
@@ -641,8 +644,8 @@ object Similarity {
   /** [[pqTopK]] with INTEGER-Lloyd per-block codebooks — the derandomized,
     * fully oracle-checkable PQ (round 11; the `i3_ivf_ann_topk` playbook
     * on the block axis): codebooks come from [[KMeans.blockCodebooks]]
-    * (nCodes lowest-id seed slices, exact fixed-point updates, one
-    * distributed pass per update), and both the encode argmin and the ADC
+    * (nCodes lowest-id seed slices, exact fixed-point updates, on the
+    * driver under the collect budget), and both the encode argmin and the ADC
     * scan run on exact-integer-valued DOUBLES (the 1e-6 grid: every
     * product ≤ 2^41 and every sum ≤ 2^47 stays exact in IEEE double), so
     * the existing [[graft.functions.PqEncodeExpr]]/
@@ -670,23 +673,40 @@ object Similarity {
     * unshifted grid, as exact-integer doubles (the +1e6 shift is uniform,
     * so floor-mean commutes with it). `df0` holds the rows with a vector. */
   private def lloydCodebooks(df0: DataFrame, idCol: String, vecCol: String,
-      nBlocks: Int, nCodes: Int, updates: Int): PqCodebooks = {
-    val (shifted, bs, dim) =
-      KMeans.blockCodebooks(df0, idCol, vecCol, nCodes, updates, nBlocks)
-    new PqCodebooks(
-      shifted.map(_.map(_.map(v => (v - KMeans.Scale).toDouble))), bs, dim)
+      nBlocks: Int, nCodes: Int, updates: Int): PqCodebooks =
+    unshifted(KMeans.blockCodebooks(df0, idCol, vecCol, nCodes, updates, nBlocks))
+
+  /** [[KMeans.blockCodebooks]]' shifted-grid books as exact-integer
+    * doubles on the unshifted grid. */
+  private def unshifted(shifted: (Array[Array[Array[Long]]], Int, Int)): PqCodebooks = {
+    val (books, bs, dim) = shifted
+    new PqCodebooks(books.map(_.map(_.map(v => (v - KMeans.Scale).toDouble))), bs, dim)
   }
 
   /** The IVF × PQ COMPOSITION with both quantizers integer-Lloyd — the
     * round-11 capstone: candidate generation from [[ivfTopKExact]]'s
     * coarse cells/probes, scoring from [[pqTopKExact]]'s per-block
-    * codebooks via the distributed ADC kernel ([[ivfPqServe]]'s shape:
-    * corpus carries cell + 16-byte codes, raw vectors never reach the
-    * join). Every stage is exact integer arithmetic, so the WHOLE
+    * codebooks by asymmetric distance (the corpus is scored from its
+    * codes, never its raw vectors). Every stage is exact integer arithmetic, so the WHOLE
     * composed index — cells, probes, codes, ADC scores, ranks — is one
     * DuckDB-reproducible function of the data; the serve-tier gates keep
     * pinning the float/sample production path. Self-join form (queries =
-    * corpus) like the other fixture rows. */
+    * corpus) like the other fixture rows.
+    *
+    * A corpus within [[KMeans.LocalLloydMaxRows]] is collected ONCE: both
+    * quantizers train on the driver ([[KMeans.lloyd]]), and the corpus
+    * cells, codes and reconstruction norms fill an [[IvfPqIndex]] through
+    * the same assignment and encode kernels as the distributed path. Each
+    * query row then scores in one projection ([[IvfPqTopKExpr]]): its
+    * (block, code) dot table built once, only its `nProbe` cells' code
+    * lists scanned, nBlocks lookups per candidate, the best k kept with
+    * the self-exclusion, zero-norm rule and (score DESC, id ASC) ties of
+    * the join path — no join, no shuffle, no aggregate. Scores are
+    * bit-identical to [[PqAdcExpr]]'s because every product and partial
+    * sum stays an integer below 2^53 (the index builder checks the bound).
+    * Over the budget, with a repeated id (the join path merges a repeated
+    * query id's candidates), or past the bound, the distributed Lloyd and
+    * the [[cellPairs]] + [[adc]] + [[topKPerQuery]] path run instead. */
   def ivfPqTopKExact(
       df: DataFrame,
       idCol: String,
@@ -699,12 +719,57 @@ object Similarity {
       updates: Int = 1): DataFrame = {
     requireCodes(nCodes)
     val df0 = df.filter(col(vecCol).isNotNull)
-    if (df0.limit(1).isEmpty) return emptyResult(df0, col(idCol).cast("long"))
-    val cells = lloydCells(
-      KMeans.centroids(df0, idCol, vecCol, nList, updates), vecCol, nProbe)
-    val books = lloydCodebooks(df0, idCol, vecCol, nBlocks, nCodes, updates)
-    val (c, q) = pqSides(df, df, idCol, vecCol, cells, books, quantD(col(vecCol)))
-    topKPerQuery(scored(cellPairs(df, c, q), adc(books)), k)
+    val id = col(idCol).cast("long")
+    val local = KMeans.collectLocal(df0.select(col(idCol).as("vid"),
+      KMeans.quantize(col(vecCol)).as("q"), id.as("id"), nonZero(col(vecCol)).as("nz")))
+    if (local.exists(_.isEmpty)) return emptyResult(df0, id)
+    local.flatMap(ivfPqIndex(_, nList, nProbe, nBlocks, nCodes, updates)) match {
+      case Some(index) =>
+        emit(df0.select(id.as("query_id"), quantD(col(vecCol)).as("qv")),
+          PqOps.ivfPqTopK(col("query_id"), col("qv"), index, k))
+      case None => // over the budget, a repeated id or past the bound: not empty
+        val cells = lloydCells(
+          KMeans.centroids(df0, idCol, vecCol, nList, updates), vecCol, nProbe)
+        val books = lloydCodebooks(df0, idCol, vecCol, nBlocks, nCodes, updates)
+        val (c, q) = pqSides(df, df, idCol, vecCol, cells, books, quantD(col(vecCol)))
+        topKPerQuery(scored(cellPairs(df, c, q), adc(books)), k)
+    }
+  }
+
+  /** [[ivfPqTopKExact]]'s cell table from the `(vid, q, id, nz)` rows of
+    * [[KMeans.collectLocal]]: both quantizers trained on those rows, then
+    * every row with an id and a raw nonzero vector filed under its cell
+    * with its codes and reconstruction norm. None when an id repeats or a
+    * score could leave the exact-integer range of a double. */
+  private def ivfPqIndex(rows: Array[Row], nList: Int, nProbe: Int,
+      nBlocks: Int, nCodes: Int, updates: Int): Option[IvfPqIndex] = {
+    val ids = rows.filterNot(_.isNullAt(2)).map(_.getLong(2))
+    if (ids.distinct.length != ids.length) return None
+    val qs = KMeans.vectors(rows)
+    val dim = qs(0).length
+    // trained centroids and codes are floor means of the inputs, so the
+    // inputs' largest magnitude bounds every component
+    val m = BigInt(qs.iterator.flatMap(_.iterator).map(v => math.abs(v - KMeans.Scale))
+      .foldLeft(0L)(math.max))
+    if (BigInt(dim) * m * m >= (BigInt(1) << 53)) return None
+    val cents = KMeans.lloyd(qs, nList, updates)
+    val books = unshifted(KMeans.localBlockCodebooks(qs, nCodes, updates, nBlocks))
+    // (cell, id, codes, rn2) of every row that can score, grouped by cell
+    val entries = rows.indices
+      .filter(r => !rows(r).isNullAt(2) && !rows(r).isNullAt(3) && rows(r).getBoolean(3))
+      .map { r =>
+        val codes = PqKernel.encode(qs(r).map(v => (v - KMeans.Scale).toDouble), books)
+        (KMeansKernel.assign(UnsafeArrayData.fromPrimitiveArray(qs(r)), cents).getInt(0),
+          rows(r).getLong(2), codes,
+          codes.indices.map(b => books.n2(b * books.nCodes + codes(b))).sum)
+      }
+      .filter(_._4 > 0).sortBy(_._1)
+    val cellStart = new Array[Int](cents.length + 1)
+    entries.foreach(e => cellStart(e._1 + 1) += 1)
+    for (c <- 1 to cents.length) cellStart(c) += cellStart(c - 1)
+    Some(new IvfPqIndex(cents.map(_.map(_ - KMeans.Scale)),
+      math.min(nProbe, cents.length), books, cellStart, entries.map(_._2).toArray,
+      entries.flatMap(_._3.map(_.toByte)).toArray, entries.map(_._4).toArray))
   }
 
   /** Train codebooks + build the broadcast code table; None on an empty

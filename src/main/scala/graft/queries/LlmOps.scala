@@ -66,6 +66,14 @@ object LlmOps {
     """list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
       |   for i in range(1, len(w) - 1)])""".stripMargin
 
+  /** The oracle's embedding on the integer 1e-6 grid — the SQL twin of
+    * [[Similarity.quantize]], and with `shift` of [[graft.llm.KMeans.quantize]]. */
+  private def quantizedSql(shift: Boolean = false) =
+    s"[CAST(floor(CAST(x AS DOUBLE)*1000000) AS BIGINT)${if (shift) " + 1000000" else ""} for x in embedding]"
+
+  /** One row per component `e` (1-based index `i`) of a vector `v`. */
+  private val flattenSql = "unnest(v) AS e, generate_subscripts(v,1) AS i"
+
   /** Exact Jaccard of two docs' shingle lists `sa.s` and `sb.s` — the SQL
     * twin of the verify stage's `setJaccard`. */
   private val setJaccardSql =
@@ -726,10 +734,10 @@ object LlmOps {
       threshold = 0.35)
 
   private val embeddingNearDupsSql =
-    """WITH q AS (
-      | SELECT vec_id, [CAST(floor(CAST(x AS DOUBLE)*1000000) AS BIGINT) for x in embedding] AS v
+    s"""WITH q AS (
+      | SELECT vec_id, ${quantizedSql()} AS v
       | FROM embeddings),
-      |flat AS (SELECT vec_id, unnest(v) AS e, generate_subscripts(v,1) AS i FROM q),
+      |flat AS (SELECT vec_id, $flattenSql FROM q),
       |norms AS (SELECT vec_id, sqrt(CAST(SUM(e*e) AS DOUBLE)) AS nrm FROM flat GROUP BY 1),
       |dots AS (
       | SELECT a.vec_id AS doc_a, b.vec_id AS doc_b, SUM(a.e*b.e) AS dot
@@ -840,10 +848,10 @@ object LlmOps {
     * integer grid), `fl` (one row per component) and `nr` (norms) —
     * shared by the IVF, LSH and SemDeDup oracles. */
   private val cosineFeatureCtes =
-    """qs AS (
-      | SELECT vec_id, [CAST(floor(CAST(x AS DOUBLE)*1000000) AS BIGINT) for x in embedding] AS v
+    s"""qs AS (
+      | SELECT vec_id, ${quantizedSql()} AS v
       | FROM embeddings),
-      |fl AS (SELECT vec_id, unnest(v) AS e, generate_subscripts(v,1) AS i FROM qs),
+      |fl AS (SELECT vec_id, $flattenSql FROM qs),
       |nr AS (SELECT vec_id, sqrt(CAST(SUM(e*e) AS DOUBLE)) AS nrm FROM fl GROUP BY 1)""".stripMargin
 
   /** The exact-cosine rerank of ANN candidates `cand(query_id,
@@ -971,18 +979,18 @@ object LlmOps {
   private def pqCtes(p: String) =
     s"""${p}qofs AS (
       | SELECT vec_id,
-      |  [CAST(floor(CAST(x AS DOUBLE)*1000000) AS BIGINT) + 1000000 for x in embedding] AS v
+      |  ${quantizedSql(shift = true)} AS v
       | FROM embeddings),
       |${p}dimt AS (SELECT (MAX(len(v)) + 15) // 16 AS bs FROM ${p}qofs),
       |${p}blk AS (
       | SELECT vec_id, b.b, list_slice(v, b.b*d.bs + 1, (b.b+1)*d.bs) AS v
       | FROM ${p}qofs, range(16) b(b), ${p}dimt d),
-      |${p}bf AS (SELECT vec_id, b, unnest(v) AS e, generate_subscripts(v,1) AS i FROM ${p}blk),
+      |${p}bf AS (SELECT vec_id, b, $flattenSql FROM ${p}blk),
       |${p}seeds AS (
       | SELECT b, cid, v FROM (
       |  SELECT b, v, ROW_NUMBER() OVER (PARTITION BY b ORDER BY vec_id) - 1 AS cid
       |  FROM ${p}blk) WHERE cid < 256),
-      |${p}c0 AS (SELECT b, cid, unnest(v) AS e, generate_subscripts(v,1) AS i FROM ${p}seeds),
+      |${p}c0 AS (SELECT b, cid, $flattenSql FROM ${p}seeds),
       |${p}d0 AS (
       | SELECT bf.vec_id, bf.b, c0.cid, SUM((bf.e - c0.e)*(bf.e - c0.e)) AS dist
       | FROM ${p}bf bf JOIN ${p}c0 c0 ON c0.b = bf.b AND c0.i = bf.i GROUP BY 1, 2, 3),
@@ -1071,9 +1079,9 @@ object LlmOps {
 
   private val queryBatchTopKSql =
     s"""WITH v AS (
-      | SELECT vec_id, [CAST(floor(CAST(x AS DOUBLE)*1000000) AS BIGINT) for x in embedding] AS v
+      | SELECT vec_id, ${quantizedSql()} AS v
       | FROM embeddings),
-      |flat AS (SELECT vec_id, unnest(v) AS e, generate_subscripts(v,1) AS i FROM v),
+      |flat AS (SELECT vec_id, $flattenSql FROM v),
       |norms AS (SELECT vec_id, SUM(e*e) AS nrm FROM flat GROUP BY 1),
       |dots AS (
       | SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, SUM(q.e*c.e) AS dot
@@ -1103,9 +1111,9 @@ object LlmOps {
   private val filteredTopKSql =
     s"""WITH v AS (
       | SELECT vec_id, label,
-      |  [CAST(floor(CAST(x AS DOUBLE)*1000000) AS BIGINT) for x in embedding] AS v
+      |  ${quantizedSql()} AS v
       | FROM embeddings),
-      |flat AS (SELECT vec_id, label, unnest(v) AS e, generate_subscripts(v,1) AS i FROM v),
+      |flat AS (SELECT vec_id, label, $flattenSql FROM v),
       |norms AS (SELECT vec_id, SUM(e*e) AS nrm FROM flat GROUP BY 1),
       |dots AS (
       | SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, SUM(q.e*c.e) AS dot
@@ -1162,9 +1170,9 @@ object LlmOps {
 
   private val cosineTopKSql =
     s"""WITH q AS (
-      | SELECT vec_id, [CAST(floor(CAST(x AS DOUBLE)*1000000) AS BIGINT) for x in embedding] AS v
+      | SELECT vec_id, ${quantizedSql()} AS v
       | FROM embeddings),
-      |flat AS (SELECT vec_id, unnest(v) AS e, generate_subscripts(v,1) AS i FROM q),
+      |flat AS (SELECT vec_id, $flattenSql FROM q),
       |norms AS (SELECT vec_id, SUM(e*e) AS nrm FROM flat GROUP BY 1),
       |dots AS (
       | SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id, SUM(a.e*b.e) AS dot
@@ -1222,12 +1230,12 @@ object LlmOps {
   }
 
   private val hardNegativesSql =
-    """WITH q AS (
-      | SELECT vec_id, label, [CAST(floor(CAST(x AS DOUBLE)*1000000) AS BIGINT) for x in embedding] AS v
+    s"""WITH q AS (
+      | SELECT vec_id, label, ${quantizedSql()} AS v
       | FROM embeddings),
       |qs AS (SELECT vec_id, v FROM q ORDER BY vec_id LIMIT 50),
-      |flat AS (SELECT vec_id, unnest(v) AS e, generate_subscripts(v,1) AS i FROM q),
-      |qflat AS (SELECT vec_id, unnest(v) AS e, generate_subscripts(v,1) AS i FROM qs),
+      |flat AS (SELECT vec_id, $flattenSql FROM q),
+      |qflat AS (SELECT vec_id, $flattenSql FROM qs),
       |norms AS (SELECT vec_id, SUM(e*e) AS nrm FROM flat GROUP BY 1),
       |dots AS (
       | SELECT a.vec_id AS query_id, b.vec_id AS neg_id, SUM(a.e*b.e) AS dot
@@ -1314,13 +1322,13 @@ object LlmOps {
   private def kmeansAssignCteK(k: Int) =
     s"""q AS (
       | SELECT vec_id, label,
-      |  [CAST(floor(CAST(x AS DOUBLE)*1000000) AS BIGINT) + 1000000 for x in embedding] AS v
+      |  ${quantizedSql(shift = true)} AS v
       | FROM embeddings),
       |seeds AS (
       | SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cid, v
       | FROM q ORDER BY vec_id LIMIT $k),
-      |qf AS (SELECT vec_id, unnest(v) AS e, generate_subscripts(v,1) AS i FROM q),
-      |c0 AS (SELECT cid, unnest(v) AS e, generate_subscripts(v,1) AS i FROM seeds),
+      |qf AS (SELECT vec_id, $flattenSql FROM q),
+      |c0 AS (SELECT cid, $flattenSql FROM seeds),
       |d0 AS (
       | SELECT qf.vec_id, c0.cid, SUM((qf.e - c0.e)*(qf.e - c0.e)) AS dist
       | FROM qf JOIN c0 ON c0.i = qf.i GROUP BY 1, 2),

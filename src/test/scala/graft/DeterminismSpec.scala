@@ -2,38 +2,45 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Rows-only queries (no DuckDB oracle) get their determinism evidence
-  * here: identical canonical output under different shuffle
-  * partitionings. As of round 11 the set is EMPTY — every query in the
-  * battery carries a full hash oracle (the md5/integer-Lloyd
-  * derandomizations flipped the last sketch/bucket generators), and the
-  * hash compare subsumes this check — so the first assertion now PINS
-  * that coverage: a new query landing without an oracle entry fails here
-  * and must either get one or be exercised by the partitioning harness
-  * below. */
+import graft.llm.KMeans
+import graft.operators.Checkpoints
+
+/** The battery rows that train integer-Lloyd quantizers run a
+  * driver-local path under the collect budget
+  * ([[graft.llm.KMeans.LocalLloydMaxRows]]) and a distributed one over it.
+  * Both must return the same rows under any shuffle partitioning (every
+  * row's oracle is checked elsewhere; HarnessSpec pins that every row has
+  * one). */
 class DeterminismSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   private val sf = "/root/testdata/sf0.001"
 
-  test("every query is oracle-checked; any rows-only stragglers are partitioning-independent") {
-    val noOracle = (SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet)
-      .toSeq.sorted
-    assert(noOracle.isEmpty,
-      s"rows-only queries reappeared without oracle entries: $noOracle — " +
-        "add a DuckDB oracle (preferred) or consciously extend this spec")
-    def canon(name: String, parts: String): Seq[String] = {
+  private val budgetRows = Seq("i3_ivfpq_topk", "i3_ivf_ann_topk",
+    "i3_pq_ann_topk", "i3_kmeans", "i6_proto_prune", "i6_cluster_balance",
+    "i2_semdedup")
+
+  test("local and distributed paths agree at 4 and 7 partitions") {
+    val default = KMeans.LocalLloydMaxRows
+    def canon(name: String, parts: String, budget: Int): Seq[String] = {
       val prev = spark.conf.get("spark.sql.shuffle.partitions")
       spark.conf.set("spark.sql.shuffle.partitions", parts)
-      try SparkEntry.queries(name)(spark, sf)
-        .collect().map(_.toString).sorted.toSeq
-      finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+      KMeans.LocalLloydMaxRows = budget
+      try Checkpoints.scope(SparkEntry.queries(name)(spark, sf)
+        .collect().map(_.toString).sorted.toSeq)
+      finally {
+        KMeans.LocalLloydMaxRows = default
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+      }
     }
-    noOracle.foreach { name =>
-      val a = canon(name, "4")
-      val b = canon(name, "7")
-      assert(a == b, s"$name diverges across partitionings")
-      assert(a.nonEmpty, s"$name returned no rows at $sf")
+    budgetRows.foreach { name =>
+      val want = canon(name, "4", default)
+      assert(want.nonEmpty, s"$name returned no rows at $sf")
+      for (parts <- Seq("4", "7"); budget <- Seq(default, 0)
+          if (parts, budget) != (("4", default))) {
+        assert(canon(name, parts, budget) == want,
+          s"$name diverges at $parts partitions, budget $budget")
+      }
     }
   }
 }

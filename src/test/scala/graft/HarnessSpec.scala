@@ -72,6 +72,8 @@ class HarnessSpec extends AnyFunSuite {
     assert(conf.get("spark.sql.optimizer.excludedRules") == Harness.ExcludedRules)
     assert(Harness.ExcludedRules.contains("InferFiltersFromGenerate"))
     assert(conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(conf.get("spark.sql.codegen.cache.maxEntries") ==
+      Harness.CodegenCacheEntries.toString)
   }
 
   test("a pin made inside Harness.guard is released after the body") {

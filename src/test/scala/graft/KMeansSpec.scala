@@ -88,4 +88,33 @@ class KMeansSpec extends AnyFunSuite {
     assert(got(2L)._1 == 0)
     assert(got == reference(rows, 2, 0))
   }
+
+  /** `body` with the driver-local Lloyd's collect budget at 0: every
+    * training call takes the distributed rounds. */
+  private def distributed[A](body: => A): A = {
+    val saved = KMeans.LocalLloydMaxRows
+    KMeans.LocalLloydMaxRows = 0
+    try body finally KMeans.LocalLloydMaxRows = saved
+  }
+
+  test("driver-local and distributed training agree: fit, centroids, blockCodebooks") {
+    val blobs = (blob(-0.5f, -0.5f, 7, 6) ++ blob(0.5f, 0.5f, 7, 7) ++
+      blob(-0.5f, 0.5f, 7, 8)).zipWithIndex.map { case (v, i) => (i.toLong, v) }
+    // id 1 empties after the update; id 2 ties between ids 0 and 1
+    val emptyCluster = Seq((0L, Seq(0.0f, 0.0f)), (1L, Seq(0.9f, 0.9f)),
+      (2L, Seq(0.01f, 0.0f)), (3L, Seq(0.0f, 0.01f)))
+    val ties = Seq((0L, Seq(-0.25f, 0.0f)), (1L, Seq(0.25f, 0.0f)), (2L, Seq(0.0f, 0.0f)))
+    val cases = Seq((blobs, 3, 2), (emptyCluster, 2, 1), (ties, 2, 0), (ties, 2, 1))
+    cases.foreach { case (rows, k, updates) =>
+      val df = rows.toDF("vec_id", "embedding")
+      def all() = (run(rows, k, updates),
+        KMeans.centroids(df, "vec_id", "embedding", k, updates).map(_.toSeq).toSeq,
+        KMeans.blockCodebooks(df, "vec_id", "embedding", k, updates, nBlocks = 2) match {
+          case (books, bs, dim) => (books.map(_.map(_.toSeq).toSeq).toSeq, bs, dim)
+        })
+      val local = all()
+      assert(local._1 == reference(rows, k, updates))
+      assert(distributed(all()) == local, s"k=$k updates=$updates")
+    }
+  }
 }

@@ -114,7 +114,10 @@ class PlanBudgetSpec extends AnyFunSuite {
     "i3_query_batch_topk" -> 1, "i3_filtered_topk" -> 1,
     "i3_ivf_serve_gate" -> 5, "i3_ivfpq_serve_gate" -> 5, // r14: recall-gate fold
     "i3_ivf_ann_topk" -> 2, "i3_ivf_recall_gate" -> 5, // r14: fold
-    "i3_ivfpq_topk" -> 2,
+    // exact IVF-PQ: the corpus fits the collect budget, so each query row
+    // scans its probed cells' codes in one projection — no join, no top-k
+    // aggregate
+    "i3_ivfpq_topk" -> 0,
     // lsh: +2 session 13 — the id-pair dedup shape trades two extra
     // id-keyed exchanges (feature re-attach joins) for never shipping the
     // quantized vectors through the collision join + distinct (measured:
