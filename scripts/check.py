@@ -29,9 +29,26 @@ def canon(rows, colnames):
     out.sort()
     return out
 
+def capped_connect():
+    """A DuckDB connection capped at half the machine's memory and, for its
+    spill files, half the free space of its temp directory: an oracle over
+    either cap fails with DuckDB's error instead of exhausting the host."""
+    mem = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    con = duckdb.connect(config={"memory_limit": f"{mem // 2 >> 20}MB"})
+    tmp = os.path.abspath(
+        con.execute("SELECT current_setting('temp_directory')").fetchone()[0])
+    while not os.path.exists(tmp):  # DuckDB makes it on the first spill
+        tmp = os.path.dirname(tmp)
+    st = os.statvfs(tmp)
+    con.execute(f"SET max_temp_directory_size = '{st.f_bavail * st.f_frsize // 2 >> 20}MB'")
+    print("duckdb caps: " + ", ".join(
+        f"{k}={con.execute(f'SELECT current_setting({k!r})').fetchone()[0]}"
+        for k in ("memory_limit", "max_temp_directory_size")))
+    return con
+
 def main():
     sfdir, outdir = sys.argv[1], sys.argv[2]
-    con = duckdb.connect()
+    con = capped_connect()
     for t in ["region","nation","customer","supplier","part","orders",
               "lineitem","events","documents","embeddings"]:
         p = os.path.join(sfdir, f"{t}.parquet")

@@ -7,7 +7,7 @@ import scala.concurrent.{Await, ExecutionContext, Future, Promise}
 import scala.concurrent.duration.{Duration, SECONDS}
 import scala.util.{Failure, Success, Try}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 import graft.model.{Errors, ExceptionGroup, SerializedData, SpanRow}
 
@@ -57,7 +57,6 @@ final class Engine(
   })
   private implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
 
-  def spansDF: DataFrame = sink.toDF(spark)
   def spans: Seq[SpanRow] = sink.spans
 
   /** E1 — the `@task` wrapper. Returns a node builder: apply it to upstream

@@ -58,29 +58,8 @@ object ArrayOps {
   def longArrayDot(a: Column, b: Column): Column =
     Bridge.column(LongArrayDot(Bridge.expression(a), Bridge.expression(b)))
 
-  /** Brute-force cosine top-k of a quantized vector against a broadcast
-    * corpus — see [[BroadcastTopKExpr]]. */
-  def broadcastTopK(
-      queryId: Column,
-      qv: Column,
-      corpus: org.apache.spark.broadcast.Broadcast[TopKCorpus],
-      k: Int): Column =
-    Bridge.column(BroadcastTopKExpr(
-      Bridge.expression(queryId), Bridge.expression(qv), corpus, k))
-
   /** The nProbe nearest IVF cell indices of a vector — see
     * [[NearestCellsExpr]]. */
   def nearestCells(vec: Column, centroids: Array[Array[Double]], nProbe: Int): Column =
     Bridge.column(NearestCellsExpr(Bridge.expression(vec), centroids, nProbe))
-
-  /** IVF cosine top-k of a RAW vector against a cell-partitioned broadcast
-    * corpus — see [[IvfBroadcastTopKExpr]]. */
-  def ivfBroadcastTopK(
-      queryId: Column,
-      rawVec: Column,
-      corpus: org.apache.spark.broadcast.Broadcast[IvfCorpus],
-      nProbe: Int,
-      k: Int): Column =
-    Bridge.column(IvfBroadcastTopKExpr(
-      Bridge.expression(queryId), Bridge.expression(rawVec), corpus, nProbe, k))
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 
@@ -31,11 +31,7 @@ case class TopKByScore(
 
   override def children: Seq[Expression] = Seq(child)
   override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(
-      StructField("score", DoubleType, nullable = false),
-      StructField("id", LongType, nullable = false))),
-    containsNull = false)
+  override def dataType: DataType = TopKKernel.TopKType
   override def prettyName: String = "top_k_by_score"
 
   override def createAggregationBuffer(): TopKBuffer = new TopKBuffer(k)
@@ -78,12 +74,7 @@ case class TopKByScore(
     buffer
   }
 
-  override def eval(buffer: TopKBuffer): Any = {
-    val sorted = buffer.sortedBestFirst()
-    new GenericArrayData(sorted.map { case (s, i) =>
-      InternalRow(s, i)
-    })
-  }
+  override def eval(buffer: TopKBuffer): Any = buffer.result()
 
   override def serialize(buffer: TopKBuffer): Array[Byte] = {
     val bos = new ByteArrayOutputStream()
@@ -173,12 +164,13 @@ final class TopKBuffer(k: Int) {
     while (i < n) { f(scores(i), ids(i)); i += 1 }
   }
 
-  def sortedBestFirst(): Array[(Double, Long)] = {
+  /** The entries best first (score DESC, id ASC) as `array<struct<score, id>>`. */
+  def result(): ArrayData = {
     val arr = Array.tabulate(n)(i => (scores(i), ids(i)))
-    arr.sortWith { (a, b) =>
+    new GenericArrayData(arr.sortWith { (a, b) =>
       val c = java.lang.Double.compare(a._1, b._1)
       if (c != 0) c > 0 else a._2 < b._2
-    }
+    }.map { case (s, i) => InternalRow(s, i): Any })
   }
 }
 

@@ -27,16 +27,6 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("mime", StringType, nullable = false),
-    StructField("payload", BinaryType, nullable = false),
-    StructField("meta", StructType(Seq(
-      StructField("width", IntegerType),
-      StructField("height", IntegerType),
-      StructField("n_channels", IntegerType),
-      StructField("duration_ms", LongType))))))
-
   /** Extension → mime for the ingestion path (only the formats a codec
     * here understands get a specific type; everything else stays the
     * generic octet-stream the stub handles). */

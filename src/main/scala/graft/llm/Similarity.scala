@@ -1,14 +1,14 @@
 package graft.llm
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 
-import graft.functions.{IvfPqIndex, KMeansKernel, PqCodeTable, PqCodebooks, PqKernel, PqOps, TopKCorpus}
+import graft.functions.{AllCells, CellIndex, CellTopK, CosineProbe, GridProbe, KMeansKernel, PqCodebooks, PqKernel, PqOps, Probe}
 import graft.operators.Checkpoints
 
 /** Similarity search over embedding columns (SURVEY §2 Group I, I3):
@@ -19,19 +19,25 @@ import graft.operators.Checkpoints
   * Every top-k tier composes private `features → route → score → top-k`
   * stages: [[features]]; its own join, the IVF [[cellPairs]] or
   * [[probePairs]] over a [[Cells]] quantizer, or LSH buckets; [[scored]]
-  * by [[exactCosine]] or [[adc]]; [[topKPerQuery]], [[windowTopK]] or a
-  * fused kernel's [[emit]]. Broadcast indexes live in an [[IndexCache]].
+  * by [[exactCosine]] or [[adc]]; [[topKPerQuery]], [[windowTopK]] or the
+  * per-row top-k kernel's [[emit]].
+  *
+  * The fused tiers (`kernel` below) pack their corpus into one broadcast
+  * [[graft.functions.CellIndex]] with [[packIndex]] and score each query
+  * row with [[graft.functions.CellTopKExpr]]: the query's raw vector in,
+  * its probed cells scanned by exact integer cosine or a PQ lookup table.
+  * Cached indexes live in the one [[IndexCache]].
   *
   * | tier | features | route | score | top-k |
   * |---|---|---|---|---|
   * | [[hardNegatives]] | both sides | broadcast queries, label ≠ | exact | heap |
   * | [[batchTopK]] | both sides | broadcast queries, cross | exact | heap |
-  * | [[bruteForceTopK]] | query quantize | broadcast corpus kernel | exact (fused) | emit |
+  * | [[bruteForceTopK]] | cached grid index | all cells | exact (kernel) | emit |
   * | same, non-integral ids | both sides | broadcast corpus, id ≠ | exact | window |
   * | [[sq8TopK]] | SQ8 reconstruction | broadcast queries, id ≠ | exact | heap |
-  * | [[pqTopK]], [[pqTopKExact]] | — | broadcast code table kernel | ADC (fused) | emit |
+  * | [[pqTopK]], [[pqTopKExact]] | cached code index | all cells | ADC table (kernel) | emit |
   * | [[ivfTopK]], [[ivfTopKExact]] | both sides | cell self-join | exact | heap |
-  * | [[ivfPqTopKExact]] | collected cell table | probe cells in the kernel | ADC table (fused) | emit |
+  * | [[ivfPqTopKExact]] | per-call code index | grid probe | ADC table (kernel) | emit |
   * | same, over the collect budget | codes | cell self-join | ADC | heap |
   * | [[ivfServe]] | both sides | broadcast probes | exact | heap |
   * | [[ivfPqServe]] | codes | broadcast probes | ADC | heap |
@@ -298,9 +304,10 @@ object Similarity {
   /** I3a — brute-force cosine top-k neighbors for each query vector.
     * The corpus side is broadcast (queries stream past it), under the
     * [[MaxBroadcastRowsConf]] budget; for corpus >> memory use
-    * [[lshTopK]] instead. Integral ids run the fused broadcast kernel
-    * ([[bruteForceTopKBroadcast]]); any other id type takes the broadcast
-    * join + window path, which preserves the id type. */
+    * [[lshTopK]] instead. Integral ids run the per-row top-k kernel over
+    * the cached [[exactIndex]]; any other id type takes the broadcast
+    * join + window path, which preserves the id type. Both leave a null
+    * id out on either side. */
   def bruteForceTopK(
       queries: DataFrame,
       corpus: DataFrame,
@@ -308,7 +315,7 @@ object Similarity {
       vecCol: String,
       k: Int = 5): DataFrame = {
     if (integralId(queries, idCol) && integralId(corpus, idCol))
-      return bruteForceTopKBroadcast(queries, corpus, idCol, vecCol, k)
+      return indexTopK(queries, idCol, vecCol, exactIndex(corpus, idCol, vecCol), k)
     requireBroadcastable(corpus, idCol)
     val q = features(queries, Queries, col(idCol), quantize(col(vecCol)))
     val c = features(corpus, Corpus, col(idCol), quantize(col(vecCol)))
@@ -316,10 +323,33 @@ object Similarity {
       exactCosine), k)
   }
 
-  /** A bounded cache of broadcast indexes, one per DISTINCT corpus (keyed
-    * by the canonicalized logical plan + columns + build parameters):
-    * repeated bench/verify/explain calls on the same corpus — the way
-    * every long-running driver actually calls this — reuse one
+  /** Each query row's top-k against a broadcast index by the per-row
+    * kernel ([[graft.functions.CellTopKExpr]]), the long kernel ids cast
+    * back to the queries' id type. */
+  private[graft] def indexTopK(queries: DataFrame, idCol: String, vecCol: String,
+      index: Broadcast[CellIndex], k: Int): DataFrame =
+    emit(queries.select(col(idCol).cast("long").as("query_id"), col(vecCol).as("qv")),
+      CellTopK(col("query_id"), col("qv"), index, k), Some(queries.schema(idCol).dataType))
+
+  /** Cache key: (applicationId, canonicalized corpus plan, id col, vec col)
+    * and the index's build parameters — empty for [[exactIndex]],
+    * (nBlocks, nCodes) for the sample-trained PQ index and (nBlocks,
+    * nCodes, updates) for the integer-Lloyd one. The applicationId
+    * component is load-bearing: broadcasts die with their SparkContext, so
+    * a plan-identical corpus queried from a RESTARTED session must miss (a
+    * hit would hand out a broadcast whose blocks no longer exist and fail
+    * at execution with an opaque fetch error). */
+  private type IndexKey = (String,
+    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String, String, Seq[Int])
+
+  private[graft] def indexKey(corpus: DataFrame, idCol: String, vecCol: String,
+      params: Seq[Int]): IndexKey =
+    (corpus.sparkSession.sparkContext.applicationId,
+      corpus.queryExecution.analyzed.canonicalized, idCol, vecCol, params)
+
+  /** A bounded cache of broadcast indexes, one per DISTINCT (corpus, build
+    * parameters): repeated bench/verify/explain calls on the same corpus —
+    * the way every long-running driver actually calls this — reuse one
     * corpus-sized allocation instead of leaking one per call.
     *
     * Contract and bounds:
@@ -327,28 +357,32 @@ object Similarity {
     *    path-based; rewriting a parquet in place and re-querying within one
     *    session would serve the old vectors — call [[releaseBroadcasts]]
     *    after any such rewrite);
-    *  - bounded at [[MaxCachedCorpora]] entries, oldest evicted first —
+    *  - bounded at [[MaxCachedIndexes]] entries, oldest evicted first —
     *    eviction only DROPS the strong reference (no destroy), so in-flight
     *    plans keep working and Spark's ContextCleaner reclaims the
     *    broadcast once their DataFrames are garbage;
-    *  - first-writer-wins: a concurrent builder's losing index is released
+    *  - first-writer-wins: a concurrent builder's losing index is destroyed
     *    before anything can plan on it. */
-  private final class IndexCache[K, V <: AnyRef](release: V => Unit) {
-    private val entries = new java.util.LinkedHashMap[K, V](16, 0.75f, false) {
-      override def removeEldestEntry(e: java.util.Map.Entry[K, V]) =
-        this.size() > MaxCachedCorpora
+  private object IndexCache {
+    private val entries = new java.util.LinkedHashMap[IndexKey, Broadcast[CellIndex]](
+        16, 0.75f, false) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[IndexKey, Broadcast[CellIndex]]) =
+        this.size() > MaxCachedIndexes
     }
 
-    def get(key: K): Option[V] = synchronized(Option(entries.get(key)))
+    def get(key: IndexKey): Option[Broadcast[CellIndex]] =
+      synchronized(Option(entries.get(key)))
 
     /** The cached index for `key`, else `build`'s (None is not cached). */
-    def getOrBuild(key: K)(build: => Option[V]): Option[V] =
+    def getOrBuild(key: IndexKey)(
+        build: => Option[Broadcast[CellIndex]]): Option[Broadcast[CellIndex]] =
       get(key).orElse(build.map { fresh =>
         val winner = synchronized {
           val prev = entries.get(key)
           if (prev == null) { entries.put(key, fresh); fresh } else prev
         }
-        if (winner ne fresh) release(fresh)
+        if (winner ne fresh) fresh.destroy()
         winner
       })
 
@@ -356,53 +390,26 @@ object Similarity {
 
     def clear(): Unit = synchronized {
       val it = entries.values().iterator()
-      while (it.hasNext) { release(it.next()); it.remove() }
+      while (it.hasNext) { it.next().destroy(); it.remove() }
     }
   }
 
-  private val MaxCachedCorpora = 8
+  private val MaxCachedIndexes = 16
 
-  /** Cache key: (applicationId, canonicalized corpus plan, id col, vec col).
-    * The applicationId component is load-bearing: broadcasts die with their
-    * SparkContext, so a plan-identical corpus queried from a RESTARTED
-    * session must miss (a hit would hand out a broadcast whose blocks no
-    * longer exist and fail at execution with an opaque fetch error). */
-  private type CorpusKey =
-    (String, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String, String)
+  /** Destroy every cached index broadcast (driver lifecycle hook — called
+    * by Bench/Verify at teardown; call it between suites or after a corpus
+    * file rewrite). DataFrames built by earlier [[bruteForceTopK]]/
+    * [[pqTopK]]/[[pqTopKExact]] calls must not run (or be constructed
+    * concurrently) after this. */
+  def releaseBroadcasts(): Unit = IndexCache.clear()
 
-  private[graft] def corpusKey(corpus: DataFrame, idCol: String, vecCol: String): CorpusKey =
-    (corpus.sparkSession.sparkContext.applicationId,
-      corpus.queryExecution.analyzed.canonicalized, idCol, vecCol)
+  /** Visible for tests: number of live cached index broadcasts. */
+  private[graft] def cachedIndexCount: Int = IndexCache.size
 
-  private val corpusCache =
-    new IndexCache[CorpusKey, Broadcast[TopKCorpus]](_.destroy())
-
-  /** PQ code-table key: the corpus, nBlocks, nCodes, and the integer-Lloyd
-    * update count — None for the sample-trained books, a separate table. */
-  private type PqKey = (CorpusKey, Int, Int, Option[Int])
-  private val pqCache =
-    new IndexCache[PqKey, (PqCodebooks, Broadcast[PqCodeTable])](_._2.destroy())
-
-  /** Destroy every cached broadcast — brute-force corpora AND PQ code
-    * tables (driver lifecycle hook — called by Bench/Verify at teardown;
-    * call it between suites or after a corpus file rewrite). DataFrames
-    * built by earlier [[bruteForceTopK]]/[[pqTopK]] calls must not run
-    * (or be constructed concurrently) after this. */
-  def releaseBroadcasts(): Unit = {
-    corpusCache.clear()
-    pqCache.clear()
-  }
-
-  /** Visible for tests: number of live cached corpus broadcasts. */
-  private[graft] def cachedBroadcastCount: Int = corpusCache.size
-
-  /** Visible for tests: number of live cached PQ code tables. */
-  private[graft] def pqCachedCount: Int = pqCache.size
-
-  /** Visible for tests: the cached broadcast for a corpus, if any. */
+  /** Visible for tests: the cached exact index for a corpus, if any. */
   private[graft] def cachedBroadcastFor(
       corpus: DataFrame, idCol: String, vecCol: String) =
-    corpusCache.get(corpusKey(corpus, idCol, vecCol))
+    IndexCache.get(indexKey(corpus, idCol, vecCol, Nil))
 
   /** Conf key bounding the brute-force broadcast corpus (rows). The
     * broadcast path ships the WHOLE corpus to the driver and every
@@ -428,92 +435,69 @@ object Similarity {
           "Similarity.ivfTopK for large corpora, or raise the budget.")
   }
 
-  /** Vector packer: `(id: long, quantized vector)` rows → ids, vectors
-    * row-major in one flat array (row `r` at `slot(r)`), norms, dim. */
-  private def packVectors(rows: Array[Row], slot: Int => Int)
-      : (Array[Long], Array[Long], Array[Double], Int) = {
-    val n = rows.length
-    val dim = if (n == 0) 0 else rows(0).getSeq[Long](1).size
-    val ids = new Array[Long](n)
-    val flat = new Array[Long](n * dim)
-    val norms = new Array[Double](n)
-    var r = 0
-    while (r < n) {
-      val j = slot(r)
-      ids(j) = rows(r).getLong(0)
-      val v = rows(r).getSeq[Long](1)
-      require(v.size == dim, s"ragged embedding dim: ${v.size} != $dim")
-      var dot = 0L
-      var i = 0
-      while (i < dim) {
-        val x = v(i)
-        flat(j * dim + i) = x
-        dot += x * x
-        i += 1
+  /** The index packer of every fused tier: `(id: long, cell: int,
+    * payload)` rows → one broadcast [[CellIndex]] of `nCells` cells, rows
+    * sorted by cell. The payload is a vector on the 1e-6 grid
+    * (`array<bigint>`; norm √Σx²) or, with `pq`'s books, PQ codes
+    * (`array<int>`; norm √Σn2, the reconstruction's). A row with a null id
+    * is left out, as the join path's `id ≠` predicate drops it: a null id
+    * is never a neighbor. A zero-norm row is left out: it never scores.
+    * `pq`'s flag marks books trained on the grid. */
+  private def packIndex(spark: SparkSession, rows: Array[Row], probe: Probe,
+      nCells: Int, pq: Option[(PqCodebooks, Boolean)]): Broadcast[CellIndex] = {
+    val books = pq.map(_._1).orNull
+    val dim = if (books != null) books.dim
+      else if (rows.isEmpty) 0 else rows(0).getSeq[Long](2).size
+    val kept = rows.filterNot(_.isNullAt(0)).map { r =>
+      val v = r.getSeq[Number](2).map(_.longValue).toArray
+      val norm2 = if (books != null)
+        v.indices.foldLeft(0.0)((s, b) => s + books.n2(b * books.nCodes + v(b).toInt))
+      else {
+        require(v.length == dim, s"ragged embedding dim: ${v.length} != $dim")
+        v.foldLeft(0L)((s, x) => s + x * x).toDouble
       }
-      norms(j) = math.sqrt(dot.toDouble)
-      r += 1
-    }
-    (ids, flat, norms, dim)
+      (r.getInt(1), r.getLong(0), v, math.sqrt(norm2))
+    }.filter(_._4 > 0).sortBy(_._1)
+    val cellStart = new Array[Int](nCells + 1)
+    kept.foreach(e => cellStart(e._1 + 1) += 1)
+    for (c <- 1 to nCells) cellStart(c) += cellStart(c - 1)
+    val payload = kept.flatMap(_._3)
+    spark.sparkContext.broadcast(new CellIndex(probe, cellStart, kept.map(_._2),
+      kept.map(_._4), dim, if (books == null) payload else null, books,
+      if (books == null) null else payload.map(_.toByte), pq.exists(_._2)))
   }
 
-  /** Broadcast-corpus brute force: the corpus (quantized vectors + norms) is
-    * collected once and shipped as a Spark broadcast — the same memory
-    * contract as the broadcast hash join it replaces — and each query row
-    * computes its whole top-k in one fused kernel
-    * ([[graft.functions.BroadcastTopKExpr]]). No join, no shuffle, no
-    * aggregate: queries stream past the corpus exactly like the
-    * BroadcastNestedLoopJoin plan, minus |Q|×|C| row materialization.
-    * Null-vector corpus rows are left out of the index.
-    *
-    * Note the corpus collect (and the broadcast, on a cache miss) happens
-    * EAGERLY at DataFrame-construction time, like a prepared statement —
-    * plan-only inspection of the result also pays it. */
-  private[graft] def bruteForceTopKBroadcast(
-      queries: DataFrame,
-      corpus: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int): DataFrame = {
-    val bc = corpusCache.getOrBuild(corpusKey(corpus, idCol, vecCol)) {
+  /** The exact corpus index of [[bruteForceTopK]] and the exact stream
+    * ([[graft.streaming.VectorServe.serveExact]]), cached: every row with
+    * a vector, on the grid, in one cell. The corpus collect (and the
+    * broadcast, on a cache miss) happens EAGERLY at DataFrame-construction
+    * time, like a prepared statement — plan-only inspection of the result
+    * also pays it. */
+  private[graft] def exactIndex(corpus: DataFrame, idCol: String,
+      vecCol: String): Broadcast[CellIndex] =
+    IndexCache.getOrBuild(indexKey(corpus, idCol, vecCol, Nil)) {
       requireBroadcastable(corpus, idCol)
-      val rows = corpus.filter(col(vecCol).isNotNull)
-        .select(col(idCol).cast("long"), quantize(col(vecCol))).collect()
-      val (ids, flat, norms, dim) = packVectors(rows, identity)
-      Some(queries.sparkSession.sparkContext.broadcast(
-        new TopKCorpus(ids, flat, norms, dim)))
+      Some(packIndex(corpus.sparkSession, corpus.filter(col(vecCol).isNotNull)
+        .select(col(idCol).cast("long"), lit(0), quantize(col(vecCol))).collect(),
+        AllCells, 1, None))
     }.get
-    emit(queries.select(col(idCol).cast("long").as("query_id"),
-        quantize(col(vecCol)).as("qv")),
-      graft.functions.ArrayOps.broadcastTopK(col("query_id"), col("qv"), bc, k),
-      Some(queries.schema(idCol).dataType))
-  }
 
-  /** Build-once cell-partitioned broadcast index for the STREAMING IVF
-    * serve tier ([[graft.streaming.VectorServe.serveIvf]]): centroids
-    * trained exactly as [[ivfServe]]'s, corpus cells assigned by the SAME
-    * executor expression the batch plan uses (parity by construction, not
-    * by re-implementation), rows collected (budget-guarded) and packed
-    * cell-sorted with offsets. None on an empty / all-null-vector corpus. */
-  private[graft] def ivfBroadcastIndex(
-      corpus: DataFrame, idCol: String, vecCol: String, nList: Int)
-      : Option[Broadcast[graft.functions.IvfCorpus]] = {
+  /** The cell index of the streaming IVF serve tier
+    * ([[graft.streaming.VectorServe.serveIvf]]): centroids trained exactly
+    * as [[ivfServe]]'s, corpus cells assigned by the SAME executor
+    * expression the batch plan uses (parity by construction), and each
+    * query probing its `nProbe` nearest cells by cosine. None on an empty
+    * / all-null-vector corpus. */
+  private[graft] def ivfIndex(corpus: DataFrame, idCol: String, vecCol: String,
+      nList: Int, nProbe: Int): Option[Broadcast[CellIndex]] = {
     val c0 = corpus.filter(col(vecCol).isNotNull)
     requireBroadcastable(c0, idCol)
     if (c0.limit(1).isEmpty) return None
     val centroids = trainCosineCentroids(
       boundedSample(idVecs(corpus, idCol, vecCol)), nList, LloydIters)
-    val rows = c0.select(col(idCol).cast("long"), quantize(col(vecCol)),
-        cosineCells(centroids, vecCol, 1).assign)
-      .collect()
-    val counts = new Array[Int](centroids.length)
-    rows.foreach(r => counts(r.getInt(2)) += 1)
-    val cellStart = counts.scanLeft(0)(_ + _)
-    val fill = cellStart.clone()
-    val slots = rows.map { r => val c = r.getInt(2); fill(c) += 1; fill(c) - 1 }
-    val (ids, flat, norms, dim) = packVectors(rows, slots(_))
-    Some(corpus.sparkSession.sparkContext.broadcast(
-      new graft.functions.IvfCorpus(cellStart, ids, flat, norms, dim, centroids)))
+    Some(packIndex(corpus.sparkSession, c0.select(col(idCol).cast("long"),
+        cosineCells(centroids, vecCol, 1).assign, quantize(col(vecCol))).collect(),
+      CosineProbe(centroids, nProbe), centroids.length, None))
   }
 
   /** SQ8 per-component map `f(x, mn, mx)` against the corpus's
@@ -606,10 +590,11 @@ object Similarity {
     * form runs (kept exhaustive here so recall is bounded ONLY by
     * quantization error — gated by `i3_pq_recall_gate`).
     *
-    * One fused ADC kernel per query row: LUT built once, every code row
-    * scored in O(nBlocks) lookups into a bounded heap — no join, no
-    * shuffle, no |Q|×|C| materialization (the join formulation dragged
-    * the 32 KB LUT through every pair; profiled 10× slower). */
+    * The per-row top-k kernel over a PQ code index: per query row one
+    * LUT, every code row scored in O(nBlocks) lookups into a bounded heap
+    * — no join, no shuffle, no |Q|×|C| materialization (the join
+    * formulation dragged the 32 KB LUT through every pair; profiled 10×
+    * slower). */
   def pqTopK(
       df: DataFrame,
       idCol: String,
@@ -617,27 +602,27 @@ object Similarity {
       k: Int = 5,
       nBlocks: Int = 16,
       nCodes: Int = 256): DataFrame =
-    pqScan(df, idCol, vecCol, k, nBlocks, nCodes, None, identity)(
-      built(_, nBlocks, nCodes))
+    pqScan(df, idCol, vecCol, k, nBlocks, nCodes, None)(
+      sampledPqIndex(_, nBlocks, nCodes))
 
-  /** The broadcast code-table scan of the PQ tiers: the table cached for
-    * (corpus, nBlocks, nCodes, `updates`), else `build`'s from
-    * [[idVecs]]' frame; each query row scores `vec` of its raw vector. */
+  /** The code-index scan of the PQ tiers: the index cached for (corpus,
+    * nBlocks, nCodes, `updates`), else `build`'s from [[idVecs]]' frame;
+    * each query row is scored from its raw vector. */
   private def pqScan(df: DataFrame, idCol: String, vecCol: String, k: Int,
-      nBlocks: Int, nCodes: Int, updates: Option[Int], vec: Column => Column)(
-      build: DataFrame => Option[(PqCodebooks, Broadcast[PqCodeTable])]): DataFrame = {
+      nBlocks: Int, nCodes: Int, updates: Option[Int])(
+      build: DataFrame => Option[Broadcast[CellIndex]]): DataFrame = {
     requireCodes(nCodes)
     val feats = idVecs(df, idCol, vecCol)
-    pqCache.getOrBuild((corpusKey(df, idCol, vecCol), nBlocks, nCodes, updates)) {
+    IndexCache.getOrBuild(indexKey(df, idCol, vecCol, Seq(nBlocks, nCodes) ++ updates)) {
       // fail-fast BEFORE the sample scan and Lloyd training — an
       // over-budget corpus must not pay minutes of work first
       requireBroadcastable(df, idCol)
       build(feats)
     } match {
       case None => emptyResult(feats, col("id"))
-      case Some((books, table)) =>
-        emit(feats.select(col("id").as("query_id"), vec(col("v")).as("v")),
-          PqOps.pqTopK(col("query_id"), col("v"), table, books, k))
+      case Some(index) =>
+        emit(feats.select(col("id").as("query_id"), col("v")),
+          CellTopK(col("query_id"), col("v"), index, k))
     }
   }
 
@@ -647,9 +632,10 @@ object Similarity {
     * (nCodes lowest-id seed slices, exact fixed-point updates, on the
     * driver under the collect budget), and both the encode argmin and the ADC
     * scan run on exact-integer-valued DOUBLES (the 1e-6 grid: every
-    * product ≤ 2^41 and every sum ≤ 2^47 stays exact in IEEE double), so
-    * the existing [[graft.functions.PqEncodeExpr]]/
-    * [[graft.functions.PqTopKExpr]] kernels are reused unchanged and
+    * product ≤ 2^41 and every sum ≤ 2^47 stays exact in IEEE double; the
+    * kernel snaps each query to the grid itself), so
+    * [[graft.functions.PqEncodeExpr]] and the per-row top-k kernel serve
+    * both tiers and
     * DuckDB reproduces codes, reconstruction norms, scores and ranks
     * bit-for-bit by extending the shared k-means CTE recurrence per
     * block. Same broadcast-code-table scan shape (and cache) as
@@ -663,10 +649,10 @@ object Similarity {
       nBlocks: Int = 16,
       nCodes: Int = 256,
       updates: Int = 1): DataFrame =
-    pqScan(df, idCol, vecCol, k, nBlocks, nCodes, Some(updates), quantD) { feats =>
+    pqScan(df, idCol, vecCol, k, nBlocks, nCodes, Some(updates)) { feats =>
       if (feats.limit(1).isEmpty) None
-      else Some(codeTable(feats, lloydCodebooks(df.filter(col(vecCol).isNotNull),
-        idCol, vecCol, nBlocks, nCodes, updates), quantD(col("v"))))
+      else Some(codeIndex(feats, lloydCodebooks(df.filter(col(vecCol).isNotNull),
+        idCol, vecCol, nBlocks, nCodes, updates), onGrid = true))
     }
 
   /** Integer-Lloyd per-block codebooks ([[KMeans.blockCodebooks]]) on the
@@ -695,15 +681,18 @@ object Similarity {
     *
     * A corpus within [[KMeans.LocalLloydMaxRows]] is collected ONCE: both
     * quantizers train on the driver ([[KMeans.lloyd]]), and the corpus
-    * cells, codes and reconstruction norms fill an [[IvfPqIndex]] through
-    * the same assignment and encode kernels as the distributed path. Each
-    * query row then scores in one projection ([[IvfPqTopKExpr]]): its
-    * (block, code) dot table built once, only its `nProbe` cells' code
-    * lists scanned, nBlocks lookups per candidate, the best k kept with
-    * the self-exclusion, zero-norm rule and (score DESC, id ASC) ties of
-    * the join path — no join, no shuffle, no aggregate. Scores are
-    * bit-identical to [[PqAdcExpr]]'s because every product and partial
-    * sum stays an integer below 2^53 (the index builder checks the bound).
+    * cells, codes and reconstruction norms fill a per-call
+    * [[graft.functions.CellIndex]] through the same assignment and encode
+    * kernels as the distributed path. It is broadcast, not cached, so each
+    * call trains and scores; the ContextCleaner reclaims it. Each query
+    * row then scores in one projection ([[graft.functions.CellTopKExpr]]):
+    * its (block, code) dot table built once, only its `nProbe` grid-probed
+    * cells' code lists scanned, nBlocks lookups per candidate, the best k
+    * kept with the self-exclusion, zero-norm rule and (score DESC, id ASC)
+    * ties of the join path — no join, no shuffle, no aggregate. Scores are
+    * bit-identical to [[graft.functions.PqAdcExpr]]'s because every
+    * product and partial sum stays an integer below 2^53 (the index
+    * builder checks the bound).
     * Over the budget, with a repeated id (the join path merges a repeated
     * query id's candidates), or past the bound, the distributed Lloyd and
     * the [[cellPairs]] + [[adc]] + [[topKPerQuery]] path run instead. */
@@ -723,10 +712,11 @@ object Similarity {
     val local = KMeans.collectLocal(df0.select(col(idCol).as("vid"),
       KMeans.quantize(col(vecCol)).as("q"), id.as("id"), nonZero(col(vecCol)).as("nz")))
     if (local.exists(_.isEmpty)) return emptyResult(df0, id)
-    local.flatMap(ivfPqIndex(_, nList, nProbe, nBlocks, nCodes, updates)) match {
+    local.flatMap(ivfPqIndex(df.sparkSession, _, nList, nProbe, nBlocks, nCodes,
+        updates)) match {
       case Some(index) =>
-        emit(df0.select(id.as("query_id"), quantD(col(vecCol)).as("qv")),
-          PqOps.ivfPqTopK(col("query_id"), col("qv"), index, k))
+        emit(df0.select(id.as("query_id"), col(vecCol).as("qv")),
+          CellTopK(col("query_id"), col("qv"), index, k))
       case None => // over the budget, a repeated id or past the bound: not empty
         val cells = lloydCells(
           KMeans.centroids(df0, idCol, vecCol, nList, updates), vecCol, nProbe)
@@ -736,13 +726,14 @@ object Similarity {
     }
   }
 
-  /** [[ivfPqTopKExact]]'s cell table from the `(vid, q, id, nz)` rows of
+  /** [[ivfPqTopKExact]]'s code index from the `(vid, q, id, nz)` rows of
     * [[KMeans.collectLocal]]: both quantizers trained on those rows, then
-    * every row with an id and a raw nonzero vector filed under its cell
-    * with its codes and reconstruction norm. None when an id repeats or a
-    * score could leave the exact-integer range of a double. */
-  private def ivfPqIndex(rows: Array[Row], nList: Int, nProbe: Int,
-      nBlocks: Int, nCodes: Int, updates: Int): Option[IvfPqIndex] = {
+    * every row with a raw nonzero vector filed under its grid cell with its
+    * codes. None when an id repeats or a score could leave the
+    * exact-integer range of a double. */
+  private def ivfPqIndex(spark: SparkSession, rows: Array[Row], nList: Int,
+      nProbe: Int, nBlocks: Int, nCodes: Int,
+      updates: Int): Option[Broadcast[CellIndex]] = {
     val ids = rows.filterNot(_.isNullAt(2)).map(_.getLong(2))
     if (ids.distinct.length != ids.length) return None
     val qs = KMeans.vectors(rows)
@@ -754,57 +745,37 @@ object Similarity {
     if (BigInt(dim) * m * m >= (BigInt(1) << 53)) return None
     val cents = KMeans.lloyd(qs, nList, updates)
     val books = unshifted(KMeans.localBlockCodebooks(qs, nCodes, updates, nBlocks))
-    // (cell, id, codes, rn2) of every row that can score, grouped by cell
-    val entries = rows.indices
-      .filter(r => !rows(r).isNullAt(2) && !rows(r).isNullAt(3) && rows(r).getBoolean(3))
-      .map { r =>
-        val codes = PqKernel.encode(qs(r).map(v => (v - KMeans.Scale).toDouble), books)
-        (KMeansKernel.assign(UnsafeArrayData.fromPrimitiveArray(qs(r)), cents).getInt(0),
-          rows(r).getLong(2), codes,
-          codes.indices.map(b => books.n2(b * books.nCodes + codes(b))).sum)
-      }
-      .filter(_._4 > 0).sortBy(_._1)
-    val cellStart = new Array[Int](cents.length + 1)
-    entries.foreach(e => cellStart(e._1 + 1) += 1)
-    for (c <- 1 to cents.length) cellStart(c) += cellStart(c - 1)
-    Some(new IvfPqIndex(cents.map(_.map(_ - KMeans.Scale)),
-      math.min(nProbe, cents.length), books, cellStart, entries.map(_._2).toArray,
-      entries.flatMap(_._3.map(_.toByte)).toArray, entries.map(_._4).toArray))
+    val coded = rows.indices
+      .filter(r => !rows(r).isNullAt(3) && rows(r).getBoolean(3))
+      .map(r => Row(rows(r).get(2),
+        KMeansKernel.assign(UnsafeArrayData.fromPrimitiveArray(qs(r)), cents).getInt(0),
+        PqKernel.encode(qs(r).map(v => (v - KMeans.Scale).toDouble), books).toSeq))
+    Some(packIndex(spark, coded.toArray, GridProbe(cents.map(_.map(_ - KMeans.Scale)), nProbe),
+      cents.length, Some(books -> true)))
   }
 
-  /** Train codebooks + build the broadcast code table; None on an empty
-    * (or empty-vector) corpus. `feats` is [[idVecs]]' frame. */
-  private[graft] def built(feats: DataFrame, nBlocks: Int, nCodes: Int)
-      : Option[(PqCodebooks, Broadcast[PqCodeTable])] =
+  /** Train codebooks on a bounded sample and pack the code index; None on
+    * an empty (or empty-vector) corpus. `feats` is [[idVecs]]' frame. */
+  private[graft] def sampledPqIndex(feats: DataFrame, nBlocks: Int, nCodes: Int)
+      : Option[Broadcast[CellIndex]] =
     trainCodebooks(boundedSample(feats), nBlocks, nCodes, LloydIters)
-      .map(codeTable(feats, _, col("v")))
+      .map(codeIndex(feats, _, onGrid = false))
 
-  /** Code-table packer: encode `feats` (`(id, v)`) DISTRIBUTED from `vec`
+  /** Code-index builder: encode `feats` (`(id, v)`) DISTRIBUTED
     * (width-pinned barrier — compact inputs otherwise scan as one
-    * partition), then collect only the byte codes into one
-    * nBlocks-strided broadcast table; the corpus's raw vectors never
-    * reach the driver. Zero-norm vectors are excluded HERE on the raw
-    * norm ([[nonZero]]). Codes are 16× smaller than the raw corpus —
-    * raise the broadcast budget accordingly when composing. */
-  private def codeTable(feats: DataFrame, books: PqCodebooks, vec: Column)
-      : (PqCodebooks, Broadcast[PqCodeTable]) = {
-    val codeRows = feats
+    * partition; `onGrid` books encode the grid vector), then collect only
+    * the codes into one [[packIndex]] cell; the corpus's raw vectors never
+    * reach the driver. Zero-norm vectors are excluded HERE on the raw norm
+    * ([[nonZero]]). Codes are 16× smaller than the raw corpus — raise the
+    * broadcast budget accordingly when composing. */
+  private def codeIndex(feats: DataFrame, books: PqCodebooks,
+      onGrid: Boolean): Broadcast[CellIndex] =
+    packIndex(feats.sparkSession, feats
       .repartition(Par.of(feats))
       .filter(nonZero(col("v")))
-      .select(col("id"), PqOps.pqEncode(vec, books).as("codes"))
-      .collect()
-    val mEff = books.nBlocks
-    val flat = new Array[Byte](codeRows.length * mEff)
-    var j = 0
-    while (j < codeRows.length) {
-      val cs = codeRows(j).getSeq[Int](1)
-      var b = 0
-      while (b < mEff) { flat(j * mEff + b) = cs(b).toByte; b += 1 }
-      j += 1
-    }
-    (books, feats.sparkSession.sparkContext.broadcast(
-      new PqCodeTable(codeRows.map(_.getLong(0)), flat, mEff)))
-  }
+      .select(col("id"), lit(0),
+        PqOps.pqEncode(if (onGrid) quantD(col("v")) else col("v"), books))
+      .collect(), AllCells, 1, Some(books -> onGrid))
 
   /** Train the per-block PQ codebooks on a bounded sample; None on an
     * empty (or empty-vector) sample. Shared by [[pqTopK]]'s broadcast

@@ -77,13 +77,4 @@ object Intervals {
 
   def intersect(r1: Range, r2: Range): Boolean =
     !intersection(r1, r2).isEmpty
-
-  /** Range-overlap as a Column predicate — the join-condition form used by
-    * the D5 range join: `greatest(s1,s2) < least(e1,e2)`. */
-  def overlapCol(s1: org.apache.spark.sql.Column, e1: org.apache.spark.sql.Column,
-      s2: org.apache.spark.sql.Column, e2: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{greatest, least}
-    greatest(s1, s2) < least(e1, e2)
-  }
 }

@@ -89,7 +89,6 @@ object TimeFns {
 
   // ---- column versions (for DataFrame pipelines) ----
 
-  def isoToTimestampCol(c: Column): Column = to_timestamp(c)
   def isoToEpochUsCol(c: Column): Column = unix_micros(to_timestamp(c))
   def isoToEpochMsCol(c: Column): Column =
     floor(isoToEpochUsCol(c) / 1000).cast("long") // Column `/` is true division

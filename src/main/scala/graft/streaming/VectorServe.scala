@@ -1,7 +1,10 @@
 package graft.streaming
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.functions.CellIndex
 
 import graft.llm.Similarity
 
@@ -11,10 +14,12 @@ import graft.llm.Similarity
   * `ivfServe` / `ivfPqServe`), and the shape an embedding-search endpoint
   * actually runs: the corpus is an index built once, queries arrive forever.
   *
-  * Both paths are deliberately STATELESS streaming plans: the corpus index
-  * (a [[graft.functions.TopKCorpus]] or [[graft.functions.PqCodeTable]]
-  * broadcast) is built ONCE at plan time from the static frame, and each
-  * arriving query row is answered by a per-row bounded-heap kernel — a pure
+  * Every stream is a deliberately STATELESS plan: the corpus index (one
+  * broadcast [[graft.functions.CellIndex]] — grid vectors in one cell,
+  * grid vectors in cosine-probed cells, or PQ codes) is built ONCE at plan
+  * time from the static frame, and each arriving query row is answered by
+  * the per-row top-k kernel ([[graft.functions.CellTopKExpr]], the same
+  * expression the batch tiers use) — a pure
   * projection + generator, so the micro-batch plan carries NO state store,
   * no watermark, no aggregation state that could grow with query volume.
   * Append mode works unconditionally and a checkpoint restart has nothing
@@ -30,9 +35,9 @@ import graft.llm.Similarity
   * beyond the broadcast budget shards by id range into N serve replicas
   * each holding one broadcast shard (union of N of these plans), or drops
   * to the corpus-resident batch tier (`ivfServe`) on micro-batched query
-  * files. The kernels exclude a corpus row whose id EQUALS the query id
-  * (self-pair suppression, [[graft.functions.BroadcastTopKExpr]]) — serve
-  * with disjoint query/corpus id spaces, as the gates do.
+  * files. The kernel excludes a corpus row whose id EQUALS the query id
+  * (self-pair suppression) and a corpus row with a null id — serve with
+  * disjoint query/corpus id spaces, as the gates do.
   *
   * Reference analogue: none (the reference has no vector or streaming
   * surface); this extends the EXT serving tier of SURVEY §2 I3.
@@ -47,8 +52,8 @@ object VectorServe {
           s"long): $idCol is ${df.schema(idCol).dataType}")
 
   /** Exact streaming serve: every arriving query row is scored against the
-    * full broadcast corpus by the fused heap kernel
-    * ([[graft.functions.BroadcastTopKExpr]]) — identical arithmetic to the
+    * full broadcast corpus ([[graft.llm.Similarity.exactIndex]], cached) by
+    * the per-row top-k kernel — identical arithmetic to the
     * batch `Similarity.batchTopK` serve (integer dots on the 1e-6 grid),
     * so a stream of queries answers bit-for-bit what the same batch would.
     * Returns (query_id, neighbor_id, cos_sim, rank) in append mode. */
@@ -56,7 +61,8 @@ object VectorServe {
       queryStream: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, k: Int = 5): DataFrame = {
     requireIntegralIds(queryStream, corpus, idCol)
-    Similarity.bruteForceTopKBroadcast(queryStream, corpus, idCol, vecCol, k)
+    Similarity.indexTopK(queryStream, idCol, vecCol,
+      Similarity.exactIndex(corpus, idCol, vecCol), k)
   }
 
   /** FILTERED streaming serve — the `i3_filtered_topk` contract online:
@@ -77,29 +83,19 @@ object VectorServe {
       idCol: String, vecCol: String, k: Int = 5): DataFrame =
     serveExact(queryStream, corpus.filter(predicate), idCol, vecCol, k)
 
-  /** [[servePq]] under a corpus metadata predicate: the filtered corpus is
-    * what gets PQ-trained and encoded — codebooks describe the servable
-    * subset, not the whole store. */
-  def servePqFiltered(
-      queryStream: DataFrame, corpus: DataFrame,
-      predicate: org.apache.spark.sql.Column,
-      idCol: String, vecCol: String, k: Int = 5,
-      nBlocks: Int = 16, nCodes: Int = 256): DataFrame =
-    servePq(queryStream, corpus.filter(predicate), idCol, vecCol, k,
-      nBlocks, nCodes)
-
-  /** A stream's rows with a vector as `(query_id: long, qv)`, for a kernel. */
-  private def queryRows(queryStream: DataFrame, idCol: String,
-      vecCol: String): DataFrame =
-    queryStream.filter(col(vecCol).isNotNull)
-      .select(col(idCol).cast("long").as("query_id"), col(vecCol).as("qv"))
+  /** Every stream row answered by the per-row top-k kernel over `index`;
+    * the typed empty result when there is no index (an empty corpus). */
+  private def serve(queryStream: DataFrame, idCol: String, vecCol: String,
+      index: Option[Broadcast[CellIndex]], k: Int): DataFrame =
+    index.fold(Similarity.emptyResult(queryStream, col(idCol)))(
+      Similarity.indexTopK(queryStream, idCol, vecCol, _, k))
 
   /** IVF streaming serve — the LATENCY axis online: the static corpus is
     * packed once into a cell-partitioned broadcast
-    * ([[graft.llm.Similarity.ivfBroadcastIndex]] — centroids trained and
+    * ([[graft.llm.Similarity.ivfIndex]] — centroids trained and
     * cells assigned by the SAME expressions the batch `ivfServe` uses),
     * and each arriving query picks its `nProbe` nearest cells inside the
-    * kernel ([[graft.functions.IvfBroadcastTopKExpr]]) and heap-scans only
+    * kernel ([[graft.functions.CosineProbe]]) and heap-scans only
     * those cells' row ranges — ~nProbe/nList of the exact kernel's work
     * per query at the probe set's recall (gated batch-side by
     * `i3_ivf_serve_gate`). The plan stays a stateless projection +
@@ -110,14 +106,8 @@ object VectorServe {
       idCol: String, vecCol: String, k: Int = 5,
       nList: Int = 16, nProbe: Int = 4): DataFrame = {
     requireIntegralIds(queryStream, corpus, idCol)
-    Similarity.ivfBroadcastIndex(corpus, idCol, vecCol, nList) match {
-      case None => Similarity.emptyResult(queryStream, col(idCol))
-      case Some(bc) =>
-        Similarity.emit(queryRows(queryStream, idCol, vecCol),
-          graft.functions.ArrayOps.ivfBroadcastTopK(
-            col("query_id"), col("qv"), bc, nProbe, k),
-          Some(queryStream.schema(idCol).dataType))
-    }
+    serve(queryStream, idCol, vecCol,
+      Similarity.ivfIndex(corpus, idCol, vecCol, nList, nProbe), k)
   }
 
   /** [[serveIvf]] under a corpus metadata predicate — the round-12 closure
@@ -136,10 +126,10 @@ object VectorServe {
       nList, nProbe)
 
   /** PQ streaming serve — the memory axis online: the static corpus is
-    * encoded ONCE to an nBlocks-byte-per-vector code table (built
+    * encoded ONCE to an nBlocks-byte-per-vector code index (built
     * distributed; raw corpus vectors never reach the driver —
-    * [[graft.llm.Similarity.built]]), and each arriving query is answered
-    * by the ADC scan kernel ([[graft.functions.PqTopKExpr]]): one
+    * [[graft.llm.Similarity.sampledPqIndex]]), and each arriving query is
+    * answered by the kernel's ADC scan: one
     * O(dim·nCodes) lookup table per query, then O(nBlocks) per corpus row.
     * At the default 16×256 setting the resident index is ~16 bytes/vector
     * — a 64M-vector corpus serves from a ~1 GB broadcast where the exact
@@ -152,12 +142,7 @@ object VectorServe {
       nBlocks: Int = 16, nCodes: Int = 256): DataFrame = {
     requireIntegralIds(queryStream, corpus, idCol)
     Similarity.requireCodes(nCodes)
-    Similarity.built(Similarity.idVecs(corpus, idCol, vecCol), nBlocks, nCodes) match {
-      case None => Similarity.emptyResult(queryStream, col(idCol))
-      case Some((books, table)) =>
-        Similarity.emit(queryRows(queryStream, idCol, vecCol),
-          graft.functions.PqOps.pqTopK(col("query_id"), col("qv"), table, books, k),
-          Some(queryStream.schema(idCol).dataType))
-    }
+    serve(queryStream, idCol, vecCol, Similarity.sampledPqIndex(
+      Similarity.idVecs(corpus, idCol, vecCol), nBlocks, nCodes), k)
   }
 }

@@ -5,8 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.llm.{KMeans, Similarity}
 
-/** The exact IVF-PQ tier's table scan ([[graft.functions.IvfPqTopKExpr]]
-  * over a driver-built cell table) returns exactly the rows of the
+/** The exact IVF-PQ tier's table scan ([[graft.functions.CellTopKExpr]]
+  * over a driver-built code index) returns exactly the rows of the
   * distributed `cellPairs` + `PqAdcExpr` + top-k aggregate path, which
   * runs when the collect budget is 0. */
 class IvfPqParitySpec extends AnyFunSuite {
@@ -49,7 +49,7 @@ class IvfPqParitySpec extends AnyFunSuite {
     // take in the empty cell; a single cell
     for ((k, nList, nProbe) <- Seq((10, 3, 2), (2, 3, 3), (3, 1, 1), (20, 4, 4), (3, 4, 2))) {
       val (scan, join) = paths(df, k, nList, nProbe, nBlocks = 2, nCodes = 4)
-      assert(plan(scan).contains("ivf_pq_topk") && !plan(scan).contains("Exchange"))
+      assert(plan(scan).contains("cell_topk") && !plan(scan).contains("Exchange"))
       assert(plan(join).contains("pq_adc"))
       val got = rows(scan)
       assert(got.nonEmpty)
@@ -58,6 +58,14 @@ class IvfPqParitySpec extends AnyFunSuite {
       assert(got.forall(r => r._1 != r._2))
       assert(got.forall(r => r._1 != null && r._1 != 0L && r._2 != 0L))
     }
+  }
+
+  test("one cell probed: the exact IVF-PQ tier equals the exact PQ tier") {
+    val e = graft.queries.Tables.embeddings(spark, "/root/testdata/sf0.001")
+    val pq = rows(Similarity.pqTopKExact(e, "vec_id", "embedding", k = 5))
+    assert(pq.nonEmpty)
+    assert(rows(Similarity.ivfPqTopKExact(e, "vec_id", "embedding", k = 5,
+      nList = 1, nProbe = 1)) == pq)
   }
 
   test("a repeated id takes the join path") {

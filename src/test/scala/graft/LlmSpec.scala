@@ -1125,7 +1125,7 @@ class LlmSpec extends AnyFunSuite {
     // a restarted session's plan-identical corpus must MISS: its broadcasts
     // died with the old SparkContext, and a stale hit fails at execution
     val vecs = Seq((92001L, Array(1.0f, 0.0f))).toDF("vec_id", "embedding")
-    val key = Similarity.corpusKey(vecs, "vec_id", "embedding")
+    val key = Similarity.indexKey(vecs, "vec_id", "embedding", Nil)
     assert(key._1 == spark.sparkContext.applicationId)
   }
 
@@ -1509,21 +1509,26 @@ class LlmSpec extends AnyFunSuite {
   test("I3 PQ code table is cached per corpus+params and released") {
     val e = graft.queries.Tables.embeddings(spark, "/root/testdata/sf0.001")
     Similarity.releaseBroadcasts()
-    assert(Similarity.pqCachedCount == 0)
+    assert(Similarity.cachedIndexCount == 0)
     Similarity.pqTopK(e, "vec_id", "embedding", k = 1).count()
     Similarity.pqTopK(e, "vec_id", "embedding", k = 3).count() // same table
-    assert(Similarity.pqCachedCount == 1)
+    assert(Similarity.cachedIndexCount == 1)
     Similarity.pqTopK(e, "vec_id", "embedding", k = 1, nBlocks = 8).count()
-    assert(Similarity.pqCachedCount == 2) // different codes → new entry
+    assert(Similarity.cachedIndexCount == 2) // different codes → new entry
     Similarity.releaseBroadcasts()
-    assert(Similarity.pqCachedCount == 0)
+    assert(Similarity.cachedIndexCount == 0)
     // the sample-trained and the integer-Lloyd table of one corpus, same
     // nBlocks/nCodes, are two entries
     Similarity.pqTopK(e, "vec_id", "embedding", k = 1).count()
     Similarity.pqTopKExact(e, "vec_id", "embedding", k = 1).count()
-    assert(Similarity.pqCachedCount == 2)
+    assert(Similarity.cachedIndexCount == 2)
+    // the exact corpus index of the same corpus is a third entry of the
+    // one cache, and a release drops all three
+    Similarity.bruteForceTopK(e, e, "vec_id", "embedding", k = 1).count()
+    assert(Similarity.cachedIndexCount == 3)
+    assert(Similarity.cachedBroadcastFor(e, "vec_id", "embedding").nonEmpty)
     Similarity.releaseBroadcasts()
-    assert(Similarity.pqCachedCount == 0)
+    assert(Similarity.cachedIndexCount == 0)
   }
 
   test("I3 brute-force top-k: zero vector (NaN cosine) never ranks") {
@@ -1590,7 +1595,7 @@ class LlmSpec extends AnyFunSuite {
     assert(bc2.nonEmpty && (bc2.get eq bc1.get),
       "plan-identical corpus must reuse the cached broadcast")
     Similarity.releaseBroadcasts()
-    assert(Similarity.cachedBroadcastCount == 0)
+    assert(Similarity.cachedIndexCount == 0)
     assert(Similarity.cachedBroadcastFor(vecs, "vec_id", "embedding").isEmpty)
   }
 

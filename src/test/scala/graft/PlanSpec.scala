@@ -45,7 +45,30 @@ class PlanSpec extends AnyFunSuite {
     assert(!plan.contains("Exchange"), plan)
     assert(!plan.contains("Join"), plan)
     assert(!plan.contains("Aggregate"), plan)
-    assert(plan.contains("broadcast_topk"), plan)
+    assert(plan.contains("cell_topk"), plan)
+  }
+
+  test("the top-k kernel rows plan with no CodegenFallback expression") {
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    // every node of the executed plan, through AQE stages and subqueries
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case other => other +: (other.children ++ other.subqueries).flatMap(nodes)
+    }
+    val prev = spark.conf.get("spark.sql.codegen.fallback")
+    try {
+      spark.conf.set("spark.sql.codegen.fallback", "false")
+      for (row <- Seq("i3_cosine_topk", "i3_pq_ann_topk", "i3_ivfpq_topk")) {
+        val df = SparkEntry.queries(row)(spark, sf)
+        executedPlan(df)
+        val fallback = nodes(df.queryExecution.executedPlan).flatMap(
+          _.expressions.flatMap(_.collect { case f: CodegenFallback => f.prettyName }))
+        assert(fallback.isEmpty, s"$row: ${fallback.mkString(", ")}")
+      }
+    } finally spark.conf.set("spark.sql.codegen.fallback", prev)
   }
 
   test("span-algebra derivation prunes to the referenced orders columns") {
