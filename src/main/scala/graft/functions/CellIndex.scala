@@ -214,17 +214,8 @@ case class NearestCellsExpr(
   @transient private lazy val elemIsFloat =
     child.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    val xs = new Array[Double](n)
-    var i = 0
-    while (i < n) {
-      xs(i) = if (elemIsFloat) arr.getFloat(i).toDouble else arr.getDouble(i)
-      i += 1
-    }
-    new GenericArrayData(NearestCells.pick(xs, centroids, norms, nProbe))
-  }
+  override def nullSafeEval(input: Any): Any = new GenericArrayData(NearestCells.pick(
+    PqExprs.toDoubles(input.asInstanceOf[ArrayData], elemIsFloat), centroids, norms, nProbe))
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

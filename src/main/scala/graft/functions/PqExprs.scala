@@ -123,7 +123,10 @@ object PqKernel {
 
   /** Asymmetric-distance score of one (query vector, code row) pair:
     * dot(q, recon) / (|q|·√Σ n2) from direct blockwise dots against the
-    * coded centroids, null when either norm is zero. The query vector is
+    * coded centroids, null when either norm is zero. Each block's dot is
+    * totalled first and the block totals are added in block order — the
+    * order of [[dotTable]] + [[TopKKernel]]'s lookup sum, so both routes
+    * of a float-book tier agree to the bit. The query vector is
     * read straight off the ArrayData: this runs once per candidate PAIR,
     * and a per-pair double[] copy is pure GC churn (§4.2). */
   def adc(vec: ArrayData, isFloat: Boolean, codes: ArrayData,
@@ -148,13 +151,15 @@ object PqKernel {
       val c = codes.getInt(b)
       val cent = books.blocks(b)(c)
       val from = b * books.blockSize
+      var bd = 0.0
       var j = 0
       while (j < cent.length) {
         val v = if (isFloat) vec.getFloat(from + j).toDouble
           else vec.getDouble(from + j)
-        dot += v * cent(j)
+        bd += v * cent(j)
         j += 1
       }
+      dot += bd
       rn2 += books.n2(b * books.nCodes + c)
       b += 1
     }
@@ -185,8 +190,8 @@ case class PqEncodeExpr(child: Expression, books: PqCodebooks)
 /** Asymmetric-distance score of ONE (query vector, code row) pair
   * ([[PqKernel.adc]]) for the IVF-PQ compositions whose corpus codes live
   * in an executor-side COLUMN (never collected, never broadcast) and whose
-  * candidates arrive via the coarse-cell join: the float serve tier, and
-  * the exact tier over its collect budget. Scoring is direct blockwise
+  * candidates arrive via the coarse-cell join: the IVF-PQ tiers past
+  * their broadcast or collect budget. Scoring is direct blockwise
   * dots against the coded centroids — O(dim) per pair, not a lookup
   * table's O(nBlocks): a per-query (block, code) table cannot ride the
   * pair rows without dragging a 32 KB array through the join. Where the

@@ -76,10 +76,12 @@ object KMeans {
 
   /** The trained centroid table alone (same seeds, same update recurrence
     * as [[fit]] — bit-identical) for callers that need the centroids as a
-    * reusable quantizer, e.g. IVF cell probing
-    * ([[Similarity.ivfTopKExact]]). A distributed training pin is
-    * released before returning (the collects inside the loop materialize
-    * eagerly). */
+    * reusable quantizer: the integer-Lloyd IVF tiers
+    * ([[Similarity.ivfTopKExact]], [[Similarity.ivfPqTopKExact]]) on
+    * their join route, past the collect budget or with a repeated id
+    * (under it they train on their own [[collectLocal]] with [[lloyd]]).
+    * A distributed training pin is released before returning (the
+    * collects inside the loop materialize eagerly). */
   def centroids(df: DataFrame, idCol: String, vecCol: String, k: Int,
       updates: Int): Array[Array[Long]] = {
     require(k > 0 && updates >= 0, s"bad k=$k / updates=$updates")

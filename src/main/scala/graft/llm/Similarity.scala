@@ -13,8 +13,11 @@ import graft.operators.Checkpoints
 
 /** Similarity search over embedding columns (SURVEY §2 Group I, I3):
   * brute-force cosine top-k as the exactness baseline, LSH-bucketed
-  * (random-hyperplane) search as the scale path. Dot products via
-  * `zip_with` + `aggregate` — pure codegen'd expressions, no UDFs.
+  * (random-hyperplane) search as the scale path. Dot products run in
+  * graft's own generated-code expressions ([[graft.functions.LongArrayDot]],
+  * the top-k kernel); Spark's `zip_with`/`aggregate` higher-order
+  * functions are `CodegenFallback` (interpreted per element) in Spark 4.1
+  * and are kept off the scoring paths.
   *
   * Every top-k tier composes private `features → route → score → top-k`
   * stages: [[features]]; its own join, the IVF [[cellPairs]] or
@@ -25,8 +28,11 @@ import graft.operators.Checkpoints
   * The fused tiers (`kernel` below) pack their corpus into one broadcast
   * [[graft.functions.CellIndex]] with [[packIndex]] and score each query
   * row with [[graft.functions.CellTopKExpr]]: the query's raw vector in,
-  * its probed cells scanned by exact integer cosine or a PQ lookup table.
-  * Cached indexes live in the one [[IndexCache]].
+  * its probed cells scanned by exact integer cosine or a PQ lookup table,
+  * its own id skipped. Cached indexes live in the one [[IndexCache]].
+  * Every IVF tier takes the kernel while its corpus fits the driver (the
+  * integer-Lloyd tiers: [[KMeans.LocalLloydMaxRows]]; the cosine-probe
+  * serve tiers: [[MaxBroadcastRowsConf]]) and its cell join past that.
   *
   * | tier | features | route | score | top-k |
   * |---|---|---|---|---|
@@ -36,26 +42,15 @@ import graft.operators.Checkpoints
   * | same, non-integral ids | both sides | broadcast corpus, id ≠ | exact | window |
   * | [[sq8TopK]] | SQ8 reconstruction | broadcast queries, id ≠ | exact | heap |
   * | [[pqTopK]], [[pqTopKExact]] | cached code index | all cells | ADC table (kernel) | emit |
-  * | [[ivfTopK]], [[ivfTopKExact]] | both sides | cell self-join | exact | heap |
+  * | [[ivfTopKExact]] | per-call grid index | grid probe | exact (kernel) | emit |
   * | [[ivfPqTopKExact]] | per-call code index | grid probe | ADC table (kernel) | emit |
-  * | same, over the collect budget | codes | cell self-join | ADC | heap |
-  * | [[ivfServe]] | both sides | broadcast probes | exact | heap |
-  * | [[ivfPqServe]] | codes | broadcast probes | ADC | heap |
+  * | both, over the collect budget | grid vectors / codes | cell self-join, id ≠ | exact / ADC | heap |
+  * | [[ivfServe]] | per-call grid index | cosine probe | exact (kernel) | emit |
+  * | [[ivfPqServe]] | per-call code index | cosine probe | ADC table (kernel) | emit |
+  * | both, over the broadcast budget | grid vectors / codes | broadcast probes, id ≠ | exact / ADC | heap |
   * | [[lshTopK]] | both sides | bucket self-join | exact | window |
   */
 object Similarity {
-
-  /** Cosine similarity between two float-array columns (double math). */
-  def cosine(a: Column, b: Column): Column = {
-    val dot = aggregate(zip_with(a, b,
-      (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, x) => acc + x)
-    val na = aggregate(transform(a, x => x.cast("double") * x.cast("double")),
-      lit(0.0), (acc, x) => acc + x)
-    val nb = aggregate(transform(b, x => x.cast("double") * x.cast("double")),
-      lit(0.0), (acc, x) => acc + x)
-    dot / (sqrt(na) * sqrt(nb))
-  }
 
   /** Integer-quantized embedding (`floor(x · 10^6)` per component): exact
     * integer dot products → bit-identical results across engines, used by
@@ -69,10 +64,6 @@ object Similarity {
     * formulation pays one interpreted dispatch per element per pair. */
   def dotQ(a: Column, b: Column): Column =
     graft.functions.ArrayOps.longArrayDot(a, b)
-
-  def cosineQ(a: Column, b: Column): Column =
-    dotQ(a, b).cast("double") /
-      (sqrt(dotQ(a, a).cast("double")) * sqrt(dotQ(b, b).cast("double")))
 
   /** Lloyd iterations and sample rows of the sample-fit quantizers. */
   private val LloydIters = 3
@@ -97,11 +88,6 @@ object Similarity {
     df.filter(col(vecCol).isNotNull)
       .select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
 
-  /** Exact-integer-valued double view of the 1e-6 grid (floor() yields
-    * BIGINT; the PQ kernels take float/double arrays, and the cast back is
-    * exact — |values| ≤ 2^21 ≪ 2^53). */
-  private def quantD(v: Column): Column =
-    transform(v, x => floor(x.cast("double") * 1000000d).cast("double"))
 
   /** Raw-norm zero filter: PQ tiers test the RAW vector, since a zero one
     * reconstructs to nonzero centroids and no later check could drop it. */
@@ -154,33 +140,53 @@ object Similarity {
       .join(probes, Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
 
-  /** Route — IVF serve: the corpus scan joins the broadcast probe side. */
+  /** Route — IVF serve: the corpus scan joins the broadcast probe side,
+    * a row never pairing with itself. */
   private def probePairs(corpus: DataFrame, probes: DataFrame): DataFrame =
     corpus.join(broadcast(probes), Seq("cell"))
+      .filter(col("query_id") =!= col("neighbor_id"))
 
-  /** IVF sides for the exact score, from the rows with a vector: corpus
-    * [[features]] with their one `cell`, query features per probed `cell`. */
-  private def exactSides(corpus: DataFrame, queries: DataFrame, idCol: String,
-      vecCol: String, cells: Cells): (DataFrame, DataFrame) = {
+  /** PQ books of an IVF route, flagged when trained on the 1e-6 grid. */
+  private type Books = Option[(PqCodebooks, Boolean)]
+
+  /** The vector a PQ book encodes or scores: for `onGrid` books the
+    * exact-integer-valued double view of the 1e-6 grid (floor() yields
+    * BIGINT; the PQ kernels take float/double arrays, and the cast back is
+    * exact — |values| ≤ 2^21 ≪ 2^53). */
+  private def pqVec(vec: Column, onGrid: Boolean): Column =
+    if (onGrid) transform(vec, x => floor(x.cast("double") * 1000000d).cast("double"))
+    else vec
+
+  /** IVF corpus side, from the rows with a vector: `neighbor_id`, its one
+    * `cell` and its payload — the grid vector `cv` with its norm `cn`, or
+    * with `pq` the `codes` of the raw-nonzero rows (raw vectors leave the
+    * plan). The index builders collect this frame, and the join routes
+    * join it. */
+  private def corpusSide(corpus: DataFrame, idCol: String, vecCol: String,
+      cells: Cells, pq: Books): DataFrame = {
+    val c0 = corpus.filter(col(vecCol).isNotNull)
     val id = col(idCol).cast("long")
-    (features(corpus.filter(col(vecCol).isNotNull), Corpus, id,
-      quantize(col(vecCol)), cells.assign.as("cell")),
-      features(queries.filter(col(vecCol).isNotNull), Queries, id,
-        quantize(col(vecCol)), explode(cells.probes).as("cell")))
+    pq.fold(features(c0, Corpus, id, quantize(col(vecCol)), cells.assign.as("cell"))) {
+      case (books, onGrid) => c0.filter(nonZero(col(vecCol))).select(id.as("neighbor_id"),
+        cells.assign.as("cell"), PqOps.pqEncode(pqVec(col(vecCol), onGrid), books).as("codes"))
+    }
   }
 
-  /** IVF sides for the ADC score: raw-nonzero corpus rows as `cell` + codes
-    * of `vec` (raw vectors leave the plan), query `vec` per probed `cell`. */
-  private def pqSides(corpus: DataFrame, queries: DataFrame, idCol: String,
-      vecCol: String, cells: Cells, books: PqCodebooks,
-      vec: Column): (DataFrame, DataFrame) = {
+  /** IVF query side, from the rows with a vector: one row per probed
+    * `cell`, with the query's [[features]], or with `pq` its vector as `qv`. */
+  private def querySide(queries: DataFrame, idCol: String, vecCol: String,
+      cells: Cells, pq: Books): DataFrame = {
+    val q0 = queries.filter(col(vecCol).isNotNull)
     val id = col(idCol).cast("long")
-    (corpus.filter(col(vecCol).isNotNull).filter(nonZero(col(vecCol)))
-      .select(id.as("neighbor_id"), cells.assign.as("cell"),
-        PqOps.pqEncode(vec, books).as("codes")),
-      queries.filter(col(vecCol).isNotNull)
-        .select(id.as("query_id"), vec.as("qv"), explode(cells.probes).as("cell")))
+    val cell = explode(cells.probes).as("cell")
+    pq.fold(features(q0, Queries, id, quantize(col(vecCol)), cell)) {
+      case (_, onGrid) => q0.select(id.as("query_id"), pqVec(col(vecCol), onGrid).as("qv"), cell)
+    }
   }
+
+  /** Score and top-k of IVF pairs: exact cosine, or ADC with `pq`. */
+  private def ivfRanked(pairs: DataFrame, pq: Books, k: Int): DataFrame =
+    topKPerQuery(scored(pairs, pq.fold(exactCosine)(p => adc(p._1))), k)
 
   /** Exact score: cosine from the quantized vectors + norms of both sides,
     * null on a zero vector. Under ANSI mode (Spark 4 default) a bare
@@ -315,8 +321,9 @@ object Similarity {
       vecCol: String,
       k: Int = 5): DataFrame = {
     if (integralId(queries, idCol) && integralId(corpus, idCol))
-      return indexTopK(queries, idCol, vecCol, exactIndex(corpus, idCol, vecCol), k)
-    requireBroadcastable(corpus, idCol)
+      return indexTopK(queries, idCol, vecCol,
+        exactIndex(corpus, idCol, vecCol, "bruteForceTopK"), k)
+    requireBroadcastable(corpus, idCol, "bruteForceTopK")
     val q = features(queries, Queries, col(idCol), quantize(col(vecCol)))
     val c = features(corpus, Corpus, col(idCol), quantize(col(vecCol)))
     topKPerQuery(scored(q.join(broadcast(c), col("query_id") =!= col("neighbor_id")),
@@ -325,11 +332,12 @@ object Similarity {
 
   /** Each query row's top-k against a broadcast index by the per-row
     * kernel ([[graft.functions.CellTopKExpr]]), the long kernel ids cast
-    * back to the queries' id type. */
+    * back to the queries' id type unless `keepIdType` is false. */
   private[graft] def indexTopK(queries: DataFrame, idCol: String, vecCol: String,
-      index: Broadcast[CellIndex], k: Int): DataFrame =
+      index: Broadcast[CellIndex], k: Int, keepIdType: Boolean = true): DataFrame =
     emit(queries.select(col(idCol).cast("long").as("query_id"), col(vecCol).as("qv")),
-      CellTopK(col("query_id"), col("qv"), index, k), Some(queries.schema(idCol).dataType))
+      CellTopK(col("query_id"), col("qv"), index, k),
+      if (keepIdType) Some(queries.schema(idCol).dataType) else None)
 
   /** Cache key: (applicationId, canonicalized corpus plan, id col, vec col)
     * and the index's build parameters — empty for [[exactIndex]],
@@ -420,20 +428,27 @@ object Similarity {
   val MaxBroadcastRowsConf = "graft.similarity.maxBroadcastCorpusRows"
   private val DefaultMaxBroadcastRows = 2000000L
 
-  /** Corpus-size gate for every broadcast brute-force path. The probe is
-    * bounded (`limit(budget+1).count` — scans at most budget+1 ids, never
-    * a full count of an over-budget corpus). */
-  private def requireBroadcastable(corpus: DataFrame, idCol: String): Unit = {
-    val budget = corpus.sparkSession.conf
-      .get(MaxBroadcastRowsConf, DefaultMaxBroadcastRows.toString).toLong
-    val probe = math.min(budget + 1, Int.MaxValue.toLong).toInt
-    if (corpus.select(col(idCol)).limit(probe).count() > budget)
-      throw new IllegalArgumentException(
-        s"bruteForceTopK: corpus exceeds the $budget-row broadcast budget " +
-          s"($MaxBroadcastRowsConf) — the brute-force path ships the whole " +
-          "corpus to every executor. Use Similarity.lshTopK or " +
-          "Similarity.ivfTopK for large corpora, or raise the budget.")
+  /** Whether `corpus` fits the broadcast budget. The probe is bounded
+    * (`limit(budget+1).count` — scans at most budget+1 ids, never a full
+    * count of an over-budget corpus). */
+  private def broadcastable(corpus: DataFrame, idCol: String): Boolean = {
+    val budget = broadcastBudget(corpus)
+    corpus.select(col(idCol)).limit(math.min(budget + 1, Int.MaxValue.toLong).toInt)
+      .count() <= budget
   }
+
+  private def broadcastBudget(corpus: DataFrame): Long =
+    corpus.sparkSession.conf.get(MaxBroadcastRowsConf, DefaultMaxBroadcastRows.toString).toLong
+
+  /** Corpus-size gate of the tiers with no route past the broadcast
+    * budget: `caller` fails fast instead of OOMing the driver mid-collect. */
+  private[graft] def requireBroadcastable(corpus: DataFrame, idCol: String,
+      caller: String): Unit =
+    if (!broadcastable(corpus, idCol))
+      throw new IllegalArgumentException(
+        s"$caller: corpus exceeds the ${broadcastBudget(corpus)}-row broadcast budget" +
+          s" ($MaxBroadcastRowsConf) — this tier ships the whole corpus to every executor." +
+          " Use Similarity.lshTopK or Similarity.ivfTopKExact, or raise the budget.")
 
   /** The index packer of every fused tier: `(id: long, cell: int,
     * payload)` rows → one broadcast [[CellIndex]] of `nCells` cells, rows
@@ -474,31 +489,47 @@ object Similarity {
     * time, like a prepared statement — plan-only inspection of the result
     * also pays it. */
   private[graft] def exactIndex(corpus: DataFrame, idCol: String,
-      vecCol: String): Broadcast[CellIndex] =
+      vecCol: String, caller: String): Broadcast[CellIndex] =
     IndexCache.getOrBuild(indexKey(corpus, idCol, vecCol, Nil)) {
-      requireBroadcastable(corpus, idCol)
+      requireBroadcastable(corpus, idCol, caller)
       Some(packIndex(corpus.sparkSession, corpus.filter(col(vecCol).isNotNull)
         .select(col(idCol).cast("long"), lit(0), quantize(col(vecCol))).collect(),
         AllCells, 1, None))
     }.get
 
-  /** The cell index of the streaming IVF serve tier
-    * ([[graft.streaming.VectorServe.serveIvf]]): centroids trained exactly
-    * as [[ivfServe]]'s, corpus cells assigned by the SAME executor
-    * expression the batch plan uses (parity by construction), and each
-    * query probing its `nProbe` nearest cells by cosine. None on an empty
-    * / all-null-vector corpus. */
-  private[graft] def ivfIndex(corpus: DataFrame, idCol: String, vecCol: String,
-      nList: Int, nProbe: Int): Option[Broadcast[CellIndex]] = {
-    val c0 = corpus.filter(col(vecCol).isNotNull)
-    requireBroadcastable(c0, idCol)
-    if (c0.limit(1).isEmpty) return None
-    val centroids = trainCosineCentroids(
-      boundedSample(idVecs(corpus, idCol, vecCol)), nList, LloydIters)
-    Some(packIndex(corpus.sparkSession, c0.select(col(idCol).cast("long"),
-        cosineCells(centroids, vecCol, 1).assign, quantize(col(vecCol))).collect(),
-      CosineProbe(centroids, nProbe), centroids.length, None))
+  /** The cosine-probe IVF corpus of [[ivfServe]], [[ivfPqServe]] and the
+    * IVF stream ([[graft.streaming.VectorServe.serveIvf]]): float cells
+    * ([[trainCosineCentroids]]) and, with `pq` = (nBlocks, nCodes), float
+    * PQ books ([[trainCodebooks]]), both trained on one bounded sample;
+    * its [[corpusSide]] (corpus cells assigned by the executor probe
+    * expression); and the probe a query takes in the kernel. The kernel
+    * route collects that side into its `index` and the join route joins
+    * it, so the two share their cells and codes by construction. None on
+    * an empty (or all-null-vector) corpus. */
+  private final case class ProbeCorpus(cells: Cells, side: DataFrame, pq: Books,
+      probe: CosineProbe, nCells: Int) {
+    def index: Broadcast[CellIndex] = packIndex(side.sparkSession, side.select(
+      col("neighbor_id"), col("cell"), col(if (pq.isEmpty) "cv" else "codes")).collect(),
+      probe, nCells, pq)
   }
+
+  private def probeCorpus(corpus: DataFrame, idCol: String, vecCol: String,
+      nList: Int, nProbe: Int, pq: Option[(Int, Int)]): Option[ProbeCorpus] = {
+    val sample = boundedSample(idVecs(corpus, idCol, vecCol))
+    if (sample.isEmpty) return None
+    val centroids = trainCosineCentroids(sample, nList, LloydIters)
+    val cells = cosineCells(centroids, vecCol, nProbe)
+    val books = pq.fold[Option[Books]](Some(None)) { case (nBlocks, nCodes) =>
+      trainCodebooks(sample, nBlocks, nCodes, LloydIters).map(b => Some(b -> false)) }
+    books.map(b => ProbeCorpus(cells, corpusSide(corpus, idCol, vecCol, cells, b), b,
+      CosineProbe(centroids, nProbe), centroids.length))
+  }
+
+  /** The cell index of the IVF stream
+    * ([[graft.streaming.VectorServe.serveIvf]]): [[ivfServe]]'s. */
+  private[graft] def ivfIndex(corpus: DataFrame, idCol: String, vecCol: String,
+      nList: Int, nProbe: Int): Option[Broadcast[CellIndex]] =
+    probeCorpus(corpus, idCol, vecCol, nList, nProbe, None).map(_.index)
 
   /** SQ8 per-component map `f(x, mn, mx)` against the corpus's
     * per-dimension (mns, mxs) stats row: posexplode + groupBy(pos), whose
@@ -576,7 +607,7 @@ object Similarity {
     * chopped into `nBlocks` subvectors, each encoded as its nearest
     * per-block centroid id (`nCodes` per block, per-block Euclidean Lloyd
     * trained driver-side on a bounded sample — the same sample-fit /
-    * full-assign shape as [[ivfTopK]]), compressing dim floats to nBlocks
+    * full-assign shape as [[ivfServe]]'s cells), compressing dim floats to nBlocks
     * small ints. Search is ADC: per query one O(dim·nCodes) lookup table,
     * then every candidate scores in O(nBlocks) array lookups from its CODES
     * — the corpus's raw vectors are never touched at query time.
@@ -585,7 +616,7 @@ object Similarity {
     * 256 bytes, their codes 16 (one byte per block at nCodes=256) — a
     * corpus whose raw vectors can never fit executor memory scans
     * comfortably as codes. The candidate axis is
-    * orthogonal: compose with [[ivfTopK]]'s cell partitioning (IVF-PQ) or
+    * orthogonal: compose with IVF cells ([[ivfPqServe]], [[ivfPqTopKExact]]) or
     * [[lshTopK]]'s buckets to avoid the exhaustive scan this standalone
     * form runs (kept exhaustive here so recall is bounded ONLY by
     * quantization error — gated by `i3_pq_recall_gate`).
@@ -616,7 +647,7 @@ object Similarity {
     IndexCache.getOrBuild(indexKey(df, idCol, vecCol, Seq(nBlocks, nCodes) ++ updates)) {
       // fail-fast BEFORE the sample scan and Lloyd training — an
       // over-budget corpus must not pay minutes of work first
-      requireBroadcastable(df, idCol)
+      requireBroadcastable(df, idCol, if (updates.isEmpty) "pqTopK" else "pqTopKExact")
       build(feats)
     } match {
       case None => emptyResult(feats, col("id"))
@@ -679,23 +710,13 @@ object Similarity {
     * pinning the float/sample production path. Self-join form (queries =
     * corpus) like the other fixture rows.
     *
-    * A corpus within [[KMeans.LocalLloydMaxRows]] is collected ONCE: both
-    * quantizers train on the driver ([[KMeans.lloyd]]), and the corpus
-    * cells, codes and reconstruction norms fill a per-call
-    * [[graft.functions.CellIndex]] through the same assignment and encode
-    * kernels as the distributed path. It is broadcast, not cached, so each
-    * call trains and scores; the ContextCleaner reclaims it. Each query
-    * row then scores in one projection ([[graft.functions.CellTopKExpr]]):
-    * its (block, code) dot table built once, only its `nProbe` grid-probed
-    * cells' code lists scanned, nBlocks lookups per candidate, the best k
-    * kept with the self-exclusion, zero-norm rule and (score DESC, id ASC)
-    * ties of the join path — no join, no shuffle, no aggregate. Scores are
-    * bit-identical to [[graft.functions.PqAdcExpr]]'s because every
-    * product and partial sum stays an integer below 2^53 (the index
-    * builder checks the bound).
-    * Over the budget, with a repeated id (the join path merges a repeated
-    * query id's candidates), or past the bound, the distributed Lloyd and
-    * the [[cellPairs]] + [[adc]] + [[topKPerQuery]] path run instead. */
+    * Under [[KMeans.LocalLloydMaxRows]] it runs [[lloydIvf]]'s kernel
+    * route: each query row builds its (block, code) dot table once and
+    * scans only its `nProbe` grid-probed cells' code lists, nBlocks
+    * lookups per candidate. Scores are bit-identical to
+    * [[graft.functions.PqAdcExpr]]'s because every product and partial
+    * sum stays an integer below 2^53 (the index builder checks the
+    * bound). */
   def ivfPqTopKExact(
       df: DataFrame,
       idCol: String,
@@ -707,51 +728,71 @@ object Similarity {
       nCodes: Int = 256,
       updates: Int = 1): DataFrame = {
     requireCodes(nCodes)
+    lloydIvf(df, idCol, vecCol, k, nList, nProbe, updates, Some(nBlocks -> nCodes))
+  }
+
+  /** The integer-Lloyd IVF self-join of [[ivfTopKExact]] (grid vectors,
+    * exact cosine) and [[ivfPqTopKExact]] (`pq` = (nBlocks, nCodes): PQ
+    * codes, ADC). A corpus within [[KMeans.LocalLloydMaxRows]] is
+    * collected ONCE ([[KMeans.collectLocal]]; an empty collect is the
+    * empty result): the quantizers train on the driver ([[KMeans.lloyd]]),
+    * and the corpus cells and payloads fill a per-call
+    * [[graft.functions.CellIndex]] ([[lloydIndex]]) through the same
+    * assignment and encode kernels as the join route. It is broadcast,
+    * not cached, so each call trains and scores; the ContextCleaner
+    * reclaims it. Each query row then scores in one projection
+    * ([[graft.functions.CellTopKExpr]]) with the self-exclusion,
+    * zero-norm rule and (score DESC, id ASC) ties of the join route — no
+    * join, no shuffle, no aggregate. Over the budget, with a repeated id
+    * (the join route merges a repeated query id's candidates), or past
+    * the PQ bound, the distributed Lloyd and the [[cellPairs]] route run
+    * instead. */
+  private def lloydIvf(df: DataFrame, idCol: String, vecCol: String, k: Int,
+      nList: Int, nProbe: Int, updates: Int, pq: Option[(Int, Int)]): DataFrame = {
     val df0 = df.filter(col(vecCol).isNotNull)
     val id = col(idCol).cast("long")
-    val local = KMeans.collectLocal(df0.select(col(idCol).as("vid"),
-      KMeans.quantize(col(vecCol)).as("q"), id.as("id"), nonZero(col(vecCol)).as("nz")))
+    val local = KMeans.collectLocal(df0.select(Seq(col(idCol).as("vid"),
+      KMeans.quantize(col(vecCol)).as("q"), id.as("id")) ++
+      pq.map(_ => nonZero(col(vecCol)).as("nz")): _*))
     if (local.exists(_.isEmpty)) return emptyResult(df0, id)
-    local.flatMap(ivfPqIndex(df.sparkSession, _, nList, nProbe, nBlocks, nCodes,
-        updates)) match {
-      case Some(index) =>
-        emit(df0.select(id.as("query_id"), col(vecCol).as("qv")),
-          CellTopK(col("query_id"), col("qv"), index, k))
+    local.flatMap(lloydIndex(df.sparkSession, _, nList, nProbe, updates, pq)) match {
+      case Some(index) => indexTopK(df0, idCol, vecCol, index, k, keepIdType = false)
       case None => // over the budget, a repeated id or past the bound: not empty
         val cells = lloydCells(
           KMeans.centroids(df0, idCol, vecCol, nList, updates), vecCol, nProbe)
-        val books = lloydCodebooks(df0, idCol, vecCol, nBlocks, nCodes, updates)
-        val (c, q) = pqSides(df, df, idCol, vecCol, cells, books, quantD(col(vecCol)))
-        topKPerQuery(scored(cellPairs(df, c, q), adc(books)), k)
+        val books: Books = pq.map { case (nBlocks, nCodes) =>
+          lloydCodebooks(df0, idCol, vecCol, nBlocks, nCodes, updates) -> true }
+        ivfRanked(cellPairs(df, corpusSide(df, idCol, vecCol, cells, books),
+          querySide(df, idCol, vecCol, cells, books)), books, k)
     }
   }
 
-  /** [[ivfPqTopKExact]]'s code index from the `(vid, q, id, nz)` rows of
-    * [[KMeans.collectLocal]]: both quantizers trained on those rows, then
-    * every row with a raw nonzero vector filed under its grid cell with its
-    * codes. None when an id repeats or a score could leave the
-    * exact-integer range of a double. */
-  private def ivfPqIndex(spark: SparkSession, rows: Array[Row], nList: Int,
-      nProbe: Int, nBlocks: Int, nCodes: Int,
-      updates: Int): Option[Broadcast[CellIndex]] = {
+  /** [[lloydIvf]]'s index from the `(vid, q, id[, nz])` rows of
+    * [[KMeans.collectLocal]]: the quantizers trained on those rows, then
+    * every row filed under its grid cell with its grid vector or, with
+    * `pq`, the codes of its raw nonzero vector. None when an id repeats
+    * or a PQ score could leave the exact-integer range of a double. */
+  private def lloydIndex(spark: SparkSession, rows: Array[Row], nList: Int,
+      nProbe: Int, updates: Int, pq: Option[(Int, Int)]): Option[Broadcast[CellIndex]] = {
     val ids = rows.filterNot(_.isNullAt(2)).map(_.getLong(2))
     if (ids.distinct.length != ids.length) return None
     val qs = KMeans.vectors(rows)
-    val dim = qs(0).length
+    val grid = qs.map(_.map(_ - KMeans.Scale))
     // trained centroids and codes are floor means of the inputs, so the
     // inputs' largest magnitude bounds every component
-    val m = BigInt(qs.iterator.flatMap(_.iterator).map(v => math.abs(v - KMeans.Scale))
-      .foldLeft(0L)(math.max))
-    if (BigInt(dim) * m * m >= (BigInt(1) << 53)) return None
+    lazy val m = BigInt(grid.iterator.flatMap(_.iterator).map(math.abs).foldLeft(0L)(math.max))
+    if (pq.nonEmpty && BigInt(grid(0).length) * m * m >= (BigInt(1) << 53)) return None
     val cents = KMeans.lloyd(qs, nList, updates)
-    val books = unshifted(KMeans.localBlockCodebooks(qs, nCodes, updates, nBlocks))
-    val coded = rows.indices
-      .filter(r => !rows(r).isNullAt(3) && rows(r).getBoolean(3))
+    val books = pq.map { case (nBlocks, nCodes) =>
+      unshifted(KMeans.localBlockCodebooks(qs, nCodes, updates, nBlocks)) }
+    val filed = rows.indices
+      .filter(r => books.isEmpty || (!rows(r).isNullAt(3) && rows(r).getBoolean(3)))
       .map(r => Row(rows(r).get(2),
         KMeansKernel.assign(UnsafeArrayData.fromPrimitiveArray(qs(r)), cents).getInt(0),
-        PqKernel.encode(qs(r).map(v => (v - KMeans.Scale).toDouble), books).toSeq))
-    Some(packIndex(spark, coded.toArray, GridProbe(cents.map(_.map(_ - KMeans.Scale)), nProbe),
-      cents.length, Some(books -> true)))
+        books.fold[Seq[Any]](grid(r).toSeq)(
+          PqKernel.encode(grid(r).map(_.toDouble), _).toSeq)))
+    Some(packIndex(spark, filed.toArray, GridProbe(cents.map(_.map(_ - KMeans.Scale)), nProbe),
+      cents.length, books.map(_ -> true)))
   }
 
   /** Train codebooks on a bounded sample and pack the code index; None on
@@ -774,12 +815,12 @@ object Similarity {
       .repartition(Par.of(feats))
       .filter(nonZero(col("v")))
       .select(col("id"), lit(0),
-        PqOps.pqEncode(if (onGrid) quantD(col("v")) else col("v"), books))
+        PqOps.pqEncode(pqVec(col("v"), onGrid), books))
       .collect(), AllCells, 1, Some(books -> onGrid))
 
   /** Train the per-block PQ codebooks on a bounded sample; None on an
     * empty (or empty-vector) sample. Shared by [[pqTopK]]'s broadcast
-    * table build and [[ivfPqServe]]'s distributed encode. */
+    * table build and [[probeCorpus]]'s IVF-PQ books. */
   private[graft] def trainCodebooks(
       sample: Array[Array[Double]], nBlocks: Int, nCodes: Int,
       iters: Int): Option[PqCodebooks] = {
@@ -849,9 +890,9 @@ object Similarity {
       .map(_.getSeq[Any](1).map(_.asInstanceOf[Number].doubleValue()).toArray)
 
   /** Driver-side cosine Lloyd for the IVF coarse quantizer: nearest by
-    * cosine, ties to the lower index, a zero side scoring -inf — shared by
-    * [[ivfTopK]] (self-join fixture) and [[ivfServe]] (query-batch
-    * serving) so both probe the SAME cell geometry for a given corpus. */
+    * cosine, ties to the lower index, a zero side scoring -inf — the
+    * cells of [[probeCorpus]], so the batch and streaming serve tiers
+    * probe the SAME cell geometry for a given corpus. */
   private[graft] def trainCosineCentroids(
       sample: Array[Array[Double]], nList: Int,
       iters: Int): Array[Array[Double]] =
@@ -873,27 +914,25 @@ object Similarity {
       }
     }
 
-  /** The float IVF quantizer of a corpus: Lloyd runs driver-side over a
-    * bounded deterministic sample (the standard sample-fit, full-assign
-    * training shape) — one collect total instead of one assignment job
-    * per iteration; at 64k × 64 dims the sample is ~32 MB. */
-  private def sampleFitCells(corpus: DataFrame, idCol: String, vecCol: String,
-      nList: Int, nProbe: Int): Cells =
-    cosineCells(trainCosineCentroids(
-      boundedSample(idVecs(corpus, idCol, vecCol)), nList, LloydIters),
-      vecCol, nProbe)
-
   /** I3f at scale — IVF-accelerated query-batch serving: the
     * [[batchTopK]] contract (small fixed batch, unbounded corpus) with the
-    * corpus scan narrowed by [[ivfTopK]]'s coarse quantizer instead of
-    * scored exhaustively. Train on a bounded corpus sample, assign each
-    * corpus row its ONE nearest cell map-side (broadcast centroids ride
-    * the plan), explode each query into its `nProbe` nearest cells, then
-    * broadcast-hash-join the tiny (|Q|·nProbe)-row query side on the cell
-    * id: corpus rows never shuffle, rows outside every probed cell are
-    * dropped at the join without being scored, and only the bounded-heap
-    * winners (≤ |Q|·k) cross the one shuffle. At 100 TB the same geometry
-    * goes further: write the corpus partitioned BY the cell id once
+    * corpus scan narrowed by a float coarse quantizer instead of scored
+    * exhaustively ([[probeCorpus]]: centroids trained on a bounded
+    * corpus sample, each corpus row assigned its ONE nearest cell by the
+    * executor probe expression). Each query row is answered on its own,
+    * probing its `nProbe` nearest cells (past the budget, rows that share
+    * a query id share one answer); a corpus row whose id equals the
+    * query's is never its neighbor, nor is a null id.
+    *
+    * Within the broadcast budget ([[MaxBroadcastRowsConf]]) the corpus
+    * side is collected into a per-call index and each query row is
+    * scored by the per-row top-k kernel: no join, no shuffle. Past it,
+    * the tiny (|Q|·nProbe)-row query side broadcast-hash-joins the corpus
+    * scan on the cell id ([[probePairs]]): corpus rows never shuffle,
+    * rows outside every probed cell are dropped at the join without
+    * being scored, and only the bounded-heap winners (≤ |Q|·k) cross the
+    * one shuffle. At 100 TB the same geometry goes further: write the
+    * corpus partitioned BY the cell id once
     * (`df.withColumn("cell", …).write.partitionBy("cell")`) and a probe
     * filter on `cell` becomes partition pruning — the serve then READS
     * only nProbe/nList of the corpus instead of merely not scoring it
@@ -903,40 +942,46 @@ object Similarity {
   def ivfServe(
       queries: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, k: Int = 5,
-      nList: Int = 16, nProbe: Int = 4): DataFrame = {
-    val (c, q) = exactSides(corpus, queries, idCol, vecCol,
-      sampleFitCells(corpus, idCol, vecCol, nList, nProbe))
-    topKPerQuery(scored(probePairs(c, q), exactCosine), k)
-  }
+      nList: Int = 16, nProbe: Int = 4): DataFrame =
+    probeServe(queries, corpus, idCol, vecCol, k, nList, nProbe, None)
 
   /** I3f, both axes — IVF-PQ batch serving (the billion-scale ANN
     * composition [[pqTopK]]'s scaladoc points at): [[ivfServe]]'s coarse
     * cells bound the CANDIDATES, product-quantization codes bound the
     * MEMORY. The corpus is encoded distributed — each row becomes
-    * (cell, nBlocks bytes of codes) and its raw vector is dropped from
-    * the serve plan right there, so the per-row payload past the scan is
-    * ~16 bytes instead of dim floats; nothing corpus-sized is ever
-    * collected or broadcast (the difference from [[pqTopK]], whose code
-    * TABLE is a driver-built broadcast and caps the corpus at the
-    * broadcast budget). Probed candidates score via [[graft.functions.PqAdcExpr]]
-    * directly on their codes; only bounded-heap winners cross the one
-    * shuffle. Recall compounds both quantizers' losses — gated vs exact
-    * [[batchTopK]] by `i3_ivfpq_serve_gate`. Zero-norm corpus rows are
-    * excluded at encode time on the RAW norm, as in [[pqTopK]]'s build. */
+    * (cell, nBlocks bytes of codes) and its raw vector is dropped right
+    * there, so the per-row payload past the scan is ~16 bytes instead of
+    * dim floats. Within the broadcast budget only those codes are
+    * collected into the kernel's index (per query one ADC lookup table,
+    * nBlocks lookups per candidate); past it nothing corpus-sized is
+    * collected or broadcast, and probed candidates score via
+    * [[graft.functions.PqAdcExpr]] directly on their codes, in the same
+    * summation order as the kernel. Recall compounds both quantizers'
+    * losses — gated vs exact [[batchTopK]] by `i3_ivfpq_serve_gate`.
+    * Zero-norm corpus rows are excluded at encode time on the RAW norm,
+    * as in [[pqTopK]]'s build; self-exclusion and per-row answers as in
+    * [[ivfServe]]. */
   def ivfPqServe(
       queries: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, k: Int = 5,
       nList: Int = 16, nProbe: Int = 4,
       nBlocks: Int = 16, nCodes: Int = 256): DataFrame = {
     requireCodes(nCodes)
-    val sample = boundedSample(idVecs(corpus, idCol, vecCol))
-    val cells = cosineCells(
-      trainCosineCentroids(sample, nList, LloydIters), vecCol, nProbe)
-    trainCodebooks(sample, nBlocks, nCodes, LloydIters) match {
-      case None => emptyResult(queries, col(idCol).cast("long")) // empty corpus
-      case Some(books) =>
-        val (c, q) = pqSides(corpus, queries, idCol, vecCol, cells, books, col(vecCol))
-        topKPerQuery(scored(probePairs(c, q), adc(books)), k)
+    probeServe(queries, corpus, idCol, vecCol, k, nList, nProbe, Some(nBlocks -> nCodes))
+  }
+
+  /** [[ivfServe]] and [[ivfPqServe]]: the kernel over the [[probeCorpus]]
+    * index within the broadcast budget, else the [[probePairs]] route. */
+  private def probeServe(queries: DataFrame, corpus: DataFrame, idCol: String,
+      vecCol: String, k: Int, nList: Int, nProbe: Int,
+      pq: Option[(Int, Int)]): DataFrame = {
+    val fits = broadcastable(corpus.filter(col(vecCol).isNotNull), idCol)
+    probeCorpus(corpus, idCol, vecCol, nList, nProbe, pq) match {
+      case None => emptyResult(queries, col(idCol).cast("long"))
+      case Some(pc) if fits =>
+        indexTopK(queries, idCol, vecCol, pc.index, k, keepIdType = false)
+      case Some(pc) => ivfRanked(probePairs(pc.side,
+        querySide(queries, idCol, vecCol, pc.cells, pc.pq)), pc.pq, k)
     }
   }
 
@@ -956,17 +1001,15 @@ object Similarity {
   }
 
   /** IVF ANN with the INTEGER-Lloyd coarse quantizer — the derandomized,
-    * fully oracle-checkable variant (round 11, the md5-MinHash playbook
-    * applied to IVF): centroids come from [[KMeans.centroids]] (k
-    * lowest-id seeds, exact fixed-point updates), corpus cells from the
-    * same argmin kernel, query probes from
-    * [[graft.functions.KMeansNearestCellsExpr]] (top-nProbe by squared
-    * grid distance, ties to the lower index), and candidate scoring is
-    * the exact quantized-integer cosine. Every stage is a pure integer
-    * function of the data, so DuckDB reproduces cells, probes, candidates
-    * and ranks bit-for-bit by extending the `i3_kmeans` CTE chain. Same
-    * plan shape as [[ivfTopK]] (cell equi-join, no all-pairs); the
-    * float-trained [[ivfTopK]] stays available for sample-fit workflows. */
+    * fully oracle-checkable IVF (round 11, the md5-MinHash playbook
+    * applied to IVF): centroids are [[KMeans]]'s (k lowest-id seeds, exact
+    * fixed-point updates), corpus cells come from the same argmin kernel,
+    * query probes are the top-nProbe cells by squared grid distance (ties
+    * to the lower index), and candidate scoring is the exact
+    * quantized-integer cosine. Every stage is a pure integer function of
+    * the data, so DuckDB reproduces cells, probes, candidates and ranks
+    * bit-for-bit by extending the `i3_kmeans` CTE chain. Runs
+    * [[lloydIvf]] with the grid-vector payload. */
   def ivfTopKExact(
       df: DataFrame,
       idCol: String,
@@ -974,34 +1017,8 @@ object Similarity {
       k: Int = 5,
       nList: Int = 16,
       nProbe: Int = 4,
-      updates: Int = 1): DataFrame = {
-    val df0 = df.filter(col(vecCol).isNotNull)
-    // empty/all-null corpus: zero seeds would make KMeansExprs.assign throw
-    if (df0.limit(1).isEmpty) return emptyResult(df0, col(idCol).cast("long"))
-    val (c, q) = exactSides(df, df, idCol, vecCol,
-      lloydCells(KMeans.centroids(df0, idCol, vecCol, nList, updates), vecCol, nProbe))
-    topKPerQuery(scored(cellPairs(df, c, q), exactCosine), k)
-  }
-
-  /** I3c — IVF (inverted-file) ANN: a coarse centroid table partitions the
-    * corpus into `nList` cells (k-means-style Lloyd refinement, deterministic
-    * min-id init); each query probes its `nProbe` nearest cells and reranks
-    * exactly within them. Candidate generation is an equi-join on the cell
-    * id — linear in corpus size and naturally partitioned, the alternative
-    * scale path to [[lshTopK]] when cluster structure (not random planes)
-    * should drive recall. Centroids are tiny (nList × dim doubles) and ride
-    * along in the plan; the corpus never leaves the executors. */
-  def ivfTopK(
-      df: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int = 5,
-      nList: Int = 16,
-      nProbe: Int = 4): DataFrame = {
-    val (c, q) = exactSides(df, df, idCol, vecCol,
-      sampleFitCells(df, idCol, vecCol, nList, nProbe))
-    topKPerQuery(scored(cellPairs(df, c, q), exactCosine), k)
-  }
+      updates: Int = 1): DataFrame =
+    lloydIvf(df, idCol, vecCol, k, nList, nProbe, updates, None)
 
   /** I3b — LSH-bucketed ANN: `nTables` independent hyperplane tables; a
     * pair is a candidate if it collides in ANY table (IVF-style recall

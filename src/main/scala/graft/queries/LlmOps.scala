@@ -834,10 +834,11 @@ object LlmOps {
     * so cells, probe lists, candidates and ranks are pure integer
     * functions of the data — the oracle extends the shared kmeans CTE
     * chain with a top-nProbe probe ranking and the exact quantized
-    * cosine. The float sample-trained [[Similarity.ivfTopK]] remains for
-    * sample-fit workflows; `i3_ivf_serve_gate` gates the sample-fit serve
-    * path, [[Similarity.ivfServe]]. Recall is still driver-verified by
-    * `i3_ivf_recall_gate`. */
+    * cosine. At every battery scale the corpus fits the driver collect,
+    * so the row runs the per-row top-k kernel over a grid-probed cell
+    * index (no join, no shuffle). `i3_ivf_serve_gate` gates the
+    * sample-fit float path, [[Similarity.ivfServe]]. Recall is still
+    * driver-verified by `i3_ivf_recall_gate`. */
   def ivfAnn(s: SparkSession, d: String): DataFrame = {
     val e = Tables.embeddings(s, d)
     Similarity.ivfTopKExact(e, "vec_id", "embedding", k = 5,

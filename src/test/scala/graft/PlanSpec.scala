@@ -61,7 +61,8 @@ class PlanSpec extends AnyFunSuite {
     val prev = spark.conf.get("spark.sql.codegen.fallback")
     try {
       spark.conf.set("spark.sql.codegen.fallback", "false")
-      for (row <- Seq("i3_cosine_topk", "i3_pq_ann_topk", "i3_ivfpq_topk")) {
+      for (row <- Seq("i3_cosine_topk", "i3_pq_ann_topk", "i3_ivfpq_topk",
+          "i3_ivf_ann_topk", "i3_ivf_recall_gate")) {
         val df = SparkEntry.queries(row)(spark, sf)
         executedPlan(df)
         val fallback = nodes(df.queryExecution.executedPlan).flatMap(

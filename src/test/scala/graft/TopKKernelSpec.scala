@@ -16,7 +16,7 @@ class TopKKernelSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  /** IvfPqParitySpec's degenerate corpus: a zero vector, a null id, a null
+  /** IvfParitySpec's degenerate corpus: a zero vector, a null id, a null
     * vector. */
   private val edge = Seq[(Option[Long], Option[Array[Float]])](
     (Some(0L), Some(Array(0.0f, 0.0f, 0.0f, 0.0f))),
@@ -57,8 +57,14 @@ class TopKKernelSpec extends AnyFunSuite {
         nBlocks = 2, nCodes = 4))),
       "pqTopKExact" -> (() => rows(Similarity.pqTopKExact(c, "vec_id", "embedding",
         k = 3, nBlocks = 2, nCodes = 4))),
+      "ivfTopKExact" -> (() => rows(Similarity.ivfTopKExact(c, "vec_id",
+        "embedding", k = 3, nList = 3, nProbe = 2))),
       "ivfPqTopKExact" -> (() => rows(Similarity.ivfPqTopKExact(c, "vec_id",
         "embedding", k = 3, nList = 3, nProbe = 2, nBlocks = 2, nCodes = 4))),
+      "ivfServe" -> (() => rows(Similarity.ivfServe(c, c, "vec_id", "embedding",
+        k = 3, nList = 3, nProbe = 2))),
+      "ivfPqServe" -> (() => rows(Similarity.ivfPqServe(c, c, "vec_id", "embedding",
+        k = 3, nList = 3, nProbe = 2, nBlocks = 2, nCodes = 4))),
       "serveExact" -> (() => streamed("null_id_exact")(
         VectorServe.serveExact(_, c, "vec_id", "embedding", k = 3))),
       "serveIvf" -> (() => streamed("null_id_ivf")(
