@@ -125,10 +125,10 @@ object PqKernel {
     * dot(q, recon) / (|q|·√Σ n2) from direct blockwise dots against the
     * coded centroids, null when either norm is zero. Each block's dot is
     * totalled first and the block totals are added in block order — the
-    * order of [[dotTable]] + [[TopKKernel]]'s lookup sum, so both routes
-    * of a float-book tier agree to the bit. The query vector is
-    * read straight off the ArrayData: this runs once per candidate PAIR,
-    * and a per-pair double[] copy is pure GC churn (§4.2). */
+    * order of [[dotTable]] + [[TopKKernel]]'s lookup sum, so the pair
+    * scorer and the kernel agree to the bit on float books too. The query
+    * vector is read straight off the ArrayData: this runs once per
+    * candidate PAIR, and a per-pair double[] copy is pure GC churn (§4.2). */
   def adc(vec: ArrayData, isFloat: Boolean, codes: ArrayData,
       books: PqCodebooks): java.lang.Double = {
     val n = vec.numElements()
@@ -190,8 +190,8 @@ case class PqEncodeExpr(child: Expression, books: PqCodebooks)
 /** Asymmetric-distance score of ONE (query vector, code row) pair
   * ([[PqKernel.adc]]) for the IVF-PQ compositions whose corpus codes live
   * in an executor-side COLUMN (never collected, never broadcast) and whose
-  * candidates arrive via the coarse-cell join: the IVF-PQ tiers past
-  * their broadcast or collect budget. Scoring is direct blockwise
+  * candidates arrive via the coarse-cell join: the float serve tier, and
+  * the exact tier over its collect budget. Scoring is direct blockwise
   * dots against the coded centroids — O(dim) per pair, not a lookup
   * table's O(nBlocks): a per-query (block, code) table cannot ride the
   * pair rows without dragging a 32 KB array through the join. Where the

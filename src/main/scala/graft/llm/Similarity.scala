@@ -30,9 +30,10 @@ import graft.operators.Checkpoints
   * row with [[graft.functions.CellTopKExpr]]: the query's raw vector in,
   * its probed cells scanned by exact integer cosine or a PQ lookup table,
   * its own id skipped. Cached indexes live in the one [[IndexCache]].
-  * Every IVF tier takes the kernel while its corpus fits the driver (the
-  * integer-Lloyd tiers: [[KMeans.LocalLloydMaxRows]]; the cosine-probe
-  * serve tiers: [[MaxBroadcastRowsConf]]) and its cell join past that.
+  * The integer-Lloyd IVF tiers take the kernel while their corpus fits
+  * the driver collect ([[KMeans.LocalLloydMaxRows]]) and their cell
+  * self-join past it; the serve tiers always join their corpus scan to
+  * the broadcast probes, which collects nothing corpus-sized.
   *
   * | tier | features | route | score | top-k |
   * |---|---|---|---|---|
@@ -45,9 +46,8 @@ import graft.operators.Checkpoints
   * | [[ivfTopKExact]] | per-call grid index | grid probe | exact (kernel) | emit |
   * | [[ivfPqTopKExact]] | per-call code index | grid probe | ADC table (kernel) | emit |
   * | both, over the collect budget | grid vectors / codes | cell self-join, id ≠ | exact / ADC | heap |
-  * | [[ivfServe]] | per-call grid index | cosine probe | exact (kernel) | emit |
-  * | [[ivfPqServe]] | per-call code index | cosine probe | ADC table (kernel) | emit |
-  * | both, over the broadcast budget | grid vectors / codes | broadcast probes, id ≠ | exact / ADC | heap |
+  * | [[ivfServe]] | both sides | broadcast probes, id ≠ | exact | heap |
+  * | [[ivfPqServe]] | codes | broadcast probes, id ≠ | ADC | heap |
   * | [[lshTopK]] | both sides | bucket self-join | exact | window |
   */
 object Similarity {
@@ -332,12 +332,11 @@ object Similarity {
 
   /** Each query row's top-k against a broadcast index by the per-row
     * kernel ([[graft.functions.CellTopKExpr]]), the long kernel ids cast
-    * back to the queries' id type unless `keepIdType` is false. */
+    * back to the queries' id type. */
   private[graft] def indexTopK(queries: DataFrame, idCol: String, vecCol: String,
-      index: Broadcast[CellIndex], k: Int, keepIdType: Boolean = true): DataFrame =
+      index: Broadcast[CellIndex], k: Int): DataFrame =
     emit(queries.select(col(idCol).cast("long").as("query_id"), col(vecCol).as("qv")),
-      CellTopK(col("query_id"), col("qv"), index, k),
-      if (keepIdType) Some(queries.schema(idCol).dataType) else None)
+      CellTopK(col("query_id"), col("qv"), index, k), Some(queries.schema(idCol).dataType))
 
   /** Cache key: (applicationId, canonicalized corpus plan, id col, vec col)
     * and the index's build parameters — empty for [[exactIndex]],
@@ -428,27 +427,21 @@ object Similarity {
   val MaxBroadcastRowsConf = "graft.similarity.maxBroadcastCorpusRows"
   private val DefaultMaxBroadcastRows = 2000000L
 
-  /** Whether `corpus` fits the broadcast budget. The probe is bounded
+  /** Corpus-size gate of every broadcast brute-force path: `caller` fails
+    * fast instead of OOMing the driver mid-collect. The probe is bounded
     * (`limit(budget+1).count` — scans at most budget+1 ids, never a full
     * count of an over-budget corpus). */
-  private def broadcastable(corpus: DataFrame, idCol: String): Boolean = {
-    val budget = broadcastBudget(corpus)
-    corpus.select(col(idCol)).limit(math.min(budget + 1, Int.MaxValue.toLong).toInt)
-      .count() <= budget
-  }
-
-  private def broadcastBudget(corpus: DataFrame): Long =
-    corpus.sparkSession.conf.get(MaxBroadcastRowsConf, DefaultMaxBroadcastRows.toString).toLong
-
-  /** Corpus-size gate of the tiers with no route past the broadcast
-    * budget: `caller` fails fast instead of OOMing the driver mid-collect. */
   private[graft] def requireBroadcastable(corpus: DataFrame, idCol: String,
-      caller: String): Unit =
-    if (!broadcastable(corpus, idCol))
+      caller: String): Unit = {
+    val budget = corpus.sparkSession.conf
+      .get(MaxBroadcastRowsConf, DefaultMaxBroadcastRows.toString).toLong
+    val probe = math.min(budget + 1, Int.MaxValue.toLong).toInt
+    if (corpus.select(col(idCol)).limit(probe).count() > budget)
       throw new IllegalArgumentException(
-        s"$caller: corpus exceeds the ${broadcastBudget(corpus)}-row broadcast budget" +
+        s"$caller: corpus exceeds the $budget-row broadcast budget" +
           s" ($MaxBroadcastRowsConf) — this tier ships the whole corpus to every executor." +
           " Use Similarity.lshTopK or Similarity.ivfTopKExact, or raise the budget.")
+  }
 
   /** The index packer of every fused tier: `(id: long, cell: int,
     * payload)` rows → one broadcast [[CellIndex]] of `nCells` cells, rows
@@ -498,20 +491,16 @@ object Similarity {
     }.get
 
   /** The cosine-probe IVF corpus of [[ivfServe]], [[ivfPqServe]] and the
-    * IVF stream ([[graft.streaming.VectorServe.serveIvf]]): float cells
-    * ([[trainCosineCentroids]]) and, with `pq` = (nBlocks, nCodes), float
-    * PQ books ([[trainCodebooks]]), both trained on one bounded sample;
-    * its [[corpusSide]] (corpus cells assigned by the executor probe
-    * expression); and the probe a query takes in the kernel. The kernel
-    * route collects that side into its `index` and the join route joins
-    * it, so the two share their cells and codes by construction. None on
-    * an empty (or all-null-vector) corpus. */
-  private final case class ProbeCorpus(cells: Cells, side: DataFrame, pq: Books,
-      probe: CosineProbe, nCells: Int) {
-    def index: Broadcast[CellIndex] = packIndex(side.sparkSession, side.select(
-      col("neighbor_id"), col("cell"), col(if (pq.isEmpty) "cv" else "codes")).collect(),
-      probe, nCells, pq)
-  }
+    * IVF stream ([[graft.streaming.VectorServe.serveIvf]]): float
+    * `centroids` ([[trainCosineCentroids]]) and, with `pq` = (nBlocks,
+    * nCodes), float PQ books ([[trainCodebooks]]), both trained on one
+    * bounded sample; the `cells` they pick; and the [[corpusSide]], each
+    * corpus row's one cell assigned by the executor probe expression. The
+    * serve tiers join that side and the stream's [[ivfIndex]] collects it,
+    * so batch and stream share their cells by construction. None on an
+    * empty (or all-null-vector) corpus. */
+  private final case class ProbeCorpus(centroids: Array[Array[Double]], cells: Cells,
+      side: DataFrame, pq: Books)
 
   private def probeCorpus(corpus: DataFrame, idCol: String, vecCol: String,
       nList: Int, nProbe: Int, pq: Option[(Int, Int)]): Option[ProbeCorpus] = {
@@ -521,15 +510,20 @@ object Similarity {
     val cells = cosineCells(centroids, vecCol, nProbe)
     val books = pq.fold[Option[Books]](Some(None)) { case (nBlocks, nCodes) =>
       trainCodebooks(sample, nBlocks, nCodes, LloydIters).map(b => Some(b -> false)) }
-    books.map(b => ProbeCorpus(cells, corpusSide(corpus, idCol, vecCol, cells, b), b,
-      CosineProbe(centroids, nProbe), centroids.length))
+    books.map(b => ProbeCorpus(centroids, cells, corpusSide(corpus, idCol, vecCol, cells, b), b))
   }
 
   /** The cell index of the IVF stream
-    * ([[graft.streaming.VectorServe.serveIvf]]): [[ivfServe]]'s. */
+    * ([[graft.streaming.VectorServe.serveIvf]]): [[ivfServe]]'s corpus
+    * side collected within the broadcast budget, each query probing its
+    * `nProbe` nearest cells by cosine inside the kernel. */
   private[graft] def ivfIndex(corpus: DataFrame, idCol: String, vecCol: String,
-      nList: Int, nProbe: Int): Option[Broadcast[CellIndex]] =
-    probeCorpus(corpus, idCol, vecCol, nList, nProbe, None).map(_.index)
+      nList: Int, nProbe: Int): Option[Broadcast[CellIndex]] = {
+    requireBroadcastable(corpus.filter(col(vecCol).isNotNull), idCol, "serveIvf")
+    probeCorpus(corpus, idCol, vecCol, nList, nProbe, None).map(pc =>
+      packIndex(corpus.sparkSession, pc.side.select(col("neighbor_id"), col("cell"),
+        col("cv")).collect(), CosineProbe(pc.centroids, nProbe), pc.centroids.length, None))
+  }
 
   /** SQ8 per-component map `f(x, mn, mx)` against the corpus's
     * per-dimension (mns, mxs) stats row: posexplode + groupBy(pos), whose
@@ -756,7 +750,9 @@ object Similarity {
       pq.map(_ => nonZero(col(vecCol)).as("nz")): _*))
     if (local.exists(_.isEmpty)) return emptyResult(df0, id)
     local.flatMap(lloydIndex(df.sparkSession, _, nList, nProbe, updates, pq)) match {
-      case Some(index) => indexTopK(df0, idCol, vecCol, index, k, keepIdType = false)
+      case Some(index) =>
+        emit(df0.select(id.as("query_id"), col(vecCol).as("qv")),
+          CellTopK(col("query_id"), col("qv"), index, k))
       case None => // over the budget, a repeated id or past the bound: not empty
         val cells = lloydCells(
           KMeans.centroids(df0, idCol, vecCol, nList, updates), vecCol, nProbe)
@@ -917,22 +913,17 @@ object Similarity {
   /** I3f at scale — IVF-accelerated query-batch serving: the
     * [[batchTopK]] contract (small fixed batch, unbounded corpus) with the
     * corpus scan narrowed by a float coarse quantizer instead of scored
-    * exhaustively ([[probeCorpus]]: centroids trained on a bounded
-    * corpus sample, each corpus row assigned its ONE nearest cell by the
-    * executor probe expression). Each query row is answered on its own,
-    * probing its `nProbe` nearest cells (past the budget, rows that share
-    * a query id share one answer); a corpus row whose id equals the
-    * query's is never its neighbor, nor is a null id.
-    *
-    * Within the broadcast budget ([[MaxBroadcastRowsConf]]) the corpus
-    * side is collected into a per-call index and each query row is
-    * scored by the per-row top-k kernel: no join, no shuffle. Past it,
-    * the tiny (|Q|·nProbe)-row query side broadcast-hash-joins the corpus
-    * scan on the cell id ([[probePairs]]): corpus rows never shuffle,
-    * rows outside every probed cell are dropped at the join without
-    * being scored, and only the bounded-heap winners (≤ |Q|·k) cross the
-    * one shuffle. At 100 TB the same geometry goes further: write the
-    * corpus partitioned BY the cell id once
+    * exhaustively. Train on a bounded corpus sample, assign each corpus
+    * row its ONE nearest cell map-side (broadcast centroids ride the
+    * plan; [[probeCorpus]]), explode each query into its `nProbe` nearest
+    * cells, then broadcast-hash-join the tiny (|Q|·nProbe)-row query side
+    * on the cell id ([[probePairs]]): corpus rows never shuffle, rows
+    * outside every probed cell are dropped at the join without being
+    * scored, and only the bounded-heap winners (≤ |Q|·k) cross the one
+    * shuffle. A corpus row whose id equals the query's is never its
+    * neighbor, nor is a null id; query rows that share an id share one
+    * answer (the heap groups by query id). At 100 TB the same geometry
+    * goes further: write the corpus partitioned BY the cell id once
     * (`df.withColumn("cell", …).write.partitionBy("cell")`) and a probe
     * filter on `cell` becomes partition pruning — the serve then READS
     * only nProbe/nList of the corpus instead of merely not scoring it
@@ -949,18 +940,17 @@ object Similarity {
     * composition [[pqTopK]]'s scaladoc points at): [[ivfServe]]'s coarse
     * cells bound the CANDIDATES, product-quantization codes bound the
     * MEMORY. The corpus is encoded distributed — each row becomes
-    * (cell, nBlocks bytes of codes) and its raw vector is dropped right
-    * there, so the per-row payload past the scan is ~16 bytes instead of
-    * dim floats. Within the broadcast budget only those codes are
-    * collected into the kernel's index (per query one ADC lookup table,
-    * nBlocks lookups per candidate); past it nothing corpus-sized is
-    * collected or broadcast, and probed candidates score via
-    * [[graft.functions.PqAdcExpr]] directly on their codes, in the same
-    * summation order as the kernel. Recall compounds both quantizers'
-    * losses — gated vs exact [[batchTopK]] by `i3_ivfpq_serve_gate`.
-    * Zero-norm corpus rows are excluded at encode time on the RAW norm,
-    * as in [[pqTopK]]'s build; self-exclusion and per-row answers as in
-    * [[ivfServe]]. */
+    * (cell, nBlocks bytes of codes) and its raw vector is dropped from
+    * the serve plan right there, so the per-row payload past the scan is
+    * ~16 bytes instead of dim floats; nothing corpus-sized is ever
+    * collected or broadcast (the difference from [[pqTopK]], whose code
+    * TABLE is a driver-built broadcast and caps the corpus at the
+    * broadcast budget). Probed candidates score via [[graft.functions.PqAdcExpr]]
+    * directly on their codes; only bounded-heap winners cross the one
+    * shuffle. Recall compounds both quantizers' losses — gated vs exact
+    * [[batchTopK]] by `i3_ivfpq_serve_gate`. Zero-norm corpus rows are
+    * excluded at encode time on the RAW norm, as in [[pqTopK]]'s build;
+    * self-exclusion and repeated query ids as in [[ivfServe]]. */
   def ivfPqServe(
       queries: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, k: Int = 5,
@@ -970,20 +960,16 @@ object Similarity {
     probeServe(queries, corpus, idCol, vecCol, k, nList, nProbe, Some(nBlocks -> nCodes))
   }
 
-  /** [[ivfServe]] and [[ivfPqServe]]: the kernel over the [[probeCorpus]]
-    * index within the broadcast budget, else the [[probePairs]] route. */
+  /** [[ivfServe]] and [[ivfPqServe]]: the [[probeCorpus]] side joined to
+    * the broadcast probes ([[probePairs]]), scored, heap top-k. */
   private def probeServe(queries: DataFrame, corpus: DataFrame, idCol: String,
       vecCol: String, k: Int, nList: Int, nProbe: Int,
-      pq: Option[(Int, Int)]): DataFrame = {
-    val fits = broadcastable(corpus.filter(col(vecCol).isNotNull), idCol)
+      pq: Option[(Int, Int)]): DataFrame =
     probeCorpus(corpus, idCol, vecCol, nList, nProbe, pq) match {
       case None => emptyResult(queries, col(idCol).cast("long"))
-      case Some(pc) if fits =>
-        indexTopK(queries, idCol, vecCol, pc.index, k, keepIdType = false)
       case Some(pc) => ivfRanked(probePairs(pc.side,
         querySide(queries, idCol, vecCol, pc.cells, pc.pq)), pc.pq, k)
     }
-  }
 
   /** Sign-bucket id for LSH table `table`: `nPlanes` random-hyperplane sign
     * bits packed into a long. Vectors in the same bucket are cosine-close

@@ -13,8 +13,6 @@ import graft.llm.Similarity
   * online form of the batch serving tier (`Similarity.batchTopK` /
   * `ivfServe` / `ivfPqServe`), and the shape an embedding-search endpoint
   * actually runs: the corpus is an index built once, queries arrive forever.
-  * Under the broadcast budget the batch IVF tiers run this same kernel
-  * over the same index; past it they fall back to a cell-probed join.
   *
   * Every stream is a deliberately STATELESS plan: the corpus index (one
   * broadcast [[graft.functions.CellIndex]] — grid vectors in one cell,
@@ -29,20 +27,19 @@ import graft.llm.Similarity
   * cell-probed join — the `ivfServe` batch plan — would instead park every
   * query's partials in a state store awaiting a watermark; with each query
   * id appearing in exactly one micro-batch, that state buys nothing and
-  * delays every answer by the watermark; past the budget `ivfServe` runs
-  * exactly that join, as a batch.)
+  * delays every answer by the watermark.)
   *
   * Scale shape: the bounded resource is the CORPUS index (budget-guarded at
   * build time — `Similarity.MaxBroadcastRowsConf`), not the stream; query
   * throughput scales with executors because rows never shuffle. A corpus
   * beyond the broadcast budget shards by id range into N serve replicas
   * each holding one broadcast shard (union of N of these plans), or drops
-  * to the corpus-resident batch tier (`ivfServe`, whose join route needs
-  * no broadcast) on micro-batched query files. Each query row is answered
-  * on its own. The kernel excludes a corpus row whose id EQUALS the query
-  * id (self-pair suppression) and a corpus row with a null id, as every
-  * batch IVF tier does on both routes — serve with disjoint query/corpus
-  * id spaces, as the gates do.
+  * to the corpus-resident batch tier (`ivfServe`) on micro-batched query
+  * files. Each query row is answered on its own (the batch `ivfServe`
+  * merges rows that share a query id into one answer). The kernel excludes
+  * a corpus row whose id EQUALS the query id (self-pair suppression) and a
+  * corpus row with a null id, as every batch IVF tier does — serve with
+  * disjoint query/corpus id spaces, as the gates do.
   *
   * Reference analogue: none (the reference has no vector or streaming
   * surface); this extends the EXT serving tier of SURVEY §2 I3.
@@ -97,11 +94,10 @@ object VectorServe {
 
   /** IVF streaming serve — the LATENCY axis online: the static corpus is
     * packed once into a cell-partitioned broadcast
-    * ([[graft.llm.Similarity.ivfIndex]] — the same index builder, and so
-    * the same centroids, cells and kernel, as the batch `ivfServe` under
-    * the broadcast budget; over it this stream fails loudly where the
-    * batch tier joins), and each arriving query picks its `nProbe`
-    * nearest cells inside the kernel ([[graft.functions.CosineProbe]]) and heap-scans only
+    * ([[graft.llm.Similarity.ivfIndex]] — centroids trained and
+    * cells assigned by the SAME expressions the batch `ivfServe` uses),
+    * and each arriving query picks its `nProbe` nearest cells inside the
+    * kernel ([[graft.functions.CosineProbe]]) and heap-scans only
     * those cells' row ranges — ~nProbe/nList of the exact kernel's work
     * per query at the probe set's recall (gated batch-side by
     * `i3_ivf_serve_gate`). The plan stays a stateless projection +
@@ -112,7 +108,6 @@ object VectorServe {
       idCol: String, vecCol: String, k: Int = 5,
       nList: Int = 16, nProbe: Int = 4): DataFrame = {
     requireIntegralIds(queryStream, corpus, idCol)
-    Similarity.requireBroadcastable(corpus.filter(col(vecCol).isNotNull), idCol, "serveIvf")
     serve(queryStream, idCol, vecCol,
       Similarity.ivfIndex(corpus, idCol, vecCol, nList, nProbe), k)
   }

@@ -5,11 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.llm.{KMeans, Similarity}
 
-/** Every IVF tier's kernel route ([[graft.functions.CellTopKExpr]] over a
-  * driver-built cell index) returns exactly the rows of its join route:
-  * the integer-Lloyd self-join tiers' distributed `cellPairs` path, which
-  * runs when the collect budget is 0, and the serve tiers' `probePairs`
-  * path, which runs when the corpus is over the broadcast budget. */
+/** The integer-Lloyd IVF tiers' kernel route
+  * ([[graft.functions.CellTopKExpr]] over a driver-built cell index)
+  * returns exactly the rows of their distributed `cellPairs` join route,
+  * which runs when the collect budget is 0. */
 class IvfParitySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -21,13 +20,6 @@ class IvfParitySpec extends AnyFunSuite {
     val saved = KMeans.LocalLloydMaxRows
     KMeans.LocalLloydMaxRows = 0
     try body finally KMeans.LocalLloydMaxRows = saved
-  }
-
-  private def overBudget[A](body: => A): A = {
-    val saved = spark.conf.getOption(Similarity.MaxBroadcastRowsConf)
-    spark.conf.set(Similarity.MaxBroadcastRowsConf, "1")
-    try body finally saved.fold(spark.conf.unset(Similarity.MaxBroadcastRowsConf))(
-      spark.conf.set(Similarity.MaxBroadcastRowsConf, _))
   }
 
   private def plan(df: DataFrame): String = df.queryExecution.executedPlan.toString
@@ -53,24 +45,14 @@ class IvfParitySpec extends AnyFunSuite {
       (Some(6L), null), // null vector: neither query nor neighbor
       (Some(7L), Array(-0.7f, -0.7f, -0.8f, -0.8f)))
       .toDF("vec_id", "embedding")
-    // the serve tiers' queries: the whole corpus (every id also a corpus
-    // id) and one id that is not
-    val queries = df.union(Seq[(Option[Long], Array[Float])](
-      (Some(100L), Array(0.6f, 0.7f, 0.9f, 0.8f))).toDF("vec_id", "embedding"))
     // (k, nList, nProbe): k beyond every candidate count; probe lists that
     // take in the empty cell; a single cell
     for ((k, nList, nProbe) <- Seq((10, 3, 2), (2, 3, 3), (3, 1, 1), (20, 4, 4), (3, 4, 2))) {
       def exact() = Similarity.ivfTopKExact(df, "vec_id", "embedding", k = k,
         nList = nList, nProbe = nProbe)
-      def serve() = Similarity.ivfServe(queries, df, "vec_id", "embedding", k = k,
-        nList = nList, nProbe = nProbe)
-      def pqServe() = Similarity.ivfPqServe(queries, df, "vec_id", "embedding", k = k,
-        nList = nList, nProbe = nProbe, nBlocks = 2, nCodes = 4)
       val tiers: Seq[(String, (DataFrame, DataFrame), String)] = Seq(
         ("ivfTopKExact", (exact(), distributed(exact())), "Join"),
-        ("ivfPqTopKExact", paths(df, k, nList, nProbe, nBlocks = 2, nCodes = 4), "pq_adc"),
-        ("ivfServe", (serve(), overBudget(serve())), "BroadcastHashJoin"),
-        ("ivfPqServe", (pqServe(), overBudget(pqServe())), "pq_adc"))
+        ("ivfPqTopKExact", paths(df, k, nList, nProbe, nBlocks = 2, nCodes = 4), "pq_adc"))
       for ((tier, (scan, join), joinMark) <- tiers) {
         val what = s"$tier k=$k nList=$nList nProbe=$nProbe"
         assert(plan(scan).contains("cell_topk") && !plan(scan).contains("Exchange"), what)

@@ -112,9 +112,9 @@ class PlanBudgetSpec extends AnyFunSuite {
     "i2_canonical_keep_lsh" -> 4,
     "i2_span_cut" -> 4, "i3_cosine_topk" -> 0,
     "i3_query_batch_topk" -> 1, "i3_filtered_topk" -> 1,
-    // the four IVF rows score with the per-row top-k kernel: no cell join,
-    // no top-k aggregate; the gates keep the exact reference and the fold
-    "i3_ivf_serve_gate" -> 3, "i3_ivfpq_serve_gate" -> 3,
+    "i3_ivf_serve_gate" -> 5, "i3_ivfpq_serve_gate" -> 5, // r14: recall-gate fold
+    // the exact-IVF rows score with the per-row top-k kernel: no cell
+    // join, no top-k aggregate; the gate keeps its fold
     "i3_ivf_ann_topk" -> 0, "i3_ivf_recall_gate" -> 2,
     // exact IVF-PQ: the corpus fits the collect budget, so each query row
     // scans its probed cells' codes in one projection — no join, no top-k
